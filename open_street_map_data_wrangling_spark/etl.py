@@ -2,16 +2,19 @@
 
 data.py::process_map + audit.py in one distributed pipeline:
 
-    OSM XML ──parse──▶ 5 shaped relations
+    OSM XML ──parse once──▶ tagged rows, persisted for the run
+             ──split──▶ 5 shaped relations
              ──audit──▶ street-type variants report
-             ──clean──▶ mapping-table street rewrite, postcode core
+             ──clean──▶ last-token street-suffix rewrite
              ──validate──▶ reject counts
              ──write──▶ parquet per table (the CSV-per-table analog)
 
-Every stage is the operator already proven in the inventory
-(sources/osm_xml.py, operators/cleaning.py); this module only
-composes them, which is the point: the reference's monolithic script
-becomes a composition of verified relational pieces.
+Like the reference's single iterparse pass, the extract is parsed
+once per run: audit, validate and every write scan the persisted
+tagged parse (sources/osm_xml.py), which is unpersisted when the run
+ends, whether or not it succeeded. This module only composes verified
+relational pieces, which is the point: the reference's monolithic
+script becomes a composition of them.
 """
 
 from __future__ import annotations
@@ -19,11 +22,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.cleaning import STREET_MAPPING
-from .sources.osm_xml import parse_osm_xml
+from .sources.osm_xml import parse_osm_tagged, split_osm_tables
 from .sources.sinks import write_parquet
 
 EXPECTED_STREET_TYPES = ("Street", "Road", "Avenue", "Boulevard", "Lane", "Drive")
+
+# update_name's mapping: abbreviated last token -> canonical suffix
+STREET_SUFFIXES = (
+    ("St", "Street"), ("St.", "Street"), ("Ave", "Avenue"), ("Ave.", "Avenue"),
+    ("Rd", "Road"), ("Rd.", "Road"), ("Blvd", "Boulevard"), ("Ln", "Lane"),
+    ("Dr", "Drive"),
+)
 
 
 def audit_street_types(nodes_tags: DataFrame) -> DataFrame:
@@ -40,24 +49,18 @@ def audit_street_types(nodes_tags: DataFrame) -> DataFrame:
     )
 
 
-def clean_street_names(tags: DataFrame, spark: SparkSession) -> DataFrame:
-    """update_name as a broadcast mapping join over the street rows;
-    non-street rows pass through unchanged."""
-    mapping = spark.createDataFrame(
-        [("St", "Street"), ("St.", "Street"), ("Ave", "Avenue"), ("Ave.", "Avenue"),
-         ("Rd", "Road"), ("Rd.", "Road"), ("Blvd", "Boulevard"), ("Ln", "Lane"),
-         ("Dr", "Drive")],
-        "raw string, clean string",
-    )
+def clean_street_names(tags: DataFrame) -> DataFrame:
+    """update_name as a literal-map lookup on the last token of the
+    street rows; non-street rows and unmapped suffixes pass through
+    unchanged."""
+    mapping = F.create_map(*(F.lit(x) for pair in STREET_SUFFIXES for x in pair))
     is_street = (F.col("type") == "addr") & (F.col("key") == "street")
-    last = F.regexp_extract(F.col("value"), r"([^ ]+)$", 1)
-    tagged = tags.withColumn("__last", F.when(is_street, last))
-    joined = tagged.join(F.broadcast(mapping), F.col("__last") == F.col("raw"), "left")
+    clean = mapping[F.regexp_extract(F.col("value"), r"([^ ]+)$", 1)]
     cleaned = F.when(
-        F.col("clean").isNotNull(),
-        F.concat(F.regexp_replace(F.col("value"), r"[^ ]+$", ""), F.col("clean")),
+        is_street & clean.isNotNull(),
+        F.concat(F.regexp_replace(F.col("value"), r"[^ ]+$", ""), clean),
     ).otherwise(F.col("value"))
-    return joined.select("id", "key", cleaned.alias("value"), "type")
+    return tags.select("id", "key", cleaned.alias("value"), "type")
 
 
 def validate(nodes: DataFrame) -> DataFrame:
@@ -73,31 +76,37 @@ def validate(nodes: DataFrame) -> DataFrame:
 
 def run_osm_etl(spark: SparkSession, xml_path: str, out_dir: str) -> list[str]:
     """process_map: parse, audit, clean, validate, write. Returns a
-    human-readable report (the reference printed its audit dict)."""
-    tables = parse_osm_xml(spark, xml_path)
-    report: list[str] = []
+    human-readable report (the reference printed its audit dict).
+    The tagged parse is persisted for the run, so the XML is parsed
+    once; it is unpersisted on the way out, also when a stage
+    raises."""
+    parsed = parse_osm_tagged(spark, xml_path).persist()
+    try:
+        tables = split_osm_tables(parsed)
+        report: list[str] = []
 
-    variants = audit_street_types(tables["nodes_tags"]).collect()
-    report.append(f"street-type variants flagged: {len(variants)}")
-    for r in sorted(variants, key=lambda r: (r.street_type, r.name))[:20]:
-        report.append(f"  {r.street_type}: {r.name}")
+        variants = audit_street_types(tables["nodes_tags"]).collect()
+        report.append(f"street-type variants flagged: {len(variants)}")
+        for r in sorted(variants, key=lambda r: (r.street_type, r.name))[:20]:
+            report.append(f"  {r.street_type}: {r.name}")
 
-    cleaned_tags = {
-        "nodes_tags": clean_street_names(tables["nodes_tags"], spark),
-        "ways_tags": clean_street_names(tables["ways_tags"], spark),
-    }
+        for r in validate(tables["nodes"]).collect():
+            report.append(f"nodes valid={r.ok}: {r['count']}")
 
-    for r in validate(tables["nodes"]).collect():
-        report.append(f"nodes valid={r.ok}: {r['count']}")
-
-    for name in ("nodes", "ways", "ways_nodes"):
-        write_parquet(tables[name], f"{out_dir}/{name}.parquet")
-    for name, df in cleaned_tags.items():
-        write_parquet(df, f"{out_dir}/{name}.parquet")
-    for name in ("nodes", "nodes_tags", "ways", "ways_tags", "ways_nodes"):
-        n = spark.read.parquet(f"{out_dir}/{name}.parquet").count()
-        report.append(f"wrote {name}: {n} rows")
-    return report
+        written = {name: tables[name] for name in ("nodes", "ways", "ways_nodes")}
+        written["nodes_tags"] = clean_street_names(tables["nodes_tags"])
+        written["ways_tags"] = clean_street_names(tables["ways_tags"])
+        for name, df in written.items():
+            write_parquet(df, f"{out_dir}/{name}.parquet")
+        for name in ("nodes", "nodes_tags", "ways", "ways_tags", "ways_nodes"):
+            # the written schema is known: skip the footer-inference job
+            n = spark.read.schema(written[name].schema).parquet(
+                f"{out_dir}/{name}.parquet"
+            ).count()
+            report.append(f"wrote {name}: {n} rows")
+        return report
+    finally:
+        parsed.unpersist()
 
 
 def generate_report(spark: SparkSession, sf_dir: str) -> dict:

@@ -14,6 +14,12 @@ parses across every core of the cluster:
 2. Each fragment parses independently into typed rows for the five
    reference tables (schema.py shapes): nodes, nodes_tags, ways,
    ways_tags, ways_nodes.
+3. Like the reference's single pass, the parse runs once: one
+   `mapInPandas` emits every row tagged with its target table
+   (`parse_osm_tagged`, schema `TAGGED_SCHEMA` = `table` plus the
+   union of the table schemas), and each table is a filter + select
+   over that one tagged parse (`split_osm_tables`). Persist the
+   tagged parse to share it between consumers, as run_osm_etl does.
 
 `<relation>` elements — which the reference project family ignores
 (SURVEY.md §1.1) — are parsed into `relations`, `relations_tags` and
@@ -40,6 +46,7 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 NODES_SCHEMA = (
     "id bigint, lat double, lon double, user string, uid bigint, "
@@ -68,6 +75,36 @@ _TABLE_SCHEMAS = {
     "relations_tags": TAGS_SCHEMA,
     "relation_members": RELATION_MEMBERS_SCHEMA,
 }
+
+# element kind -> (own table, child list key, child table); its tags
+# go to "<own table>_tags"
+_KIND_TABLES = {
+    "node": ("nodes", None, None),
+    "way": ("ways", "nd", "ways_nodes"),
+    "relation": ("relations", "members", "relation_members"),
+}
+
+
+def _fields(schema: str) -> list[tuple[str, str]]:
+    """'id bigint, lat double' → [('id', 'bigint'), ('lat', 'double')]."""
+    return [tuple(f.split()) for f in schema.split(", ")]
+
+
+def _tagged_fields() -> list[tuple[str, str]]:
+    """`table` plus the union of the eight tables' columns, in
+    first-seen order; a column shared by two tables must agree on
+    its type."""
+    union: dict[str, str] = {}
+    for schema in _TABLE_SCHEMAS.values():
+        for name, typ in _fields(schema):
+            if union.setdefault(name, typ) != typ:
+                raise TypeError(f"column {name!r} is {union[name]} and {typ}")
+    return [("table", "string"), *union.items()]
+
+
+_TAGGED_FIELDS = _tagged_fields()
+TAGGED_SCHEMA = ", ".join(f"{n} {t}" for n, t in _TAGGED_FIELDS)
+_TAGGED_COLS = [n for n, _ in _TAGGED_FIELDS]
 
 
 def _split_tag_key(k: str) -> tuple[str, str]:
@@ -163,54 +200,60 @@ def _parse_fragment(raw: str) -> tuple[str, dict] | None:
     return parsed
 
 
-def _frag_iter(batches: Iterator[pd.DataFrame], want: str) -> Iterator[pd.DataFrame]:
-    nodes, node_tags, ways, way_tags, way_nodes = [], [], [], [], []
-    rels, rel_tags, rel_members = [], [], []
+def _table_rows(kind: str, shaped: dict) -> Iterator[tuple[str, dict]]:
+    """One parsed element → its (table, row) pairs: the element's own
+    row, its tags, and its ordered children (way refs, relation
+    members)."""
+    table, child_key, child_table = _KIND_TABLES[kind]
+    tags = shaped.pop("tags")
+    children = shaped.pop(child_key) if child_key else ()
+    yield table, shaped
+    for tag in tags:
+        yield f"{table}_tags", tag
+    for child in children:
+        yield child_table, child
+
+
+def _tagged_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
+        rows = []
         for raw in pdf["value"]:
             parsed = _parse_fragment(raw)
-            if parsed is None:
-                continue
-            kind, shaped = parsed
-            tags = shaped.pop("tags")
-            if kind == "node":
-                nodes.append(shaped)
-                node_tags.extend(tags)
-            elif kind == "way":
-                way_nodes.extend(shaped.pop("nd"))
-                ways.append(shaped)
-                way_tags.extend(tags)
-            else:
-                rel_members.extend(shaped.pop("members"))
-                rels.append(shaped)
-                rel_tags.extend(tags)
-    out = {
-        "nodes": nodes,
-        "nodes_tags": node_tags,
-        "ways": ways,
-        "ways_tags": way_tags,
-        "ways_nodes": way_nodes,
-        "relations": rels,
-        "relations_tags": rel_tags,
-        "relation_members": rel_members,
-    }[want]
-    cols = [f.split()[0] for f in _TABLE_SCHEMAS[want].split(", ")]
-    yield pd.DataFrame(out, columns=cols)
+            if parsed is not None:
+                rows.extend({"table": t, **row} for t, row in _table_rows(*parsed))
+        # object dtype keeps nullable bigints exact (no float64 detour)
+        yield pd.DataFrame(rows, columns=_TAGGED_COLS, dtype=object)
+
+
+def parse_osm_tagged(spark: SparkSession, path: str) -> DataFrame:
+    """The reference ETL's single streaming pass (data.py::process_map),
+    distributed: ONE `mapInPandas` over the fragment scan emits every
+    parsed row once, tagged with its target table (`TAGGED_SCHEMA`).
+    Persist it to let several consumers share one parse; split it with
+    `split_osm_tables`."""
+    return read_osm_fragments(spark, path).mapInPandas(
+        _tagged_iter, schema=TAGGED_SCHEMA
+    )
+
+
+def split_osm_tables(tagged: DataFrame) -> dict[str, DataFrame]:
+    """The eight shaped relations of a tagged parse: each is
+    `filter(table == name).select(<its columns>)` over `tagged`."""
+    return {
+        name: tagged.filter(F.col("table") == name).select(
+            *(c for c, _ in _fields(schema))
+        )
+        for name, schema in _TABLE_SCHEMAS.items()
+    }
 
 
 def parse_osm_xml(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """The reference ETL main (data.py::process_map), distributed:
-    returns the five shaped relations. Each relation is an
-    independent lazy plan over the same fragment scan — materialize
-    with sinks.write_parquet per table (the CSV-per-table analog)."""
-    frags = read_osm_fragments(spark, path)
-
-    def make(which: str) -> DataFrame:
-        return frags.mapInPandas(
-            lambda it, w=which: _frag_iter(it, w), schema=_TABLE_SCHEMAS[which]
-        )
-
-    return {name: make(name) for name in _TABLE_SCHEMAS}
+    returns the eight shaped relations as one tagged parse, split by
+    table. Left unpersisted, every relation that is materialized
+    re-parses the extract; run_osm_etl persists the tagged parse so
+    all its stages share one."""
+    return split_osm_tables(parse_osm_tagged(spark, path))
 
 
 def write_osm_sample(
@@ -222,7 +265,6 @@ def write_osm_sample(
     a sample is small by definition (the reference's sample.osm is the
     smoke-test input, not a dataset). Returns elements written."""
     from pyspark.sql import Window as W
-    from pyspark.sql import functions as F
 
     frags = read_osm_fragments(spark, src_path)
     # stable element index in file order (driver-side assembly anyway,

@@ -302,3 +302,120 @@ def test_etl_to_sqlite_reference_migration(spark, tmp_path_factory):
         ]
     finally:
         con.close()
+
+
+# ---------------------------------------------------------------------------
+# One parse per ETL run: every stage scans the persisted tagged parse
+
+# run_osm_etl on the test extract runs 20 jobs; the pin leaves ~25%
+# slack.
+MAX_ETL_JOBS = 25
+
+
+@pytest.fixture(scope="module")
+def etl_run(spark, tmp_path_factory):
+    """One run_osm_etl under a job group, recording the executed plan
+    of every DataFrame it hands to the parquet sink."""
+    from open_street_map_data_wrangling_spark import etl
+
+    base = tmp_path_factory.mktemp("etl_once")
+    src = base / "map.osm"
+    src.write_text(_make_xml())
+    plans = {}
+    inner = etl.write_parquet
+
+    def spy(df, path, *args, **kwargs):
+        plans[path.rsplit("/", 1)[-1]] = df._jdf.queryExecution().executedPlan().toString()
+        return inner(df, path, *args, **kwargs)
+
+    sc = spark.sparkContext
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(etl, "write_parquet", spy)
+        sc.setJobGroup("etl-once", "run_osm_etl job-count pin")
+        try:
+            report = etl.run_osm_etl(spark, str(src), str(base / "out"))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("etl-once")
+    return report, plans, jobs
+
+
+def test_etl_writes_scan_persisted_parse(etl_run):
+    """Every written table reads the cached tagged parse: its executed
+    plan scans an InMemoryRelation, and the XML parse (MapInPandas)
+    appears only inside the cached relation, never above the scan."""
+    report, plans, _ = etl_run
+    assert f"wrote nodes: {N_NODES} rows" in report
+    assert sorted(plans) == sorted(
+        f"{t}.parquet" for t in ("nodes", "nodes_tags", "ways", "ways_tags", "ways_nodes")
+    )
+    for name, plan in plans.items():
+        above, scan, _ = plan.partition("InMemoryTableScan")
+        assert scan, (name, plan)
+        assert "MapInPandas" not in above, (name, plan)
+
+
+def test_etl_job_count_pinned(etl_run):
+    """The whole run stays within MAX_ETL_JOBS Spark jobs: cleaning
+    starts no job of its own, and a read-back with the written schema
+    starts no footer-inference job."""
+    _, _, jobs = etl_run
+    assert 0 < len(jobs) <= MAX_ETL_JOBS, sorted(jobs)
+
+
+def test_etl_failure_leaves_no_cached_parse(spark, tmp_path_factory):
+    """A run whose write fails (its output dir is a regular file)
+    still unpersists the tagged parse it cached."""
+    from open_street_map_data_wrangling_spark.etl import run_osm_etl
+
+    base = tmp_path_factory.mktemp("etl_fail")
+    src = base / "map.osm"
+    src.write_text(_make_xml())
+    occupied = base / "occupied"
+    occupied.write_text("not a directory")
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="ParentNotDirectory|not a directory"):
+        run_osm_etl(spark, str(src), str(occupied))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_clean_street_names_matches_mapping_join(spark):
+    """The literal-map street cleaner reproduces the rows of the
+    broadcast mapping join it replaced: mapped suffixes (with and
+    without a trailing dot, single-token values), untouched non-street
+    tags, NULLs and unmapped suffixes."""
+    from open_street_map_data_wrangling_spark.etl import clean_street_names
+
+    rows = [
+        (1, "street", "Main St", "addr"),
+        (2, "street", "Pine St.", "addr"),
+        (3, "street", "Oak Ave.", "addr"),
+        (4, "street", "Elm Dr", "addr"),
+        (5, "street", "St", "addr"),
+        (6, "name", "Corner St", "regular"),
+        (7, "street", None, "addr"),
+        (8, "street", "Maple Court", "addr"),
+        (9, "city", "Akron St", "addr"),
+        (10, "street", "Birch Blvd", "addr"),
+        (11, "street", "Main Street", "addr"),
+        (12, "street", "Main St ", "addr"),
+        (13, "street", "Elm St", None),
+    ]
+    df = spark.createDataFrame(rows, "id bigint, key string, value string, type string")
+    out = clean_street_names(df)
+    assert out.columns == ["id", "key", "value", "type"]
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "street", "Main Street", "addr"),
+        (2, "street", "Pine Street", "addr"),
+        (3, "street", "Oak Avenue", "addr"),
+        (4, "street", "Elm Drive", "addr"),
+        (5, "street", "Street", "addr"),
+        (6, "name", "Corner St", "regular"),
+        (7, "street", None, "addr"),
+        (8, "street", "Maple Court", "addr"),
+        (9, "city", "Akron St", "addr"),
+        (10, "street", "Birch Boulevard", "addr"),
+        (11, "street", "Main Street", "addr"),
+        (12, "street", "Main St ", "addr"),
+        (13, "street", "Elm St", None),
+    ]
