@@ -685,9 +685,8 @@ def connected_components(edges_df, nodes_df, max_iters: int = 50):
       exchange the propagation join already materialized.
     * The loop body runs under scale.iter_loop_conf (AQE suspended,
       shuffle partitions derived from the |sym|+|nodes| the setup
-      actions measured, both restored on exit, OSMDW_ITER_AQE=true
-      opts back into AQE) — see that helper's docstring for the full
-      rationale."""
+      actions measured, both restored on exit) — see that helper's
+      docstring for the full rationale."""
     from pyspark.sql import functions as F
 
     from .scale import iter_loop_conf

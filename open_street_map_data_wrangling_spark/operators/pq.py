@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from ..functions import cosine_expr
 from ..plans.registry import query
 from ..sources.catalog import load_table
+from ..sources.sinks import commit_store
 from .similarity import (
     _IVF_ASSIGN_SQL,
     _RANGE_NPROBE,
@@ -1294,41 +1295,31 @@ def compact_ivfpq_index(spark: SparkSession, path: str) -> None:
     maintain → compact), same role as layout.optimize_zorder for the
     corpus: at 100 TB thousands of small per-batch files per cell
     degrade the probe's scan, and the nightly compaction restores
-    one-file-per-cell locality.  Stage-then-swap commit: the rewrite
-    reads the files it replaces, so it materializes to a side dir
-    first (the incremental_hourly_rollup pattern)."""
+    one-file-per-cell locality.  The rewrite reads the files it
+    replaces, so it commits through sinks.commit_store (one stage
+    write, then a rename over codes/) — never an overwrite of the
+    live dir, whose crash window purge_ivfpq_index documents."""
     from pyspark.sql import Window as _W
 
-    codes = spark.read.parquet(f"{path}/codes")
-    # drop/withColumn, not an explicit column list: a store built
-    # with meta columns (filtered serving) must keep them through
-    # compaction — the earlier fixed select silently stripped the
-    # label column from meta stores (the meta-lifecycle pytest)
-    latest = (
-        codes.withColumn(
-            "__rn",
-            F.row_number().over(
-                _W.partitionBy("vec_id").orderBy(F.desc("__batch"))
-            ),
+    def fold(exists: bool) -> DataFrame:
+        # drop/withColumn, not an explicit column list: a store built
+        # with meta columns (filtered serving) must keep them through
+        # compaction — the earlier fixed select silently stripped the
+        # label column from meta stores (the meta-lifecycle pytest)
+        return (
+            spark.read.parquet(f"{path}/codes")
+            .withColumn(
+                "__rn",
+                F.row_number().over(
+                    _W.partitionBy("vec_id").orderBy(F.desc("__batch"))
+                ),
+            )
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+            .withColumn("__batch", F.lit(0))
         )
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        .withColumn("__batch", F.lit(0))
-    )
-    stage = f"{path}/codes_compact_stage"
-    latest.hint("rebalance", "cid", "__batch").write.mode(
-        "overwrite"
-    ).partitionBy("cid", "__batch").parquet(stage)
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    codes_path = jvm.org.apache.hadoop.fs.Path(f"{path}/codes")
-    fs = codes_path.getFileSystem(hconf)
-    spark.read.parquet(stage).hint(
-        "rebalance", "cid", "__batch"
-    ).write.mode("overwrite").partitionBy("cid", "__batch").parquet(
-        f"{path}/codes"
-    )
-    fs.delete(jvm.org.apache.hadoop.fs.Path(stage), True)
+
+    commit_store(spark, f"{path}/codes", fold, partition_by=("cid", "__batch"))
 
 
 def purge_ivfpq_index(
@@ -1357,21 +1348,9 @@ def purge_ivfpq_index(
     build over the filtered corpus (same frozen model — pinned in
     tests/test_tombstone.py), and q_tombstone_served's oracle proves
     the served ADC ranking equals the filtered recompute.
-    Commit is the streaming stores' rename protocol (ADVICE r12: a
-    second overwrite into the live path deletes the live dir before
-    rewriting, so a crash mid-commit left the serving store
-    missing/partial): the staged rewrite is fully written, then the
-    live codes dir is deleted and the stage RENAMED over it — the
-    only crash window is delete→rename, and the recover step at the
-    top of every purge/compact/serve-adjacent rewrite closes it."""
-    from ..streaming.jobs import _commit_store, _recover_store
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    codes_path = jvm.org.apache.hadoop.fs.Path(f"{path}/codes")
-    stage_path = jvm.org.apache.hadoop.fs.Path(f"{path}/codes_purge_stage")
-    fs = codes_path.getFileSystem(hconf)
-    _recover_store(fs, codes_path, stage_path)
+    Commit is sinks.commit_store (ADVICE r12: a second overwrite into
+    the live path deletes the live dir before rewriting, so a crash
+    mid-commit left the serving store missing/partial)."""
     dele = deleted.select("vec_id").distinct()
     seeds = spark.read.schema(
         "vec_id BIGINT, embedding ARRAY<FLOAT>, n_centroids INT"
@@ -1395,31 +1374,29 @@ def purge_ivfpq_index(
             "model rebuild — build_ivfpq_index over the filtered "
             "corpus — not a row purge"
         )
-    kept = (
-        spark.read.parquet(f"{path}/codes")
-        .join(F.broadcast(dele), "vec_id", "left_anti")
+    commit_store(
+        spark,
+        f"{path}/codes",
+        lambda exists: spark.read.parquet(f"{path}/codes").join(
+            F.broadcast(dele), "vec_id", "left_anti"
+        ),
+        partition_by=("cid", "__batch"),
     )
-    kept.hint("rebalance", "cid", "__batch").write.mode(
-        "overwrite"
-    ).partitionBy("cid", "__batch").parquet(str(stage_path))
-    _commit_store(fs, codes_path, stage_path)
     # probes/ (the standing range-search batch) holds ORDINARY corpus
-    # rows, not model parameters — purge them like codes/, same
-    # stage-rename protocol, so a forgotten document's raw vector
-    # cannot linger as a query template (ann_range_search then skips
-    # the probe, exactly as if the row had never been ingested)
-    probes_path = jvm.org.apache.hadoop.fs.Path(f"{path}/probes")
-    pstage_path = jvm.org.apache.hadoop.fs.Path(
-        f"{path}/probes_purge_stage"
-    )
-    if fs.exists(probes_path):
-        _recover_store(fs, probes_path, pstage_path)
-        spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>").parquet(
-            f"{path}/probes"
-        ).join(F.broadcast(dele), "vec_id", "left_anti").write.mode(
-            "overwrite"
-        ).parquet(str(pstage_path))
-        _commit_store(fs, probes_path, pstage_path)
+    # rows, not model parameters — purge them like codes/, so a
+    # forgotten document's raw vector cannot linger as a query
+    # template (ann_range_search then skips the probe, exactly as if
+    # the row had never been ingested)
+    def fold_probes(exists: bool) -> DataFrame | None:
+        if not exists:
+            return None
+        return (
+            spark.read.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
+            .parquet(f"{path}/probes")
+            .join(F.broadcast(dele), "vec_id", "left_anti")
+        )
+
+    commit_store(spark, f"{path}/probes", fold_probes)
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,6 @@ layouts — the two write-time levers sources/sinks.py exposes.
 from __future__ import annotations
 
 import contextlib
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,14 +60,12 @@ def iter_loop_conf(
     100 TB corpus gets the full configured width.  The per-round
     joins key on unique node ids and the aggregates are map-side
     combined, so AQE's skew split has nothing to split inside these
-    loops.  Set OSMDW_ITER_AQE=true to keep AQE on instead (e.g. a
-    deployment that wants runtime skew handling in the rounds).
+    loops.
 
     Pass ``parts`` to pin the width directly instead of deriving it
     from a row count — e.g. to the materialized partition count of a
     checkpointed edge list whose partitioning the rounds reuse (AQE
     already sized that one from the data)."""
-    keep_aqe = os.environ.get("OSMDW_ITER_AQE", "").lower() in ("1", "true")
     aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
     sp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
     if parts is not None:
@@ -76,9 +73,8 @@ def iter_loop_conf(
     else:
         loop_sp = max(1, -(-int(n_rows) // rows_per_partition))
         loop_sp = min(loop_sp, max(int(sp_before), 1))
-    if not keep_aqe:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
     try:
         yield loop_sp
     finally:

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..plans.registry import query
 from ..sources.catalog import load_table
+from ..sources.sinks import commit_store
 
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is")
 _STOP_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
@@ -1423,10 +1424,10 @@ def purge_bm25_index(
     fresh build over the filtered corpus — pinned in
     tests/test_tombstone.py, and q_tombstone_served's oracle proves
     the SERVED ranking equals the filtered-corpus recompute.
-    Stage-rename commit (streaming.jobs protocol) guards readers; a
-    crash between the postings commit and the stats refresh leaves a
-    consistent store one stats-refresh behind, restored by the next
-    maintenance batch (the bm25_index_merge_fn contract).
+    sinks.commit_store guards readers; a crash between the postings
+    commit and the stats refresh leaves a consistent store one
+    stats-refresh behind, restored by the next maintenance batch
+    (the bm25_index_merge_fn contract).
 
     The postings schema is INFERRED, not fixed: a store built with
     meta columns (filtered serving) must keep them through a purge —
@@ -1436,32 +1437,21 @@ def purge_bm25_index(
     unchanged."""
     from pyspark.errors import AnalysisException
 
-    from ..streaming.jobs import _commit_store, _recover_store
+    store_dir = f"{index_path}/postings"
 
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    store_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/postings")
-    stage_path = jvm.org.apache.hadoop.fs.Path(
-        f"{index_path}/postings_stage"
-    )
-    fs = store_path.getFileSystem(hconf)
-    _recover_store(fs, store_path, stage_path)
-    try:
-        post = spark.read.parquet(f"{index_path}/postings")
-    except AnalysisException:
-        return  # fileless (empty-corpus) store: nothing to purge
-    kept = post.join(
-        F.broadcast(deleted.select("doc_id").distinct()),
-        "doc_id",
-        "left_anti",
-    )
-    kept.hint("rebalance", "bkt").write.mode("overwrite").partitionBy(
-        "bkt"
-    ).parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
-    write_bm25_stats(
-        spark.read.parquet(f"{index_path}/postings"), index_path
-    )
+    def fold(exists: bool) -> DataFrame | None:
+        try:
+            post = spark.read.parquet(store_dir)
+        except AnalysisException:
+            return None  # fileless (empty-corpus) store: nothing to purge
+        return post.join(
+            F.broadcast(deleted.select("doc_id").distinct()),
+            "doc_id",
+            "left_anti",
+        )
+
+    if commit_store(spark, store_dir, fold, partition_by=("bkt",)):
+        write_bm25_stats(spark.read.parquet(store_dir), index_path)
 
 
 def bm25_search(

@@ -88,10 +88,5 @@ def load_all_queries() -> dict[str, QuerySpec]:
     """Import every operator module (side effect: registration)."""
     root = __name__.rsplit(".", 2)[0]  # top-level package
     for mod in _OPERATOR_MODULES:
-        try:
-            importlib.import_module(f"{root}.operators.{mod}")
-        except ModuleNotFoundError as exc:
-            # tolerate not-yet-written modules during incremental build
-            if f"operators.{mod}" not in str(exc):
-                raise
+        importlib.import_module(f"{root}.operators.{mod}")
     return QUERIES

@@ -49,14 +49,9 @@ _RUNTIME_SQL_CONF: dict[str, str] = {
     # large-large candidate-pair joins at 100 TB where SMJ's sort is
     # strictly safer.  If a specific operator provably wins under
     # SHJ, apply a SHUFFLE_HASH hint there with its own control
-    # measurement, not a global default.  Env knobs kept so cluster
-    # operators can still experiment without a code change.
-    "spark.sql.join.preferSortMergeJoin": os.environ.get(
-        "OSMDW_PREFER_SMJ", "true"
-    ),
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": os.environ.get(
-        "OSMDW_SHJ_LOCAL_MAP_THRESHOLD", "0"
-    ),
+    # measurement, not a global default.
+    "spark.sql.join.preferSortMergeJoin": "true",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "0",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
 }
@@ -99,14 +94,11 @@ def get_spark(
         .config("spark.driver.memory", driver_memory or os.environ.get("OSMDW_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # Split-size is env-tunable; measured at sf0.1: finer splits
-        # (2m) LOSE to the 128m default — task-launch overhead exceeds
-        # the scan win on MB-scale files. The default is also what a
-        # TB-scale deployment wants, so it stays.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("OSMDW_MAX_PARTITION_BYTES", "128m"),
-        )
+        # Split size, measured at sf0.1: finer splits (2m) LOSE to
+        # the 128m default — task-launch overhead exceeds the scan win
+        # on MB-scale files. The default is also what a TB-scale
+        # deployment wants, so it stays.
+        .config("spark.sql.files.maxPartitionBytes", "128m")
         # The generated-class cache defaults to 100 entries; a session
         # running the full headline suite compiles several hundred
         # WholeStageCodegen stages, so giant classes (q_repetition's

@@ -8,11 +8,20 @@ statistics, predicate-pushdown-able on re-read).
 `partition_by` is the 100 TB lever: a layout partitioned on the query
 key (e.g. event date) turns full scans into partition-pruned scans;
 `bucket_by` co-locates join keys so repeated joins skip the exchange.
+
+`commit_store` is the one crash- and redelivery-safe rewrite of a
+maintained store (streaming merges, tombstone purges, compactions).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+
+# Store-dir files that certify applied merge batches / purge requests;
+# the underscore prefix hides them from parquet readers (like _SUCCESS).
+_MARKER_PREFIXES = ("_applied_", "_purged_")
 
 
 def write_parquet(
@@ -25,6 +34,79 @@ def write_parquet(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
+
+
+def commit_store(
+    spark: SparkSession,
+    store_dir: str,
+    fold: Callable[[bool], DataFrame | None],
+    marker: str | None = None,
+    partition_by: tuple[str, ...] = (),
+) -> bool:
+    """Replace the maintained parquet store at ``store_dir`` with the
+    frame ``fold`` returns, through the stage-rename commit every
+    incremental store shares (streaming merges, tombstone purges,
+    compactions).  Returns True when a new store was committed.
+
+    Steps, in order:
+
+    1. Recover: a missing store next to a ``{store_dir}_stage`` dir
+       means a crash landed between step 6's delete and rename; the
+       stage was complete before the delete ran, so it IS the
+       committed state and is renamed into place before anything
+       reads the store.
+    2. Redelivery: when ``marker`` (an ``_applied_<batch>`` or
+       ``_purged_<request>`` name) already sits in the store, the
+       request was committed before — return without calling ``fold``
+       or writing anything.  Non-idempotent merges (counter addition
+       and subtraction) rely on this; idempotent ones pass no marker.
+    3. ``fold(exists)`` builds the new store from the current one
+       (``exists`` says whether there is one).  ``None`` means there
+       is nothing to commit, e.g. a purge of a store never built.
+    4. Write the stage with overwrite, so a partial stage left by a
+       crash before the commit is replaced.  ``partition_by`` writes a
+       partitioned store, rebalanced on the same columns first so each
+       partition gets few files.
+    5. Carry every ``_applied_`` / ``_purged_`` marker of the store,
+       plus ``marker``, into the stage: the rename then commits the
+       markers atomically with the rows they certify, so neither a
+       marker without its rows nor rows without their marker can be
+       observed.
+    6. Delete the store and rename the stage over it.
+
+    A crash before step 6 leaves the old store intact (the retry
+    rebuilds the stage); a crash inside step 6 is finished by step 1
+    of the next call; no interleaving loses or double-applies state.
+    """
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path
+    store_path = hpath(store_dir)
+    stage_dir = f"{store_dir}_stage"
+    stage_path = hpath(stage_dir)
+    fs = store_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(store_path) and fs.exists(stage_path):
+        fs.rename(stage_path, store_path)
+    exists = fs.exists(store_path)
+    if marker and fs.exists(hpath(f"{store_dir}/{marker}")):
+        return False
+    merged = fold(exists)
+    if merged is None:
+        return False
+    if partition_by:
+        merged = merged.hint("rebalance", *partition_by)
+    write_parquet(merged, stage_dir, partition_by=partition_by)
+    markers = [marker] if marker else []
+    if exists:
+        markers += [
+            s.getPath().getName()
+            for s in fs.listStatus(store_path)
+            if s.getPath().getName().startswith(_MARKER_PREFIXES)
+        ]
+    for name in markers:
+        fs.create(hpath(f"{stage_dir}/{name}"), True).close()
+    fs.delete(store_path, True)
+    fs.rename(stage_path, store_path)
+    return True
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

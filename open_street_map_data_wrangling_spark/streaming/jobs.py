@@ -28,13 +28,15 @@ a continuous trigger + checkpointLocation on durable storage.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from ..sources.sinks import commit_store
 
 # Explicit source schema — streaming readers must not infer (a schema
 # change midstream is an operational event, not a silent widening).
@@ -212,12 +214,8 @@ def incremental_hourly_rollup(stream: DataFrame, target_dir: str):
     normal DataFrame, so the merge itself is ordinary engine code —
     see rollup_merge_fn for the retry-safety contract.
     Returns the StreamingQuery (caller stops it)."""
-    return (
-        stream.writeStream.foreachBatch(
-            rollup_merge_fn(stream.sparkSession, target_dir)
-        )
-        .option("checkpointLocation", f"{target_dir}_ckpt")
-        .start()
+    return _maintain(
+        stream, rollup_merge_fn(stream.sparkSession, target_dir), target_dir
     )
 
 
@@ -420,11 +418,7 @@ def scd2_dimension_maintenance(delta_stream: DataFrame, target_dir: str):
         spark.read.parquet(stage_dir).write.mode("overwrite").parquet(target_dir)
         fs.delete(jvm.org.apache.hadoop.fs.Path(stage_dir), True)
 
-    return (
-        delta_stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", f"{target_dir}_ckpt")
-        .start()
-    )
+    return _maintain(delta_stream, merge, target_dir)
 
 
 def incremental_near_dedup(doc_stream: DataFrame, store_dir: str, out_dir: str):
@@ -451,12 +445,10 @@ def incremental_near_dedup(doc_stream: DataFrame, store_dir: str, out_dir: str):
     (bi, bv), the LSH bucket posture dedup.py audits.
 
     Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            near_dedup_merge_fn(doc_stream.sparkSession, store_dir, out_dir)
-        )
-        .option("checkpointLocation", f"{out_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        near_dedup_merge_fn(doc_stream.sparkSession, store_dir, out_dir),
+        out_dir,
     )
 
 
@@ -523,38 +515,15 @@ def near_dedup_merge_fn(spark: SparkSession, store_dir: str, out_dir: str):
     return merge
 
 
-def _store_paths(spark: SparkSession, store_dir: str):
-    """(jvm, fs, store Path, stage Path) for the stage-rename commit
-    protocol shared by the sketch-store merges below."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    store_path = jvm.org.apache.hadoop.fs.Path(store_dir)
+def _maintain(stream: DataFrame, merge_fn, store: str):
+    """Run ``merge_fn`` as the foreachBatch body of ``stream`` with its
+    checkpoint at ``{store}_ckpt``; returns the StreamingQuery (caller
+    stops it)."""
     return (
-        jvm,
-        store_path.getFileSystem(hconf),
-        store_path,
-        jvm.org.apache.hadoop.fs.Path(f"{store_dir}_stage"),
+        stream.writeStream.foreachBatch(merge_fn)
+        .option("checkpointLocation", f"{store}_ckpt")
+        .start()
     )
-
-
-def _recover_store(fs, store_path, stage_path) -> None:
-    """Finish an interrupted stage-rename commit: the store is only
-    ever deleted AFTER the stage dir is completely written, so a
-    missing store with a present stage means the crash landed between
-    delete and rename — the stage IS the committed state."""
-    if not fs.exists(store_path) and fs.exists(stage_path):
-        fs.rename(stage_path, store_path)
-
-
-def _commit_store(fs, store_path, stage_path) -> None:
-    """Publish a fully-written stage dir as the store: delete the old
-    store, rename the stage over it.  The only crash window is
-    between delete and rename, and _recover_store closes it on the
-    next merge call — the stage is complete by construction when the
-    delete runs, so no state is ever lost mid-commit."""
-    if fs.exists(store_path):
-        fs.delete(store_path, True)
-    fs.rename(stage_path, store_path)
 
 
 def hll_merge_fn(spark: SparkSession, store_dir: str):
@@ -572,29 +541,27 @@ def hll_merge_fn(spark: SparkSession, store_dir: str):
     batch would then merge from the truncation, silently losing
     registers.  Hence stage-then-rename: the merged table is fully
     written to a stage dir, the old store is deleted, and the stage
-    is renamed into place; a crash between delete and rename is
-    repaired by _recover_store before the next merge reads anything.
-    Replaying a batch against any recovered state is harmless — max
-    is idempotent."""
+    is renamed into place (sinks.commit_store, which also repairs a
+    crash between delete and rename before the next merge reads
+    anything).  Replaying a batch against any recovered state is
+    harmless — max is idempotent."""
     from ..operators.sketches import hll_registers
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = hll_registers(batch_df, "event_type", "event_id").select(
-            "event_type", "b", "m"
-        )
-        if fs.exists(store_path):
-            current = spark.read.parquet(store_dir)
-            merged = (
-                current.unionByName(delta)
+        def fold(exists: bool) -> DataFrame:
+            delta = hll_registers(batch_df, "event_type", "event_id").select(
+                "event_type", "b", "m"
+            )
+            if not exists:
+                return delta
+            return (
+                spark.read.parquet(store_dir)
+                .unionByName(delta)
                 .groupBy("event_type", "b")
                 .agg(F.max("m").alias("m"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold)
 
     return merge
 
@@ -608,12 +575,8 @@ def hll_sketch_maintenance(stream: DataFrame, store_dir: str):
     bit-identical to hll_registers() over the concatenated input
     (pinned in tests/test_streaming.py, including under replay).
     Returns the StreamingQuery (caller stops it)."""
-    return (
-        stream.writeStream.foreachBatch(
-            hll_merge_fn(stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        stream, hll_merge_fn(stream.sparkSession, store_dir), store_dir
     )
 
 
@@ -622,68 +585,48 @@ def cms_merge_fn(spark: SparkSession, store_dir: str):
     hll_merge_fn: counter addition is NOT idempotent, so a
     redelivered batch would double-count every token it carries.
     The applied-batch markers therefore live INSIDE the store dir as
-    `_applied_<batch_id>` files (underscore-prefixed = invisible to
-    parquet readers, like _SUCCESS): the stage dir is built with the
-    new counters AND the full marker set, then renamed over the store
-    in one _commit_store step — counters and their marker commit
-    atomically, closing both the marker-after-commit double-count
-    window and the mid-overwrite truncation window that a separate
-    marker dir left open.  Token stream matches the batch CMS
-    (q_cms_topk) exactly: split on single space, EMPTY TOKENS
-    INCLUDED — filtering them here while the batch side counts them
-    broke the store==batch invariant for any text with doubled or
-    leading/trailing spaces.  Together the two jobs document the
-    rule: pick sketch state whose merge is idempotent (max /
-    set-union) when you can, pay the transactional-marker cost only
-    when the semantics force addition."""
+    `_applied_<batch_id>` files that sinks.commit_store checks and
+    commits atomically with the counters, closing both the
+    marker-after-commit double-count window and the mid-overwrite
+    truncation window that a separate marker dir left open.  Token
+    stream matches the batch CMS (q_cms_topk) exactly: split on
+    single space, EMPTY TOKENS INCLUDED — filtering them here while
+    the batch side counts them broke the store==batch invariant for
+    any text with doubled or leading/trailing spaces.  Together the
+    two jobs document the rule: pick sketch state whose merge is
+    idempotent (max / set-union) when you can, pay the
+    transactional-marker cost only when the semantics force
+    addition."""
     from ..operators.sketches import _CMS_D, _CMS_W  # noqa: F401
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        tf = (
-            batch_df.select(F.explode(F.split("text", " ")).alias("tok"))
-            .groupBy("tok")
-            .agg(F.count("*").cast("bigint").alias("n"))
-        )
-        delta = None
-        for d in range(_CMS_D):
-            c = tf.groupBy(
-                F.expr(
-                    f"CAST(conv(substring(md5(concat('c{d}:', tok)), 1, 12),"
-                    f" 16, 10) AS BIGINT) % {_CMS_W}"
-                ).alias("pos")
-            ).agg(F.sum("n").cast("bigint").alias("c")).select(
-                F.lit(d).alias("d"), "pos", "c"
+        def fold(exists: bool) -> DataFrame:
+            tf = (
+                batch_df.select(F.explode(F.split("text", " ")).alias("tok"))
+                .groupBy("tok")
+                .agg(F.count("*").cast("bigint").alias("n"))
             )
-            delta = c if delta is None else delta.unionAll(c)
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+            delta = None
+            for d in range(_CMS_D):
+                c = tf.groupBy(
+                    F.expr(
+                        f"CAST(conv(substring(md5(concat('c{d}:', tok)), 1, 12),"
+                        f" 16, 10) AS BIGINT) % {_CMS_W}"
+                    ).alias("pos")
+                ).agg(F.sum("n").cast("bigint").alias("c")).select(
+                    F.lit(d).alias("d"), "pos", "c"
+                )
+                delta = c if delta is None else delta.unionAll(c)
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("d", "pos")
                 .agg(F.sum("c").cast("bigint").alias("c"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        # markers ride in the stage dir so the rename commits them
-        # atomically with the counters they certify
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
 
     return merge
 
@@ -694,12 +637,8 @@ def cms_counter_maintenance(doc_stream: DataFrame, store_dir: str):
     any reader answers "how often has token X occurred so far" from
     a few KB of state.  Marker-gated against redelivery (see
     cms_merge_fn).  Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            cms_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream, cms_merge_fn(doc_stream.sparkSession, store_dir), store_dir
     )
 
 
@@ -776,12 +715,10 @@ def ivfpq_index_maintenance(
     continuous delta, and both produce byte-identical codes because
     they share one projection against one persisted codebook.
     Returns the StreamingQuery (caller stops it)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            ivfpq_codes_merge_fn(vec_stream.sparkSession, index_path, meta)
-        )
-        .option("checkpointLocation", f"{index_path}_ckpt")
-        .start()
+    return _maintain(
+        vec_stream,
+        ivfpq_codes_merge_fn(vec_stream.sparkSession, index_path, meta),
+        index_path,
     )
 
 
@@ -802,23 +739,22 @@ def int8_scales_merge_fn(spark: SparkSession, store_dir: str):
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = _int8_scales(
-            batch_df.filter(F.col("embedding").isNotNull())
-        )
-        if fs.exists(store_path):
-            merged = (
+
+        def fold(exists: bool) -> DataFrame:
+            delta = _int8_scales(
+                batch_df.filter(F.col("embedding").isNotNull())
+            )
+            if not exists:
+                return delta
+            return (
                 spark.read.schema("pos BIGINT, m DOUBLE")
                 .parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("pos")
                 .agg(F.max("m").alias("m"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold)
 
     return merge
 
@@ -828,12 +764,10 @@ def int8_scales_maintenance(vec_stream: DataFrame, store_dir: str):
     stream; serving is similarity.int8_recall_served (or any int8
     scorer) reading the 64-row store instead of re-aggregating the
     corpus.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            int8_scales_merge_fn(vec_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        vec_stream,
+        int8_scales_merge_fn(vec_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -845,50 +779,34 @@ def lm_counts_merge_fn(spark: SparkSession, store_dir: str):
     serving is text.lm_score_docs(docs, spark.read.parquet(store)).
 
     Counter addition is not idempotent (the cms_merge_fn lesson), so
-    the applied-batch markers ride INSIDE the stage dir and commit
-    atomically with the counters via the same rename-over-store step —
-    a redelivered micro-batch is a no-op because of the marker, not by
-    luck.  The train-split filter is the SAME md5 nibble rule the
-    batch query trains on, so streamed store == batch LM counts over
-    the concatenated corpus, which the soak test pins exactly."""
+    each batch commits an `_applied_` marker with its counters through
+    sinks.commit_store — a redelivered micro-batch is a no-op because
+    of the marker, not by luck.  The train-split filter is the SAME
+    md5 nibble rule the batch query trains on, so streamed store ==
+    batch LM counts over the concatenated corpus, which the soak
+    test pins exactly."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = (
-            batch_df.filter(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-                <= "b"
+        def fold(exists: bool) -> DataFrame:
+            delta = (
+                batch_df.filter(
+                    F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
+                    <= "b"
+                )
+                .select(F.explode(F.split("text", " ")).alias("tok"))
+                .groupBy("tok")
+                .agg(F.count("*").cast("bigint").alias("c"))
             )
-            .select(F.explode(F.split("text", " ")).alias("tok"))
-            .groupBy("tok")
-            .agg(F.count("*").cast("bigint").alias("c"))
-        )
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("tok")
                 .agg(F.sum("c").cast("bigint").alias("c"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
 
     return merge
 
@@ -900,12 +818,10 @@ def lm_vocab_maintenance(doc_stream: DataFrame, store_dir: str):
     lm_counts_merge_fn).  The store IS the LM — scoring new docs
     against it is one broadcast join (text.lm_score_docs), no
     retraining pass.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            lm_counts_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        lm_counts_merge_fn(doc_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -913,31 +829,21 @@ def drift_counts_merge_fn(spark: SparkSession, store_dir: str):
     """Distribution-drift monitor maintenance — the (bkt, n_a, n_b)
     count table of pipeline_ops.q_quality_drift kept current over a
     document stream.  Counter addition is not idempotent (the
-    cms/lm lesson), so the applied-batch markers ride inside the
-    stage dir and commit atomically with the counters via the same
-    rename-over-store step.  The window/bucket tagging is the SAME
-    drift_counts expression the batch query uses, so streamed store
-    == batch counts over the concatenated corpus, and serving the
-    full drift report is pipeline_ops.drift_report(read(store)) —
-    a fold over at most `_DRIFT_BUCKETS` rows, zero corpus scans."""
+    cms/lm lesson), so each batch commits an `_applied_` marker with
+    its counters through sinks.commit_store.  The window/bucket
+    tagging is the SAME drift_counts expression the batch query
+    uses, so streamed store == batch counts over the concatenated
+    corpus, and serving the full drift report is
+    pipeline_ops.drift_report(read(store)) — a fold over at most
+    `_DRIFT_BUCKETS` rows, zero corpus scans."""
     from ..operators.pipeline_ops import drift_counts
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = drift_counts(batch_df)
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+        def fold(exists: bool) -> DataFrame:
+            delta = drift_counts(batch_df)
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("bkt")
@@ -946,14 +852,8 @@ def drift_counts_merge_fn(spark: SparkSession, store_dir: str):
                     F.sum("n_b").cast("bigint").alias("n_b"),
                 )
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
 
     return merge
 
@@ -965,12 +865,10 @@ def drift_stats_maintenance(doc_stream: DataFrame, store_dir: str):
     The store IS the monitor's state — any reader folds it into the
     q_quality_drift report at any moment without touching the
     document history.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            drift_counts_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        drift_counts_merge_fn(doc_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -981,42 +879,25 @@ def decayed_counts_merge_fn(spark: SparkSession, store_dir: str):
     the stored numbers — age enters only at serve time as a bucket
     shift (sketches.decayed_topk_from_store).  Counter addition is
     not idempotent, so redelivery protection is the CMS discipline:
-    `_applied_<batch_id>` markers ride INSIDE the store dir and
-    commit atomically with the counts via the shared stage-rename
-    protocol.  The store stays |active users| x |age buckets| rows
-    whatever the event volume — the compaction that makes a standing
-    trending query affordable."""
+    an `_applied_<batch_id>` marker commits atomically with the
+    counts through sinks.commit_store.  The store stays |active
+    users| x |age buckets| rows whatever the event volume — the
+    compaction that makes a standing trending query affordable."""
     from ..operators.sketches import decayed_counts
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = decayed_counts(batch_df)
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+        def fold(exists: bool) -> DataFrame:
+            delta = decayed_counts(batch_df)
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .unionByName(delta)
                 .groupBy("user_id", "bkt")
                 .agg(F.sum("cnt").cast("bigint").alias("cnt"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
 
     return merge
 
@@ -1031,12 +912,10 @@ def decayed_topk_maintenance(stream: DataFrame, store_dir: str):
     and the streamed store equals decayed_counts() over everything
     seen (pinned in tests/test_streaming.py, including under
     replay).  Returns the StreamingQuery (caller stops it)."""
-    return (
-        stream.writeStream.foreachBatch(
-            decayed_counts_merge_fn(stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        stream,
+        decayed_counts_merge_fn(stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -1046,29 +925,18 @@ def emb_drift_merge_fn(spark: SparkSession, store_dir: str):
     of newly ingested vectors folds its quantized component sums and
     counts into the store, so the standing drift report never
     rescans the embeddings history.  Counter addition is not
-    idempotent, so redelivery protection is the CMS discipline:
-    `_applied_<batch_id>` markers ride INSIDE the store dir and
-    commit atomically with the sums via the shared stage-rename
-    protocol.  The store stays 2 x |dims| rows (128 here) whatever
-    the ingest volume."""
+    idempotent, so redelivery protection is the CMS discipline: an
+    `_applied_<batch_id>` marker commits atomically with the sums
+    through sinks.commit_store.  The store stays 2 x |dims| rows
+    (128 here) whatever the ingest volume."""
     from ..operators.similarity import drift_wave_sums
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = drift_wave_sums(batch_df)
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+        def fold(exists: bool) -> DataFrame:
+            delta = drift_wave_sums(batch_df)
+            if not exists:
+                return delta
+            return (
                 spark.read.schema("wave BIGINT, pos BIGINT, s BIGINT, n BIGINT")
                 .parquet(store_dir)
                 .unionByName(delta)
@@ -1078,14 +946,8 @@ def emb_drift_merge_fn(spark: SparkSession, store_dir: str):
                     F.sum("n").cast("bigint").alias("n"),
                 )
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
 
     return merge
 
@@ -1100,12 +962,10 @@ def embedding_drift_maintenance(vec_stream: DataFrame, store_dir: str):
     drift_wave_sums() over everything seen (pinned in
     tests/test_streaming.py, including under replay).  Returns the
     StreamingQuery (caller stops it)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            emb_drift_merge_fn(vec_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        vec_stream,
+        emb_drift_merge_fn(vec_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -1115,41 +975,26 @@ def shard_manifest_merge_fn(spark: SparkSession, store_dir: str):
     arrive IN (source, doc_id) ORDER (the append-only export
     contract: a batch is placed after everything already planned).
     The stored end offset is simply sum(bytes) over the store — no
-    separate state row — so placement is not idempotent and the
-    applied-batch markers ride the same stage-rename commit as every
-    other counter store here.  Every manifest column merges with
+    separate state row — so placement is not idempotent and each
+    batch commits an `_applied_` marker through sinks.commit_store,
+    like every other counter store here.  Every manifest column merges with
     sum/sum/min/max at (shard_id, source) grain, which is why the
     streamed store folded through shard_manifest_fold equals the
     one-shot plan over the concatenated corpus (pytest-pinned)."""
     from ..operators.pipeline_ops import shard_manifest, shard_place
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        prior_markers = []
-        end_offset = 0
-        store = None
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
+        def fold(exists: bool) -> DataFrame:
+            if not exists:
+                return shard_manifest(shard_place(batch_df, 0))
             store = spark.read.parquet(store_dir).select(
                 "shard_id", "source", "n_docs", "bytes",
                 "first_doc", "last_doc",
             )
             # bounded scalar: one aggregate row over the tiny store
-            end_offset = (
-                store.agg(F.sum("bytes")).collect()[0][0] or 0
-            )
-        delta = shard_manifest(shard_place(batch_df, int(end_offset)))
-        if store is not None:
-            merged = (
+            end_offset = store.agg(F.sum("bytes")).collect()[0][0] or 0
+            delta = shard_manifest(shard_place(batch_df, int(end_offset)))
+            return (
                 store.unionByName(delta)
                 .groupBy("shard_id", "source")
                 .agg(
@@ -1159,14 +1004,8 @@ def shard_manifest_merge_fn(spark: SparkSession, store_dir: str):
                     F.max("last_doc").cast("bigint").alias("last_doc"),
                 )
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
 
     return merge
 
@@ -1179,49 +1018,41 @@ def text_index_merge_fn(spark: SparkSession, index_path: str):
     set-union into postings/.  Idempotent by construction (the
     winnow-print argument: postings are a pure function of the doc,
     distinct-union absorbs redelivery), so no applied-batch markers;
-    stage-rename commit guards readers.  text.text_search serves
+    sinks.commit_store guards readers.  text.text_search serves
     from the maintained index unchanged, and streamed == batch-built
     is pytest-pinned."""
     from ..operators.text import _INDEX_BUCKETS
 
+    store_dir = f"{index_path}/postings"
+
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        store_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/postings")
-        stage_path = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/postings_stage"
-        )
-        fs = store_path.getFileSystem(hconf)
-        _recover_store(fs, store_path, stage_path)
-        delta = (
-            batch_df.select(
-                "doc_id", F.explode(F.split("text", " ")).alias("tok")
+        def fold(exists: bool) -> DataFrame:
+            delta = (
+                batch_df.select(
+                    "doc_id", F.explode(F.split("text", " ")).alias("tok")
+                )
+                .filter(F.col("tok") != "")
+                .distinct()
+                .withColumn(
+                    "bkt",
+                    F.pmod(F.xxhash64("tok"), F.lit(_INDEX_BUCKETS)).cast("int"),
+                )
             )
-            .filter(F.col("tok") != "")
-            .distinct()
-            .withColumn(
-                "bkt",
-                F.pmod(F.xxhash64("tok"), F.lit(_INDEX_BUCKETS)).cast("int"),
-            )
-        )
-        if fs.exists(store_path):
+            if not exists:
+                return delta
             # explicit schema (the text_search convention): an index
             # bootstrapped from an empty corpus leaves a fileless
             # postings dir that EXISTS, and schema inference would
             # crash the first real micro-batch instead of merging
-            merged = (
+            return (
                 spark.read.schema("doc_id BIGINT, tok STRING, bkt INT")
-                .parquet(f"{index_path}/postings")
+                .parquet(store_dir)
                 .select("doc_id", "tok", "bkt")
                 .unionByName(delta)
                 .distinct()
             )
-        else:
-            merged = delta
-        merged.hint("rebalance", "bkt").write.mode("overwrite").partitionBy(
-            "bkt"
-        ).parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold, partition_by=("bkt",))
 
     return merge
 
@@ -1231,12 +1062,10 @@ def text_index_maintenance(doc_stream: DataFrame, index_path: str):
     serving is text.text_search over the maintained postings —
     zero corpus scans.  Returns the StreamingQuery (caller stops
     it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            text_index_merge_fn(doc_stream.sparkSession, index_path)
-        )
-        .option("checkpointLocation", f"{index_path}/postings_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        text_index_merge_fn(doc_stream.sparkSession, index_path),
+        f"{index_path}/postings",
     )
 
 
@@ -1253,66 +1082,58 @@ def hardneg_cells_merge_fn(spark: SparkSession, index_path: str):
     min-k's (the KMV-sketch merge property), so the maintained store
     is IDENTICAL to a fresh build over the concatenated corpus
     (pytest-pinned) and the set-semantics merge is idempotent — no
-    applied-batch markers, just the stage-rename commit.  The whole
+    applied-batch markers, just sinks.commit_store.  The whole
     store is ≤ C × CAP rows, so the rewrite is bounded regardless of
     corpus size.  Append-only ids: re-embedding an existing id is the
     rebuild path's job, as with the ivfpq codes compaction."""
     from ..operators.similarity import (
         _HARDNEG_CELL_CAP,
+        _HARDNEG_SEEDS_DDL,
         _with_cell,
         dot_expr,
     )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        cells_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/cells")
-        stage_path = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/cells_stage"
-        )
-        fs = cells_path.getFileSystem(hconf)
-        _recover_store(fs, cells_path, stage_path)
-        from ..operators.similarity import _HARDNEG_SEEDS_DDL
+    store_dir = f"{index_path}/cells"
 
-        seeds = (
-            spark.read.schema(_HARDNEG_SEEDS_DDL)
-            .parquet(f"{index_path}/seeds")
-            .collect()
-        )
-        raw = {
-            int(r["vec_id"]): [float(x) for x in r["embedding"]]
-            for r in seeds
-        }
-        c = int(seeds[0]["n_centroids"]) if seeds else 0
-        if c == 0 or any(i not in raw for i in range(c)):
-            return  # bootstrap index was empty: nothing to tag against
-        cents = [raw[i] for i in range(c)]
-        delta = _with_cell(
-            batch_df.select("vec_id", "embedding"), cents
-        ).select(
-            "vec_id",
-            "embedding",
-            F.sqrt(dot_expr("embedding", "embedding")).alias("nrm"),
-            "cid",
-        )
-        store = spark.read.parquet(f"{index_path}/cells").select(
-            "vec_id", "embedding", "nrm", "cid"
-        )
-        rk_w = W.partitionBy("cid").orderBy(
-            F.md5(F.col("vec_id").cast("string")).asc(),
-            F.col("vec_id").asc(),
-        )
-        merged = (
-            store.unionByName(delta)
-            .distinct()
-            .withColumn("rk", F.row_number().over(rk_w))
-            .filter(F.col("rk") <= _HARDNEG_CELL_CAP)
-            .drop("rk")
-        )
-        merged.hint("rebalance", "cid").write.mode("overwrite").partitionBy(
-            "cid"
-        ).parquet(str(stage_path))
-        _commit_store(fs, cells_path, stage_path)
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        def fold(exists: bool) -> DataFrame | None:
+            seeds = (
+                spark.read.schema(_HARDNEG_SEEDS_DDL)
+                .parquet(f"{index_path}/seeds")
+                .collect()
+            )
+            raw = {
+                int(r["vec_id"]): [float(x) for x in r["embedding"]]
+                for r in seeds
+            }
+            c = int(seeds[0]["n_centroids"]) if seeds else 0
+            if c == 0 or any(i not in raw for i in range(c)):
+                return None  # bootstrap index was empty: nothing to tag against
+            cents = [raw[i] for i in range(c)]
+            delta = _with_cell(
+                batch_df.select("vec_id", "embedding"), cents
+            ).select(
+                "vec_id",
+                "embedding",
+                F.sqrt(dot_expr("embedding", "embedding")).alias("nrm"),
+                "cid",
+            )
+            store = spark.read.parquet(store_dir).select(
+                "vec_id", "embedding", "nrm", "cid"
+            )
+            rk_w = W.partitionBy("cid").orderBy(
+                F.md5(F.col("vec_id").cast("string")).asc(),
+                F.col("vec_id").asc(),
+            )
+            return (
+                store.unionByName(delta)
+                .distinct()
+                .withColumn("rk", F.row_number().over(rk_w))
+                .filter(F.col("rk") <= _HARDNEG_CELL_CAP)
+                .drop("rk")
+            )
+
+        commit_store(spark, store_dir, fold, partition_by=("cid",))
 
     return merge
 
@@ -1322,12 +1143,10 @@ def hardneg_cells_maintenance(vec_stream: DataFrame, index_path: str):
     stream: new embeddings fold into the bounded per-cell samples;
     similarity.hardneg_search serves from the maintained cells/
     unchanged.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        vec_stream.writeStream.foreachBatch(
-            hardneg_cells_merge_fn(vec_stream.sparkSession, index_path)
-        )
-        .option("checkpointLocation", f"{index_path}/cells_ckpt")
-        .start()
+    return _maintain(
+        vec_stream,
+        hardneg_cells_merge_fn(vec_stream.sparkSession, index_path),
+        f"{index_path}/cells",
     )
 
 
@@ -1335,8 +1154,10 @@ def span_gram_merge_fn(spark: SparkSession, store_dir: str):
     """ExactSubstr gram-count maintenance — the corpus-wide
     (g, cnt) table behind q_dup_spans' duplicated-gram set, kept
     current over a document stream.  Counter addition is not
-    idempotent (the cms/drift lesson), so applied-batch markers ride
-    inside the stage dir and commit atomically with the counters.
+    idempotent (the cms/drift lesson), so each batch commits an
+    `_applied_` marker with its counters through sinks.commit_store,
+    which also carries any `_purged_` marker purge_span_gram_store
+    left.
     The gram derivation is dedup._span_gram_base — the SAME exact
     md5 window hash the batch query uses — so the streamed store's
     cnt >= 2 set over the concatenated corpus equals the batch dup
@@ -1346,40 +1167,24 @@ def span_gram_merge_fn(spark: SparkSession, store_dir: str):
     from ..operators.dedup import _span_gram_base
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{store_dir}/_applied_{batch_id}"
-        )
-        if fs.exists(marker):
-            return
-        delta = (
-            _span_gram_base(batch_df.select("doc_id", "text"))
-            .where(F.col("g").isNotNull())
-            .groupBy("g")
-            .agg(F.count("*").cast("bigint").alias("cnt"))
-        )
-        prior_markers = []
-        if fs.exists(store_path):
-            for status in fs.listStatus(store_path):
-                name = status.getPath().getName()
-                if name.startswith("_applied_"):
-                    prior_markers.append(name)
-            merged = (
+        def fold(exists: bool) -> DataFrame:
+            delta = (
+                _span_gram_base(batch_df.select("doc_id", "text"))
+                .where(F.col("g").isNotNull())
+                .groupBy("g")
+                .agg(F.count("*").cast("bigint").alias("cnt"))
+            )
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .select("g", "cnt")
                 .unionByName(delta)
                 .groupBy("g")
                 .agg(F.sum("cnt").cast("bigint").alias("cnt"))
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        for name in prior_markers + [f"_applied_{batch_id}"]:
-            fs.create(
-                jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-            ).close()
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
 
     return merge
 
@@ -1391,12 +1196,10 @@ def span_gram_maintenance(doc_stream: DataFrame, store_dir: str):
     state — span_dup_coverage_serve scores new documents against the
     whole streamed history without re-reading it.  Returns the
     StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            span_gram_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        span_gram_merge_fn(doc_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -1432,30 +1235,26 @@ def winnow_print_merge_fn(spark: SparkSession, store_dir: str):
     construction — a redelivered batch changes nothing and no
     applied-batch markers are needed (the cheap half of the
     idempotent-vs-marker trade documented on the CMS counter store);
-    the stage-rename commit still guards readers against torn
-    stores.  The store is the incremental clone-detection index: at
-    2 bigints per print and ~2/(W+1) prints per token it is a small
+    sinks.commit_store still guards readers against torn stores.
+    The store is the incremental clone-detection index: at 2
+    bigints per print and ~2/(W+1) prints per token it is a small
     constant fraction of corpus size, and serving pairs never
     re-reads any document."""
     from ..operators.text import _winnow_base
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = _winnow_base(
-            batch_df.select("doc_id", "text")
-        ).distinct()
-        if fs.exists(store_path):
-            merged = (
+        def fold(exists: bool) -> DataFrame:
+            delta = _winnow_base(batch_df.select("doc_id", "text")).distinct()
+            if not exists:
+                return delta
+            return (
                 spark.read.parquet(store_dir)
                 .select("doc_id", "sel")
                 .unionByName(delta)
                 .distinct()
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold)
 
     return merge
 
@@ -1466,12 +1265,10 @@ def winnow_print_maintenance(doc_stream: DataFrame, store_dir: str):
     candidates is winnow_pairs_serve — the full MOSS matching step
     over the store alone, zero corpus scans.  Returns the
     StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            winnow_print_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        winnow_print_merge_fn(doc_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -1488,6 +1285,28 @@ def winnow_pairs_serve(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
+def _purge_ids(
+    spark: SparkSession,
+    store_dir: str,
+    deleted: DataFrame,
+    read: Callable[[], DataFrame],
+    key: str = "doc_id",
+    partition_by: tuple[str, ...] = (),
+) -> None:
+    """Tombstone purge shared by the stores that key rows by id: drop
+    ``deleted``'s ``key`` values from the rows ``read()`` returns in
+    one broadcast anti-join rewrite, committed by sinks.commit_store.
+    A missing store is a no-op."""
+
+    def fold(exists: bool) -> DataFrame | None:
+        if not exists:
+            return None
+        ids = F.broadcast(deleted.select(key).distinct())
+        return read().join(ids, key, "left_anti")
+
+    commit_store(spark, store_dir, fold, partition_by=partition_by)
+
+
 def purge_span_gram_store(
     spark: SparkSession, store_dir: str, deleted_docs: DataFrame
 ) -> None:
@@ -1500,26 +1319,21 @@ def purge_span_gram_store(
     its text one last time — the deletion request runs BEFORE the
     corpus rewrite drops the row (the q_tombstone_delete audit's
     ordering).  The purged store equals a rebuild from the filtered
-    corpus (pinned in tests/test_tombstone.py).  Applied-batch
-    markers are carried into the stage dir unchanged — a purge is
-    not a batch and must not disturb redelivery detection —
-    and the stage-rename commit guards readers as ever.
+    corpus (pinned in tests/test_tombstone.py).  A missing store is a
+    no-op.
 
     Counter subtraction is NOT idempotent (the same hazard the
     _applied_ markers close for additive merges), so each deletion
-    request also commits a ``_purged_<request-hash>`` marker into the
-    store dir atomically with the counters it subtracted: the hash is
-    md5 over the sorted deleted doc_ids, so a retried or redelivered
-    request no-ops instead of subtracting shared gram counts a second
-    time (ADVICE r12: a double purge silently under-counted grams
-    shared with surviving docs)."""
+    request commits a ``_purged_<request-hash>`` marker through
+    sinks.commit_store: the hash is md5 over the sorted deleted
+    doc_ids, so a retried or redelivered request no-ops instead of
+    subtracting shared gram counts a second time (ADVICE r12: a
+    double purge silently under-counted grams shared with surviving
+    docs).  The helper carries every marker through later merges
+    too, so neither the purge nor any applied batch is forgotten."""
     from ..operators.dedup import _span_gram_base
 
-    jvm, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    req_row = (
+    h = (
         deleted_docs.select(F.col("doc_id").cast("bigint").alias("doc_id"))
         .distinct()
         .agg(
@@ -1527,40 +1341,28 @@ def purge_span_gram_store(
                 F.concat_ws(",", F.sort_array(F.collect_list("doc_id")))
             ).alias("h")
         )
-        .collect()[0]
+        .collect()[0]["h"]
     )
-    purged_marker = jvm.org.apache.hadoop.fs.Path(
-        f"{store_dir}/_purged_{req_row['h']}"
-    )
-    if fs.exists(purged_marker):
-        return
-    neg = (
-        _span_gram_base(deleted_docs.select("doc_id", "text"))
-        .where(F.col("g").isNotNull())
-        .groupBy("g")
-        .agg((-F.count("*")).cast("bigint").alias("cnt"))
-    )
-    prior_markers = [
-        status.getPath().getName()
-        for status in fs.listStatus(store_path)
-        if status.getPath().getName().startswith(("_applied_", "_purged_"))
-    ]
-    merged = (
-        spark.read.parquet(store_dir)
-        .select("g", "cnt")
-        .unionByName(neg)
-        .groupBy("g")
-        .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-        .where(F.col("cnt") > 0)
-    )
-    merged.write.mode("overwrite").parquet(str(stage_path))
-    # the new _purged_ marker rides in the stage dir so the rename
-    # commits it atomically with the subtracted counters it certifies
-    for name in prior_markers + [f"_purged_{req_row['h']}"]:
-        fs.create(
-            jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"), True
-        ).close()
-    _commit_store(fs, store_path, stage_path)
+
+    def fold(exists: bool) -> DataFrame | None:
+        if not exists:
+            return None
+        neg = (
+            _span_gram_base(deleted_docs.select("doc_id", "text"))
+            .where(F.col("g").isNotNull())
+            .groupBy("g")
+            .agg((-F.count("*")).cast("bigint").alias("cnt"))
+        )
+        return (
+            spark.read.parquet(store_dir)
+            .select("g", "cnt")
+            .unionByName(neg)
+            .groupBy("g")
+            .agg(F.sum("cnt").cast("bigint").alias("cnt"))
+            .where(F.col("cnt") > 0)
+        )
+
+    commit_store(spark, store_dir, fold, marker=f"_purged_{h}")
 
 
 def purge_text_index(
@@ -1575,27 +1377,15 @@ def purge_text_index(
     no corpus stats to refresh (q_text_search ranks by plain match
     counts).  Purged store == fresh build over the filtered corpus
     (tests/test_tombstone.py)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    store_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/postings")
-    stage_path = jvm.org.apache.hadoop.fs.Path(
-        f"{index_path}/postings_stage"
+    store_dir = f"{index_path}/postings"
+    ddl = "doc_id BIGINT, tok STRING, bkt INT"
+    _purge_ids(
+        spark,
+        store_dir,
+        deleted,
+        lambda: spark.read.schema(ddl).parquet(store_dir),
+        partition_by=("bkt",),
     )
-    fs = store_path.getFileSystem(hconf)
-    _recover_store(fs, store_path, stage_path)
-    kept = (
-        spark.read.schema("doc_id BIGINT, tok STRING, bkt INT")
-        .parquet(f"{index_path}/postings")
-        .join(
-            F.broadcast(deleted.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
-    )
-    kept.hint("rebalance", "bkt").write.mode("overwrite").partitionBy(
-        "bkt"
-    ).parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def purge_image_prints(
@@ -1604,23 +1394,13 @@ def purge_image_prints(
     """Tombstone purge of the perceptual image-fingerprint store:
     one broadcast anti-join on doc_id — a forgotten image can never
     again be named by image_dedup_check.  Set-union state, no
-    markers; stage-rename commit.  == filtered rebuild
-    (tests/test_tombstone.py)."""
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    kept = (
-        spark.read.schema(_IMAGE_PRINTS_DDL)
-        .parquet(store_dir)
-        .join(
-            F.broadcast(deleted.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
+    markers.  == filtered rebuild (tests/test_tombstone.py)."""
+    _purge_ids(
+        spark,
+        store_dir,
+        deleted,
+        lambda: spark.read.schema(_IMAGE_PRINTS_DDL).parquet(store_dir),
     )
-    kept.write.mode("overwrite").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def purge_contamination_bands(
@@ -1638,21 +1418,12 @@ def purge_contamination_bands(
     the HLL/KMV/CMS sketch stores are fold-only by construction.
     Those are rebuild-required under deletion, the standard sketch
     contract."""
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    kept = (
-        spark.read.schema(_CONTAM_BANDS_DDL)
-        .parquet(store_dir)
-        .join(
-            F.broadcast(deleted.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
+    _purge_ids(
+        spark,
+        store_dir,
+        deleted,
+        lambda: spark.read.schema(_CONTAM_BANDS_DDL).parquet(store_dir),
     )
-    kept.write.mode("overwrite").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def geo_points_merge_fn(spark: SparkSession, store_dir: str):
@@ -1695,12 +1466,10 @@ def geo_index_maintenance(point_stream: DataFrame, store_dir: str):
     land in their superblock's leaf partitions as they arrive, so
     proximity_search always serves the full ingest history without a
     rebuild.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        point_stream.writeStream.foreachBatch(
-            geo_points_merge_fn(point_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        point_stream,
+        geo_points_merge_fn(point_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -1709,33 +1478,22 @@ def purge_geo_index(
 ) -> None:
     """Tombstone purge of the spatial grid index: drop the deleted
     point ids in one broadcast anti-join rewrite, preserving the
-    superblock + batch partitioning.  Commit is the store rename
-    protocol (ADVICE r12: a second overwrite into the live path
-    deletes the live dir before rewriting, so a crash mid-commit
-    left the store missing/partial) — stage fully written, then
-    delete-old + rename, with _recover_store closing the
-    delete→rename window on the next call.  A forgotten point can
-    never again be returned by proximity_search; == filtered rebuild
-    pinned in tests/test_tombstone.py."""
+    superblock + batch partitioning.  Commit is sinks.commit_store
+    (ADVICE r12: a second overwrite into the live path deletes the
+    live dir before rewriting, so a crash mid-commit left the store
+    missing/partial).  A forgotten point can never again be returned
+    by proximity_search; == filtered rebuild pinned in
+    tests/test_tombstone.py."""
     from ..operators.geo import _GEO_STORE_DDL
 
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    kept = (
-        spark.read.schema(_GEO_STORE_DDL)
-        .parquet(store_dir)
-        .join(
-            F.broadcast(deleted.select("id").distinct()),
-            "id",
-            "left_anti",
-        )
+    _purge_ids(
+        spark,
+        store_dir,
+        deleted,
+        lambda: spark.read.schema(_GEO_STORE_DDL).parquet(store_dir),
+        key="id",
+        partition_by=("gbx", "gby", "__batch"),
     )
-    kept.hint("rebalance", "gbx", "gby", "__batch").write.mode(
-        "overwrite"
-    ).partitionBy("gbx", "gby", "__batch").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def purge_winnow_store(
@@ -1746,24 +1504,15 @@ def purge_winnow_store(
     winnow_pairs_serve can never again pair a forgotten document.
     The store keys prints BY doc_id (unlike the span-gram counters),
     so the request set alone suffices — no text replay.  Set-union
-    state needs no markers (the merge is idempotent); stage-rename
-    commit guards readers.  Purged store == rebuild from the
-    filtered corpus, pinned in tests/test_tombstone.py."""
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
-    if not fs.exists(store_path):
-        return
-    kept = (
-        spark.read.parquet(store_dir)
-        .select("doc_id", "sel")
-        .join(
-            F.broadcast(deleted.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
+    state needs no markers (the merge is idempotent).  Purged store
+    == rebuild from the filtered corpus, pinned in
+    tests/test_tombstone.py."""
+    _purge_ids(
+        spark,
+        store_dir,
+        deleted,
+        lambda: spark.read.parquet(store_dir).select("doc_id", "sel"),
     )
-    kept.write.mode("overwrite").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
 
 
 def contamination_bands_merge_fn(spark: SparkSession, store_dir: str):
@@ -1774,7 +1523,7 @@ def contamination_bands_merge_fn(spark: SparkSession, store_dir: str):
     function of its text and the merge is distinct-union, so the
     operation is IDEMPOTENT (the winnow-store half of the
     idempotent-vs-marker trade — no applied-batch markers);
-    stage-rename commit guards readers.  The store is the standing
+    sinks.commit_store guards readers.  The store is the standing
     eval gate's state: ~4 rows × (8 bytes + a ~26-char band value)
     per train doc, and checking a NEW test set against the whole
     train history never re-reads a train document
@@ -1782,22 +1531,20 @@ def contamination_bands_merge_fn(spark: SparkSession, store_dir: str):
     from ..operators.dedup import _lsh_bands, minhash_sigs
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = _lsh_bands(
-            minhash_sigs(batch_df.select("doc_id", "text"))
-        ).distinct()
-        if fs.exists(store_path):
-            merged = (
+        def fold(exists: bool) -> DataFrame:
+            delta = _lsh_bands(
+                minhash_sigs(batch_df.select("doc_id", "text"))
+            ).distinct()
+            if not exists:
+                return delta
+            return (
                 spark.read.schema(_CONTAM_BANDS_DDL)
                 .parquet(store_dir)
                 .unionByName(delta)
                 .distinct()
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold)
 
     return merge
 
@@ -1811,12 +1558,10 @@ def contamination_bands_maintenance(doc_stream: DataFrame, store_dir: str):
     fuzzy decontamination gate (contamination_check) always reflects
     everything the model will train on.  Returns the StreamingQuery
     (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            contamination_bands_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        contamination_bands_merge_fn(doc_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -1956,26 +1701,24 @@ def media_prints_merge_fn(
     video_fingerprints — all column-compatible by design).  A
     fingerprint is a pure function of the media bytes and the merge
     is distinct-union, so the operation is IDEMPOTENT (no markers);
-    stage-rename commit guards readers.  12 bytes of state per item
+    sinks.commit_store guards readers.  12 bytes of state per item
     makes the store a negligible fraction of any media corpus, and
     checking a NEW batch for near-duplicates of corpus history never
     re-decodes stored media (media_dedup_check below)."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = fingerprints_fn(batch_df.select("doc_id")).distinct()
-        if fs.exists(store_path):
-            merged = (
+        def fold(exists: bool) -> DataFrame:
+            delta = fingerprints_fn(batch_df.select("doc_id")).distinct()
+            if not exists:
+                return delta
+            return (
                 spark.read.schema(_IMAGE_PRINTS_DDL)
                 .parquet(store_dir)
                 .unionByName(delta)
                 .distinct()
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold)
 
     return merge
 
@@ -1994,12 +1737,10 @@ def image_prints_maintenance(doc_stream: DataFrame, store_dir: str):
     the near-duplicate admission gate (image_dedup_check) always
     reflects the full ingest history.  Returns the StreamingQuery
     (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            image_prints_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        image_prints_merge_fn(doc_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -2066,12 +1807,10 @@ def shard_manifest_maintenance(doc_stream: DataFrame, store_dir: str):
     per-shard manifest is pipeline_ops.shard_manifest_serve(store) —
     a fold over #shards × #sources rows, zero corpus scans.  Returns
     the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            shard_manifest_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        shard_manifest_merge_fn(doc_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -2095,7 +1834,7 @@ def bm25_index_merge_fn(
     doc and nondeterministic served stats (r10 ADVICE).  Idempotent
     for redelivery (replacing rows with byte-identical rows is a
     no-op and the stats recompute is deterministic) — no
-    applied-batch markers.  Stage-rename commit guards readers; the
+    applied-batch markers.  sinks.commit_store guards readers; the
     anti-join keys are the micro-batch's bounded doc set broadcast
     against the store, so the merge stays a store-sized map-side
     pass, never a shuffle of the store.  stats/ is
@@ -2104,18 +1843,9 @@ def bm25_index_merge_fn(
     micro-batch (or a zero-row one) restores agreement."""
     from ..operators.text import _bm25_postings, write_bm25_stats
 
+    store_dir = f"{index_path}/postings"
+
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        store_path = jvm.org.apache.hadoop.fs.Path(f"{index_path}/postings")
-        stage_path = jvm.org.apache.hadoop.fs.Path(
-            f"{index_path}/postings_stage"
-        )
-        fs = store_path.getFileSystem(hconf)
-        _recover_store(fs, store_path, stage_path)
-        delta = _bm25_postings(
-            batch_df.select("doc_id", "text", *meta), meta=meta
-        )
         meta_ddl = "".join(
             f", {m} {batch_df.schema[m].dataType.simpleString()}"
             for m in meta
@@ -2125,7 +1855,13 @@ def bm25_index_merge_fn(
             + meta_ddl
             + ", bkt INT"
         )
-        if fs.exists(store_path):
+
+        def fold(exists: bool) -> DataFrame:
+            delta = _bm25_postings(
+                batch_df.select("doc_id", "text", *meta), meta=meta
+            )
+            if not exists:
+                return delta
             # explicit schema: a store bootstrapped from an empty
             # corpus exists but is fileless (the text_index lesson).
             # Doc-replace merge: drop the store's rows for every doc
@@ -2134,22 +1870,15 @@ def bm25_index_merge_fn(
             # re-ingest replaces its old generation instead of
             # coexisting with it.
             batch_docs = batch_df.select("doc_id").distinct()
-            kept = (
+            return (
                 spark.read.schema(ddl)
-                .parquet(f"{index_path}/postings")
+                .parquet(store_dir)
                 .join(F.broadcast(batch_docs), "doc_id", "left_anti")
+                .unionByName(delta)
             )
-            merged = kept.unionByName(delta)
-        else:
-            merged = delta
-        merged.hint("rebalance", "bkt").write.mode("overwrite").partitionBy(
-            "bkt"
-        ).parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
-        write_bm25_stats(
-            spark.read.schema(ddl).parquet(f"{index_path}/postings"),
-            index_path,
-        )
+
+        commit_store(spark, store_dir, fold, partition_by=("bkt",))
+        write_bm25_stats(spark.read.schema(ddl).parquet(store_dir), index_path)
 
     return merge
 
@@ -2160,12 +1889,10 @@ def bm25_index_maintenance(
     """Continuous BM25 index upkeep over a document stream; serving
     is text.bm25_search over the maintained postings + stats — zero
     corpus scans.  Returns the StreamingQuery (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            bm25_index_merge_fn(doc_stream.sparkSession, index_path, meta)
-        )
-        .option("checkpointLocation", f"{index_path}/postings_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        bm25_index_merge_fn(doc_stream.sparkSession, index_path, meta),
+        f"{index_path}/postings",
     )
 
 
@@ -2179,28 +1906,26 @@ def gram_store_merge_fn(spark: SparkSession, store_dir: str):
     q_gram_novelty hash discipline) into the gram store.  A doc's
     grams are a pure function of its text and the merge is
     distinct-union, so redelivery is a no-op (the winnow-print
-    idempotence argument, no markers); stage-rename commit guards
+    idempotence argument, no markers); sinks.commit_store guards
     readers.  The store holds one 8-byte hash per distinct corpus
     gram — the crawl-history index the novelty gate serves from."""
     from ..functions.textfeat import hashed_shingles
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = hashed_shingles(
-            batch_df.select("doc_id", "text")
-        ).select("shh").distinct()
-        if fs.exists(store_path):
-            merged = (
+        def fold(exists: bool) -> DataFrame:
+            delta = hashed_shingles(
+                batch_df.select("doc_id", "text")
+            ).select("shh").distinct()
+            if not exists:
+                return delta
+            return (
                 spark.read.schema("shh BIGINT")
                 .parquet(store_dir)
                 .unionByName(delta)
                 .distinct()
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold)
 
     return merge
 
@@ -2209,12 +1934,10 @@ def gram_novelty_maintenance(doc_stream: DataFrame, store_dir: str):
     """Continuous gram-history upkeep over a document stream; the
     serving half is novelty_gate_serve.  Returns the StreamingQuery
     (caller stops it)."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            gram_store_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        gram_store_merge_fn(doc_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -2231,7 +1954,8 @@ def novelty_gate_serve(
     0 against itself."""
     from ..functions.textfeat import hashed_shingles
 
-    _, fs, store_path, _sp = _store_paths(spark, store_dir)
+    store_path = spark._jvm.org.apache.hadoop.fs.Path(store_dir)
+    fs = store_path.getFileSystem(spark._jsc.hadoopConfiguration())
     bg = hashed_shingles(
         batch_docs.select("doc_id", "text")
     ).localCheckpoint(eager=False)
@@ -2263,35 +1987,33 @@ def source_gram_merge_fn(spark: SparkSession, store_dir: str):
     gram-hash) rows into the source-gram store — the q_source_overlap
     base kept current over a document stream.  Pure function of each
     doc, distinct-union: idempotent, no markers (the winnow-print
-    argument); stage-rename commit guards readers."""
+    argument); sinks.commit_store guards readers."""
     from ..functions.textfeat import shingles_expr
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
-        delta = (
-            batch_df.select(
-                "source", F.explode(shingles_expr()).alias("sh")
+        def fold(exists: bool) -> DataFrame:
+            delta = (
+                batch_df.select(
+                    "source", F.explode(shingles_expr()).alias("sh")
+                )
+                .select(
+                    "source",
+                    F.expr(
+                        "CAST(conv(substring(md5(sh), 1, 15), 16, 10) AS BIGINT)"
+                    ).alias("shh"),
+                )
+                .distinct()
             )
-            .select(
-                "source",
-                F.expr(
-                    "CAST(conv(substring(md5(sh), 1, 15), 16, 10) AS BIGINT)"
-                ).alias("shh"),
-            )
-            .distinct()
-        )
-        if fs.exists(store_path):
-            merged = (
+            if not exists:
+                return delta
+            return (
                 spark.read.schema("source STRING, shh BIGINT")
                 .parquet(store_dir)
                 .unionByName(delta)
                 .distinct()
             )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+
+        commit_store(spark, store_dir, fold)
 
     return merge
 
@@ -2299,12 +2021,10 @@ def source_gram_merge_fn(spark: SparkSession, store_dir: str):
 def source_overlap_maintenance(doc_stream: DataFrame, store_dir: str):
     """Continuous source-gram upkeep over a document stream; serving
     is source_overlap_serve.  Returns the StreamingQuery."""
-    return (
-        doc_stream.writeStream.foreachBatch(
-            source_gram_merge_fn(doc_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        doc_stream,
+        source_gram_merge_fn(doc_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -2407,7 +2127,7 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
     Retry-safety: IDEMPOTENT by construction, no markers — a
     redelivered batch's edges contract to self-loops against the
     labels they already produced, the touched set is empty, and the
-    rewrite is bit-identical.  Stage-rename commit guards readers.
+    rewrite is bit-identical.  sinks.commit_store guards readers.
 
     Since r13 the merge ALSO maintains an edge side-store at
     ``{store_dir}_edges`` — the undirected (least, greatest) set
@@ -2424,9 +2144,9 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
     heals."""
     from ..operators.dedup import connected_components
 
+    edir = f"{store_dir}_edges"
+
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-        _recover_store(fs, store_path, stage_path)
         ch = (
             F.col("channel").cast("string")
             if "channel" in batch_df.columns
@@ -2446,24 +2166,26 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
             .distinct()
             .localCheckpoint()
         )
-        e = ech.select("a", "b").distinct()
-        # edge side-store first (see docstring for the crash order)
-        edir = f"{store_dir}_edges"
-        _, efs, estore, estage = _store_paths(spark, edir)
-        _recover_store(efs, estore, estage)
-        if efs.exists(estore):
-            eall = (
+
+        def fold_edges(exists: bool) -> DataFrame:
+            if not exists:
+                return ech
+            return (
                 spark.read.schema(_FAMILY_EDGE_DDL)
                 .parquet(edir)
                 .unionByName(ech)
                 .distinct()
                 .localCheckpoint()
             )
-        else:
-            eall = ech
-        eall.write.mode("overwrite").parquet(str(estage))
-        _commit_store(efs, estore, estage)
-        if fs.exists(store_path):
+
+        # edge side-store first (see docstring for the crash order)
+        commit_store(spark, edir, fold_edges)
+        e = ech.select("a", "b").distinct()
+        commit_store(spark, store_dir, lambda exists: relabel(e, exists))
+
+    def relabel(e: DataFrame, exists: bool) -> DataFrame:
+        """The label store after folding edge batch ``e`` into it."""
+        if exists:
             lab = (
                 spark.read.schema(_FAMILY_DDL)
                 .parquet(store_dir)
@@ -2503,16 +2225,13 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
                 F.col("n").alias("cluster_id"),
                 F.col("cluster_id").alias("__new"),
             )
-            merged = base.join(relab, "cluster_id", "left").select(
+            return base.join(relab, "cluster_id", "left").select(
                 "n",
                 F.coalesce("__new", "cluster_id")
                 .cast("bigint")
                 .alias("cluster_id"),
             )
-        else:
-            merged = base
-        merged.write.mode("overwrite").parquet(str(stage_path))
-        _commit_store(fs, store_path, stage_path)
+        return base
 
     return merge
 
@@ -2524,12 +2243,10 @@ def family_registry_maintenance(edge_stream: DataFrame, store_dir: str):
     X in" is answerable at any moment from |edge-touched nodes| rows
     of state without ever re-running a pair pipeline.  Returns the
     StreamingQuery (caller stops it)."""
-    return (
-        edge_stream.writeStream.foreachBatch(
-            family_registry_merge_fn(edge_stream.sparkSession, store_dir)
-        )
-        .option("checkpointLocation", f"{store_dir}_ckpt")
-        .start()
+    return _maintain(
+        edge_stream,
+        family_registry_merge_fn(edge_stream.sparkSession, store_dir),
+        store_dir,
     )
 
 
@@ -2628,66 +2345,76 @@ def family_registry_purge(
     reverse order could strand a split forever."""
     from ..operators.dedup import connected_components
 
-    _, fs, store_path, stage_path = _store_paths(spark, store_dir)
-    _recover_store(fs, store_path, stage_path)
     edir = f"{store_dir}_edges"
-    _, efs, estore, estage = _store_paths(spark, edir)
-    _recover_store(efs, estore, estage)
     ts = (
         tombstones.select(F.col("doc_id").cast("bigint").alias("n"))
         .where(F.col("n").isNotNull())
         .distinct()
         .localCheckpoint()
     )
-    lab = (
-        spark.read.schema(_FAMILY_DDL).parquet(store_dir).localCheckpoint()
-    )
-    edges = (
-        spark.read.schema(_FAMILY_EDGE_DDL).parquet(edir).localCheckpoint()
-    )
-    touched = (
-        lab.join(F.broadcast(ts), "n")
-        .select("cluster_id")
-        .distinct()
-        .localCheckpoint()
-    )
-    surv = (
-        edges.join(
-            F.broadcast(ts.select(F.col("n").alias("a"))), "a", "left_anti"
+
+    def fold_labels(exists: bool) -> DataFrame:
+        lab = (
+            spark.read.schema(_FAMILY_DDL).parquet(store_dir).localCheckpoint()
         )
-        .join(
-            F.broadcast(ts.select(F.col("n").alias("b"))), "b", "left_anti"
+        touched = (
+            lab.join(F.broadcast(ts), "n")
+            .select("cluster_id")
+            .distinct()
+            .localCheckpoint()
         )
-        .select("a", "b", "channel")  # anti-joins rotate keys to front
-        .localCheckpoint()
-    )
-    # an edge's endpoints share a cluster by invariant, so joining
-    # endpoint a to the labels classifies the whole edge
-    sub = (
-        surv.join(
-            lab.select(F.col("n").alias("a"), "cluster_id"), "a"
+        surv = None
+
+        def fold_edges(exists: bool) -> DataFrame:
+            nonlocal surv
+            edges = (
+                spark.read.schema(_FAMILY_EDGE_DDL)
+                .parquet(edir)
+                .localCheckpoint()
+            )
+            surv = (
+                edges.join(
+                    F.broadcast(ts.select(F.col("n").alias("a"))),
+                    "a",
+                    "left_anti",
+                )
+                .join(
+                    F.broadcast(ts.select(F.col("n").alias("b"))),
+                    "b",
+                    "left_anti",
+                )
+                .select("a", "b", "channel")  # anti-joins rotate keys to front
+                .localCheckpoint()
+            )
+            return surv
+
+        # nested so the edges commit lands before the labels commit
+        # (see the commit order above), with both stores recovered
+        # before either is read
+        commit_store(spark, edir, fold_edges)
+        # an edge's endpoints share a cluster by invariant, so joining
+        # endpoint a to the labels classifies the whole edge
+        sub = (
+            surv.join(lab.select(F.col("n").alias("a"), "cluster_id"), "a")
+            .join(F.broadcast(touched), "cluster_id", "left_semi")
+            .select("a", "b")
+            .localCheckpoint()
         )
-        .join(F.broadcast(touched), "cluster_id", "left_semi")
-        .select("a", "b")
-        .localCheckpoint()
-    )
-    nodes = (
-        sub.select(F.col("a").alias("n"))
-        .unionByName(sub.select(F.col("b").alias("n")))
-        .distinct()
-    )
-    if sub.head(1):
-        relab = connected_components(sub, nodes)
-    else:
-        relab = spark.createDataFrame([], _FAMILY_DDL)
-    kept = lab.join(F.broadcast(touched), "cluster_id", "left_anti").select(
-        "n", "cluster_id"
-    )
-    new_lab = kept.unionByName(relab.select("n", "cluster_id"))
-    surv.write.mode("overwrite").parquet(str(estage))
-    _commit_store(efs, estore, estage)
-    new_lab.write.mode("overwrite").parquet(str(stage_path))
-    _commit_store(fs, store_path, stage_path)
+        nodes = (
+            sub.select(F.col("a").alias("n"))
+            .unionByName(sub.select(F.col("b").alias("n")))
+            .distinct()
+        )
+        if sub.head(1):
+            relab = connected_components(sub, nodes)
+        else:
+            relab = spark.createDataFrame([], _FAMILY_DDL)
+        kept = lab.join(F.broadcast(touched), "cluster_id", "left_anti").select(
+            "n", "cluster_id"
+        )
+        return kept.unionByName(relab.select("n", "cluster_id"))
+
+    commit_store(spark, store_dir, fold_labels)
 
 
 def family_registry_purge_maintenance(
@@ -2704,14 +2431,12 @@ def family_registry_purge_maintenance(
     Purge idempotency (already-purged ids contract to an empty
     touched set) makes at-least-once delivery safe without markers.
     Returns the StreamingQuery (caller stops it)."""
-    return (
-        tomb_stream.writeStream.foreachBatch(
-            lambda batch_df, batch_id: family_registry_purge(
-                tomb_stream.sparkSession, store_dir, batch_df
-            )
-        )
-        .option("checkpointLocation", f"{store_dir}_purge_ckpt")
-        .start()
+    return _maintain(
+        tomb_stream,
+        lambda batch_df, batch_id: family_registry_purge(
+            tomb_stream.sparkSession, store_dir, batch_df
+        ),
+        f"{store_dir}_purge",
     )
 
 
@@ -2727,34 +2452,24 @@ def family_registry_compact(
     a serve pays file-open cost instead of scan cost.  Compaction
     rewrites each store's rows VERBATIM (no dedup, no filter — the
     relation must be bit-identical, pinned in tests/test_streaming)
-    coalesced to ``target_files`` leaves, via the same stage-rename
-    commit every other rewrite uses, preserving any
-    ``_applied_``/``_purged_`` markers a store carries (the family
-    stores are marker-free today; the copy is the forward-safe
-    default the span-gram purge established).  Labels and edges are
+    coalesced to ``target_files`` leaves, via sinks.commit_store like
+    every other rewrite (which also carries any markers a store
+    holds).  Labels and edges are
     committed independently — each store is internally consistent at
     every instant, and compaction changes no rows, so there is no
     cross-store ordering to protect.  At 100 TB a deployment sizes
     ``target_files`` by bytes (≈1 GiB per file); the fixture default
     folds each store to one leaf."""
-    edir = f"{store_dir}_edges"
-    jvm = spark._jvm
-    for path_str, ddl in ((edir, _FAMILY_EDGE_DDL), (store_dir, _FAMILY_DDL)):
-        _, fs, store_path, stage_path = _store_paths(spark, path_str)
-        _recover_store(fs, store_path, stage_path)
-        if not fs.exists(store_path):
-            continue
-        rows = (
-            spark.read.schema(ddl).parquet(path_str).localCheckpoint()
-        )
-        rows.coalesce(target_files).write.mode("overwrite").parquet(
-            str(stage_path)
-        )
-        for status in fs.listStatus(store_path):
-            name = status.getPath().getName()
-            if name.startswith(("_applied_", "_purged_")):
-                fs.create(
-                    jvm.org.apache.hadoop.fs.Path(f"{stage_path}/{name}"),
-                    True,
-                ).close()
-        _commit_store(fs, store_path, stage_path)
+    for path_str, ddl in (
+        (f"{store_dir}_edges", _FAMILY_EDGE_DDL),
+        (store_dir, _FAMILY_DDL),
+    ):
+        # fold runs inside this iteration's call, so the loop
+        # variables bind correctly
+        def fold(exists: bool) -> DataFrame | None:
+            if not exists:
+                return None
+            rows = spark.read.schema(ddl).parquet(path_str).localCheckpoint()
+            return rows.coalesce(target_files)
+
+        commit_store(spark, path_str, fold)

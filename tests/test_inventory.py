@@ -170,3 +170,21 @@ def test_bench_gate_always_check_ignores_floor():
         {"queries": {"q_image_gif": 0.20}},
     )
     assert failures2 == []
+
+
+def test_missing_operator_module_fails_loudly(monkeypatch):
+    """A module named in _OPERATOR_MODULES that cannot be imported
+    must raise: skipping it would silently drop every query it
+    registers."""
+    import pytest
+
+    sys.path.insert(0, str(ROOT))
+    from open_street_map_data_wrangling_spark.plans import registry
+
+    monkeypatch.setattr(
+        registry,
+        "_OPERATOR_MODULES",
+        registry._OPERATOR_MODULES + ("no_such_operator_module",),
+    )
+    with pytest.raises(ModuleNotFoundError, match="no_such_operator_module"):
+        registry.load_all_queries()

@@ -893,6 +893,38 @@ def test_ivfpq_compaction_folds_history_and_applies_updates(spark, tmp_path):
     assert embs[100] == embs[0] and len(embs) == 500
 
 
+def test_ivfpq_compaction_never_overwrites_live_codes(spark, tmp_path, monkeypatch):
+    """compact_ivfpq_index commits through one stage write plus a
+    rename: no DataFrame write may target the live codes/ dir, whose
+    in-place overwrite deletes the serving store before rewriting it."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from open_street_map_data_wrangling_spark.operators import pq
+    from open_street_map_data_wrangling_spark.sources.catalog import load_table
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
+        "vec_id", "embedding"
+    )
+    path = str(tmp_path / "idx")
+    pq.build_ivfpq_index(emb, path)
+    n = spark.read.parquet(f"{path}/codes").count()
+    targets = []
+    inner = DataFrameWriter.parquet
+
+    def recording(self, target, *args, **kwargs):
+        targets.append(os.path.normpath(str(target)))
+        return inner(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording)
+    pq.compact_ivfpq_index(spark, path)
+    monkeypatch.undo()
+    assert targets and os.path.normpath(f"{path}/codes") not in targets
+    assert spark.read.parquet(f"{path}/codes").count() == n
+    assert not os.path.exists(f"{path}/codes_stage")
+
+
 def test_boilerplate_strip_cross_document_rule(spark, monkeypatch):
     """q_boilerplate_strip drops a 10-token chunk only when its hash
     spans >= 2 DISTINCT documents: the shared header chunk goes, each

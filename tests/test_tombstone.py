@@ -139,6 +139,39 @@ def test_purge_span_gram_store_matches_filtered_rebuild(spark, tmp_path):
     assert cnt(purged) == cnt(rebuilt)
 
 
+def test_span_gram_purge_marker_survives_later_batches(spark, tmp_path):
+    """A merge after a purge must carry the purge's ``_purged_``
+    marker forward: otherwise a retried deletion request arriving
+    after the next batch subtracts the shared gram counts twice and
+    the store drifts from the filtered rebuild."""
+    import os
+
+    from open_street_map_data_wrangling_spark.streaming.jobs import (
+        purge_span_gram_store,
+        span_gram_merge_fn,
+    )
+
+    docs = load_table(spark, SF, "documents").select("doc_id", "text")
+    b0 = docs.filter("doc_id < 80")
+    b1 = docs.filter("doc_id >= 80 AND doc_id < 120")
+    purged = str(tmp_path / "span_purged")
+    rebuilt = str(tmp_path / "span_rebuilt")
+    span_gram_merge_fn(spark, purged)(b0, 0)
+    purge_span_gram_store(spark, purged, b0.filter(TOMB))
+    span_gram_merge_fn(spark, purged)(b1, 1)
+    markers = sorted(n for n in os.listdir(purged) if n.startswith("_"))
+    assert "_applied_0" in markers and "_applied_1" in markers
+    assert any(n.startswith("_purged_") for n in markers)
+
+    purge_span_gram_store(spark, purged, b0.filter(TOMB))
+    span_gram_merge_fn(spark, rebuilt)(b0.filter(f"NOT {TOMB}"), 0)
+    span_gram_merge_fn(spark, rebuilt)(b1, 1)
+    cnt = lambda d: {
+        (r["g"], r["cnt"]) for r in spark.read.parquet(d).collect()
+    }
+    assert cnt(purged) == cnt(rebuilt) and cnt(purged)
+
+
 def test_purge_winnow_store_matches_filtered_rebuild(spark, tmp_path):
     """Print rows key by doc_id, so the purge is a pure anti-join:
     store == rebuild over the filtered corpus and the served clone
