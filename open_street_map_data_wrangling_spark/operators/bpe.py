@@ -9,8 +9,13 @@ corpus, and so does this: the corpus is scanned once into
 (word, freq) — vocabulary-sized by Heaps' law, millions of rows at
 100 TB, not billions — and each of the N merge rounds is one
 explode+aggregate over that table plus a row-local regexp rewrite.
-Per round the driver receives exactly ONE row (the winning pair),
-the PQ-codebook bounded-collect convention.
+Above scale.DRIVER_SOLVE_BOUND word types, per round the driver
+receives exactly ONE row (the winning pair), the PQ-codebook
+bounded-collect convention.  At or below the bound the table is
+collected once and the same recurrence runs on the driver, because
+a vocabulary of a few dozen types would otherwise pay a planned
+Spark job per merge round; the Spark loop stays as the only path
+for vocabularies too large to collect.
 
 Merging is greedy left-to-right non-overlapping, implemented with a
 zero-width-delimited regexp — `(?<= )l r(?= )` — so consecutive
@@ -49,6 +54,8 @@ cannot flap.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -143,6 +150,35 @@ def word_type_freqs(docs: DataFrame) -> DataFrame:
     )
 
 
+def _train_bpe_local(
+    wf: list[tuple[str, int]], steps: int
+) -> tuple[list[tuple[int, str, str, int]], list[tuple[str, int]]]:
+    """train_bpe's round recurrence on the driver, over the collected
+    (seq, freq) word-type rows: the Spark loop's pair count
+    (``split(trim(seq), ' ')`` is ``seq.strip(' ').split(' ')``), its
+    (freq DESC, left ASC, right ASC) winner — Python compares str by
+    code point, which is Spark's UTF-8 binary order — its ``f < 2`` /
+    no-pair break, and its zero-width-delimited literal rewrite.
+    Returns (merges, final word-type rows)."""
+    merges: list[tuple[int, str, str, int]] = []
+    for step in range(1, steps + 1):
+        counts: dict[tuple[str, str], int] = {}
+        for seq, freq in wf:
+            syms = seq.strip(" ").split(" ")
+            for pair in zip(syms, syms[1:]):
+                counts[pair] = counts.get(pair, 0) + freq
+        if not counts:
+            break
+        (l, r), f = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        if f < 2:
+            break
+        merges.append((step, l, r, f))
+        pat = re.compile(f"(?<= ){re.escape(l)} {re.escape(r)}(?= )")
+        merged = l + r
+        wf = [(pat.sub(lambda _: merged, seq), freq) for seq, freq in wf]
+    return merges, wf
+
+
 def train_bpe(
     spark: SparkSession,
     docs: DataFrame,
@@ -158,17 +194,30 @@ def train_bpe(
 
     State per round is the word-type table with each word as a
     space-delimited symbol sequence (leading/trailing space so the
-    merge regexp's lookarounds hold at the edges).  LAZY
-    localCheckpoint per round keeps the plan flat across iterations
-    (the connected-components discipline), and the round's ONE
-    action — the top-pair collect, which training cannot avoid
-    because the winning merge feeds the next round's regexp as a
-    literal — is what materializes the previous round's rewrite
-    (r17, guide §1.2: one job per merge instead of an eager
-    checkpoint + AQE stage jobs + the collect).  The loop body runs
-    under scale.iter_loop_conf with the width pinned to the
-    checkpointed word-type table's own partitioning."""
-    from .scale import iter_loop_conf
+    merge regexp's lookarounds hold at the edges).  The character
+    split always runs in Spark: Java's ``.`` skips line terminators
+    (``\\r``, ``\\u0085``, ``\\u2028``, ``\\u2029``) where Python's does
+    not, so those characters stay glued to the next symbol on both
+    paths.
+
+    Path choice (scale.collect_if_small, one probe of the lazily
+    checkpointed word-type table — the probe is the action that
+    materializes the checkpoint, so above the bound the rounds read
+    it without a second corpus scan): at most DRIVER_SOLVE_BOUND word
+    types are collected once and trained on the driver
+    (_train_bpe_local), the state returned as an Arrow local frame —
+    a vocabulary of a few dozen types otherwise pays a planned Spark
+    job per merge.  Above the bound the Spark loop runs: it is the
+    only path for 100 TB-scale vocabularies.  LAZY localCheckpoint
+    per round keeps its plan flat across iterations (the
+    connected-components discipline), and the round's ONE action —
+    the top-pair collect, which training cannot avoid because the
+    winning merge feeds the next round's regexp as a literal — is
+    what materializes the previous round's rewrite: per round the
+    driver receives exactly ONE row.  The loop body runs under
+    scale.iter_loop_conf with the width pinned to the checkpointed
+    word-type table's own partitioning."""
+    from .scale import collect_if_small, iter_loop_conf, local_frame
 
     wf = (
         word_type_freqs(docs)
@@ -178,9 +227,17 @@ def train_bpe(
             ).alias("seq"),
             "freq",
         )
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
-    merges: list[tuple[int, str, str, int]] = []
+    small = collect_if_small(wf, "bpe word types")
+    if small is not None:
+        merges, state = _train_bpe_local(
+            [(r["seq"], r["freq"]) for r in small], steps
+        )
+        if return_state:
+            return merges, local_frame(spark, state, "seq string, freq bigint")
+        return merges
+    merges = []
     with iter_loop_conf(spark, parts=wf.rdd.getNumPartitions()):
         for step in range(1, steps + 1):
             top = (
@@ -237,9 +294,11 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     in for the lookaround merge regexp (see module docstring);
     tests/test_bpe.py additionally re-learns the same table in pure
     Python from DuckDB-extracted word frequencies."""
+    from .scale import local_frame
+
     merges = train_bpe(spark, load_table(spark, sf_dir, "documents"))
-    return spark.createDataFrame(
-        merges, "step int, left string, right string, pair_freq bigint"
+    return local_frame(
+        spark, merges, "step int, left string, right string, pair_freq bigint"
     )
 
 

@@ -23,6 +23,14 @@ a fixed budget is the difference between a predictable nightly job
 and an unbounded one, and power-iteration error decays geometrically
 (0.85^6 ≈ 0.38 of initial error, plenty to separate hubs from chain
 members at the x1e12 scale we report).
+
+PageRank has a second, driver-side path: a pair list of at most
+scale.DRIVER_SOLVE_BOUND rows is collected once and the same integer
+recurrence runs in Python, since a graph of a few dozen edges would
+otherwise pay Spark's physical planning on every round.  The Spark
+round loop stays as the only path for graphs too large to collect.
+The other fixpoints here (label propagation, k-core) and connected
+components have only the Spark loop.
 """
 
 from __future__ import annotations
@@ -89,6 +97,31 @@ def _pr_oracle() -> str:
     """
 
 
+def _pagerank_local(
+    pairs: list[tuple[int, int]], iters: int
+) -> list[tuple[int, int]]:
+    """pagerank_fixed's recurrence on the driver, over the collected
+    pairs: the same undirected, de-duplicated edge set and degree
+    table the Spark plan builds, then ``iters`` rounds of the
+    documented integer formula (all values positive, so ``//`` is
+    Spark's truncating ``div``).  Returns (doc_id, pr) rows; no pairs
+    gives no rows."""
+    edges = {(a, b) for a, b in pairs} | {(b, a) for a, b in pairs}
+    deg: dict[int, int] = {}
+    for src, _ in edges:
+        deg[src] = deg.get(src, 0) + 1
+    if not deg:
+        return []
+    base = _PR_SCALE // len(deg)
+    pr = dict.fromkeys(deg, base)
+    for _ in range(iters):
+        inc = dict.fromkeys(deg, 0)
+        for src, dst in edges:
+            inc[dst] += pr[src] // deg[src]
+        pr = {v: (15 * base + 85 * inc[v]) // 100 for v in deg}
+    return list(pr.items())
+
+
 def pagerank_fixed(pairs: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     """Integer fixed-point PageRank (damping 0.85 as 85/100) over an
     undirected pair list: returns (doc_id, pr) for every node in the
@@ -116,8 +149,26 @@ def pagerank_fixed(pairs: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     jobs before, and at sf0.1 the query is job-overhead-bound).
     The lazy checkpoints still truncate the logical plan per round,
     so planning cost stays flat in the iteration count.
+
+    Path choice (scale.collect_if_small, one probe of ``pairs`` — pass
+    a plain scan or a materialized relation): at most
+    DRIVER_SOLVE_BOUND pairs are collected once and the recurrence
+    runs on the driver (_pagerank_local), returned as an Arrow local
+    frame, because a few-dozen-edge graph otherwise pays physical
+    planning for every lazy round checkpoint.  Above the bound the
+    Spark loop below runs: it is the only path for 100 TB-scale
+    graphs.
     """
-    from .scale import iter_loop_conf
+    from .scale import collect_if_small, iter_loop_conf, local_frame
+
+    small = collect_if_small(pairs, "pagerank pairs")
+    if small is not None:
+        id_type = pairs.schema["doc_a"].dataType.simpleString()
+        return local_frame(
+            pairs.sparkSession,
+            _pagerank_local([(r["doc_a"], r["doc_b"]) for r in small], iters),
+            f"doc_id {id_type}, pr bigint",
+        )
 
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))

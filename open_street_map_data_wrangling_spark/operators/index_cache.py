@@ -220,6 +220,24 @@ def cached(
     return path
 
 
+def _local_fs_path(spark, path: str) -> str | None:
+    """The local-filesystem path ``path`` resolves to, or None when it
+    resolves to any other filesystem: a ``file:`` URI, or a schemeless
+    path under a ``file:`` ``fs.defaultFS`` (read from the session's
+    Hadoop conf, the one Spark's own read would resolve it with)."""
+    from urllib.parse import urlparse
+
+    url = urlparse(path)
+    if url.scheme:
+        return url.path if url.scheme == "file" else None
+    default = (
+        spark._jsparkSession.sessionState()
+        .newHadoopConf()
+        .get("fs.defaultFS", "file:///")
+    )
+    return path if urlparse(default).scheme == "file" else None
+
+
 def read_small_parquet(spark, path: str, schema_ddl: str, columns):
     """Driver-side read of a TINY serving-artifact parquet (index
     seeds, 1-row stats, request-sized probe lists — relations bounded
@@ -229,18 +247,34 @@ def read_small_parquet(spark, path: str, schema_ddl: str, columns):
     whole Spark job (scan + collect) per such read, and the job-count
     profile shows the slow serve queries are job-overhead-bound at
     bench scale (PERF_r16: 8 cores ~= 32).  pyarrow reads the same
-    bytes on the driver with no job at all; any failure (filesystem
-    pyarrow cannot reach, missing path, schema drift) falls back to
-    the original Spark collect so error semantics and remote-store
-    support are unchanged.  Returns a list of dict rows either way.
+    bytes on the driver with no job at all, cast to ``schema_ddl`` so
+    both paths return the same types.  It is used only when the path
+    resolves to the local filesystem: a schemeless path under a
+    remote ``fs.defaultFS`` names a remote store, and reading a
+    same-named driver-local file instead would succeed wrongly.
+    Anything else, and any pyarrow failure (missing path, empty dir,
+    schema drift), reads through Spark, so error semantics and
+    remote-store support are Spark's.  Returns a list of dict rows
+    either way.
     """
     cols = list(columns)
-    try:
-        import pyarrow.parquet as _pq
+    local = _local_fs_path(spark, path)
+    if local is not None:
+        try:
+            import pyarrow as pa
+            import pyarrow.parquet as _pq
+            from pyspark.sql.pandas.types import to_arrow_schema
+            from pyspark.sql.types import StructType
 
-        return _pq.read_table(path, columns=cols).to_pylist()
-    except Exception:
-        return [
-            r.asDict()
-            for r in spark.read.schema(schema_ddl).parquet(path).collect()
-        ]
+            want = to_arrow_schema(StructType.fromDDL(schema_ddl))
+            return (
+                _pq.read_table(local, columns=cols)
+                .cast(pa.schema([want.field(c) for c in cols]))
+                .to_pylist()
+            )
+        except Exception:
+            pass
+    return [
+        r.asDict()
+        for r in spark.read.schema(schema_ddl).parquet(path).collect()
+    ]

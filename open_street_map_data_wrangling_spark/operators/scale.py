@@ -11,6 +11,10 @@ query in the inventory can adopt them:
   key joins against n copies, spreading its rows over n tasks
 * two-phase distinct count — exact countDistinct without shipping
   every (key, value) pair to one stage
+* driver-side fixpoints — the one size decision (collect_if_small)
+  that lets an iterative operator solve a tiny relation on the driver
+  and return it as an Arrow local frame (local_frame), while larger
+  relations keep the Spark round loop
 
 tests/test_scale_patterns.py proves each pattern equivalent to its
 naive form, and additionally demonstrates (with plan assertions)
@@ -21,12 +25,60 @@ layouts — the two write-time levers sources/sinks.py exposes.
 from __future__ import annotations
 
 import contextlib
+import logging
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
 from ..sources.catalog import load_table
+
+_log = logging.getLogger(__name__)
+
+# Row bound under which an iterated relation (BPE word types, PageRank
+# pairs) is solved on the driver instead of by the Spark round loop —
+# the autoBroadcastJoinThreshold idea applied to fixpoints, chosen
+# from the observed input size alone.  Set at or below the measured
+# driver/Spark crossover (CHANGES.md); a negative bound, as with
+# autoBroadcastJoinThreshold, disables the driver path.
+DRIVER_SOLVE_BOUND = 10_000
+
+
+def collect_if_small(df: DataFrame, what: str) -> list[Row] | None:
+    """The rows of ``df`` when it has at most DRIVER_SOLVE_BOUND of
+    them, else None.  One early-stopping ``limit(bound + 1)`` job —
+    so ``df`` must be a plain scan or a checkpoint, or above the bound
+    the caller's Spark path recomputes what the probe already read.
+    Logs one record per decision: the path taken and the probed row
+    count (capped at bound + 1)."""
+    bound = DRIVER_SOLVE_BOUND
+    rows = df.limit(bound + 1).collect()
+    small = len(rows) <= bound
+    _log.info(
+        "%s: %s path (probed %d rows, bound %d)",
+        what,
+        "driver" if small else "spark",
+        len(rows),
+        bound,
+    )
+    return rows if small else None
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A DataFrame of driver-built ``rows`` (tuples in ``ddl`` column
+    order), shipped as one Arrow table typed from ``ddl``: no pickled
+    RDD and no job to materialize it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+    return spark.createDataFrame(table)
 
 
 @contextlib.contextmanager

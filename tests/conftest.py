@@ -1,4 +1,6 @@
+import logging
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -18,6 +20,46 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture(params=["driver", "spark"])
+def fixpoint_path(request, monkeypatch, caplog):
+    """Run the test once per fixpoint path of scale.collect_if_small:
+    the default bound (the fixtures' tiny relations take the driver
+    path) and a negative bound, which forces the Spark round loop even
+    for an empty relation.  Afterwards every path decision the test
+    triggered must have taken the requested path."""
+    from open_street_map_data_wrangling_spark.operators import scale
+
+    if request.param == "spark":
+        monkeypatch.setattr(scale, "DRIVER_SOLVE_BOUND", -1)
+    caplog.set_level(logging.INFO, logger=scale.__name__)
+    yield request.param
+    taken = [
+        r.getMessage()
+        for r in caplog.get_records("call")
+        if r.name == scale.__name__
+    ]
+    assert taken, "no fixpoint path decision was made"
+    assert all(f" {request.param} path " in m for m in taken), taken
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """count_jobs(fn) -> number of Spark jobs fn() starts, counted by
+    a job group around the call."""
+    sc = spark.sparkContext
+
+    def run(fn) -> int:
+        group = f"job-pin-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job-count pin")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 # ---------------------------------------------------------------------------

@@ -18,6 +18,7 @@ from collections import Counter
 from pathlib import Path
 
 import duckdb
+import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
@@ -60,7 +61,7 @@ def _replay(sf_dir: str, steps: int):
     return merges, seqs
 
 
-def test_bpe_merges_match_pure_python_replay(spark):
+def test_bpe_merges_match_pure_python_replay(spark, fixpoint_path):
     got = [
         (r["step"], r["left"], r["right"], r["pair_freq"])
         for r in load_all_queries()["q_bpe_merges"].spark(spark, SF).collect()
@@ -69,7 +70,7 @@ def test_bpe_merges_match_pure_python_replay(spark):
     assert len(got) == bpe._BPE_STEPS  # fixture corpus has 8 mergeable pairs
 
 
-def test_bpe_backslash_symbols_survive_merge(spark):
+def test_bpe_backslash_symbols_survive_merge(spark, fixpoint_path):
     """Java replacement strings eat unescaped backslashes; a learned
     symbol containing '\\' (or '$') must survive the rewrite verbatim.
     Corpus: '\\a \\a b$ b$' repeated — the top pair is ('\\', 'a'),
@@ -91,7 +92,7 @@ def test_bpe_greedy_run_semantics():
     assert pat.sub("aa", " a a a a ") == " aa aa "
 
 
-def test_bpe_encode_matches_pure_python_replay(spark):
+def test_bpe_encode_matches_pure_python_replay(spark, fixpoint_path):
     """q_bpe_encode (rows-only at the driver) re-proven end to end:
     encode the replayed final word-type state, count token usage
     weighted by word frequency, and the Spark top-15 vocabulary-usage
@@ -119,7 +120,9 @@ def test_bpe_encode_matches_pure_python_replay(spark):
     assert any(ln > 1 for _, _, ln, _ in got)
 
 
-def test_model_token_counts_consistent_with_loader_manifest(spark):
+def test_model_token_counts_consistent_with_loader_manifest(
+    spark, fixpoint_path
+):
     """X90/X91 consistency: the model-token loader manifest's total
     mass equals q_bpe_token_counts' per-doc sum (same vocabulary,
     same corpus — the two seams VERDICT r11 #4 said should meet),
@@ -155,3 +158,65 @@ def test_model_token_counts_consistent_with_loader_manifest(spark):
         for d in docs
     }
     assert all(r["n_model_toks"] <= chars[r["doc_id"]] for r in per)
+
+
+def _train_both(spark, monkeypatch, texts, steps):
+    """train_bpe on ``texts`` down each fixpoint path: (merges, final
+    (seq, freq) rows sorted, state dtypes) per path."""
+    from open_street_map_data_wrangling_spark.operators import scale
+
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id int, text string"
+    )
+    out = {}
+    for path, bound in (("driver", scale.DRIVER_SOLVE_BOUND), ("spark", -1)):
+        monkeypatch.setattr(scale, "DRIVER_SOLVE_BOUND", bound)
+        merges, wf = bpe.train_bpe(spark, docs, steps=steps, return_state=True)
+        out[path] = (
+            merges,
+            sorted((r["seq"], r["freq"]) for r in wf.collect()),
+            wf.dtypes,
+        )
+    return out
+
+
+# regex metacharacters, '\\' and '$', non-ASCII and supplementary code
+# points, line terminators Java's '.' skips (so they stay glued to the
+# next symbol), and single-symbol words
+_EDGE_CORPUS = [
+    ".*+?()[]{}|^ .*+?()[]{}|^ \\$ \\$ a$b a$b",
+    "ééé ééé 日本日本 日本 😀😀x 😀😀x 😀😀x 😀 a",
+    "a\nb a\nb a\nb x\ry x\ry p\u2028q p\u2028q p\u2028q b\n \n",
+    "[a] [a] (a) (a) a.b a.b ^a ^a",
+]
+
+
+@pytest.mark.parametrize(
+    "texts, steps, n_merges",
+    [
+        (_EDGE_CORPUS, 30, 29),  # stops at f < 2 after 29 merges
+        (["ab cd ef"], 4, 0),  # top pair has f < 2
+        (["a b 😀 a"], 4, 0),  # single-symbol words only: no pair
+    ],
+    ids=["edge-corpus", "top-pair-once", "no-pairs"],
+)
+def test_bpe_paths_agree(spark, monkeypatch, texts, steps, n_merges):
+    """The driver and Spark paths of train_bpe learn identical merges
+    and leave identical final (seq, freq) multisets and dtypes."""
+    got = _train_both(spark, monkeypatch, texts, steps)
+    assert got["driver"] == got["spark"]
+    assert len(got["driver"][0]) == n_merges
+
+
+def test_bpe_merges_job_count_pinned(spark, count_jobs, sf_dir):
+    """Under the bound, q_bpe_merges at sf0.001 is the word-type
+    aggregate, the size probe that materializes its checkpoint, and
+    the write: at most 5 jobs (12 when every merge round was a Spark
+    job)."""
+    q = load_all_queries()["q_bpe_merges"].spark
+
+    def run():
+        q(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()
+    assert count_jobs(run) <= 5

@@ -19,6 +19,8 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from open_street_map_data_wrangling_spark.operators import graph
@@ -46,7 +48,7 @@ def _replay(pairs: list[tuple[int, int]], iters: int) -> dict[int, int]:
     return p
 
 
-def test_pagerank_matches_pure_python_replay_bit_for_bit(spark):
+def test_pagerank_matches_pure_python_replay_bit_for_bit(spark, fixpoint_path):
     pairs = [
         (r["doc_a"], r["doc_b"]) for r in q_dedup_near(spark, SF).collect()
     ]
@@ -59,19 +61,74 @@ def test_pagerank_matches_pure_python_replay_bit_for_bit(spark):
     assert got == expected
 
 
-def test_pagerank_mass_and_range(spark):
+def test_pagerank_mass_and_range(spark, fixpoint_path):
     rows = graph.pagerank_fixed(q_dedup_near(spark, SF)).collect()
     total = sum(r["pr"] for r in rows)
     assert 0 < total <= graph._PR_SCALE
     assert all(0 <= r["pr"] <= graph._PR_SCALE for r in rows)
 
 
-def test_pagerank_top20_is_stable(spark):
+def test_pagerank_top20_is_stable(spark, fixpoint_path):
     q = load_all_queries()["q_pagerank"].spark
     a = [tuple(r) for r in q(spark, SF).collect()]
     b = [tuple(r) for r in q(spark, SF).collect()]
     assert a == b
     assert [r[0] for r in a] == list(range(1, len(a) + 1))
+
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [(1, 2), (2, 1), (2, 3), (5, 5), (5, 6), (3, 1), (7, 7)],
+        [],
+    ],
+    ids=["self-loops-and-duplicates", "empty"],
+)
+def test_pagerank_paths_agree(spark, monkeypatch, pairs):
+    """The driver and Spark paths of pagerank_fixed return
+    bit-identical (doc_id, pr) rows and the same dtypes, including
+    self-loop pairs, a pair given in both directions, and an empty
+    pair list (an empty frame of the same schema)."""
+    from open_street_map_data_wrangling_spark.operators import scale
+
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    got = {}
+    for path, bound in (("driver", scale.DRIVER_SOLVE_BOUND), ("spark", -1)):
+        monkeypatch.setattr(scale, "DRIVER_SOLVE_BOUND", bound)
+        pr = graph.pagerank_fixed(df)
+        got[path] = (sorted(tuple(r) for r in pr.collect()), pr.dtypes)
+    assert got["driver"] == got["spark"]
+    assert got["driver"][1] == [("doc_id", "bigint"), ("pr", "bigint")]
+    assert len(got["driver"][0]) == len({v for p in pairs for v in p})
+
+
+def _q_pagerank_jobs(spark, count_jobs, sf_dir) -> int:
+    q = load_all_queries()["q_pagerank"].spark
+
+    def run():
+        q(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()  # builds the cached pair artifact
+    return count_jobs(run)
+
+
+def test_pagerank_job_count_pinned(spark, count_jobs, sf_dir):
+    """Under the bound, q_pagerank at sf0.001 is the pair artifact's
+    read, the size probe and the top-20 write: at most 5 jobs (16 when
+    every round was planned by Spark)."""
+    assert _q_pagerank_jobs(spark, count_jobs, sf_dir) <= 5
+
+
+def test_pagerank_forced_spark_path_job_count(
+    spark, count_jobs, sf_dir, monkeypatch
+):
+    """Forced onto the Spark loop, q_pagerank starts at most one job
+    (the size probe) more than the 16 the loop took on its own."""
+    from open_street_map_data_wrangling_spark.operators import scale
+
+    monkeypatch.setattr(scale, "DRIVER_SOLVE_BOUND", 0)
+    assert _q_pagerank_jobs(spark, count_jobs, sf_dir) <= 17
 
 
 def _brute_triangles(pairs: list[tuple[int, int]]) -> dict[int, int]:

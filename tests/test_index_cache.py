@@ -419,3 +419,61 @@ def test_verify_local_preamble_runs_cache_gc(tmp_path, monkeypatch):
     src = (ROOT / "tools" / "verify_local.py").read_text()
     assert "from cache_gc import collect" in src
     assert "_gc_collect()" in src
+
+
+_NARROW_DDL = "id BIGINT, score DOUBLE, vec ARRAY<DOUBLE>"
+
+
+def test_read_small_parquet_casts_narrow_store_to_asked_types(spark, tmp_path):
+    """A store written with narrower types (int, float, array<float>)
+    read as BIGINT / DOUBLE / ARRAY<DOUBLE>: the pyarrow path casts to
+    the asked schema, so it returns exactly what the Spark read of the
+    same store returns, value for value and type for type."""
+    p = str(tmp_path / "narrow")
+    spark.createDataFrame(
+        [(1, 0.1, [0.5, -2.25]), (2, -3.5, [])],
+        "id INT, score FLOAT, vec ARRAY<FLOAT>",
+    ).write.parquet(p)
+    cols = ("id", "score", "vec")
+    fast = index_cache.read_small_parquet(spark, p, _NARROW_DDL, cols)
+    spark_rows = [
+        r.asDict()
+        for r in spark.read.schema(_NARROW_DDL).parquet(p).collect()
+    ]
+
+    def key(rows):
+        return sorted(rows, key=lambda r: r["id"])
+
+    assert key(fast) == key(spark_rows)
+    for f, s in zip(key(fast), key(spark_rows)):
+        assert {k: type(v) for k, v in f.items()} == {
+            k: type(v) for k, v in s.items()
+        }
+
+
+def test_read_small_parquet_skips_pyarrow_under_remote_default_fs(
+    spark, tmp_path, monkeypatch
+):
+    """A schemeless path under a non-local fs.defaultFS names the
+    remote store, not the driver's disk: the read must go through
+    Spark (which cannot reach the made-up filesystem and fails
+    loudly) instead of pyarrow returning the same-named local file."""
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / "store")
+    spark.createDataFrame([(1, 0.5, [1.0])], _NARROW_DDL).write.parquet(p)
+    arrow_reads = []
+    real = pq.read_table
+    monkeypatch.setattr(
+        pq, "read_table", lambda *a, **k: arrow_reads.append(a) or real(*a, **k)
+    )
+    # the local read is taken under the default (file:) filesystem
+    assert index_cache.read_small_parquet(spark, p, _NARROW_DDL, ["id"])
+    assert len(arrow_reads) == 1
+    spark.conf.set("fs.defaultFS", "nofs://remote-store/")
+    try:
+        with pytest.raises(Exception, match="nofs"):
+            index_cache.read_small_parquet(spark, p, _NARROW_DDL, ["id"])
+    finally:
+        spark.conf.unset("fs.defaultFS")
+    assert len(arrow_reads) == 1

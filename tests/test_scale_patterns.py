@@ -393,3 +393,39 @@ def test_aqe_splits_skewed_join_partitions(spark, tmp_path):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+
+
+def test_collect_if_small_logs_each_path_decision(spark, caplog, monkeypatch):
+    """collect_if_small returns the rows at or under the bound and None
+    above it, logging one record per decision with the path taken and
+    the probed row count."""
+    from open_street_map_data_wrangling_spark.operators import scale
+
+    caplog.set_level("INFO", logger=scale.__name__)
+    monkeypatch.setattr(scale, "DRIVER_SOLVE_BOUND", 3)
+    assert [r.id for r in scale.collect_if_small(spark.range(3), "three")] == [
+        0, 1, 2,
+    ]
+    assert scale.collect_if_small(spark.range(10), "ten") is None
+    assert [
+        (r.name, r.levelname, r.getMessage()) for r in caplog.records
+    ] == [
+        (scale.__name__, "INFO", "three: driver path (probed 3 rows, bound 3)"),
+        (scale.__name__, "INFO", "ten: spark path (probed 4 rows, bound 3)"),
+    ]
+
+
+def test_local_frame_types_rows_from_ddl(spark):
+    """local_frame types the Arrow table from the DDL — empty input
+    included — and round-trips the rows."""
+    from open_street_map_data_wrangling_spark.operators.scale import local_frame
+
+    ddl = "step int, tok string, n bigint"
+    df = local_frame(spark, [(1, "a 😀", 2**40), (2, None, -1)], ddl)
+    assert df.dtypes == [("step", "int"), ("tok", "string"), ("n", "bigint")]
+    assert [tuple(r) for r in df.collect()] == [
+        (1, "a 😀", 2**40),
+        (2, None, -1),
+    ]
+    empty = local_frame(spark, [], ddl)
+    assert empty.dtypes == df.dtypes and empty.collect() == []
