@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.textfeat import SHINGLES_SQL_CTE, shingles_expr
 from ..plans.registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 
 # ---------------------------------------------------------------------------
 # X1 — exact dedup
@@ -308,7 +308,7 @@ def near_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{p}/pairs"),
     )
-    return spark.read.parquet(f"{path}/pairs")
+    return read_parquet(spark, f"{path}/pairs")
 
 
 def shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -332,7 +332,7 @@ def shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{p}/shingles"),
     )
-    return spark.read.parquet(f"{path}/shingles")
+    return read_parquet(spark, f"{path}/shingles")
 
 
 # ---------------------------------------------------------------------------
@@ -686,7 +686,10 @@ def connected_components(edges_df, nodes_df, max_iters: int = 50):
     * The loop body runs under scale.iter_loop_conf (AQE suspended,
       shuffle partitions derived from the |sym|+|nodes| the setup
       actions measured, both restored on exit) — see that helper's
-      docstring for the full rationale."""
+      docstring for the full rationale.
+    * Fails loudly: a NULL label-sum probe, or ``max_iters`` rounds
+      without a fixpoint, raises RuntimeError instead of returning
+      unconverged labels."""
     from pyspark.sql import functions as F
 
     from .scale import iter_loop_conf
@@ -760,10 +763,20 @@ def connected_components(edges_df, nodes_df, max_iters: int = 50):
             cur_sum = upd.agg(
                 F.sum(F.col("label").cast("decimal(38,0)"))
             ).first()[0]
+            if cur_sum is None:
+                raise RuntimeError(
+                    "connected_components: the label-sum convergence "
+                    "probe returned NULL"
+                )
             labels = upd
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
+        else:
+            raise RuntimeError(
+                f"connected_components: no fixpoint after {max_iters} "
+                "rounds"
+            )
     return (
         nodes_df.join(labels, "n", "left")
         .select("n", F.coalesce(F.col("label"), F.col("n")).alias("cluster_id"))
@@ -2946,7 +2959,7 @@ def containment_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         (sys.modules[__name__], textfeat),
         build,
     )
-    return spark.read.parquet(f"{path}/edges")
+    return read_parquet(spark, f"{path}/edges")
 
 
 # ---------------------------------------------------------------------------

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 
 _B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
@@ -608,7 +608,7 @@ def proximity_search(
         from pyspark.errors import AnalysisException
 
         try:
-            store_cols = spark.read.parquet(store_dir).columns
+            store_cols = read_parquet(spark, store_dir).columns
         except AnalysisException:
             # empty store: no files to infer from, no row to mis-read
             # — the explicit-schema read below returns zero rows

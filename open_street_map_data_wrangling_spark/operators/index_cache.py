@@ -49,29 +49,26 @@ from __future__ import annotations
 import atexit
 import hashlib
 import inspect
+import logging
 import os
 import shutil
 import tempfile
 import uuid
 from typing import Callable, Iterable
 
+from ..sources.catalog import listing_sig, local_fs_path
+
+_log = logging.getLogger(__name__)
+
 
 def _input_sig(sf_dir: str, tables: Iterable[str]) -> str:
     """(name, size, mtime_ns) of every file under each input table's
-    parquet path — cheap (os.stat only) and regeneration-sensitive."""
+    parquet path — cheap (os.stat only) and regeneration-sensitive;
+    ``{table}:absent`` for a table with no file behind it."""
     parts = []
     for t in tables:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        if os.path.isdir(path):
-            for root, _, files in os.walk(path):
-                for f in sorted(files):
-                    st = os.stat(os.path.join(root, f))
-                    parts.append(f"{t}/{f}:{st.st_size}:{st.st_mtime_ns}")
-        elif os.path.exists(path):
-            st = os.stat(path)
-            parts.append(f"{t}:{st.st_size}:{st.st_mtime_ns}")
-        else:
-            parts.append(f"{t}:absent")
+        sig = listing_sig(os.path.join(sf_dir, f"{t}.parquet"))
+        parts.append(f"{t}:absent" if sig is None else f"{t}={sig!r}")
     return ";".join(parts)
 
 
@@ -105,7 +102,10 @@ def cached(
 ) -> str:
     """Return the path of the ``kind`` artifact for ``sf_dir``,
     building it via ``build_fn(path)`` only when no current-token
-    build exists.  See the module docstring for the token contract."""
+    build exists.  See the module docstring for the token contract.
+    Logs one record per call: a hit, a build, or an ephemeral build
+    (an input without files, or an aborted publish), with ``kind``
+    and the token."""
     input_sig = _input_sig(sf_dir, tables)
     if ":absent" in input_sig:
         # An input table has no file behind it — the pytest
@@ -122,6 +122,7 @@ def cached(
         base = f"osm_spark_idx_{kind}_ephemeral_{uuid.uuid4().hex[:16]}"
         path = os.path.join(parent, base)
         atexit.register(_rm_prefixed, parent, base)
+        _log.info("index cache %s: ephemeral build (an input has no file)", kind)
         build_fn(path)
         os.makedirs(path, exist_ok=True)
         with open(os.path.join(path, "_built_ephemeral"), "w"):
@@ -144,6 +145,7 @@ def cached(
     path = os.path.join(parent, final_base)
     marker = os.path.join(path, f"_built_{token}")
     if os.path.exists(marker):
+        _log.info("index cache %s: hit (token %s)", kind, token)
         return path
     # Build under a per-process temp prefix, mark the main dir, then
     # publish with atomic renames — siblings first, the
@@ -207,6 +209,11 @@ def cached(
             # ephemeral build (the ``:absent`` discipline); the next
             # call finds either a winner's marker or rebuilds and
             # publishes cleanly.
+            _log.info(
+                "index cache %s: ephemeral build (token %s publish aborted)",
+                kind,
+                token,
+            )
             base = f"osm_spark_idx_{kind}_ephemeral_{uuid.uuid4().hex[:16]}"
             epath = os.path.join(parent, base)
             atexit.register(_rm_prefixed, parent, base)
@@ -217,25 +224,8 @@ def cached(
             return epath
     finally:
         _rm_prefixed(parent, tmp_base)
+    _log.info("index cache %s: build (token %s)", kind, token)
     return path
-
-
-def _local_fs_path(spark, path: str) -> str | None:
-    """The local-filesystem path ``path`` resolves to, or None when it
-    resolves to any other filesystem: a ``file:`` URI, or a schemeless
-    path under a ``file:`` ``fs.defaultFS`` (read from the session's
-    Hadoop conf, the one Spark's own read would resolve it with)."""
-    from urllib.parse import urlparse
-
-    url = urlparse(path)
-    if url.scheme:
-        return url.path if url.scheme == "file" else None
-    default = (
-        spark._jsparkSession.sessionState()
-        .newHadoopConf()
-        .get("fs.defaultFS", "file:///")
-    )
-    return path if urlparse(default).scheme == "file" else None
 
 
 def read_small_parquet(spark, path: str, schema_ddl: str, columns):
@@ -251,14 +241,15 @@ def read_small_parquet(spark, path: str, schema_ddl: str, columns):
     both paths return the same types.  It is used only when the path
     resolves to the local filesystem: a schemeless path under a
     remote ``fs.defaultFS`` names a remote store, and reading a
-    same-named driver-local file instead would succeed wrongly.
-    Anything else, and any pyarrow failure (missing path, empty dir,
-    schema drift), reads through Spark, so error semantics and
-    remote-store support are Spark's.  Returns a list of dict rows
-    either way.
+    same-named driver-local file instead would succeed wrongly; the
+    rule is ``sources.catalog.local_fs_path``, the one the schema memo
+    (``catalog.read_parquet``) uses too.  Anything else, and any
+    pyarrow failure (missing path, empty dir, schema drift), reads
+    through Spark, so error semantics and remote-store support are
+    Spark's.  Returns a list of dict rows either way.
     """
     cols = list(columns)
-    local = _local_fs_path(spark, path)
+    local = local_fs_path(spark, path)
     if local is not None:
         try:
             import pyarrow as pa

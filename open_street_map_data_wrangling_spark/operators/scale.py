@@ -109,10 +109,11 @@ def iter_loop_conf(
     rows), floored at 1 and capped at the session's configured
     width so a small graph never over-fans relative to the
     deployment's own setting: sf0.1 runs 1-partition rounds, a
-    100 TB corpus gets the full configured width.  The per-round
-    joins key on unique node ids and the aggregates are map-side
-    combined, so AQE's skew split has nothing to split inside these
-    loops.
+    100 TB corpus gets the full configured width.  A non-numeric
+    configured width (a platform's ``auto``) sets no cap, and is
+    restored verbatim on exit.  The per-round joins key on unique
+    node ids and the aggregates are map-side combined, so AQE's skew
+    split has nothing to split inside these loops.
 
     Pass ``parts`` to pin the width directly instead of deriving it
     from a row count — e.g. to the materialized partition count of a
@@ -124,7 +125,8 @@ def iter_loop_conf(
         loop_sp = max(1, int(parts))
     else:
         loop_sp = max(1, -(-int(n_rows) // rows_per_partition))
-        loop_sp = min(loop_sp, max(int(sp_before), 1))
+        if sp_before.strip().isdigit():
+            loop_sp = min(loop_sp, max(int(sp_before), 1))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
     try:

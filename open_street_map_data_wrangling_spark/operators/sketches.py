@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 
 # ---------------------------------------------------------------------------
 # Deterministic HyperLogLog
@@ -810,4 +810,4 @@ def q_decayed_topk_served(spark: SparkSession, sf_dir: str) -> DataFrame:
         _build,
         extra=f"b{_DECAY_BUCKET_DAYS}w{_DECAY_WAVES}",
     )
-    return decayed_topk_from_store(spark.read.parquet(f"{path}/counts"))
+    return decayed_topk_from_store(read_parquet(spark, f"{path}/counts"))

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, read_parquet
 from ..sources.sinks import commit_store
 
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is")
@@ -2684,7 +2684,7 @@ def bm25_search_many(
         # column read as all-NULL, which silently starves every
         # filtered query.  One parquet-footer schema inspection
         # catches it before any scan.
-        actual = spark.read.parquet(f"{index_path}/postings").schema
+        actual = read_parquet(spark, f"{index_path}/postings").schema
         if filter_col not in actual.names:
             raise ValueError(
                 f"bm25_search_many: index at {index_path} has no meta "
@@ -3319,7 +3319,7 @@ def maxsim_search_many(
         from pyspark.errors import AnalysisException
 
         try:
-            actual = spark.read.parquet(f"{index_path}/postings").schema
+            actual = read_parquet(spark, f"{index_path}/postings").schema
         except AnalysisException:
             # an EMPTY index has no data files to infer from — there
             # is no meta column to mis-read and no candidate either,

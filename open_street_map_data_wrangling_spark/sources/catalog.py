@@ -25,12 +25,29 @@ isAdjustedToUTC=false (arrives as TIMESTAMP_NTZ, which rejects
 the NTZ→LTZ cast is instant-preserving because the session timezone
 is pinned UTC (session.py). DuckDB reads the same file as a naive
 µs timestamp, so both engines see identical µs instants either way.
+
+Schema memo: a schemaless `spark.read.parquet` runs a whole footer-
+inference job per read, so every table load used to cost one Spark job
+before the query itself ran. `read_parquet` infers a file listing's
+schema once and passes it to every later read of the same listing,
+which then submits no job. The memo is keyed by the resolved local
+path, the `(relative name, size, mtime_ns)` of every file under it
+(`listing_sig`, which `index_cache` also keys its build tokens with)
+and the session confs that change inferred types, so a rewritten
+table or a flipped conf is inferred again. Paths that do not resolve
+to the local filesystem (`local_fs_path`), missing paths and empty
+listings always take the plain read, so remote stores and Spark's own
+errors are unchanged.
 """
 
 from __future__ import annotations
 
+import logging
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import apply_runtime_conf
 
@@ -48,10 +65,92 @@ TABLES: tuple[str, ...] = (
 )
 
 
+_log = logging.getLogger(__name__)
+
+# Session confs that change the schema parquet inference derives from
+# the same footers; their values are part of every memo key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# resolved local path -> (listing signature + conf values, schema); a
+# new key for a path replaces the old entry, so there is one per path.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def local_fs_path(spark: SparkSession, path: str) -> str | None:
+    """The local-filesystem path ``path`` resolves to, or None when it
+    resolves to any other filesystem: a ``file:`` URI, or a schemeless
+    path under a ``file:`` ``fs.defaultFS`` (read from the session's
+    Hadoop conf, the one Spark's own read would resolve it with)."""
+    from urllib.parse import urlparse
+
+    url = urlparse(path)
+    if url.scheme:
+        return url.path if url.scheme == "file" else None
+    default = (
+        spark._jsparkSession.sessionState()
+        .newHadoopConf()
+        .get("fs.defaultFS", "file:///")
+    )
+    return path if urlparse(default).scheme == "file" else None
+
+
+def listing_sig(local: str) -> tuple | None:
+    """``(relative name, size, mtime_ns)`` of every file under
+    ``local`` (or of ``local`` itself when it is a file); None when
+    there is no file to sign."""
+    try:
+        if os.path.isfile(local):
+            st = os.stat(local)
+            return ((os.path.basename(local), st.st_size, st.st_mtime_ns),)
+        sig = []
+        for root, dirs, files in os.walk(local):
+            dirs.sort()
+            for f in sorted(files):
+                full = os.path.join(root, f)
+                st = os.stat(full)
+                sig.append(
+                    (os.path.relpath(full, local), st.st_size, st.st_mtime_ns)
+                )
+    except OSError:  # a file vanished mid-listing: do not memoize
+        return None
+    return tuple(sig) or None
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only the
+    first time it sees this file listing under these confs; later
+    reads pass the remembered schema and submit no inference job.
+    Non-local paths, missing paths and empty listings take the plain
+    read (see the module docstring). Logs one record per inference."""
+    local = local_fs_path(spark, path)
+    sig = listing_sig(local) if local is not None else None
+    if sig is None:
+        _log.info("inferring parquet schema of %s (not memoized)", path)
+        return spark.read.parquet(path)
+    slot = os.path.abspath(local)
+    key = (sig, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(slot)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    _log.info("inferring parquet schema of %s", path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[slot] = (key, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table; normalizes events.ts to TimestampType."""
+    """Load one fixture table through the schema memo (`read_parquet`:
+    only the first load of a listing runs an inference job); the raw
+    read schema is what is remembered, so events.ts is normalized to
+    TimestampType on every call."""
     apply_runtime_conf(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":  # TIMESTAMP(NANOS) via nanosAsLong

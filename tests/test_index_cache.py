@@ -177,6 +177,32 @@ def test_absent_branch_unique_and_cleanup_registered(
         index_cache._rm_prefixed(os.path.dirname(p), os.path.basename(p))
 
 
+def test_cached_logs_each_decision(sf_dir, tmp_path, caplog, monkeypatch):
+    """One INFO record per call on the module's logger, naming the
+    kind, the decision (build, hit, ephemeral) and the token."""
+    import logging
+
+    monkeypatch.setattr(index_cache.atexit, "register", lambda *a, **k: None)
+    caplog.set_level(logging.INFO, logger=index_cache.__name__)
+    calls = []
+    p = cached("tst_log", sf_dir, ("t",), (index_cache,),
+               _build_counting(calls))
+    cached("tst_log", sf_dir, ("t",), (index_cache,), _build_counting(calls))
+    e = cached("tst_log", str(tmp_path / "nowhere"), ("t",), (index_cache,),
+               _build_counting(calls))
+    index_cache._rm_prefixed(os.path.dirname(e), os.path.basename(e))
+    token = os.path.basename(p).rsplit("_", 1)[1]
+    assert [
+        (r.levelname, r.getMessage())
+        for r in caplog.records
+        if r.name == index_cache.__name__
+    ] == [
+        ("INFO", f"index cache tst_log: build (token {token})"),
+        ("INFO", f"index cache tst_log: hit (token {token})"),
+        ("INFO", "index cache tst_log: ephemeral build (an input has no file)"),
+    ]
+
+
 def test_concurrent_first_builders_two_processes(tmp_path):
     """The advice-item scenario, run for real: two PROCESSES
     first-build the same token concurrently (slow builds, overlapping

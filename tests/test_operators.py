@@ -270,6 +270,50 @@ def test_connected_components_chain(spark):
     assert got[12] == 12  # isolated node keeps its own label
 
 
+def test_connected_components_raises_without_fixpoint(spark):
+    """max_iters rounds that end before the fixpoint raise instead of
+    returning unconverged labels: one round cannot label a 12-node
+    chain (pointer doubling needs several)."""
+    import pytest
+
+    from open_street_map_data_wrangling_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], "a long, b long"
+    )
+    nodes = spark.createDataFrame([(i,) for i in range(12)], "n long")
+    with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds"):
+        connected_components(edges, nodes, max_iters=1)
+
+
+def test_connected_components_raises_on_null_probe(spark, monkeypatch):
+    """A NULL answer from the label-sum convergence probe raises
+    instead of being read as "not converged yet" (or as converged)."""
+    import pytest
+
+    from open_street_map_data_wrangling_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame([(1, 2)], "a long, b long")
+    nodes = spark.createDataFrame([(1,), (2,)], "n long")
+    frame = type(edges)
+    real_agg = frame.agg
+
+    def agg(self, *exprs):
+        # the round probe is the one-aggregate agg; the setup probe
+        # (count + sum) passes through
+        if len(exprs) == 1:
+            return real_agg(self, F.sum(F.lit(None).cast("decimal(38,0)")))
+        return real_agg(self, *exprs)
+
+    monkeypatch.setattr(frame, "agg", agg)
+    with pytest.raises(RuntimeError, match="probe returned NULL"):
+        connected_components(edges, nodes)
+
+
 def test_session_gap_boundary_semantics(spark):
     """Boundary contract: an event EXACTLY gap minutes after the
     previous one stays in the SAME session in native session_window

@@ -415,6 +415,68 @@ def test_collect_if_small_logs_each_path_decision(spark, caplog, monkeypatch):
     ]
 
 
+class _AutoWidthConf:
+    """``spark.conf`` as on a platform that accepts a non-numeric
+    ``spark.sql.shuffle.partitions`` (``auto``): such a value is kept
+    here instead of being passed to Spark, which only takes ints."""
+
+    KEY = "spark.sql.shuffle.partitions"
+
+    def __init__(self, real, width):
+        self._real, self.width = real, width
+
+    def get(self, key, *default):
+        if key == self.KEY and self.width is not None:
+            return self.width
+        return self._real.get(key, *default)
+
+    def set(self, key, value):
+        if key == self.KEY:
+            self.width = None if str(value).isdigit() else str(value)
+            if self.width is not None:
+                return
+        self._real.set(key, value)
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+
+def test_iter_loop_conf_keeps_non_numeric_width(spark, monkeypatch):
+    """With the configured width ``auto``, the round loops neither
+    crash nor cap their derived width, and the string is restored on
+    exit: a PageRank above the driver bound (width pinned from its
+    edge list) and connected components (width derived from the
+    measured row count)."""
+    from open_street_map_data_wrangling_spark.operators import graph, scale
+    from open_street_map_data_wrangling_spark.operators.dedup import (
+        connected_components,
+    )
+
+    key = _AutoWidthConf.KEY
+    before = spark.conf.get(key)
+    conf = _AutoWidthConf(spark.conf, "auto")
+    monkeypatch.setattr(spark, "conf", conf)
+    monkeypatch.setattr(scale, "DRIVER_SOLVE_BOUND", -1)
+    try:
+        with scale.iter_loop_conf(spark, n_rows=5 * 262144) as loop_sp:
+            assert loop_sp == 5
+            assert conf.get(key) == "5"
+        assert conf.get(key) == "auto"
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 1), (4, 5)], "doc_a long, doc_b long"
+        )
+        ranks = graph.pagerank_fixed(pairs).collect()
+        assert sorted(r.doc_id for r in ranks) == [1, 2, 3, 4, 5]
+        assert conf.get(key) == "auto"
+        edges = pairs.toDF("a", "b")
+        nodes = spark.createDataFrame([(i,) for i in range(1, 7)], "n long")
+        got = {r.n: r.cluster_id for r in connected_components(edges, nodes).collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
+        assert conf.get(key) == "auto"
+    finally:
+        conf._real.set(key, before)
+
+
 def test_local_frame_types_rows_from_ddl(spark):
     """local_frame types the Arrow table from the DDL — empty input
     included — and round-trips the rows."""
