@@ -138,114 +138,11 @@ def _stamp_fingerprints() -> dict[str, str]:
         return {}
 
 
-# Builder-maintained risk ranking WITHIN the modified group: when a
-# shared-helper or catalog edit re-queues a large slice of the
-# registry at once (round 4: the events.ts normalization re-queued all
-# 139 stamped queries), the ~50-entry window should spend its slots on
-# the queries whose implementations actually changed this round before
-# the ones that merely share an edited helper.  Names absent from the
-# registry are ignored; an empty tuple restores pure registration
-# order.
-_MODIFIED_PRIORITY: tuple[str, ...] = (
-    # Round 13: q_multimodal_dedup gained the audio channel (new
-    # output columns + concat_ws modality); bm25_search_many gained
-    # the fail-fast meta-column validation (r12 ADVICE);
-    # rrf_search_many / maxsim_search_many gained the filters
-    # machinery (X100/X101); and every inline-build serving query
-    # switched to the content-tagged build cache
-    # (operators/index_cache.py — VERDICT r12 #6).  ALL rotated
-    # dependents re-verified green at sf0.01 AND sf0.1 this round.
-    "q_multimodal_dedup",
-    "q_tombstone_served",
-    "q_rrf_served",
-    "q_rrf_batch",
-    "q_maxsim_batch",
-    "q_bm25_batch_filtered",
-    "q_ivfpq_serve",
-    "q_ivfpq_batch",
-    "q_ivfpq_batch_filtered",
-    "q_proximity_served",
-    # Round 12: the r11-ADVICE fixes (GIF LZW end-of-stream width
-    # sync, JPEG DQT guard, bm25 batch-oracle dl qualification)
-    # touched the codec and bm25 closures; build_ivfpq_index gained
-    # the meta-columns parameter (X92) which rotates every
-    # ivfpq-store dependent; q_loader_batches' prefix sum is factored
-    # into _ordered_token_prefix / _loader_manifest (shared with the
-    # X91 model-token variant).  ALL 10 re-verified green at sf0.01
-    # this round (plus the 6 new r12 queries, which lead the window
-    # as never-stamped).
-    "q_image_gif",
-    "q_image_jpeg",
-    "q_bm25_batch",
-    "q_rrf_batch",
-    "q_bm25",
-    "q_rrf_fusion",
-    "q_rrf_served",
-    "q_ivfpq_serve",
-    "q_ivfpq_batch",
-    "q_loader_batches",
-    # Round 11: r10-ADVICE fixes — q_audio_pcm's oracle now uses
-    # explicit pmod (double-mod) on n_chars and the sample expression
-    # so negative inputs agree with the Python worker's non-negative
-    # %; _bm25_score_sql is parameterized by term count (demo-width
-    # default, so q_bm25/q_rrf_fusion compile byte-identically).  All
-    # re-verified green at sf0.01 this round.
-    "q_audio_pcm",
-    "q_bm25",
-    "q_rrf_fusion",
-    # Round 11 wave 2: q_ivfpq_serve's codes artifact now carries the
-    # raw embedding column (column-pruned away from the ADC scan;
-    # feeds rrf_search's exact rerank); q_keep_best's policy tail is
-    # factored into _keep_best_policy / _KEEP_BEST_TAIL_SQL, shared
-    # with q_keep_best_containment; q_containment untouched but its
-    # module siblings moved.  All re-verified green at sf0.01.
-    "q_ivfpq_serve",
-    "q_keep_best",
-    # Round 11 wave 12: _bm25_contrib refactored into the named-column
-    # _bm25_contrib_cols (byte-identical expression text for the
-    # pivoted callers — q_bm25/q_rrf_fusion/q_rrf_served re-verified
-    # green at sf0.01 post-refactor; the long form feeds q_bm25_batch).
-    "q_bm25_batch",
-    # Round 11 wave 4: q_lsh_audit's four fan-out relations are each
-    # checkpoint-cut (25 visible scans -> 0); result hash re-verified
-    # unchanged at sf0.01.
-    "q_lsh_audit",
-    # Round 11 wave 3: q_int8_recall's scoring core factored into
-    # _int8_recall_audit (explicit scales), shared with the served
-    # int8_recall_served path; re-verified green at sf0.01.
-    "q_int8_recall",
-    # Round 10: the r09-ADVICE fixes touched two query closures —
-    # q_image_pixels' oracle gained the dims-level LEFT JOIN so a
-    # NULL doc_id/n_chars doc emits a NULL-features row (matching the
-    # worker, which already did), and q_ivfpq_serve's serve helper
-    # now reads seeds/ with an explicit schema so the empty-index
-    # guard is reachable.  Both re-verified green against DuckDB at
-    # sf0.01 this round.  The other advice fixes (bounded seeds
-    # fallback in build_hardneg_index, explicit postings schema in
-    # text_index_merge_fn) live outside every query closure and are
-    # pytest-pinned instead.
-    "q_image_pixels",
-    "q_ivfpq_serve",
-    # Wave 2: _adc_top10 gained a k parameter for q_ann_rerank's
-    # shortlist stage (default unchanged — byte-identical results for
-    # the historical callers, all re-verified green at sf0.01).
-    "q_pq_adc",
-    "q_pq_recall",
-    "q_pq_recall_trained",
-    # Wave 10: q_langid's oracle now reads from the shared
-    # _LANGID_SQL constant (byte-equivalent CTE chain, whitespace
-    # shifted) so q_langid_confusion scores the same classifier;
-    # re-verified green at sf0.01 + sf0.1.
-    "q_langid",
-)
-
-
 def _ordered_specs():
     """Registry specs ordered for the driver's ~50-entry window:
     never-stamped first, then stamped-but-modified-since (fingerprint
     mismatch vs STAMPS.json), then stamped-and-unchanged; stable by
-    registration order within each group, except that
-    _MODIFIED_PRIORITY names lead the modified group."""
+    registration order within each group."""
     specs = load_all_queries()
     stamped = _stamped_names()
     recorded = _stamp_fingerprints()
@@ -257,10 +154,7 @@ def _ordered_specs():
             modified[n] = s
         else:
             seen[n] = s
-    prio = {
-        n: modified.pop(n) for n in _MODIFIED_PRIORITY if n in modified
-    }
-    return {**fresh, **prio, **modified, **seen}
+    return {**fresh, **modified, **seen}
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -401,173 +401,94 @@ def main() -> None:
         ),
     }
 
-    # Persisted-index serve-only latency: q_ivfpq_serve's headline
-    # time honestly folds the index (re)build and two parquet writes
-    # into one unit — the amortized offline cost.  The number a
-    # deployment actually pays per query is the serve alone over a
-    # prebuilt index (partition-pruned codes scan + 4 LUT lookups a
-    # row + a heap), so record it separately.  Kept out of `timings`
-    # for the same reason as the skew twin.
+    # Build/serve splits.  A headline time folds an index or store
+    # build into the query, the amortized offline cost; a deployment
+    # builds once and pays only the serve over the prebuilt artifact
+    # per request.  Each row records the headline time, the build
+    # (not recorded when its key is None) and the best-of-2 warm serve.
+    # Kept out of `timings` for the same reason as the skew twin.
+    #   ivfpq_serve   partition-pruned codes scan + 4 LUT lookups a row
+    #   hardneg_serve nightly cell index; "negatives for these K new
+    #                 docs" from a partition-pruned scan
+    #   span_gate     gram-count store: a new batch's duplicated-span
+    #                 coverage with zero history scans
+    #   bm25_serve    ranked queries from a partition-pruned posting read
+    #   rrf_serve     hybrid retrieval over the bm25 and ivfpq artifacts:
+    #                 two pruned index scans, zero corpus scans
+    import shutil
     import tempfile as _tf
+
+    from pyspark.sql import functions as _F
 
     from open_street_map_data_wrangling_spark.operators.pq import (
         build_ivfpq_index,
         ivfpq_search,
     )
-    from open_street_map_data_wrangling_spark.sources.catalog import (
-        load_table,
-    )
-
-    idx_dir = os.path.join(_tf.gettempdir(), "osm_spark_bench_ivfpq")
-    build_ivfpq_index(load_table(spark, sf_dir, "embeddings"), idx_dir)
-    ivfpq_search(spark, idx_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()  # warm the serve plan
-    serve_best = None
-    for _pass in range(2):
-        t0 = time.time()
-        ivfpq_search(spark, idx_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = round(time.time() - t0, 3)
-        serve_best = dt if serve_best is None or dt < serve_best else serve_best
-    built = timings.get("q_ivfpq_serve")
-    out["ivfpq_serve"] = {
-        "build_plus_serve_sec": built,
-        "serve_only_sec": serve_best,
-    }
-
-    # Hard-negative miner build/serve split (r09, mirroring the ivfpq
-    # numbers): q_hard_negatives' headline time is the full inline
-    # mining pass; a deployment builds the cell index nightly and
-    # serves "negatives for these K new docs" from a partition-pruned
-    # scan, so record build and serve-only separately.
     from open_street_map_data_wrangling_spark.operators.similarity import (
         build_hardneg_index,
         hardneg_search,
     )
-    from pyspark.sql import functions as _F
-
-    hn_dir = os.path.join(_tf.gettempdir(), "osm_spark_bench_hardneg")
-    emb_tbl = load_table(spark, sf_dir, "embeddings")
-    t0 = time.time()
-    build_hardneg_index(emb_tbl, hn_dir)
-    hn_build = round(time.time() - t0, 3)
-    hn_batch = emb_tbl.filter(_F.col("vec_id") < 8)
-    hardneg_search(spark, hn_dir, hn_batch).write.format("noop").mode(
-        "overwrite"
-    ).save()  # warm
-    hn_serve = None
-    for _pass in range(2):
-        t0 = time.time()
-        hardneg_search(spark, hn_dir, hn_batch).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = round(time.time() - t0, 3)
-        hn_serve = dt if hn_serve is None or dt < hn_serve else hn_serve
-    out["hardneg_serve"] = {
-        "inline_mining_sec": timings.get("q_hard_negatives"),
-        "index_build_sec": hn_build,
-        "serve_only_sec": hn_serve,
-    }
-
-    # ExactSubstr admission gate (r09): the gram-count store lets a
-    # crawler score a NEW batch's duplicated-span coverage against
-    # the whole corpus history with zero history scans — record the
-    # store build (one corpus pass) and the per-batch gate latency.
+    from open_street_map_data_wrangling_spark.operators.text import (
+        bm25_search,
+        build_bm25_index,
+        rrf_search,
+    )
+    from open_street_map_data_wrangling_spark.sources.catalog import (
+        load_table,
+    )
     from open_street_map_data_wrangling_spark.streaming.jobs import (
         span_dup_coverage_serve,
         span_gram_merge_fn,
     )
 
-    sg_dir = os.path.join(_tf.gettempdir(), "osm_spark_bench_spangate")
-    import shutil
+    def tmp(name: str) -> str:
+        return os.path.join(_tf.gettempdir(), f"osm_spark_bench_{name}")
 
-    shutil.rmtree(sg_dir, ignore_errors=True)
+    emb_tbl = load_table(spark, sf_dir, "embeddings")
     docs_tbl = load_table(spark, sf_dir, "documents")
-    t0 = time.time()
-    span_gram_merge_fn(spark, sg_dir)(docs_tbl, 0)
-    sg_build = round(time.time() - t0, 3)
+    hn_batch = emb_tbl.filter(_F.col("vec_id") < 8)
     gate_batch = docs_tbl.filter(_F.col("doc_id") % 97 == 0)
-    span_dup_coverage_serve(spark, sg_dir, gate_batch).write.format(
-        "noop"
-    ).mode("overwrite").save()  # warm
-    sg_serve = None
-    for _pass in range(2):
-        t0 = time.time()
-        span_dup_coverage_serve(spark, sg_dir, gate_batch).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        dt = round(time.time() - t0, 3)
-        sg_serve = dt if sg_serve is None or dt < sg_serve else sg_serve
-    out["span_gate"] = {
-        "inline_metric_sec": timings.get("q_dup_spans"),
-        "store_build_sec": sg_build,
-        "gate_serve_sec": sg_serve,
-    }
-
-    # BM25 build/serve split (r10, the ivfpq convention): q_bm25's
-    # headline time is the inline single-scan form; a deployment
-    # builds the posting index offline and serves ranked queries from
-    # a partition-pruned posting read, so record both.
-    from open_street_map_data_wrangling_spark.operators.text import (
-        build_bm25_index,
-        bm25_search,
+    # a leftover store's _applied_0 marker would skip the store build
+    shutil.rmtree(tmp("spangate"), ignore_errors=True)
+    serve_splits = (
+        # (section, headline key, headline query,
+        #  build key, build, serve key, serve)
+        ("ivfpq_serve", "build_plus_serve_sec", "q_ivfpq_serve",
+         None, lambda: build_ivfpq_index(emb_tbl, tmp("ivfpq")),
+         "serve_only_sec", lambda: ivfpq_search(spark, tmp("ivfpq"))),
+        ("hardneg_serve", "inline_mining_sec", "q_hard_negatives",
+         "index_build_sec", lambda: build_hardneg_index(emb_tbl, tmp("hardneg")),
+         "serve_only_sec",
+         lambda: hardneg_search(spark, tmp("hardneg"), hn_batch)),
+        ("span_gate", "inline_metric_sec", "q_dup_spans",
+         "store_build_sec",
+         lambda: span_gram_merge_fn(spark, tmp("spangate"))(docs_tbl, 0),
+         "gate_serve_sec",
+         lambda: span_dup_coverage_serve(spark, tmp("spangate"), gate_batch)),
+        ("bm25_serve", "inline_sec", "q_bm25",
+         "index_build_sec", lambda: build_bm25_index(docs_tbl, tmp("bm25")),
+         "serve_only_sec", lambda: bm25_search(spark, tmp("bm25"))),
+        ("rrf_serve", "build_plus_serve_sec", "q_rrf_served",
+         "ivfpq_build_sec",
+         lambda: build_ivfpq_index(emb_tbl, tmp("rrf_ivfpq")),
+         "serve_only_sec",
+         lambda: rrf_search(spark, tmp("bm25"), tmp("rrf_ivfpq"))),
     )
-
-    bm_dir = os.path.join(_tf.gettempdir(), "osm_spark_bench_bm25")
-    docs_tbl = load_table(spark, sf_dir, "documents")
-    t0 = time.time()
-    build_bm25_index(docs_tbl, bm_dir)
-    bm_build = round(time.time() - t0, 3)
-    bm25_search(spark, bm_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()  # warm
-    bm_serve = None
-    for _pass in range(2):
+    for section, inline_key, query, build_key, build, serve_key, serve in serve_splits:
         t0 = time.time()
-        bm25_search(spark, bm_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = round(time.time() - t0, 3)
-        bm_serve = dt if bm_serve is None or dt < bm_serve else bm_serve
-    out["bm25_serve"] = {
-        "inline_sec": timings.get("q_bm25"),
-        "index_build_sec": bm_build,
-        "serve_only_sec": bm_serve,
-    }
-
-    # Hybrid-retrieval serve split (r11): q_rrf_served's headline time
-    # includes both index builds; what a deployment pays per query is
-    # rrf_search alone over the maintained artifacts — two
-    # partition-pruned index scans, zero corpus scans.
-    from open_street_map_data_wrangling_spark.operators.pq import (
-        build_ivfpq_index,
-    )
-    from open_street_map_data_wrangling_spark.operators.text import (
-        rrf_search,
-    )
-
-    rrf_pq_dir = os.path.join(_tf.gettempdir(), "osm_spark_bench_rrf_ivfpq")
-    t0 = time.time()
-    build_ivfpq_index(load_table(spark, sf_dir, "embeddings"), rrf_pq_dir)
-    rrf_vec_build = round(time.time() - t0, 3)
-    rrf_search(spark, bm_dir, rrf_pq_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()  # warm
-    rrf_serve = None
-    for _pass in range(2):
-        t0 = time.time()
-        rrf_search(spark, bm_dir, rrf_pq_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = round(time.time() - t0, 3)
-        rrf_serve = dt if rrf_serve is None or dt < rrf_serve else rrf_serve
-    out["rrf_serve"] = {
-        "build_plus_serve_sec": timings.get("q_rrf_served"),
-        "ivfpq_build_sec": rrf_vec_build,
-        "serve_only_sec": rrf_serve,
-    }
+        build()
+        build_sec = round(time.time() - t0, 3)
+        serve().write.format("noop").mode("overwrite").save()  # warm
+        best = None
+        for _pass in range(2):
+            t0 = time.time()
+            serve().write.format("noop").mode("overwrite").save()
+            dt = round(time.time() - t0, 3)
+            best = dt if best is None or dt < best else best
+        out[section] = {inline_key: timings.get(query)}
+        if build_key:
+            out[section][build_key] = build_sec
+        out[section][serve_key] = best
     # Round-over-round regression guard: compare the common query
     # subset against the latest recorded BENCH_r*.json so a
     # scale-safety patch cannot silently re-inflate fixture timings

@@ -7,7 +7,7 @@ on that column and none on any other; interleaving the bits of two
 quantized columns gives a single sort key whose contiguous ranges are
 small rectangles in BOTH dimensions, so a rectangle predicate touches
 O(perimeter) files instead of all of them — the layout trick behind
-Delta/Iceberg OPTIMIZE ZORDER, built here from plain integer
+lakehouse z-order clustering, built here from plain integer
 expressions (quantize → spread bits with the Morton magic numbers →
 interleave), no UDF, no shuffle beyond the final clustering write.
 
@@ -107,7 +107,8 @@ def with_zvalue(
     """Append the Morton key of two ALREADY-QUANTIZED (0..65535)
     integer columns — the reusable clustering primitive: follow with
     ``repartitionByRange(n, out)`` + write to lay a table out for
-    2-D skipping."""
+    2-D skipping (tests/test_layout.py builds its skipping fixture
+    this way; q_zorder shares ``zvalue_sql``)."""
     return df.withColumn(out, F.expr(zvalue_sql(qx, qy, _spark_shift)))
 
 
@@ -146,95 +147,3 @@ def q_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("z_bucket")
     )
 
-
-def optimize_table(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    qx: str,
-    qy: str,
-    n_files: int,
-    analyze_as: str | None = None,
-) -> dict:
-    """OPTIMIZE-verb maintenance: compact a fragmented table AND
-    z-cluster it in one rewrite, optionally registering it with CBO
-    statistics — the composed op a lakehouse runs on schedule
-    (Delta/Iceberg `OPTIMIZE ... ZORDER BY`), built from this repo's
-    audited pieces: one read, one Morton key, one range partition,
-    one write.
-
-    ``qx``/``qy`` are already-quantized (0..65535) integer columns.
-    Compaction and clustering share the same shuffle: the
-    repartitionByRange on the z-key IS the file-count reduction, so
-    the data moves once, not twice.  With ``analyze_as`` the result
-    is also saved as a managed table and ANALYZEd so the optimizer
-    sees real row counts (CBO join ordering — the same lever
-    tests/test_scale_patterns.py pins for dimension tables).
-
-    Returns a small audit dict: files before/after, rows.
-    """
-    import os
-
-    def _count_files(d: str) -> int:
-        return len(
-            [
-                f
-                for f in os.listdir(d)
-                if f.endswith(".parquet") and not f.startswith("_")
-            ]
-        )
-
-    src = spark.read.parquet(src_dir)
-    rows = src.count()
-    files_before = _count_files(src_dir)
-    clustered = with_zvalue(src, qx, qy).repartitionByRange(n_files, "z")
-    clustered.write.mode("overwrite").parquet(dest_dir)
-    if analyze_as:
-        spark.read.parquet(dest_dir).write.mode("overwrite").saveAsTable(analyze_as)
-        spark.sql(f"ANALYZE TABLE {analyze_as} COMPUTE STATISTICS")
-    return {
-        "rows": rows,
-        "files_before": files_before,
-        "files_after": _count_files(dest_dir),
-    }
-
-
-# 3-D Morton: 21-bit values spread to every 3rd bit of 63. The same
-# shift/mask cascade as 2-D with the 3-D magic constants (hex:
-# 1f00000000ffff, 1f0000ff0000ff, 100f00f00f00f00f, 10c30c30c30c30c3,
-# 1249249249249249) in decimal so both SQL dialects parse them.
-_SPREAD3 = (
-    (32, 8725724278095871),
-    (16, 8725728556220671),
-    (8, 1157144660301377551),
-    (4, 1207822528635744451),
-    (2, 1317624576693539401),
-)
-
-
-def _spread3_sql(expr: str, shift_fmt) -> str:
-    e = f"(({expr}) & 2097151)"  # clamp to 21 bits
-    for n, mask in _SPREAD3:
-        e = f"(({e} | {shift_fmt(e, n)}) & {mask})"
-    return e
-
-
-def zvalue3_sql(qx: str, qy: str, qz: str, shift_fmt) -> str:
-    """Interleave three quantized 21-bit columns into one 63-bit
-    Morton key — the (time, x, y) layout a telemetry or geo-temporal
-    table clusters by, so a box predicate on ANY subset of the three
-    dimensions skips files."""
-    return (
-        f"({_spread3_sql(qx, shift_fmt)} | "
-        f"{shift_fmt(_spread3_sql(qy, shift_fmt), 1)} | "
-        f"{shift_fmt(_spread3_sql(qz, shift_fmt), 2)})"
-    )
-
-
-def with_zvalue3(
-    df: DataFrame, qx: str, qy: str, qz: str, out: str = "z3"
-) -> DataFrame:
-    """Append the 3-D Morton key of three ALREADY-QUANTIZED
-    (0..2097151) integer columns; follow with repartitionByRange +
-    write, exactly like the 2-D primitive."""
-    return df.withColumn(out, F.expr(zvalue3_sql(qx, qy, qz, _spark_shift)))

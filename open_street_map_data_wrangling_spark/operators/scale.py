@@ -9,8 +9,6 @@ query in the inventory can adopt them:
   shuffle never concentrates a hot key on one task)
 * salted skew join — explode the small side per salt so a skewed fact
   key joins against n copies, spreading its rows over n tasks
-* two-phase distinct count — exact countDistinct without shipping
-  every (key, value) pair to one stage
 * driver-side fixpoints — the one size decision (collect_if_small)
   that lets an iterative operator solve a tiny relation on the driver
   and return it as an Arrow local frame (local_frame), while larger
@@ -149,15 +147,6 @@ def salted_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:
     return partial.groupBy(key).agg(F.sum("__partial").alias("cnt"))
 
 
-def salted_sum(df: DataFrame, key: str, value: str, n_salts: int = 16) -> DataFrame:
-    """Two-phase sum per key (same shape as salted_count)."""
-    salt = (F.rand(seed=42) * n_salts).cast("int").alias("__salt")
-    partial = df.select(F.col(key), F.col(value), salt).groupBy(key, "__salt").agg(
-        F.sum(value).alias("__partial")
-    )
-    return partial.groupBy(key).agg(F.sum("__partial").alias(f"sum_{value}"))
-
-
 def salted_join(
     fact: DataFrame, dim: DataFrame, key: str, n_salts: int = 8
 ) -> DataFrame:
@@ -226,53 +215,10 @@ def plain_join_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def two_phase_distinct_count(df: DataFrame, key: str, value: str) -> DataFrame:
-    """Exact distinct-count per key without a monolithic distinct
-    stage: dedup (key, value) pairs first (map-side partial distinct
-    applies), then count per key. Same result as
-    groupBy(key).agg(countDistinct(value))."""
-    return (
-        df.select(key, value)
-        .dropDuplicates([key, value])
-        .groupBy(key)
-        .agg(F.count("*").alias(f"n_distinct_{value}"))
-    )
-
-
 def explain_string(df: DataFrame, mode: str = "formatted") -> str:
     """The explain text as a string (plan-assertion helper)."""
     jmode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     return df._jdf.queryExecution().explainString(jmode)
-
-
-def quantile_buckets(
-    df: DataFrame, value: str, n_buckets: int = 4, accuracy: int = 10000
-) -> DataFrame:
-    """The scale path for q_ntile's global-sort quartiles: compute
-    approximate cutpoints with a fixed-memory sketch (one pass, no
-    global sort), then assign buckets via a broadcast range join.
-    Bucket sizes are approximately equal (sketch accuracy), which is
-    what a 100 TB percentile-bucketing job actually wants — ntile's
-    exact equal-splitting requires a total order that cannot scale.
-
-    NULL and NaN values cannot be range-assigned (NaN sorts above
-    +inf in Spark), so they land in an explicit overflow bucket 0
-    rather than silently vanishing from the output."""
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    cuts = df.select(
-        F.approx_percentile(value, probs, accuracy).alias("cuts")
-    ).first()["cuts"]
-    bounds = [float("-inf"), *cuts, float("inf")]
-    ranges = df.sparkSession.createDataFrame(
-        [(i + 1, bounds[i], bounds[i + 1]) for i in range(n_buckets)],
-        "bucket int, lo double, hi double",
-    )
-    v = F.col(value)
-    return (
-        df.join(F.broadcast(ranges), (v > F.col("lo")) & (v <= F.col("hi")), "left")
-        .withColumn("bucket", F.coalesce("bucket", F.lit(0)))
-        .drop("lo", "hi")
-    )
 
 
 @query(

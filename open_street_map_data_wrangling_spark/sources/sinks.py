@@ -3,7 +3,9 @@
 Reference: csv.DictWriter per shaped table (S3), one JSON doc per
 element (S4), sqlite3/pymongo load (S5). Engine equivalents are the
 DataFrameWriter formats; parquet is the engine-default (columnar,
-statistics, predicate-pushdown-able on re-read).
+statistics, predicate-pushdown-able on re-read).  `write_csv`,
+`write_json` and `write_sqlite` are those reference-parity sinks
+(PARITY.md); no query calls them.
 
 `partition_by` is the 100 TB lever: a layout partitioned on the query
 key (e.g. event date) turns full scans into partition-pruned scans;
@@ -135,14 +137,6 @@ def write_table(
         n, cols = bucket_by
         w = w.bucketBy(n, *cols).sortBy(*cols)
     w.saveAsTable(name)
-
-
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink — the second columnar interchange format Spark ships
-    a native vectorized reader for; same pushdown/pruning behavior as
-    parquet (stripe statistics instead of row-group statistics).
-    Useful when downstream consumers are Hive/Trino-era ORC stacks."""
-    df.write.mode(mode).orc(path)
 
 
 def write_sqlite(

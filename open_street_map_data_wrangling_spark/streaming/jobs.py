@@ -19,11 +19,34 @@ Patterns covered:
 * stream-stream interval join (watermarks on both sides bound the
   join state) — signup→purchase correlation; batch twin: q_funnel
 * foreachBatch continuous aggregate (incremental_hourly_rollup) —
-  MERGE-style partition-overwrite rollup maintenance.
+  MERGE-style rollup maintenance committed through sinks.commit_store.
 
 All jobs are trigger-agnostic: tests drive them with
 `trigger(availableNow=True)` into a memory sink; production would use
 a continuous trigger + checkpointLocation on durable storage.
+
+Deployment API.  No registry query calls these entry points; the soak
+tests in tests/test_streaming.py drive them:
+* store maintenance — each `*_maintenance` function, plus
+  incremental_hourly_rollup, scd2_dimension_maintenance and
+  incremental_near_dedup, runs one store's foreachBatch merge over a
+  stream and returns the StreamingQuery;
+* deletes — the `purge_*` functions and
+  family_registry_purge_maintenance remove ids from a store;
+* stream shapes — quality_gated_ingest, asof_enriched_purchases and
+  signup_purchase_correlation.
+The `*_merge_fn` foreachBatch bodies are module-level so tests can
+replay a batch directly.
+
+Commit semantics.  A maintained store is rewritten through
+sinks.commit_store (stage, then rename over the store), with an
+`_applied_<batch_id>` marker when replaying a batch would change the
+store: the hourly rollup re-sums the whole rollup per batch under such
+a marker, while the SCD2 merge passes none because a redelivered delta
+adds no rows.  The near-dedup store, the IVF-PQ codes and the geo
+points instead overwrite batch-keyed slices (a `batch_id=` directory,
+or `__batch=` leaves under a dynamic partition overwrite set as a
+writer option), so a replayed batch rewrites only its own slice.
 """
 
 from __future__ import annotations
@@ -130,73 +153,50 @@ def run_to_memory(result: DataFrame, name: str, output_mode: str = "complete") -
     return spark.table(name)
 
 
+_ROLLUP_DDL = "hour timestamp, event_type string, cnt bigint, hour_key string"
+
+
 def rollup_merge_fn(spark: SparkSession, target_dir: str):
     """The rollup's per-batch merge, exposed at module level so tests
     can drive RETRIES directly (foreachBatch is at-least-once: a
     crash between sink commit and checkpoint commit re-runs the
     batch).  The merge is read-modify-write — re-applying a batch
-    would DOUBLE-COUNT its events — so each applied batch leaves a
-    marker under ``{target_dir}_applied/`` and a redelivered batch id
-    returns without touching the table.  Residual risk, documented:
-    a crash between the partition overwrite and the marker mkdir
-    still re-applies (closing that needs a transactional table
-    format); the marker closes the much larger window between marker
-    and checkpoint commit."""
+    would DOUBLE-COUNT its events — so it commits through
+    sinks.commit_store with an ``_applied_<batch_id>`` marker: the
+    marker lands atomically with the rows it certifies, and a
+    redelivered batch id returns without touching the table.
+
+    Cost: each batch rewrites the whole rollup — O(hours x event
+    types) rows, one ``hour_key`` partition per hour — not only the
+    hours the batch touched."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        jvm0 = spark._jvm
-        hconf0 = spark._jsc.hadoopConfiguration()
-        marker = jvm0.org.apache.hadoop.fs.Path(
-            f"{target_dir}_applied/{batch_id}"
-        )
-        mfs = marker.getFileSystem(hconf0)
-        if mfs.exists(marker):
+        if batch_df.isEmpty():
             return
         delta = (
             batch_df.groupBy(
                 F.date_trunc("hour", "ts").alias("hour"), "event_type"
-            ).agg(F.count("*").alias("cnt"))
-        )
-        delta = delta.withColumn("hour_key", F.date_format("hour", "yyyyMMddHH"))
-        touched = [r.hour_key for r in delta.select("hour_key").distinct().collect()]
-        if not touched:
-            return
-        # Probe the target explicitly instead of catching read errors:
-        # a transient IO failure must propagate, not silently reset the
-        # rollup to the current delta.
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        target_path = jvm.org.apache.hadoop.fs.Path(target_dir)
-        fs = target_path.getFileSystem(hconf)
-        if fs.exists(target_path):
-            current = (
-                spark.read.parquet(target_dir)
-                # partition-dir columns are re-inferred as INT on
-                # read-back; pin hour_key to its written string type
-                .withColumn("hour_key", F.col("hour_key").cast("string"))
-                .filter(F.col("hour_key").isin(touched))
             )
-            merged = (
+            .agg(F.count("*").alias("cnt"))
+            .withColumn("hour_key", F.date_format("hour", "yyyyMMddHH"))
+        )
+
+        def fold(exists: bool) -> DataFrame:
+            if not exists:
+                return delta
+            # explicit schema: the partition column would otherwise be
+            # re-inferred as INT instead of its written string form
+            current = spark.read.schema(_ROLLUP_DDL).parquet(target_dir)
+            return (
                 current.unionByName(delta)
                 .groupBy("hour", "hour_key", "event_type")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        else:  # first batch: target does not exist yet
-            merged = delta
-        # Stage the merged hours before committing: the dynamic
-        # overwrite below deletes partition files this same plan reads
-        # (self-read-overwrite), so materialize to a side path first.
-        stage_dir = f"{target_dir}_stage"
-        merged.write.mode("overwrite").parquet(stage_dir)
-        (
-            spark.read.parquet(stage_dir)
-            .write.mode("overwrite")
-            .partitionBy("hour_key")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(target_dir)
+
+        commit_store(
+            spark, target_dir, fold,
+            marker=f"_applied_{batch_id}", partition_by=("hour_key",),
         )
-        fs.delete(jvm.org.apache.hadoop.fs.Path(stage_dir), True)
-        mfs.mkdirs(marker)
 
     return merge
 
@@ -205,9 +205,8 @@ def incremental_hourly_rollup(stream: DataFrame, target_dir: str):
     """Continuous-aggregate pattern (the 'hypertable rollup'): keep a
     parquet table of per-(hour, event_type) counts incrementally
     up-to-date as events stream in. Each micro-batch is partially
-    aggregated, then merged with the current rollup state for the
-    touched hours only — partition-overwrite semantics, so an hour's
-    file is rewritten only when that hour receives events.
+    aggregated, then folded into the current rollup state and
+    committed through sinks.commit_store.
 
     foreachBatch is the escape hatch for sinks Spark cannot express
     declaratively (MERGE-style upserts); the batch function receives a
@@ -384,12 +383,13 @@ def scd2_dimension_maintenance(delta_stream: DataFrame, target_dir: str):
     of batch arrival order.  The merge itself is the batch operator
     (operators/cdc.scd2_merge): delta broadcast, snapshot streamed,
     never shuffled.  The streaming checkpoint gives each source file
-    exactly-once batch membership; the staged self-read-overwrite is
-    the same commit pattern as incremental_hourly_rollup (the merge
-    plan reads the files the overwrite deletes, so it materializes to
-    a side path first).  Batches must be key-unique — reduce an
-    ingest stream to latest-per-key upstream (deduped_events is the
-    streaming shape for that).
+    exactly-once batch membership, and each batch commits through
+    sinks.commit_store, so a crash mid-commit is finished by the next
+    batch instead of losing the dimension.  No applied-batch marker
+    is needed: a redelivered delta finds every key unchanged
+    (``eqNullSafe``) or already present, so it adds no rows.  Batches
+    must be key-unique — reduce an ingest stream to latest-per-key
+    upstream (deduped_events is the streaming shape for that).
 
     Returns the StreamingQuery (caller stops it)."""
     from ..operators.cdc import scd2_merge
@@ -399,24 +399,19 @@ def scd2_dimension_maintenance(delta_stream: DataFrame, target_dir: str):
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        target_path = jvm.org.apache.hadoop.fs.Path(target_dir)
-        fs = target_path.getFileSystem(hconf)
-        if fs.exists(target_path):
+
+        def fold(exists: bool) -> DataFrame:
+            if not exists:  # first batch: everything is an insert at generation 1
+                return scd2_merge(batch_df.limit(0), batch_df, gen=1)
             full = spark.read.parquet(target_dir)
             gen = full.agg(F.max("version")).first()[0] + 1
-            merged = scd2_merge(
+            return scd2_merge(
                 full.filter(F.col("is_current")).select("k", "bal", "seg", "version"),
                 batch_df,
                 gen=gen,
             ).unionByName(full.filter(~F.col("is_current")))
-        else:  # first batch: everything is an insert at generation 1
-            merged = scd2_merge(batch_df.limit(0), batch_df, gen=1)
-        stage_dir = f"{target_dir}_stage"
-        merged.write.mode("overwrite").parquet(stage_dir)
-        spark.read.parquet(stage_dir).write.mode("overwrite").parquet(target_dir)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(stage_dir), True)
+
+        commit_store(spark, target_dir, fold)
 
     return _maintain(delta_stream, merge, target_dir)
 
@@ -439,10 +434,9 @@ def incremental_near_dedup(doc_stream: DataFrame, store_dir: str, out_dir: str):
     batch_id-keyed subdirectories with overwrite, so a retried batch
     rewrites its own slice instead of appending twice — together with
     the checkpoint's exactly-once file-to-batch assignment this makes
-    the whole job replay-safe (same contract the SCD2 and rollup
-    jobs document).  The store stays O(accepted docs x 4 bands) rows
-    of (bi, bv) — signatures, never text; the probe join is keyed on
-    (bi, bv), the LSH bucket posture dedup.py audits.
+    the whole job replay-safe.  The store stays O(accepted docs x 4
+    bands) rows of (bi, bv) — signatures, never text; the probe join
+    is keyed on (bi, bv), the LSH bucket posture dedup.py audits.
 
     Returns the StreamingQuery (caller stops it)."""
     return _maintain(
@@ -669,12 +663,6 @@ def ivfpq_codes_merge_fn(
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        # foreachBatch hands the batch a CLONED SparkSession; the
-        # write below runs under the clone's conf, so the dynamic-
-        # overwrite mode must be set THERE — setting it on the outer
-        # session silently leaves the clone in STATIC mode, and a
-        # static mode("overwrite") replaces the WHOLE codes table
-        # with one batch (caught by the rebuild-equality test).
         bs = batch_df.sparkSession
         seeds = bs.read.parquet(f"{index_path}/seeds").collect()
         raw = {
@@ -692,14 +680,14 @@ def ivfpq_codes_merge_fn(
             batch_df.select("vec_id", "embedding", *meta), cb, cents,
             with_embedding=True, meta=meta,
         ).withColumn("__batch", F.lit(batch_id + 1))
-        prev = bs.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-        bs.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-        try:
-            coded.hint("rebalance", "cid", "__batch").write.mode(
-                "overwrite"
-            ).partitionBy("cid", "__batch").parquet(f"{index_path}/codes")
-        finally:
-            bs.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # a writer option, not a session conf: a static overwrite
+        # would replace the WHOLE codes table with one batch, and a
+        # conf write would leak into queries sharing the session
+        coded.hint("rebalance", "cid", "__batch").write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "cid", "__batch"
+        ).parquet(f"{index_path}/codes")
 
     return merge
 
@@ -1443,20 +1431,14 @@ def geo_points_merge_fn(spark: SparkSession, store_dir: str):
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        bs = batch_df.sparkSession
         coded = geo_code_points(
             batch_df.select("id", "lat", "lon")
         ).withColumn("__batch", F.lit(batch_id + 1))
-        prev = bs.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "STATIC"
-        )
-        bs.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-        try:
-            coded.hint("rebalance", "gbx", "gby", "__batch").write.mode(
-                "overwrite"
-            ).partitionBy("gbx", "gby", "__batch").parquet(store_dir)
-        finally:
-            bs.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        coded.hint("rebalance", "gbx", "gby", "__batch").write.mode(
+            "overwrite"
+        ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            "gbx", "gby", "__batch"
+        ).parquet(store_dir)
 
     return merge
 

@@ -50,30 +50,6 @@ def test_generate_report(spark, sf_dir):
     assert set(rpt["key_buckets"]) <= {"lower", "lower_colon", "problemchars", "other"}
 
 
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    """ORC sink roundtrip: schema and values survive, and a filter on
-    re-read reaches the ORC reader as a pushed predicate (the same
-    scan-pruning contract the parquet default gives)."""
-    from open_street_map_data_wrangling_spark.sources.catalog import load_table
-    from open_street_map_data_wrangling_spark.sources.sinks import write_orc
-
-    nation = load_table(spark, sf_dir, "nation")
-    path = str(tmp_path / "nation_orc")
-    write_orc(nation, path)
-    back = spark.read.orc(path)
-    assert back.schema == nation.schema
-    assert sorted(r.n_nationkey for r in back.collect()) == sorted(
-        r.n_nationkey for r in nation.collect()
-    )
-    plan = (
-        back.filter(F.col("n_regionkey") == 2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PushedFilters: [" in plan and "n_regionkey" in plan
-
-
 def test_rotation_orders_fresh_then_modified_then_stamped():
     """The driver verifies only the first ~50 queries() entries per
     round.  Ordering contract: never-stamped first, then stamped

@@ -83,62 +83,3 @@ def test_zvalue_is_a_space_filling_curve(spark):
         dx = sum(((z >> (2 * b)) & 1) << b for b in range(16))
         dy = sum(((z >> (2 * b + 1)) & 1) << b for b in range(16))
         assert (dx, dy) == (r["qx"], r["qy"])
-
-
-def test_optimize_table_compacts_and_clusters(spark, tmp_path):
-    """One rewrite must do both maintenance jobs: file count drops to
-    the target AND the layout becomes 2-D-skippable (a y-axis box no
-    longer touches every file), with rows preserved and CBO stats
-    registered."""
-    from open_street_map_data_wrangling_spark.operators.layout import optimize_table
-
-    frag = str(tmp_path / "fragmented")
-    opt = str(tmp_path / "optimized")
-    base = (
-        spark.range(64 * 64)
-        .selectExpr("id", "CAST(id % 64 AS BIGINT) AS gx", "CAST(id div 64 AS BIGINT) AS gy")
-        .selectExpr("id", "gx", "gy", "gx * 1024 AS qx", "gy * 1024 AS qy")
-    )
-    base.repartition(32).write.mode("overwrite").parquet(frag)
-
-    audit = optimize_table(
-        spark, frag, opt, "qx", "qy", n_files=8, analyze_as="opt_table_test"
-    )
-    assert audit["rows"] == 64 * 64
-    assert audit["files_before"] >= 32
-    assert audit["files_after"] == 8
-    assert spark.read.parquet(opt).count() == 64 * 64
-    touched = (
-        spark.read.parquet(opt)
-        .filter("gy >= 8 AND gy < 16")
-        .select(F.input_file_name())
-        .distinct()
-        .count()
-    )
-    assert touched <= 4  # fragmented-by-id layout would touch all 8
-    stats = spark.sql("DESCRIBE EXTENDED opt_table_test").collect()
-    assert any("Statistics" in r["col_name"] for r in stats)
-    spark.sql("DROP TABLE IF EXISTS opt_table_test")
-
-
-def test_zvalue3_is_a_bijection(spark):
-    """The 3-D interleave decodes back to its inputs over the corner
-    set and a pseudo-random sample of the 21-bit domain."""
-    from open_street_map_data_wrangling_spark.operators.layout import with_zvalue3
-
-    corners = [0, 1, 255, 2097151]
-    pts = [(x, y, z) for x in corners for y in corners for z in corners]
-    # deterministic pseudo-random triples (LCG — no RNG state in tests)
-    seed = 1234567
-    for _ in range(200):
-        seed = (seed * 6364136223846793005 + 1442695040888963407) % (1 << 63)
-        pts.append(
-            (seed % 2097152, (seed >> 21) % 2097152, (seed >> 42) % 2097152)
-        )
-    df = spark.createDataFrame(pts, "qx bigint, qy bigint, qz bigint")
-    for r in with_zvalue3(df, "qx", "qy", "qz").collect():
-        z = r["z3"]
-        d = [0, 0, 0]
-        for axis in range(3):
-            d[axis] = sum(((z >> (3 * b + axis)) & 1) << b for b in range(21))
-        assert (d[0], d[1], d[2]) == (r["qx"], r["qy"], r["qz"])

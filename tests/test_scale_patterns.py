@@ -10,8 +10,6 @@ from open_street_map_data_wrangling_spark.operators.scale import (
     explain_string,
     salted_count,
     salted_join,
-    salted_sum,
-    two_phase_distinct_count,
 )
 from open_street_map_data_wrangling_spark.sources.catalog import load_table
 
@@ -26,17 +24,6 @@ def test_salted_count_equivalent(spark, sf_dir):
     assert _sorted(salted_count(events, "event_type")) == _sorted(naive)
 
 
-def test_salted_sum_equivalent(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    naive = li.groupBy("l_returnflag").agg(
-        F.round(F.sum("l_quantity"), 2).alias("sum_l_quantity")
-    )
-    got = salted_sum(li, "l_returnflag", "l_quantity").withColumn(
-        "sum_l_quantity", F.round("sum_l_quantity", 2)
-    )
-    assert _sorted(got) == _sorted(naive)
-
-
 def test_salted_join_equivalent(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders").withColumnRenamed(
         "o_custkey", "c_custkey"
@@ -45,16 +32,6 @@ def test_salted_join_equivalent(spark, sf_dir):
     naive = orders.join(customer, "c_custkey").groupBy("c_mktsegment").count()
     got = salted_join(orders, customer, "c_custkey").groupBy("c_mktsegment").count()
     assert _sorted(got) == _sorted(naive)
-
-
-def test_two_phase_distinct_count(spark, sf_dir):
-    events = load_table(spark, sf_dir, "events")
-    naive = events.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_distinct_user_id")
-    )
-    assert _sorted(two_phase_distinct_count(events, "event_type", "user_id")) == _sorted(
-        naive
-    )
 
 
 def test_dynamic_partition_pruning_in_plan(spark, sf_dir, tmp_path):
@@ -127,50 +104,6 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
         spark.sql("DROP TABLE IF EXISTS orders_b")
         spark.sql("DROP TABLE IF EXISTS customer_b")
-
-
-def test_quantile_buckets_approximate_quartiles(spark, sf_dir):
-    """Sketch-cutpoint bucketing ≈ ntile: every row lands in exactly
-    one bucket, buckets are value-ordered, sizes within 10% of N/4."""
-    from open_street_map_data_wrangling_spark.operators.scale import quantile_buckets
-
-    orders = load_table(spark, sf_dir, "orders")
-    n = orders.count()
-    got = quantile_buckets(orders, "o_totalprice", 4)
-    assert got.count() == n  # total preservation: no dropped/dup rows
-    stats = (
-        got.groupBy("bucket")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.min("o_totalprice").alias("lo"),
-            F.max("o_totalprice").alias("hi"),
-        )
-        .orderBy("bucket")
-        .collect()
-    )
-    assert [r.bucket for r in stats] == [1, 2, 3, 4]
-    for prev, cur in zip(stats, stats[1:]):
-        assert prev.hi <= cur.lo  # ordered, non-overlapping value ranges
-    for r in stats:
-        assert abs(r.cnt - n / 4) <= max(2, 0.1 * n / 4)
-
-
-def test_quantile_buckets_routes_null_nan_to_overflow(spark):
-    """NULL and NaN can't be range-assigned; they must land in the
-    explicit overflow bucket 0, not silently drop from the output."""
-    from open_street_map_data_wrangling_spark.operators.scale import quantile_buckets
-
-    df = spark.createDataFrame(
-        [(float(i),) for i in range(100)] + [(None,), (float("nan"),)],
-        "v double",
-    )
-    got = quantile_buckets(df, "v", 4)
-    assert got.count() == 102  # total preservation incl. NULL/NaN
-    overflow = got.filter(F.col("bucket") == 0).collect()
-    assert len(overflow) == 2
-    vals = [r.v for r in overflow]
-    assert any(v is None for v in vals)
-    assert any(v is not None and v != v for v in vals)  # NaN
 
 
 def test_broadcast_threshold_flips_join_strategy(spark, sf_dir):

@@ -2533,3 +2533,111 @@ def test_embedding_drift_maintenance_matches_batch_and_survives_replay(
     os.rename(store, f"{store}_stage")
     emb_drift_merge_fn(spark, store)(b1, batch_id=0)  # marker no-op
     assert spark.read.parquet(store).count() > 0
+
+
+def test_scd2_recovers_history_a_crash_left_in_stage(spark, tmp_path):
+    """A crash between deleting the dimension and renaming its stage
+    into place leaves only ``{target}_stage``.  The next batch must
+    recover that stage first: history survives and the new change is
+    generation 3, not a restart at generation 1."""
+    import os
+
+    from open_street_map_data_wrangling_spark.streaming.jobs import (
+        scd2_dimension_maintenance,
+    )
+
+    src = str(tmp_path / "deltas")
+    target = str(tmp_path / "dim")
+    ddl = "k long, bal double, seg string"
+
+    def run(rows, mode):
+        spark.createDataFrame(rows, ddl).write.mode(mode).parquet(src)
+        q = scd2_dimension_maintenance(
+            spark.readStream.schema(ddl).parquet(src), target
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    run([(1, 10.0, "A")], "overwrite")
+    run([(1, 20.0, "A"), (2, 5.0, "B")], "append")
+    os.rename(target, f"{target}_stage")
+    run([(1, 30.0, "A"), (3, 7.0, "C")], "append")
+
+    assert not os.path.exists(f"{target}_stage")
+    got = {
+        (r.k, r.bal, r.version, r.is_current)
+        for r in spark.read.parquet(target).collect()
+    }
+    assert got == {
+        (1, 10.0, 1, False),
+        (1, 20.0, 2, False),
+        (1, 30.0, 3, True),
+        (2, 5.0, 2, True),
+        (3, 7.0, 3, True),
+    }
+
+
+def test_rollup_marker_commits_inside_the_store(spark, tmp_path):
+    """The rollup's applied-batch marker is committed with the rows it
+    certifies, inside the store; no sibling marker directory and no
+    stage are left behind."""
+    import os
+
+    from open_street_map_data_wrangling_spark.streaming.jobs import rollup_merge_fn
+
+    target = str(tmp_path / "rollup")
+    batch = spark.createDataFrame(
+        [(1, "2024-01-01 10:05:00", 1, "click", 1.0, "{}")],
+        "event_id long, ts_s string, user_id long, event_type string, value double, props string",
+    ).select(
+        "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
+        "user_id", "event_type", "value", "props",
+    )
+    rollup_merge_fn(spark, target)(batch, 0)
+    assert os.path.isfile(f"{target}/_applied_0")
+    assert not os.path.exists(f"{target}_applied")
+    assert not os.path.exists(f"{target}_stage")
+
+
+def test_partition_overwrite_merges_write_no_session_conf(
+    spark, tmp_path, monkeypatch
+):
+    """The IVF-PQ codes and geo points merges overwrite only their
+    batch's leaf partitions without touching the shared session's
+    partitionOverwriteMode: a conf write there leaks into every query
+    running on the session at the same time."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from open_street_map_data_wrangling_spark.operators import pq
+    from open_street_map_data_wrangling_spark.operators.geo import synth_points
+    from open_street_map_data_wrangling_spark.streaming.jobs import (
+        geo_points_merge_fn,
+        ivfpq_codes_merge_fn,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
+        "vec_id", "embedding"
+    )
+    pts = synth_points(load_table(spark, "/root/testdata/sf0.001", "customer"))
+    index = str(tmp_path / "ivfpq")
+    geo = str(tmp_path / "geo")
+    pq.build_ivfpq_index(emb.filter(F.col("vec_id") < 300), index)
+
+    written = []
+    set_conf = RuntimeConfig.set
+    monkeypatch.setattr(
+        RuntimeConfig,
+        "set",
+        lambda self, k, v: (written.append(k), set_conf(self, k, v))[1],
+    )
+    ivfpq_codes_merge_fn(spark, index)(emb.filter(F.col("vec_id") >= 300), 0)
+    geo_points_merge_fn(spark, geo)(pts.filter("id <= 75"), 0)
+    geo_points_merge_fn(spark, geo)(pts.filter("id > 75"), 1)
+    assert key not in written
+
+    # still a dynamic overwrite: earlier batches' leaves survive
+    assert spark.read.parquet(f"{index}/codes").count() == emb.count()
+    assert spark.read.parquet(geo).count() == pts.count()
