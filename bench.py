@@ -322,7 +322,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     specs = load_all_queries()
-    spark = get_spark("osmdw-bench", driver_memory=os.environ.get("OSMDW_DRIVER_MEM", "48g"))
+    spark = get_spark("osmdw-bench")
 
     # Warmup: run every headline plan shape once at the smallest SF —
     # whole-stage codegen compilation, JIT, and Python-worker startup

@@ -57,6 +57,12 @@ _RUNTIME_SQL_CONF: dict[str, str] = {
 }
 
 
+def default_driver_memory() -> str:
+    """The driver heap of every session the package builds:
+    OSMDW_DRIVER_MEM, else 8g."""
+    return os.environ.get("OSMDW_DRIVER_MEM", "8g")
+
+
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     """Best-effort apply of runtime-settable SQL conf to a session we
     did not build (e.g. the verify driver's). Never raises."""
@@ -91,7 +97,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", driver_memory or os.environ.get("OSMDW_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", driver_memory or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Split size, measured at sf0.1: finer splits (2m) LOSE to

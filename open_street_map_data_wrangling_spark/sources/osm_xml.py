@@ -19,7 +19,9 @@ parses across every core of the cluster:
    (`parse_osm_tagged`, schema `TAGGED_SCHEMA` = `table` plus the
    union of the table schemas), and each table is a filter + select
    over that one tagged parse (`split_osm_tables`). Persist the
-   tagged parse to share it between consumers, as run_osm_etl does.
+   tagged parse to share it between consumers: run_osm_etl fills the
+   cache with its first action, one aggregate over the tagged rows
+   themselves, and its five concurrent writes then scan the cache.
 
 `<relation>` elements — which the reference project family ignores
 (SURVEY.md §1.1) — are parsed into `relations`, `relations_tags` and
@@ -229,8 +231,9 @@ def parse_osm_tagged(spark: SparkSession, path: str) -> DataFrame:
     """The reference ETL's single streaming pass (data.py::process_map),
     distributed: ONE `mapInPandas` over the fragment scan emits every
     parsed row once, tagged with its target table (`TAGGED_SCHEMA`).
-    Persist it to let several consumers share one parse; split it with
-    `split_osm_tables`."""
+    Persist it to let several consumers share one parse (run_osm_etl's
+    first action, its check aggregate, fills the cache that its five
+    concurrent writes then scan); split it with `split_osm_tables`."""
     return read_osm_fragments(spark, path).mapInPandas(
         _tagged_iter, schema=TAGGED_SCHEMA
     )
@@ -251,8 +254,9 @@ def parse_osm_xml(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """The reference ETL main (data.py::process_map), distributed:
     returns the eight shaped relations as one tagged parse, split by
     table. Left unpersisted, every relation that is materialized
-    re-parses the extract; run_osm_etl persists the tagged parse so
-    all its stages share one."""
+    re-parses the extract; run_osm_etl instead persists the tagged
+    parse, checks it with one aggregate, and splits it for the writes,
+    so all its steps share one parse."""
     return split_osm_tables(parse_osm_tagged(spark, path))
 
 

@@ -3,6 +3,9 @@ deterministic synthetic extract in the reference's layout (osmosis
 indent style, FIXTURES.md §C constraints), parse it distributed, and
 run the audit/clean logic over the shaped tables."""
 
+import threading
+import time
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -307,9 +310,12 @@ def test_etl_to_sqlite_reference_migration(spark, tmp_path_factory):
 # ---------------------------------------------------------------------------
 # One parse per ETL run: every stage scans the persisted tagged parse
 
-# run_osm_etl on the test extract runs 20 jobs; the pin leaves ~25%
-# slack.
-MAX_ETL_JOBS = 25
+# run_osm_etl on the test extract runs 10 jobs: 3 for the audit+validate
+# check (cache fill, shuffle map, result), 5 writes and 2 for the
+# one-action read-back.  The pin leaves ~25% slack.
+MAX_ETL_JOBS = 12
+
+WRITTEN = ("nodes", "nodes_tags", "ways", "ways_tags", "ways_nodes")
 
 
 @pytest.fixture(scope="module")
@@ -336,7 +342,18 @@ def etl_run(spark, tmp_path_factory):
             report = etl.run_osm_etl(spark, str(src), str(base / "out"))
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("etl-once")
+    tracker = sc.statusTracker()
+    # job id -> the names of its stages, read before later tests evict
+    # them; a skipped stage may already be gone (the store drops
+    # stages without a completion time first)
+    jobs = {
+        j: [
+            info.name
+            for info in map(tracker.getStageInfo, tracker.getJobInfo(j).stageIds)
+            if info is not None
+        ]
+        for j in tracker.getJobIdsForGroup("etl-once")
+    }
     return report, plans, jobs
 
 
@@ -346,9 +363,7 @@ def test_etl_writes_scan_persisted_parse(etl_run):
     appears only inside the cached relation, never above the scan."""
     report, plans, _ = etl_run
     assert f"wrote nodes: {N_NODES} rows" in report
-    assert sorted(plans) == sorted(
-        f"{t}.parquet" for t in ("nodes", "nodes_tags", "ways", "ways_tags", "ways_nodes")
-    )
+    assert sorted(plans) == sorted(f"{t}.parquet" for t in WRITTEN)
     for name, plan in plans.items():
         above, scan, _ = plan.partition("InMemoryTableScan")
         assert scan, (name, plan)
@@ -361,6 +376,146 @@ def test_etl_job_count_pinned(etl_run):
     starts no footer-inference job."""
     _, _, jobs = etl_run
     assert 0 < len(jobs) <= MAX_ETL_JOBS, sorted(jobs)
+
+
+def test_etl_job_group_holds_the_writes(etl_run):
+    """The writes run on driver threads, yet their five parquet jobs
+    land in the caller's job group, so the job-count pin counts them
+    and cannot pass by losing them."""
+    _, _, jobs = etl_run
+    writes = [j for j, stages in jobs.items() if any(n.startswith("parquet at ") for n in stages)]
+    assert len(writes) == len(WRITTEN), jobs
+
+
+# run_osm_etl's full report as the earlier 20-job pipeline printed it (shuffle
+# partitions 2, as the test session): on _make_xml(); on a copy with a
+# node out of range, an anonymous node and a node without lat; on a
+# copy whose first node is anonymous; and on its self-closed nodes
+# alone, so four written tables are empty
+ETL_REPORTS = {
+    "extract": [
+        "street-type variants flagged: 3",
+        "  Ave: Oak Ave",
+        "  Blvd: Birch Blvd",
+        "  St: Pine St.",
+        "nodes valid=True: 60",
+        "wrote nodes: 60 rows",
+        "wrote nodes_tags: 40 rows",
+        "wrote ways: 12 rows",
+        "wrote ways_tags: 24 rows",
+        "wrote ways_nodes: 36 rows",
+    ],
+    "invalid_nodes": [
+        "street-type variants flagged: 3",
+        "  Ave: Oak Ave",
+        "  Blvd: Birch Blvd",
+        "  St: Pine St.",
+        "nodes valid=None: 1",
+        "nodes valid=True: 57",
+        "nodes valid=False: 2",
+        "wrote nodes: 60 rows",
+        "wrote nodes_tags: 40 rows",
+        "wrote ways: 12 rows",
+        "wrote ways_tags: 24 rows",
+        "wrote ways_nodes: 36 rows",
+    ],
+    "invalid_first": [
+        "street-type variants flagged: 3",
+        "  Ave: Oak Ave",
+        "  Blvd: Birch Blvd",
+        "  St: Pine St.",
+        "nodes valid=False: 1",
+        "nodes valid=True: 59",
+        "wrote nodes: 60 rows",
+        "wrote nodes_tags: 40 rows",
+        "wrote ways: 12 rows",
+        "wrote ways_tags: 24 rows",
+        "wrote ways_nodes: 36 rows",
+    ],
+    "bare_nodes": [
+        "street-type variants flagged: 0",
+        "nodes valid=True: 40",
+        "wrote nodes: 40 rows",
+        "wrote nodes_tags: 0 rows",
+        "wrote ways: 0 rows",
+        "wrote ways_tags: 0 rows",
+        "wrote ways_nodes: 0 rows",
+    ],
+}
+
+
+def _etl_extract(kind: str) -> str:
+    xml = _make_xml()
+    if kind == "invalid_nodes":
+        return (
+            xml.replace('lat="41.0040"', 'lat="95.0040"')
+            .replace('uid="5" version="1" changeset="1005"', 'version="1" changeset="1005"')
+            .replace('lat="41.0080" ', "")
+        )
+    if kind == "invalid_first":
+        return xml.replace('uid="0" version="1" changeset="1000"', 'version="1" changeset="1000"')
+    if kind == "bare_nodes":
+        keep = ("<?xml", "<osm", "</osm", "  <bounds")
+        lines = xml.splitlines()
+        return "\n".join(
+            ln for ln in lines
+            if ln.startswith(keep) or (ln.startswith("  <node") and ln.endswith("/>"))
+        ) + "\n"
+    return xml
+
+
+@pytest.mark.parametrize("kind", sorted(ETL_REPORTS))
+def test_etl_report_is_pinned(spark, tmp_path_factory, kind):
+    """The whole report, line order included: the sorted variants, the
+    validity lines (None first, then True and False as each first
+    occurs in the extract), and a zero for every empty written
+    table."""
+    from open_street_map_data_wrangling_spark.etl import run_osm_etl
+
+    base = tmp_path_factory.mktemp(f"etl_report_{kind}")
+    src = base / "map.osm"
+    src.write_text(_etl_extract(kind))
+    assert run_osm_etl(spark, str(src), str(base / "out")) == ETL_REPORTS[kind]
+
+
+def test_etl_failed_write_waits_for_the_others(spark, tmp_path_factory, monkeypatch):
+    """One of the five concurrent writes fails (ways.parquet is a
+    symlink into a regular file, so the write cannot make its
+    directory; a regular file there would just be overwritten).
+    run_osm_etl raises that write's error only once every write has
+    finished and its thread is gone, and leaves nothing cached.  The
+    other writes start late, the later their table comes in WRITTEN,
+    so some are still running when the failure is known."""
+    from open_street_map_data_wrangling_spark import etl
+
+    base = tmp_path_factory.mktemp("etl_fail_one")
+    src = base / "map.osm"
+    src.write_text(_make_xml())
+    out = base / "out"
+    out.mkdir()
+    (base / "plain").write_text("not a directory")
+    (out / "ways.parquet").symlink_to(base / "plain" / "ways")
+    calls = []
+    inner = etl.write_parquet
+
+    def spy(df, path, *args, **kwargs):
+        call = {"path": path, "thread": threading.current_thread(), "done": False}
+        calls.append(call)
+        name = path.rsplit("/", 1)[-1].removesuffix(".parquet")
+        if name != "ways":
+            time.sleep(0.5 * WRITTEN.index(name))
+        try:
+            return inner(df, path, *args, **kwargs)
+        finally:
+            call["done"] = True
+
+    monkeypatch.setattr(etl, "write_parquet", spy)
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match=r"(?s)Mkdirs failed to create \S*/ways\.parquet/"):
+        etl.run_osm_etl(spark, str(src), str(out))
+    assert sorted(c["path"] for c in calls) == sorted(f"{out}/{t}.parquet" for t in WRITTEN)
+    assert [c for c in calls if not c["done"] or c["thread"].is_alive()] == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_etl_failure_leaves_no_cached_parse(spark, tmp_path_factory):

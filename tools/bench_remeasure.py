@@ -41,10 +41,7 @@ def main() -> int:
         print(f"unknown queries: {unknown}")
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(
-        "osmdw-remeasure",
-        driver_memory=os.environ.get("OSMDW_DRIVER_MEM", "48g"),
-    )
+    spark = get_spark("osmdw-remeasure")
     timings: dict[str, float] = {}
     for name in names:
         specs[name].spark(spark, "/root/testdata/sf0.001").write.format(

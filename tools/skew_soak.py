@@ -80,6 +80,8 @@ def main() -> None:
     os.makedirs(LOG_DIR, exist_ok=True)
     from pyspark.sql import SparkSession
 
+    from open_street_map_data_wrangling_spark.session import default_driver_memory
+
     spark = (
         SparkSession.builder.master(
             f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
@@ -94,7 +96,7 @@ def main() -> None:
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", f"file:{LOG_DIR}")
         .config("spark.ui.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", default_driver_memory())
         .appName("skew-soak")
         .getOrCreate()
     )
