@@ -23,19 +23,25 @@ Scale notes: mapInPandas streams Arrow record batches through one
 Python worker per core — the payload bytes never land on the driver;
 partition sizing (`spark.sql.files.maxPartitionBytes`, or an explicit
 repartition on the id) controls batch memory, which is what matters
-when each row carries megabytes of media.
+when each row carries megabytes of media.  The ten codec stages
+(roundtrips, fingerprints, thumbnail, frame sample) share one fan-out
+and one worker, `_codec_stage`: each stage is a per-document
+generator plus its DDL, so their task count and Arrow batch size are
+set in that one place.
 """
 
 from __future__ import annotations
 
 import functools
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..plans.registry import query
 from ..sources.catalog import load_table
@@ -208,6 +214,61 @@ def extract_image_dims(binary_df: DataFrame) -> DataFrame:
     the metadata pass a media-lakehouse ingest runs before any pixel
     work, Arrow-batched like extract_media_features."""
     return binary_df.mapInPandas(_image_dim_batches, schema=MM_DIMS_SCHEMA)
+
+
+# pandas dtype of each DDL type a codec stage emits: the nullable
+# extension dtypes carry NULLs next to exact 64-bit values
+_PANDAS_DTYPES = {"bigint": "Int64", "int": "Int32"}
+
+
+def _codec_stage(
+    docs: DataFrame,
+    in_cols: tuple[str, ...],
+    rows_fn: Callable[..., Iterator[tuple]],
+    schema: str,
+) -> DataFrame:
+    """One Arrow-batched codec stage: ``rows_fn`` over the ``in_cols``
+    of every row of ``docs``, after a fan-out exchange to the
+    session's default parallelism.  The fixture parquet is 1-2 files
+    and an Arrow stage inherits scan parallelism: without the fan-out
+    the whole corpus's encode/decode ran on 2 of 32 cores (measured
+    16 s -> ~2 s at sf0.1 for image_fingerprints, whose codec work is
+    ~3 ms per image).  The payload is generated inside the worker, so
+    the exchange moves only the input ints, at any scale.
+
+    ``rows_fn`` gets each input row as Python ints (None for NULL)
+    and yields any number of output tuples in ``schema`` column order,
+    so each stage keeps its own null rule and row explosion.  Output
+    columns are typed from the DDL, parsed once on the driver: one
+    nullable pandas Series per column, never a float64 detour through
+    ``DataFrame.from_records``, and an empty batch yields an empty,
+    correctly typed frame."""
+    dtypes = {
+        f.name: _PANDAS_DTYPES[f.dataType.simpleString()]
+        for f in StructType.fromDDL(schema).fields
+    }
+
+    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ins = [
+                [None if pd.isna(v) else int(v) for v in pdf[c]]
+                for c in in_cols
+            ]
+            out = [row for args in zip(*ins) for row in rows_fn(*args)]
+            cols = zip(*out) if out else [()] * len(dtypes)
+            yield pd.DataFrame(
+                {
+                    name: pd.Series(list(col), dtype=dtype)
+                    for (name, dtype), col in zip(dtypes.items(), cols)
+                }
+            )
+
+    worker.__name__ = rows_fn.__name__
+    return (
+        docs.select(*in_cols)
+        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
+        .mapInPandas(worker, schema=schema)
+    )
 
 
 def _be32(col: Column) -> Column:
@@ -444,63 +505,31 @@ MM_PIXELS_SCHEMA = (
 )
 
 
-def _pixel_roundtrip_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker over (doc_id, n_chars): build the
-    deterministic RGB image, encode it through the REAL PNG writer,
-    decode it back through the REAL pixel decoder, emit the decoded
-    channel sums.  The sums exist ONLY on the far side of a full
-    zlib+filter roundtrip, so a hash match against the oracle's
-    direct recomputation proves the codec end to end.  NULL inputs
-    yield NULL features (the registry's null-payload contract)."""
-    for pdf in batches:
-        out = {
-            "doc_id": [],
-            "width": [],
-            "height": [],
-            "sum_r": [],
-            "sum_g": [],
-            "sum_b": [],
-        }
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            if pd.isna(doc_id) or pd.isna(n_chars):
-                out["doc_id"].append(None if pd.isna(doc_id) else int(doc_id))
-                for k in ("width", "height", "sum_r", "sum_g", "sum_b"):
-                    out[k].append(None)
-                continue
-            d, w, h = int(doc_id), int(doc_id) % 8 + 1, int(n_chars) % 8 + 1
-            rows = [
-                bytes(
-                    v
-                    for x in range(w)
-                    for v in (
-                        (d + 3 * x + 7 * y) % 256,
-                        (2 * d + 5 * x + y) % 256,
-                        (x * y + d) % 256,
-                    )
-                )
-                for y in range(h)
-            ]
-            dw, dh, sr, sg, sb = decode_png_pixels(
-                encode_png_rgb(w, h, rows)
+def _pixel_roundtrip_rows(doc_id, n_chars):
+    """Codec stage over (doc_id, n_chars): build the deterministic
+    RGB image, encode it through the REAL PNG writer, decode it back
+    through the REAL pixel decoder, emit the decoded channel sums.
+    The sums exist ONLY on the far side of a full zlib+filter
+    roundtrip, so a hash match against the oracle's direct
+    recomputation proves the codec end to end.  NULL inputs yield
+    NULL features (the registry's null-payload contract)."""
+    if doc_id is None or n_chars is None:
+        yield (doc_id,) + (None,) * 5
+        return
+    d, w, h = doc_id, doc_id % 8 + 1, n_chars % 8 + 1
+    rows = [
+        bytes(
+            v
+            for x in range(w)
+            for v in (
+                (d + 3 * x + 7 * y) % 256,
+                (2 * d + 5 * x + y) % 256,
+                (x * y + d) % 256,
             )
-            out["doc_id"].append(d)
-            out["width"].append(dw)
-            out["height"].append(dh)
-            out["sum_r"].append(sr)
-            out["sum_g"].append(sg)
-            out["sum_b"].append(sb)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="Int64"),
-                "width": pd.Series(out["width"], dtype="Int32"),
-                "height": pd.Series(out["height"], dtype="Int32"),
-                "sum_r": pd.Series(out["sum_r"], dtype="Int64"),
-                "sum_g": pd.Series(out["sum_g"], dtype="Int64"),
-                "sum_b": pd.Series(out["sum_b"], dtype="Int64"),
-            }
         )
+        for y in range(h)
+    ]
+    yield (d, *decode_png_pixels(encode_png_rgb(w, h, rows)))
 
 
 @query(
@@ -563,11 +592,8 @@ def q_image_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the worker, so the exchange moves two ints per row at any
     scale)."""
     docs = load_table(spark, sf_dir, "documents")
-    spark_ctx = docs.sparkSession.sparkContext
-    return (
-        docs.select("doc_id", "n_chars")
-        .repartition(spark_ctx.defaultParallelism)
-        .mapInPandas(_pixel_roundtrip_batches, schema=MM_PIXELS_SCHEMA)
+    return _codec_stage(
+        docs, ("doc_id", "n_chars"), _pixel_roundtrip_rows, MM_PIXELS_SCHEMA
     )
 
 
@@ -616,8 +642,6 @@ def decode_wav_pcm16(payload: bytes) -> tuple[int, int, int, int]:
         raw = w.readframes(n)
     if len(raw) != 2 * n:
         raise ValueError("WAV frame data length mismatch")
-    import numpy as np
-
     s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
     return (n, rate, int(np.abs(s).sum()), int((s * s).sum()))
 
@@ -651,51 +675,19 @@ MM_PCM_SCHEMA = (
 )
 
 
-def _pcm_roundtrip_batches(
-    batches: "Iterator[pd.DataFrame]",
-) -> "Iterator[pd.DataFrame]":
-    """mapInPandas worker over (doc_id, n_chars): build the
-    deterministic int16 sample vector, encode through the REAL WAV
-    writer, decode back through the real PCM reader, emit the decoded
-    sample statistics.  The stats exist only on the far side of a
-    full RIFF roundtrip (the q_image_pixels proof pattern).  NULL
-    inputs yield NULL features (the registry's null-payload
-    contract)."""
-    for pdf in batches:
-        out = {
-            "doc_id": [],
-            "n_samples": [],
-            "sample_rate": [],
-            "sum_abs": [],
-            "sum_sq": [],
-        }
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            if pd.isna(doc_id) or pd.isna(n_chars):
-                out["doc_id"].append(
-                    None if pd.isna(doc_id) else int(doc_id)
-                )
-                for k in ("n_samples", "sample_rate", "sum_abs", "sum_sq"):
-                    out[k].append(None)
-                continue
-            d, n = int(doc_id), int(n_chars) % 32 + 8
-            samples = [
-                ((d * 7 + i * 13) % 65536) - 32768 for i in range(n)
-            ]
-            dn, dr, sa, sq = decode_wav_pcm16(encode_wav_pcm16(samples))
-            out["doc_id"].append(d)
-            out["n_samples"].append(dn)
-            out["sample_rate"].append(dr)
-            out["sum_abs"].append(sa)
-            out["sum_sq"].append(sq)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="Int64"),
-                "n_samples": pd.Series(out["n_samples"], dtype="Int32"),
-                "sample_rate": pd.Series(out["sample_rate"], dtype="Int32"),
-                "sum_abs": pd.Series(out["sum_abs"], dtype="Int64"),
-                "sum_sq": pd.Series(out["sum_sq"], dtype="Int64"),
-            }
-        )
+def _pcm_roundtrip_rows(doc_id, n_chars):
+    """Codec stage over (doc_id, n_chars): build the deterministic
+    int16 sample vector, encode through the REAL WAV writer, decode
+    back through the real PCM reader, emit the decoded sample
+    statistics.  The stats exist only on the far side of a full RIFF
+    roundtrip (the q_image_pixels proof pattern).  NULL inputs yield
+    NULL features (the registry's null-payload contract)."""
+    if doc_id is None or n_chars is None:
+        yield (doc_id,) + (None,) * 4
+        return
+    n = n_chars % 32 + 8
+    samples = [((doc_id * 7 + i * 13) % 65536) - 32768 for i in range(n)]
+    yield (doc_id, *decode_wav_pcm16(encode_wav_pcm16(samples)))
 
 
 @query(
@@ -749,11 +741,8 @@ def q_audio_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     image_fingerprints scan-parallelism lesson; the payload is
     generated inside the worker), one Python stage."""
     docs = load_table(spark, sf_dir, "documents")
-    spark_ctx = docs.sparkSession.sparkContext
-    return (
-        docs.select("doc_id", "n_chars")
-        .repartition(spark_ctx.defaultParallelism)
-        .mapInPandas(_pcm_roundtrip_batches, schema=MM_PCM_SCHEMA)
+    return _codec_stage(
+        docs, ("doc_id", "n_chars"), _pcm_roundtrip_rows, MM_PCM_SCHEMA
     )
 
 
@@ -843,8 +832,6 @@ def _jpeg_dct_matrix():
     if _JPEG_DCT_A is None:
         import math
 
-        import numpy as np
-
         a = np.zeros((8, 8))
         for u in range(8):
             cu = (1.0 / math.sqrt(2.0)) if u == 0 else 1.0
@@ -932,8 +919,6 @@ def encode_jpeg_gray(width: int, height: int, rows: list[bytes]) -> bytes:
     structure.  ``rows`` is ``height`` rows of ``width`` bytes."""
     import struct
 
-    import numpy as np
-
     img = np.frombuffer(b"".join(rows), dtype=np.uint8).reshape(
         height, width
     )
@@ -992,8 +977,6 @@ def _jpeg_decode_tables(bits, vals):
     and the returned array is marked read-only, so accidental caller
     mutation of the shared cache entry raises instead of corrupting
     every subsequent image (r16 ADVICE)."""
-    import numpy as np
-
     lut = np.zeros(1 << 16, dtype=np.int32)
     for sym, (code, ln) in _jpeg_canonical_codes(bits, vals).items():
         base = code << (16 - ln)
@@ -1114,8 +1097,6 @@ def decode_jpeg_gray(payload: bytes) -> tuple[int, int, int, int]:
     non-8-bit streams."""
     import struct
 
-    import numpy as np
-
     if payload[:2] != b"\xff\xd8":
         raise ValueError("jpeg: missing SOI")
     qtables: dict[int, list[int]] = {}
@@ -1213,55 +1194,28 @@ MM_JPEG_SCHEMA = (
 )
 
 
-def _jpeg_roundtrip_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker over (doc_id, n_chars): build the
-    deterministic block-constant grayscale image, encode through the
-    REAL baseline-JFIF writer, decode back through the real decoder
+def _jpeg_roundtrip_rows(doc_id, n_chars):
+    """Codec stage over (doc_id, n_chars): build the deterministic
+    block-constant grayscale image, encode through the REAL
+    baseline-JFIF writer, decode back through the real decoder
     (markers, Huffman, dequant, IDCT, crop), emit the decoded pixel
     statistics — which exist only on the far side of the full
     roundtrip (the q_image_pixels proof pattern).  NULL inputs yield
     NULL features."""
-    for pdf in batches:
-        out = {
-            "doc_id": [], "width": [], "height": [],
-            "sum_pix": [], "sum_sq": [],
-        }
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            if pd.isna(doc_id) or pd.isna(n_chars):
-                out["doc_id"].append(
-                    None if pd.isna(doc_id) else int(doc_id)
-                )
-                for k in ("width", "height", "sum_pix", "sum_sq"):
-                    out[k].append(None)
-                continue
-            d = int(doc_id)
-            w = ((int(doc_id) % 12) + 12) % 12 + 5
-            h = ((int(n_chars) % 12) + 12) % 12 + 5
-            rows = [
-                bytes(
-                    (((d * 11 + (x // 8) * 5 + (y // 8) * 3) % 256) + 256)
-                    % 256
-                    for x in range(w)
-                )
-                for y in range(h)
-            ]
-            dw, dh, sp, sq = decode_jpeg_gray(encode_jpeg_gray(w, h, rows))
-            out["doc_id"].append(d)
-            out["width"].append(dw)
-            out["height"].append(dh)
-            out["sum_pix"].append(sp)
-            out["sum_sq"].append(sq)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="Int64"),
-                "width": pd.Series(out["width"], dtype="Int32"),
-                "height": pd.Series(out["height"], dtype="Int32"),
-                "sum_pix": pd.Series(out["sum_pix"], dtype="Int64"),
-                "sum_sq": pd.Series(out["sum_sq"], dtype="Int64"),
-            }
+    if doc_id is None or n_chars is None:
+        yield (doc_id,) + (None,) * 4
+        return
+    d = doc_id
+    w = ((d % 12) + 12) % 12 + 5
+    h = ((n_chars % 12) + 12) % 12 + 5
+    rows = [
+        bytes(
+            (((d * 11 + (x // 8) * 5 + (y // 8) * 3) % 256) + 256) % 256
+            for x in range(w)
         )
+        for y in range(h)
+    ]
+    yield (d, *decode_jpeg_gray(encode_jpeg_gray(w, h, rows)))
 
 
 @query(
@@ -1322,11 +1276,8 @@ def q_image_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     image_fingerprints scan-parallelism lesson; the payload is
     generated inside the worker), one Python stage."""
     docs = load_table(spark, sf_dir, "documents")
-    spark_ctx = docs.sparkSession.sparkContext
-    return (
-        docs.select("doc_id", "n_chars")
-        .repartition(spark_ctx.defaultParallelism)
-        .mapInPandas(_jpeg_roundtrip_batches, schema=MM_JPEG_SCHEMA)
+    return _codec_stage(
+        docs, ("doc_id", "n_chars"), _jpeg_roundtrip_rows, MM_JPEG_SCHEMA
     )
 
 
@@ -1590,8 +1541,6 @@ def decode_gif_gray(payload: bytes) -> tuple[int, int, int, int]:
     reduction over decode_gif_gray_pixels so exactly ONE spec-walk
     body exists for both the roundtrip query and the perceptual
     fingerprint stage."""
-    import numpy as np
-
     width, height, px = decode_gif_gray_pixels(payload)
     a = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
     return (width, height, int(a.sum()), int((a * a).sum()))
@@ -1602,52 +1551,25 @@ MM_GIF_SCHEMA = (
 )
 
 
-def _gif_roundtrip_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker over (doc_id, n_chars): deterministic
+def _gif_roundtrip_rows(doc_id, n_chars):
+    """Codec stage over (doc_id, n_chars): deterministic
     ARBITRARY-pattern grayscale image -> real GIF87a/LZW encode ->
     real decode -> decoded pixel statistics (q_image_pixels proof
     pattern; LZW is lossless so no pixel restriction).  NULL inputs
     yield NULL features."""
-    for pdf in batches:
-        out = {
-            "doc_id": [], "width": [], "height": [],
-            "sum_pix": [], "sum_sq": [],
-        }
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            if pd.isna(doc_id) or pd.isna(n_chars):
-                out["doc_id"].append(
-                    None if pd.isna(doc_id) else int(doc_id)
-                )
-                for k in ("width", "height", "sum_pix", "sum_sq"):
-                    out[k].append(None)
-                continue
-            d = int(doc_id)
-            w = ((int(doc_id) % 14) + 14) % 14 + 3
-            h = ((int(n_chars) % 14) + 14) % 14 + 3
-            rows = [
-                bytes(
-                    (((d * 13 + 7 * x + 11 * y) % 256) + 256) % 256
-                    for x in range(w)
-                )
-                for y in range(h)
-            ]
-            dw, dh, sp, sq = decode_gif_gray(encode_gif_gray(w, h, rows))
-            out["doc_id"].append(d)
-            out["width"].append(dw)
-            out["height"].append(dh)
-            out["sum_pix"].append(sp)
-            out["sum_sq"].append(sq)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="Int64"),
-                "width": pd.Series(out["width"], dtype="Int32"),
-                "height": pd.Series(out["height"], dtype="Int32"),
-                "sum_pix": pd.Series(out["sum_pix"], dtype="Int64"),
-                "sum_sq": pd.Series(out["sum_sq"], dtype="Int64"),
-            }
+    if doc_id is None or n_chars is None:
+        yield (doc_id,) + (None,) * 4
+        return
+    d = doc_id
+    w = ((d % 14) + 14) % 14 + 3
+    h = ((n_chars % 14) + 14) % 14 + 3
+    rows = [
+        bytes(
+            (((d * 13 + 7 * x + 11 * y) % 256) + 256) % 256 for x in range(w)
         )
+        for y in range(h)
+    ]
+    yield (d, *decode_gif_gray(encode_gif_gray(w, h, rows)))
 
 
 @query(
@@ -1701,11 +1623,8 @@ def q_image_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     image_fingerprints scan-parallelism lesson; the payload is
     generated inside the worker), one Python stage."""
     docs = load_table(spark, sf_dir, "documents")
-    spark_ctx = docs.sparkSession.sparkContext
-    return (
-        docs.select("doc_id", "n_chars")
-        .repartition(spark_ctx.defaultParallelism)
-        .mapInPandas(_gif_roundtrip_batches, schema=MM_GIF_SCHEMA)
+    return _codec_stage(
+        docs, ("doc_id", "n_chars"), _gif_roundtrip_rows, MM_GIF_SCHEMA
     )
 
 
@@ -1760,8 +1679,6 @@ def _image_gray_rows(d: int) -> list[bytes]:
     patch on block (2, 3) for the 4g+1 twin variant.  Vectorized
     (r16, guide §4.2): one int64 grid expression replaces the
     per-pixel Python loop — exact integer arithmetic, same bytes."""
-    import numpy as np
-
     s = _image_seed(d)
     a, b, c, e = s % 251 + 1, s % 241 + 2, s % 239 + 3, s % 233 + 5
     x = np.arange(_IMG_W, dtype=np.int64)[None, :]
@@ -1775,49 +1692,34 @@ def _image_gray_rows(d: int) -> list[bytes]:
     return [rows[j].tobytes() for j in range(_IMG_H)]
 
 
-def _dhash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: raster -> REAL GIF/LZW roundtrip ->
-    dHash over the DECODED pixels.  The 64-bit hash ships as two
-    32-bit halves in BIGINTs so neither engine ever touches the
-    signed top bit (shift/popcount semantics stay identical)."""
-    for pdf in batches:
-        ids: list[int] = []
-        his: list[int] = []
-        los: list[int] = []
-        import numpy as np
+# the (doc_id, dhash_hi, dhash_lo) relation every fingerprint stage
+# emits: the 64-bit hash as two 32-bit halves in BIGINTs, so neither
+# engine ever touches the signed top bit (shift/popcount semantics
+# stay identical)
+_PRINTS_SCHEMA = "doc_id bigint, dhash_hi bigint, dhash_lo bigint"
 
-        for doc_id in pdf["doc_id"]:
-            if pd.isna(doc_id):
-                continue  # no id -> no image; oracle filters likewise
-            d = int(doc_id)
-            w, h, px = decode_gif_gray_pixels(
-                encode_gif_gray(_IMG_W, _IMG_H, _image_gray_rows(d))
-            )
-            # vectorized block means + comparison bits (r16, guide
-            # §4.2): reshape to (GH, 4, GW, 4) blocks, integer mean,
-            # one comparison per adjacent grid pair — exact twin of
-            # the former per-pixel Python loops
-            arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-            grid = (
-                arr.reshape(_IMG_GH, 4, _IMG_GW, 4).sum(axis=(1, 3))
-                // 16
-            )
-            gt = grid[:, :-1] > grid[:, 1:]
-            bitpos = (
-                np.arange(_IMG_GH)[:, None] * 8
-                + np.arange(_IMG_GW - 1)[None, :]
-            )
-            bits = int((gt.astype(np.uint64) << bitpos.astype(np.uint64)).sum())
-            ids.append(d)
-            his.append(bits >> 32)
-            los.append(bits & 0xFFFFFFFF)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="Int64"),
-                "dhash_hi": pd.Series(his, dtype="Int64"),
-                "dhash_lo": pd.Series(los, dtype="Int64"),
-            }
-        )
+
+def _dhash_rows(doc_id):
+    """Codec stage over doc_id: raster -> REAL GIF/LZW roundtrip ->
+    dHash over the DECODED pixels.  No id -> no image -> no row; the
+    oracle filters likewise."""
+    if doc_id is None:
+        return
+    _, _, px = decode_gif_gray_pixels(
+        encode_gif_gray(_IMG_W, _IMG_H, _image_gray_rows(doc_id))
+    )
+    # vectorized block means + comparison bits (r16, guide §4.2):
+    # reshape to (GH, 4, GW, 4) blocks, integer mean, one comparison
+    # per adjacent grid pair — exact twin of the former per-pixel
+    # Python loops
+    arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+    grid = arr.reshape(_IMG_GH, 4, _IMG_GW, 4).sum(axis=(1, 3)) // 16
+    gt = grid[:, :-1] > grid[:, 1:]
+    bitpos = (
+        np.arange(_IMG_GH)[:, None] * 8 + np.arange(_IMG_GW - 1)[None, :]
+    )
+    bits = int((gt.astype(np.uint64) << bitpos.astype(np.uint64)).sum())
+    yield doc_id, bits >> 32, bits & 0xFFFFFFFF
 
 
 _IMG_PIXEL_SQL = (
@@ -1917,15 +1819,7 @@ def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import _LSH_BUCKET_CAP, _all_bucket_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    # repartition BEFORE the codec stage: the fixture parquet is 1-2
-    # files, and an Arrow stage inherits scan parallelism — without
-    # the fan-out the whole corpus's encode/decode ran on 2 of 32
-    # cores (measured 16 s -> ~2 s at sf0.1).  The exchange moves one
-    # bigint per image; the codec work it unlocks is ~3 ms per image.
-    fp = (
-        image_fingerprints(docs)
-        .localCheckpoint(eager=False)
-    )
+    fp = image_fingerprints(docs).localCheckpoint(eager=False)
     rows = _image_band_rows(fp)
     hamming = _image_hamming_col()
     return (
@@ -1944,20 +1838,8 @@ def image_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, dhash_hi, dhash_lo) for every document's image —
     the codec + dHash stage, shared by the inline query, the
     streaming fingerprint store, and the served dedup gate so all
-    three hash the same pixels the same way.  Repartitions BEFORE
-    the codec stage: the fixture parquet is 1-2 files and an Arrow
-    stage inherits scan parallelism — without the fan-out the whole
-    corpus's encode/decode ran on 2 of 32 cores (measured 16 s ->
-    ~2 s at sf0.1); the exchange moves one bigint per image."""
-    spark = docs.sparkSession
-    return (
-        docs.select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(
-            _dhash_batches,
-            schema="doc_id bigint, dhash_hi bigint, dhash_lo bigint",
-        )
-    )
+    three hash the same pixels the same way."""
+    return _codec_stage(docs, ("doc_id",), _dhash_rows, _PRINTS_SCHEMA)
 
 
 def _image_band_rows(fp: DataFrame) -> DataFrame:
@@ -2180,8 +2062,6 @@ def _audio_samples(d: int) -> list[int]:
     (measured: 4 Hamming-0 collisions at sf0.1 with s%127-style
     coefficients; 0 with these — full-corpus sweep in
     tests/test_operators.py)."""
-    import numpy as np
-
     s = _audio_seed(d)
     a = 2 * (s % 509) + 3
     b = 2 * (s % 503) + 7
@@ -2194,65 +2074,32 @@ def _audio_samples(d: int) -> list[int]:
     return (r - 1024).tolist()
 
 
-def _audio_fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: signal -> REAL WAV/PCM roundtrip ->
-    energy-band fingerprint over the DECODED samples.  Two 32-bit
-    halves in BIGINTs, the engine-neutral 64-bit convention."""
-    for pdf in batches:
-        ids: list[int] = []
-        his: list[int] = []
-        los: list[int] = []
-        for doc_id in pdf["doc_id"]:
-            if pd.isna(doc_id):
-                continue  # no id -> no clip; oracle filters likewise
-            d = int(doc_id)
-            _, _, sm = decode_wav_samples(
-                encode_wav_pcm16(_audio_samples(d))
-            )
-            # vectorized window energies + comparison bits (r16,
-            # guide §4.2): exact integer twin of the former loops
-            import numpy as np
-
-            eng = (
-                np.abs(np.asarray(sm, dtype=np.int64))
-                .reshape(_AUD_NWIN, _AUD_WIN)
-                .sum(axis=1)
-            )
-            gt = eng[:-1] > eng[1:]
-            bits = int(
-                (
-                    gt.astype(np.uint64)
-                    << np.arange(_AUD_NWIN - 1, dtype=np.uint64)
-                ).sum()
-            )
-            ids.append(d)
-            his.append(bits >> 32)
-            los.append(bits & 0xFFFFFFFF)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="Int64"),
-                "dhash_hi": pd.Series(his, dtype="Int64"),
-                "dhash_lo": pd.Series(los, dtype="Int64"),
-            }
-        )
+def _audio_fp_rows(doc_id):
+    """Codec stage over doc_id: signal -> REAL WAV/PCM roundtrip ->
+    energy-band fingerprint over the DECODED samples.  No id -> no
+    clip -> no row; the oracle filters likewise."""
+    if doc_id is None:
+        return
+    _, _, sm = decode_wav_samples(encode_wav_pcm16(_audio_samples(doc_id)))
+    # vectorized window energies + comparison bits (r16, guide §4.2):
+    # exact integer twin of the former loops
+    eng = (
+        np.abs(np.asarray(sm, dtype=np.int64))
+        .reshape(_AUD_NWIN, _AUD_WIN)
+        .sum(axis=1)
+    )
+    gt = eng[:-1] > eng[1:]
+    shifts = np.arange(_AUD_NWIN - 1, dtype=np.uint64)
+    bits = int((gt.astype(np.uint64) << shifts).sum())
+    yield doc_id, bits >> 32, bits & 0xFFFFFFFF
 
 
 def audio_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, dhash_hi, dhash_lo) for every document's audio clip —
     the codec + energy-signature stage, column-compatible with the
     image fingerprint relation so the banding/verify machinery
-    (_image_band_rows / _image_hamming_col) is shared verbatim.
-    Repartitions before the codec stage (the mapInPandas
-    scan-parallelism lesson, multimodal.image_fingerprints)."""
-    spark = docs.sparkSession
-    return (
-        docs.select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(
-            _audio_fp_batches,
-            schema="doc_id bigint, dhash_hi bigint, dhash_lo bigint",
-        )
-    )
+    (_image_band_rows / _image_hamming_col) is shared verbatim."""
+    return _codec_stage(docs, ("doc_id",), _audio_fp_rows, _PRINTS_SCHEMA)
 
 
 # The full audio fingerprint CTE chain (signal formula -> window
@@ -2466,67 +2313,36 @@ MM_VIDEO_SCHEMA = (
 )
 
 
-def _video_roundtrip_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker over (doc_id, n_chars): deterministic
-    multi-frame grayscale video (2..6 frames, per-frame delay 4+f
-    centiseconds) -> real GIF89a animation encode -> real decode ->
-    per-frame pixel statistics, one OUTPUT ROW PER FRAME — the
-    row-exploding Arrow shape a real frame-extraction stage has.
-    NULL inputs yield a single all-NULL-feature row (the dims-level
-    LEFT JOIN contract shared with q_image_gif / q_audio_pcm)."""
-    cols = (
-        "frame_idx", "delay_cs", "width", "height", "sum_pix", "sum_sq",
-    )
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in ("doc_id",) + cols}
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            if pd.isna(doc_id) or pd.isna(n_chars):
-                out["doc_id"].append(
-                    None if pd.isna(doc_id) else int(doc_id)
-                )
-                for k in cols:
-                    out[k].append(None)
-                continue
-            d = int(doc_id)
-            w = ((d % 10) + 10) % 10 + 4
-            h = ((int(n_chars) % 7) + 7) % 7 + 3
-            nf = ((d % 5) + 5) % 5 + 2
-            frames = [
-                [
-                    bytes(
-                        (((d * 13 + 7 * x + 11 * y + 5 * f) % 256) + 256)
-                        % 256
-                        for x in range(w)
-                    )
-                    for y in range(h)
-                ]
-                for f in range(nf)
-            ]
-            payload = encode_gif_anim(
-                w, h, frames, [4 + f for f in range(nf)]
+def _video_roundtrip_rows(doc_id, n_chars):
+    """Codec stage over (doc_id, n_chars): deterministic multi-frame
+    grayscale video (2..6 frames, per-frame delay 4+f centiseconds)
+    -> real GIF89a animation encode -> real decode -> per-frame pixel
+    statistics, one OUTPUT ROW PER FRAME — the row-exploding Arrow
+    shape a real frame-extraction stage has.  NULL inputs yield a
+    single all-NULL-feature row (the dims-level LEFT JOIN contract
+    shared with q_image_gif / q_audio_pcm)."""
+    if doc_id is None or n_chars is None:
+        yield (doc_id,) + (None,) * 6
+        return
+    d = doc_id
+    w = ((d % 10) + 10) % 10 + 4
+    h = ((n_chars % 7) + 7) % 7 + 3
+    nf = ((d % 5) + 5) % 5 + 2
+    frames = [
+        [
+            bytes(
+                (((d * 13 + 7 * x + 11 * y + 5 * f) % 256) + 256) % 256
+                for x in range(w)
             )
-            dw, dh, dec = decode_gif_anim(payload)
-            for fi, (delay, px) in enumerate(dec):
-                out["doc_id"].append(d)
-                out["frame_idx"].append(fi)
-                out["delay_cs"].append(delay)
-                out["width"].append(dw)
-                out["height"].append(dh)
-                out["sum_pix"].append(sum(px))
-                out["sum_sq"].append(sum(v * v for v in px))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="Int64"),
-                "frame_idx": pd.Series(out["frame_idx"], dtype="Int32"),
-                "delay_cs": pd.Series(out["delay_cs"], dtype="Int32"),
-                "width": pd.Series(out["width"], dtype="Int32"),
-                "height": pd.Series(out["height"], dtype="Int32"),
-                "sum_pix": pd.Series(out["sum_pix"], dtype="Int64"),
-                "sum_sq": pd.Series(out["sum_sq"], dtype="Int64"),
-            }
-        )
+            for y in range(h)
+        ]
+        for f in range(nf)
+    ]
+    dw, dh, dec = decode_gif_anim(
+        encode_gif_anim(w, h, frames, [4 + f for f in range(nf)])
+    )
+    for fi, (delay, px) in enumerate(dec):
+        yield d, fi, delay, dw, dh, sum(px), sum(v * v for v in px)
 
 
 @query(
@@ -2586,10 +2402,8 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     only statistics — at 100 TB the codec work parallelizes over
     clips and the result stays metadata-sized."""
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(_video_roundtrip_batches, schema=MM_VIDEO_SCHEMA)
+    return _codec_stage(
+        docs, ("doc_id", "n_chars"), _video_roundtrip_rows, MM_VIDEO_SCHEMA
     )
 
 
@@ -2622,8 +2436,6 @@ def _video_frame_rows(d: int) -> list[list[bytes]]:
     0 false pairs / 1250 planted recalled / max band bucket 10 at
     the 5000-doc sf0.1 scale).  The 4g+2 twin gets a +4 retouch on
     frame {_VID_TWIN_F}'s block (1, 2)."""
-    import numpy as np
-
     s = _video_seed(d)
     c, e = s % 239 + 3, s % 233 + 5
     twin = d % 4 == 2
@@ -2643,75 +2455,41 @@ def _video_frame_rows(d: int) -> list[list[bytes]]:
     return frames
 
 
-def _video_fp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: clip -> REAL GIF89a animation roundtrip ->
-    temporal signature over the DECODED frames: per frame a 3x3 grid
-    of block means and 8 adjacent-comparison bits (frame f owns bits
-    8f..8f+7) — dHash in space, frame-major in time.  Two 32-bit
-    halves in BIGINTs, the engine-neutral 64-bit convention."""
-    for pdf in batches:
-        ids: list[int] = []
-        his: list[int] = []
-        los: list[int] = []
-        for doc_id in pdf["doc_id"]:
-            if pd.isna(doc_id):
-                continue  # no id -> no clip; oracle filters likewise
-            d = int(doc_id)
-            _, _, dec = decode_gif_anim(
-                encode_gif_anim(
-                    _VID_W,
-                    _VID_H,
-                    _video_frame_rows(d),
-                    [4 + f for f in range(_VID_NF)],
-                )
-            )
-            import numpy as np
-
-            # vectorized per-frame 3x3 block means + comparison bits
-            # (r16, guide §4.2): exact integer twin of the former
-            # per-pixel Python loops
-            bits = 0
-            for f, (_, px) in enumerate(dec):
-                arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
-                g = (
-                    arr.reshape(3, 3, 3, 4).sum(axis=(1, 3)).ravel()
-                    // 12
-                )
-                gt = g[:-1] > g[1:]
-                bits |= int(
-                    (
-                        gt.astype(np.uint64)
-                        << np.arange(8, dtype=np.uint64)
-                    ).sum()
-                ) << (f * 8)
-            ids.append(d)
-            his.append(bits >> 32)
-            los.append(bits & 0xFFFFFFFF)
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(ids, dtype="Int64"),
-                "dhash_hi": pd.Series(his, dtype="Int64"),
-                "dhash_lo": pd.Series(los, dtype="Int64"),
-            }
+def _video_fp_rows(doc_id):
+    """Codec stage over doc_id: clip -> REAL GIF89a animation
+    roundtrip -> temporal signature over the DECODED frames: per
+    frame a 3x3 grid of block means and 8 adjacent-comparison bits
+    (frame f owns bits 8f..8f+7) — dHash in space, frame-major in
+    time.  No id -> no clip -> no row; the oracle filters likewise."""
+    if doc_id is None:
+        return
+    _, _, dec = decode_gif_anim(
+        encode_gif_anim(
+            _VID_W,
+            _VID_H,
+            _video_frame_rows(doc_id),
+            [4 + f for f in range(_VID_NF)],
         )
+    )
+    # vectorized per-frame 3x3 block means + comparison bits (r16,
+    # guide §4.2): exact integer twin of the former per-pixel loops
+    bits = 0
+    for f, (_, px) in enumerate(dec):
+        arr = np.frombuffer(px, dtype=np.uint8).astype(np.int64)
+        g = arr.reshape(3, 3, 3, 4).sum(axis=(1, 3)).ravel() // 12
+        gt = g[:-1] > g[1:]
+        bits |= int(
+            (gt.astype(np.uint64) << np.arange(8, dtype=np.uint64)).sum()
+        ) << (f * 8)
+    yield doc_id, bits >> 32, bits & 0xFFFFFFFF
 
 
 def video_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, dhash_hi, dhash_lo) for every document's clip —
     column-compatible with the image/audio fingerprint relations so
     the banding/verify machinery (_image_band_rows /
-    _image_hamming_col) is shared verbatim.  Repartitions before the
-    codec stage (the mapInPandas scan-parallelism lesson,
-    image_fingerprints)."""
-    spark = docs.sparkSession
-    return (
-        docs.select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(
-            _video_fp_batches,
-            schema="doc_id bigint, dhash_hi bigint, dhash_lo bigint",
-        )
-    )
+    _image_hamming_col) is shared verbatim."""
+    return _codec_stage(docs, ("doc_id",), _video_fp_rows, _PRINTS_SCHEMA)
 
 
 # The full video fingerprint CTE chain (clip formula -> per-frame
@@ -3813,55 +3591,28 @@ MM_THUMB_SCHEMA = (
 )
 
 
-def _thumbnail_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: deterministic raster -> REAL GIF encode ->
-    REAL resize transcode (decode, 2x nearest-neighbor, re-encode)
-    -> certified re-decode -> thumbnail statistics.  NULL inputs
-    yield NULL features (the dims LEFT JOIN contract)."""
-    cols = ("orig_width", "orig_height", "width", "height",
-            "sum_pix", "sum_sq")
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in ("doc_id",) + cols}
-        for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-            if pd.isna(doc_id) or pd.isna(n_chars):
-                out["doc_id"].append(
-                    None if pd.isna(doc_id) else int(doc_id)
-                )
-                for k in cols:
-                    out[k].append(None)
-                continue
-            d = int(doc_id)
-            w = ((d % 14) + 14) % 14 + 3
-            h = ((int(n_chars) % 14) + 14) % 14 + 3
-            rows = [
-                bytes(
-                    (((d * 13 + 7 * x + 11 * y) % 256) + 256) % 256
-                    for x in range(w)
-                )
-                for y in range(h)
-            ]
-            thumb = resize_gif_gray(encode_gif_gray(w, h, rows))
-            tw, th, px = decode_gif_gray_pixels(thumb)
-            out["doc_id"].append(d)
-            out["orig_width"].append(w)
-            out["orig_height"].append(h)
-            out["width"].append(tw)
-            out["height"].append(th)
-            out["sum_pix"].append(sum(px))
-            out["sum_sq"].append(sum(v * v for v in px))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="Int64"),
-                "orig_width": pd.Series(out["orig_width"], dtype="Int32"),
-                "orig_height": pd.Series(out["orig_height"], dtype="Int32"),
-                "width": pd.Series(out["width"], dtype="Int32"),
-                "height": pd.Series(out["height"], dtype="Int32"),
-                "sum_pix": pd.Series(out["sum_pix"], dtype="Int64"),
-                "sum_sq": pd.Series(out["sum_sq"], dtype="Int64"),
-            }
+def _thumbnail_rows(doc_id, n_chars):
+    """Codec stage over (doc_id, n_chars): deterministic raster ->
+    REAL GIF encode -> REAL resize transcode (decode, 2x
+    nearest-neighbor, re-encode) -> certified re-decode -> thumbnail
+    statistics.  NULL inputs yield NULL features (the dims LEFT JOIN
+    contract)."""
+    if doc_id is None or n_chars is None:
+        yield (doc_id,) + (None,) * 6
+        return
+    d = doc_id
+    w = ((d % 14) + 14) % 14 + 3
+    h = ((n_chars % 14) + 14) % 14 + 3
+    rows = [
+        bytes(
+            (((d * 13 + 7 * x + 11 * y) % 256) + 256) % 256 for x in range(w)
         )
+        for y in range(h)
+    ]
+    tw, th, px = decode_gif_gray_pixels(
+        resize_gif_gray(encode_gif_gray(w, h, rows))
+    )
+    yield d, w, h, tw, th, sum(px), sum(v * v for v in px)
 
 
 @query(
@@ -3914,10 +3665,8 @@ def q_image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside the worker (a real pipeline would write them to a sink;
     the stats are the verifiable part)."""
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", "n_chars")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(_thumbnail_batches, schema=MM_THUMB_SCHEMA)
+    return _codec_stage(
+        docs, ("doc_id", "n_chars"), _thumbnail_rows, MM_THUMB_SCHEMA
     )
 
 
@@ -3927,51 +3676,25 @@ MM_VSAMPLE_SCHEMA = (
 )
 
 
-def _video_sample_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: 8-frame clip -> REAL GIF89a encode ->
+def _video_sample_rows(doc_id):
+    """Codec stage over doc_id: 8-frame clip -> REAL GIF89a encode ->
     REAL frame-sample transcode (decode animation, keep every 2nd
     frame, re-encode each as standalone GIF87a) -> each sampled
     frame re-decoded through the SINGLE-IMAGE decoder (cross-codec
     closure) -> per-frame statistics.  Row-exploding: one input doc
-    yields 4 output rows."""
-    for pdf in batches:
-        out: dict[str, list] = {
-            k: []
-            for k in ("doc_id", "frame_idx", "delay_cs", "width",
-                      "height", "sum_pix", "sum_sq")
-        }
-        for doc_id in pdf["doc_id"]:
-            if pd.isna(doc_id):
-                continue  # no id -> no clip; oracle filters likewise
-            d = int(doc_id)
-            clip = encode_gif_anim(
-                _VID_W,
-                _VID_H,
-                _video_frame_rows(d),
-                [4 + f for f in range(_VID_NF)],
-            )
-            for fi, delay, frame_payload in sample_gif_frames(clip, 2):
-                fw, fh, px = decode_gif_gray_pixels(frame_payload)
-                out["doc_id"].append(d)
-                out["frame_idx"].append(fi)
-                out["delay_cs"].append(delay)
-                out["width"].append(fw)
-                out["height"].append(fh)
-                out["sum_pix"].append(sum(px))
-                out["sum_sq"].append(sum(v * v for v in px))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(out["doc_id"], dtype="Int64"),
-                "frame_idx": pd.Series(out["frame_idx"], dtype="Int32"),
-                "delay_cs": pd.Series(out["delay_cs"], dtype="Int32"),
-                "width": pd.Series(out["width"], dtype="Int32"),
-                "height": pd.Series(out["height"], dtype="Int32"),
-                "sum_pix": pd.Series(out["sum_pix"], dtype="Int64"),
-                "sum_sq": pd.Series(out["sum_sq"], dtype="Int64"),
-            }
-        )
+    yields 4 output rows; no id -> no clip -> no row, as the oracle
+    filters."""
+    if doc_id is None:
+        return
+    clip = encode_gif_anim(
+        _VID_W,
+        _VID_H,
+        _video_frame_rows(doc_id),
+        [4 + f for f in range(_VID_NF)],
+    )
+    for fi, delay, frame_payload in sample_gif_frames(clip, 2):
+        fw, fh, px = decode_gif_gray_pixels(frame_payload)
+        yield doc_id, fi, delay, fw, fh, sum(px), sum(v * v for v in px)
 
 
 @query(
@@ -4027,10 +3750,8 @@ def q_video_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is statistics — at 100 TB the codec work parallelizes
     over clips and the result stays metadata-sized."""
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .mapInPandas(_video_sample_batches, schema=MM_VSAMPLE_SCHEMA)
+    return _codec_stage(
+        docs, ("doc_id",), _video_sample_rows, MM_VSAMPLE_SCHEMA
     )
 
 

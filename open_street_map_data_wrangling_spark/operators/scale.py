@@ -41,6 +41,10 @@ _log = logging.getLogger(__name__)
 # autoBroadcastJoinThreshold, disables the driver path.
 DRIVER_SOLVE_BOUND = 10_000
 
+# Rows per shuffle partition of an iter_loop_conf round loop whose
+# width is derived from a row count: a few MB of fixed-width rows.
+LOOP_ROWS_PER_PARTITION = 262_144
+
 
 def collect_if_small(df: DataFrame, what: str) -> list[Row] | None:
     """The rows of ``df`` when it has at most DRIVER_SOLVE_BOUND of
@@ -83,7 +87,6 @@ def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
 def iter_loop_conf(
     spark: SparkSession,
     n_rows: int = 0,
-    rows_per_partition: int = 262144,
     parts: int | None = None,
 ):
     """Session conf scoped to the BODY of an iterative round loop
@@ -103,15 +106,15 @@ def iter_loop_conf(
     every stage eagerly, even for a lazy checkpoint).  What AQE was
     contributing — post-shuffle sizing — is replaced by deriving
     the partition count from the row count the setup action already
-    measured (~256k rows per partition, a few MB of fixed-width
-    rows), floored at 1 and capped at the session's configured
-    width so a small graph never over-fans relative to the
-    deployment's own setting: sf0.1 runs 1-partition rounds, a
-    100 TB corpus gets the full configured width.  A non-numeric
-    configured width (a platform's ``auto``) sets no cap, and is
-    restored verbatim on exit.  The per-round joins key on unique
-    node ids and the aggregates are map-side combined, so AQE's skew
-    split has nothing to split inside these loops.
+    measured (LOOP_ROWS_PER_PARTITION rows per partition), floored
+    at 1 and capped at the session's configured width so a small
+    graph never over-fans relative to the deployment's own
+    setting: sf0.1 runs 1-partition rounds, a 100 TB corpus gets the
+    full configured width.  A non-numeric configured width (a
+    platform's ``auto``) sets no cap, and is restored verbatim on
+    exit.  The per-round joins key on unique node ids and the
+    aggregates are map-side combined, so AQE's skew split has nothing
+    to split inside these loops.
 
     Pass ``parts`` to pin the width directly instead of deriving it
     from a row count — e.g. to the materialized partition count of a
@@ -122,7 +125,7 @@ def iter_loop_conf(
     if parts is not None:
         loop_sp = max(1, int(parts))
     else:
-        loop_sp = max(1, -(-int(n_rows) // rows_per_partition))
+        loop_sp = max(1, -(-int(n_rows) // LOOP_ROWS_PER_PARTITION))
         if sp_before.strip().isdigit():
             loop_sp = min(loop_sp, max(int(sp_before), 1))
     spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -45,7 +45,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .osm_xml import _TABLE_SCHEMAS, _parse_fragment
+from .osm_xml import _TABLE_SCHEMAS, _fields, _parse_fragment, _table_rows
 
 _MARKER = b"\n  <"
 _CHUNK = 1 << 20
@@ -97,44 +97,31 @@ def _iter_owned(path: str, start: int, end: int) -> Iterator[bytes]:
                 return
 
 
-def _entity_row(shaped: dict, cols: list[str]) -> tuple:
-    return tuple(shaped.get(c) for c in cols)
+def _table_option(options: dict) -> str:
+    """The ``table`` option (default ``nodes``), checked against the
+    eight shaped relations."""
+    table = options.get("table", "nodes")
+    if table not in _TABLE_SCHEMAS:
+        raise ValueError(
+            f"osm_xml: unknown table {table!r}; "
+            f"one of {sorted(_TABLE_SCHEMAS)}"
+        )
+    return table
 
 
-_KIND_OF = {
-    "nodes": "node",
-    "nodes_tags": "node",
-    "ways": "way",
-    "ways_tags": "way",
-    "ways_nodes": "way",
-    "relations": "relation",
-    "relations_tags": "relation",
-    "relation_members": "relation",
-}
-_CHILD_KEY = {
-    "nodes_tags": "tags",
-    "ways_tags": "tags",
-    "relations_tags": "tags",
-    "ways_nodes": "nd",
-    "relation_members": "members",
-}
-
-
-def _shape_rows(frags: Iterator[bytes], table: str, cols: list[str]):
+def _shape_rows(frags: Iterator[bytes], table: str):
     """Fragment bytes → output tuples for one relation — the one
     shaper both the batch byte-range reader and the streaming
-    file-drop reader run."""
-    kind, child_key = _KIND_OF[table], _CHILD_KEY.get(table)
+    file-drop reader run, over the same (table, row) split the
+    mapInPandas parse uses."""
+    cols = [c for c, _ in _fields(_TABLE_SCHEMAS[table])]
     for frag in frags:
         parsed = _parse_fragment(frag.decode("utf-8", errors="replace"))
-        if parsed is None or parsed[0] != kind:
+        if parsed is None:
             continue
-        shaped = parsed[1]
-        if child_key is None:
-            yield _entity_row(shaped, cols)
-        else:
-            for child in shaped[child_key]:
-                yield _entity_row(child, cols)
+        for t, row in _table_rows(*parsed):
+            if t == table:
+                yield tuple(row.get(c) for c in cols)
 
 
 class OsmXmlReader(DataSourceReader):
@@ -142,17 +129,8 @@ class OsmXmlReader(DataSourceReader):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("osm_xml: a .load(<path>) is required")
-        self.table = options.get("table", "nodes")
-        if self.table not in _TABLE_SCHEMAS:
-            raise ValueError(
-                f"osm_xml: unknown table {self.table!r}; "
-                f"one of {sorted(_TABLE_SCHEMAS)}"
-            )
+        self.table = _table_option(options)
         self.n_parts = max(1, int(options.get("numPartitions", "8")))
-        self.cols = [
-            field.split()[0]
-            for field in _TABLE_SCHEMAS[self.table].split(", ")
-        ]
 
     def partitions(self):
         size = os.path.getsize(self.path)
@@ -162,9 +140,7 @@ class OsmXmlReader(DataSourceReader):
 
     def read(self, partition: _ByteRange):
         yield from _shape_rows(
-            _iter_owned(self.path, partition.start, partition.end),
-            self.table,
-            self.cols,
+            _iter_owned(self.path, partition.start, partition.end), self.table
         )
 
 
@@ -174,13 +150,7 @@ class OsmXmlDataSource(DataSource):
         return "osm_xml"
 
     def schema(self) -> str:
-        table = self.options.get("table", "nodes")
-        if table not in _TABLE_SCHEMAS:
-            raise ValueError(
-                f"osm_xml: unknown table {table!r}; "
-                f"one of {sorted(_TABLE_SCHEMAS)}"
-            )
-        return _TABLE_SCHEMAS[table]
+        return _TABLE_SCHEMAS[_table_option(self.options)]
 
     def reader(self, schema) -> OsmXmlReader:
         return OsmXmlReader(dict(self.options))
@@ -195,11 +165,11 @@ class OsmXmlDataSource(DataSource):
 from pyspark.sql.datasource import SimpleDataSourceStreamReader  # noqa: E402
 
 
-def _rows_from_file(path: str, table: str, cols: list[str]):
+def _rows_from_file(path: str, table: str):
     """Every row of ``table`` in one OSM file — the shared shaper
     over a single whole-file range."""
     size = os.path.getsize(path)
-    yield from _shape_rows(_iter_owned(path, 0, size), table, cols)
+    yield from _shape_rows(_iter_owned(path, 0, size), table)
 
 
 class OsmXmlStreamReader(SimpleDataSourceStreamReader):
@@ -220,16 +190,7 @@ class OsmXmlStreamReader(SimpleDataSourceStreamReader):
         self.dir = options.get("path")
         if not self.dir:
             raise ValueError("osm_xml stream: a .load(<dir>) is required")
-        table = options.get("table", "nodes")
-        if table not in _TABLE_SCHEMAS:
-            raise ValueError(
-                f"osm_xml: unknown table {table!r}; "
-                f"one of {sorted(_TABLE_SCHEMAS)}"
-            )
-        self.table = table
-        self.cols = [
-            f.split()[0] for f in _TABLE_SCHEMAS[table].split(", ")
-        ]
+        self.table = _table_option(options)
 
     def _listing(self) -> list[str]:
         return sorted(
@@ -244,11 +205,7 @@ class OsmXmlStreamReader(SimpleDataSourceStreamReader):
         # the batch's records into the streaming cache for replay
         rows: list[tuple] = []
         for n in names:
-            rows.extend(
-                _rows_from_file(
-                    os.path.join(self.dir, n), self.table, self.cols
-                )
-            )
+            rows.extend(_rows_from_file(os.path.join(self.dir, n), self.table))
         return rows
 
     def read(self, start: dict):

@@ -133,3 +133,66 @@ def test_null_payload_rows_surface_as_null_features(spark, nulls_sf_dir):
     )
     assert all(r["vec_id"] < 1000000 for r in codes)
     assert all(r["code0"] >= 0 for r in codes)
+
+
+# (doc_id, n_chars) rows for the ten multimodal codec stages: a NULL
+# doc_id with and without n_chars, a NULL n_chars, a negative id.
+_CODEC_ROWS = [(3, 17), (-7, 5), (None, 9), (11, None), (None, None), (0, 0)]
+_PRINTS_DDL = "doc_id bigint, dhash_hi bigint, dhash_lo bigint"
+
+
+def test_codec_stage_null_rules(spark, monkeypatch):
+    """The two null rules of the Arrow-batched codec stages.  The six
+    (doc_id, n_chars) roundtrip stages emit exactly one row with every
+    feature NULL for an input with a NULL doc_id or n_chars, keeping a
+    non-NULL doc_id; the four doc_id-only stages emit no row for a NULL
+    doc_id and ignore n_chars.  Each result's schema is its DDL."""
+    from pyspark.sql.types import StructType
+
+    from open_street_map_data_wrangling_spark.operators import multimodal as mm
+
+    docs = spark.createDataFrame(_CODEC_ROWS, "doc_id bigint, n_chars bigint")
+    monkeypatch.setattr(mm, "load_table", lambda spark, sf_dir, name: docs)
+    ids = [d for d, _ in _CODEC_ROWS]
+    roundtrip = {
+        "q_image_pixels": mm.MM_PIXELS_SCHEMA,
+        "q_audio_pcm": mm.MM_PCM_SCHEMA,
+        "q_image_jpeg": mm.MM_JPEG_SCHEMA,
+        "q_image_gif": mm.MM_GIF_SCHEMA,
+        "q_video_frames": mm.MM_VIDEO_SCHEMA,
+        "q_image_thumbnail": mm.MM_THUMB_SCHEMA,
+    }
+    for name, ddl in roundtrip.items():
+        df = getattr(mm, name)(spark, "unused")
+        assert df.schema == StructType.fromDDL(ddl), name
+        rows = [tuple(r) for r in df.collect()]
+        for d, n in _CODEC_ROWS:
+            if d is None or n is None:
+                continue
+            got = [r for r in rows if r[0] == d]
+            assert got and all(None not in r for r in got), (name, d)
+        nulls = [r for r in rows if r[0] is None or None in r[1:]]
+        want = [
+            (d,) + (None,) * (len(df.columns) - 1)
+            for d, n in _CODEC_ROWS
+            if d is None or n is None
+        ]
+        assert sorted(nulls, key=repr) == sorted(want, key=repr), name
+    doc_id_only = {
+        "image_fingerprints": (mm.image_fingerprints, _PRINTS_DDL, 1),
+        "audio_fingerprints": (mm.audio_fingerprints, _PRINTS_DDL, 1),
+        "video_fingerprints": (mm.video_fingerprints, _PRINTS_DDL, 1),
+        "q_video_sample": (
+            lambda docs: mm.q_video_sample(spark, "unused"),
+            mm.MM_VSAMPLE_SCHEMA,
+            4,
+        ),
+    }
+    for name, (stage, ddl, per_doc) in doc_id_only.items():
+        df = stage(docs)
+        assert df.schema == StructType.fromDDL(ddl), name
+        rows = [tuple(r) for r in df.collect()]
+        assert all(None not in r for r in rows), (name, rows)
+        assert sorted(r[0] for r in rows) == sorted(
+            d for d in ids if d is not None for _ in range(per_doc)
+        ), name
