@@ -208,16 +208,14 @@ def train_bpe(
     (_train_bpe_local), the state returned as an Arrow local frame —
     a vocabulary of a few dozen types otherwise pays a planned Spark
     job per merge.  Above the bound the Spark loop runs: it is the
-    only path for 100 TB-scale vocabularies.  LAZY localCheckpoint
-    per round keeps its plan flat across iterations (the
-    connected-components discipline), and the round's ONE action —
-    the top-pair collect, which training cannot avoid because the
-    winning merge feeds the next round's regexp as a literal — is
-    what materializes the previous round's rewrite: per round the
-    driver receives exactly ONE row.  The loop body runs under
-    scale.iter_loop_conf with the width pinned to the checkpointed
-    word-type table's own partitioning."""
-    from .scale import collect_if_small, iter_loop_conf, local_frame
+    only path for 100 TB-scale vocabularies.  Its rounds run through
+    scale.spark_rounds at the width of the checkpointed word-type
+    table; each round's ONE action — the top-pair collect, which
+    training cannot avoid because the winning merge feeds the next
+    round's regexp as a literal — is what materializes the previous
+    round's lazily cut rewrite: per round the driver receives exactly
+    ONE row."""
+    from .scale import collect_if_small, local_frame, spark_rounds
 
     wf = (
         word_type_freqs(docs)
@@ -238,45 +236,45 @@ def train_bpe(
             return merges, local_frame(spark, state, "seq string, freq bigint")
         return merges
     merges = []
-    with iter_loop_conf(spark, parts=wf.rdd.getNumPartitions()):
-        for step in range(1, steps + 1):
-            top = (
-                # single-symbol words carry no pairs (and
-                # sequence(0, -1) would count DOWN in Spark —
-                # filter, don't guard)
-                wf.where(F.expr("size(split(trim(seq), ' ')) >= 2"))
-                .select(
-                    F.explode(
-                        F.expr(
-                            "transform(sequence(0, size(split(trim(seq), ' ')) - 2),"
-                            " i -> struct(split(trim(seq), ' ')[i] AS l,"
-                            " split(trim(seq), ' ')[i + 1] AS r))"
-                        )
-                    ).alias("p"),
-                    "freq",
-                )
-                .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-                .agg(F.sum("freq").cast("bigint").alias("f"))
-                .orderBy(F.desc("f"), F.asc("l"), F.asc("r"))
-                .limit(1)
-                .collect()
-            )
-            if not top or top[0]["f"] < 2:
-                break
-            l, r, f = top[0]["l"], top[0]["r"], int(top[0]["f"])
-            merges.append((step, l, r, f))
-            pat = f"(?<= ){_java_quote(l)} {_java_quote(r)}(?= )"
-            # Java replacement strings treat BOTH '\' and '$' as
-            # escapes (Matcher.quoteReplacement quotes exactly these
-            # two); escaping only '$' silently dropped backslashes
-            # from merged symbols ("\x" -> "x"), diverging from the
-            # pure-Python replay.  Backslash must be doubled FIRST or
-            # the '$' escape's own backslash would be re-escaped.
-            repl = (l + r).replace("\\", "\\\\").replace("$", "\\$")
-            wf = wf.select(
-                F.regexp_replace("seq", pat, repl).alias("seq"),
+
+    def step(wf):
+        top = (
+            # single-symbol words carry no pairs (and sequence(0, -1)
+            # would count DOWN in Spark — filter, don't guard)
+            wf.where(F.expr("size(split(trim(seq), ' ')) >= 2"))
+            .select(
+                F.explode(
+                    F.expr(
+                        "transform(sequence(0, size(split(trim(seq), ' ')) - 2),"
+                        " i -> struct(split(trim(seq), ' ')[i] AS l,"
+                        " split(trim(seq), ' ')[i + 1] AS r))"
+                    )
+                ).alias("p"),
                 "freq",
-            ).localCheckpoint(eager=False)
+            )
+            .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+            .agg(F.sum("freq").cast("bigint").alias("f"))
+            .orderBy(F.desc("f"), F.asc("l"), F.asc("r"))
+            .limit(1)
+            .collect()
+        )
+        if not top or top[0]["f"] < 2:
+            return None
+        l, r, f = top[0]["l"], top[0]["r"], int(top[0]["f"])
+        merges.append((len(merges) + 1, l, r, f))
+        pat = f"(?<= ){_java_quote(l)} {_java_quote(r)}(?= )"
+        # Java replacement strings treat BOTH '\' and '$' as escapes
+        # (Matcher.quoteReplacement quotes exactly these two); escaping
+        # only '$' silently dropped backslashes from merged symbols
+        # ("\x" -> "x"), diverging from the pure-Python replay.
+        # Backslash must be doubled FIRST or the '$' escape's own
+        # backslash would be re-escaped.
+        repl = (l + r).replace("\\", "\\\\").replace("$", "\\$")
+        return wf.select(F.regexp_replace("seq", pat, repl).alias("seq"), "freq")
+
+    wf, _ = spark_rounds(
+        wf, step, width_of=wf, max_rounds=steps, what="bpe merges"
+    )
     return (merges, wf) if return_state else merges
 
 

@@ -33,6 +33,8 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -629,72 +631,46 @@ _PAIRS_CTE = f"""
 
 def connected_components(edges_df, nodes_df, max_iters: int = 50):
     """Min-label propagation to a fixpoint — the iterative-algorithm
-    pattern (each round: one join + one aggregate; converges in
-    O(component diameter) rounds). localCheckpoint truncates lineage
-    so the plan does not grow with iterations — without it, round k
-    replays rounds 1..k-1. At 100 TB this is exactly GraphX/GraphFrames
-    connected components; the DataFrame form needs no extra library
-    and inherits AQE sizing each round.
+    pattern (each round: one join + one aggregate), run through
+    scale.spark_rounds (AQE off, width of the edge list, a lazy cut
+    per round).  At 100 TB this is exactly GraphX/GraphFrames
+    connected components; the DataFrame form needs no extra library.
 
     edges_df: (a, b) undirected pairs; nodes_df: (n). Returns
     (n, cluster_id = min node id in the component).
 
-    Scale/latency properties (each was measured as a bench regression
-    when absent; the r17 restructure is motivated by the job-count
-    profile — q_multimodal_dedup ran 121 jobs, ~9 AQE query-stage
-    jobs + 2 action jobs PER ROUND, and PERF_r16's scaling block
-    shows these queries are job-overhead-bound, 8 cores ~= 32):
-    * `sym` is checkpointed ONCE, pre-partitioned AND pre-sorted by
-      the probe key `b` — otherwise every iteration replays the
-      entire upstream pair-generation pipeline, and re-exchanges +
-      re-sorts the (larger) edge relation every round.  localCheckpoint
-      preserves outputPartitioning/outputOrdering, so every round's
-      propagation join consumes `sym` with ZERO exchange and ZERO
-      sort on the edge side (guide §2.4: two operations keyed the
-      same way share one exchange).
-    * Self-loops are folded into `sym`: min over (neighbors ∪ self)
-      IS least(own label, neighbor min), so the r16 shape's separate
-      left-join-back of the old label disappears — one join + its
-      exchange removed per round (guide §2.4).
-    * Only edge-touched nodes iterate; the (usually enormous)
-      singleton majority never enters a round and is re-attached with
-      one left join at the end — at 100 TB the label table is sized
-      by |dup pairs|, not |corpus|.
-    * ONE action per round (r16 paid three: eager checkpoint, probe,
-      and AQE stage jobs around both): the round result is
-      localCheckpoint(eager=False) and the round's single action is
-      an exact decimal sum of labels — computing the aggregate
-      computes every partition, which is exactly what materializes a
-      lazy local checkpoint.  Min-label propagation is monotone
-      (every new label <= old), so the label sum strictly decreases
-      until the fixpoint and "sum unchanged" == "converged"; decimal
-      (38,0) keeps the sum exact far beyond any feasible node count
-      (10^12 nodes x 2^63 max id ~ 10^31 < 10^38).
+    Round shape (each was measured as a bench regression when absent):
+    * `sym` is checkpointed ONCE and the rounds' copy is
+      pre-partitioned AND pre-sorted by the probe key `b`, so every
+      round's propagation join consumes it with ZERO exchange and
+      ZERO sort on the edge side (localCheckpoint preserves both).
+    * Self-loops are folded into that copy: min over (neighbors ∪
+      self) IS least(own label, neighbor min), so no round joins the
+      old label back.
+    * Only edge-touched nodes iterate; the singleton majority is
+      re-attached with one left join at the end — the label table is
+      sized by |dup pairs|, not |corpus|.
+    * ONE action per round: each round starts with an exact decimal
+      (count, sum) of the incoming labels, which computes — and so
+      materializes — the previous round's lazy cut.  Min-label
+      propagation is monotone (every new label <= old), so the sum
+      strictly decreases until the fixpoint and "sum unchanged" ==
+      "converged"; decimal(38,0) stays exact far beyond any feasible
+      node count (10^12 nodes x 2^63 max id ~ 10^31 < 10^38).  No
+      labels (no edges) is a fixpoint too.
     * Pointer doubling: each round also compresses label <-
-      L_prev(label) against the PREVIOUS round's checkpointed label
-      snapshot (the classical synchronous form), so convergence takes
-      O(log diameter) rounds instead of O(diameter) — on a 100 TB
-      corpus where one boilerplate family chains thousands of
-      documents, that is the difference between ~12 rounds and
-      ~thousands.  Compressing against the snapshot instead of the
-      round's own output matters for the plan: the self-join form
-      made Spark RECOMPUTE the entire propagation join+aggregate as
-      the parent side (its pushed isnotnull filters differ, which
-      defeats exchange reuse), doubling every round's compute; the
-      snapshot side is one ReusedExchange of the same labels-by-n
-      exchange the propagation join already materialized.
-    * The loop body runs under scale.iter_loop_conf (AQE suspended,
-      shuffle partitions derived from the |sym|+|nodes| the setup
-      actions measured, both restored on exit) — see that helper's
-      docstring for the full rationale.
-    * Fails loudly: a NULL label-sum probe, or ``max_iters`` rounds
-      without a fixpoint, raises RuntimeError instead of returning
-      unconverged labels."""
+      L_prev(label) against the PREVIOUS round's label snapshot, so
+      convergence takes O(log diameter) rounds instead of
+      O(diameter).  The snapshot side is one ReusedExchange of the
+      labels-by-n exchange the propagation join already built; the
+      self-join form recomputed the whole propagation as its parent
+      side.
+    * Fails loudly: a NULL label-sum probe, or ``max_iters`` computed
+      rounds without a fixpoint, raises RuntimeError instead of
+      returning unconverged labels."""
     from pyspark.sql import functions as F
 
-    from .scale import iter_loop_conf
-
-    spark = edges_df.sparkSession
+    from .scale import spark_rounds
 
     sym = (
         edges_df.unionByName(
@@ -703,80 +679,76 @@ def connected_components(edges_df, nodes_df, max_iters: int = 50):
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_edges = sym.count()  # materializes the checkpoint too
-    labels = (
+    seed = (
         sym.select(F.col("a").alias("n"))
         .distinct()
         .select("n", F.col("n").alias("label"))
         .localCheckpoint(eager=False)
     )
-    # one action: materializes the checkpoint, sizes the loop AND
-    # seeds the monotone convergence probe with the initial label sum
-    _init = labels.agg(
-        F.count("*"), F.sum(F.col("label").cast("decimal(38,0)"))
-    ).first()
-    n_nodes, init_sum = int(_init[0]), _init[1]
-    if n_nodes == 0:
-        return nodes_df.select("n", F.col("n").alias("cluster_id"))
-    with iter_loop_conf(spark, n_edges + n_nodes) as loop_sp:
+
+    @functools.cache
+    def symx():
         # Self-loops make "min over neighbors" include the node's own
         # label; pre-partition+sort by the probe key so every round's
         # join reuses this one exchange (checkpoint preserves both).
-        # lazy: round 1's probe job materializes it (AQE is off in
-        # this scope, so the checkpoint compiles to a plain plan and
-        # nothing runs until that action)
-        symx = (
-            sym.unionByName(labels.select(F.col("n").alias("a"),
-                                          F.col("n").alias("b")))
-            .repartition(loop_sp, "b")
+        # Built by round 1 inside the round scope, so the lazy cut
+        # plans with AQE off and round 1's probe materializes it.
+        return (
+            sym.unionByName(seed.select(F.col("n").alias("a"),
+                                        F.col("n").alias("b")))
+            .repartition(max(1, sym.rdd.getNumPartitions()), "b")
             .sortWithinPartitions("b")
             .localCheckpoint(eager=False)
         )
-        prev_sum = init_sum
-        for _ in range(max_iters):
-            upd0 = (
-                symx.join(labels, symx.b == labels.n)
-                .groupBy("a")
-                .agg(F.min("label").alias("label"))
-                .select(F.col("a").alias("n"), "label")
-            )
-            # pointer doubling against the previous snapshot: the
-            # parent relation is `labels` itself keyed by n, so its
-            # exchange is REUSED from the propagation join above
-            parent = labels.select(
-                F.col("n").alias("label"), F.col("label").alias("__gl")
-            )
-            upd = (
-                upd0.join(parent, "label", "left")
-                .select(
-                    "n",
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("__gl"), F.col("label")),
-                    ).alias("label"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # ONE action: the aggregate computes (and thereby
-            # checkpoint-persists) every partition AND answers the
-            # convergence probe via the monotone exact label sum.
-            cur_sum = upd.agg(
-                F.sum(F.col("label").cast("decimal(38,0)"))
-            ).first()[0]
-            if cur_sum is None:
-                raise RuntimeError(
-                    "connected_components: the label-sum convergence "
-                    "probe returned NULL"
-                )
-            labels = upd
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        else:
+
+    prev_sum = None
+
+    def step(labels):
+        nonlocal prev_sum
+        # ONE action per round: the probe computes (and thereby
+        # checkpoint-persists) the previous round's labels and answers
+        # convergence through the monotone exact label sum
+        n, cur_sum = labels.agg(
+            F.count("*"), F.sum(F.col("label").cast("decimal(38,0)"))
+        ).first()
+        if n == 0:
+            return None
+        if cur_sum is None:
             raise RuntimeError(
-                f"connected_components: no fixpoint after {max_iters} "
-                "rounds"
+                "connected_components: the label-sum convergence "
+                "probe returned NULL"
             )
+        if cur_sum == prev_sum:
+            return None
+        prev_sum = cur_sum
+        sx = symx()
+        upd0 = (
+            sx.join(labels, sx.b == labels.n)
+            .groupBy("a")
+            .agg(F.min("label").alias("label"))
+            .select(F.col("a").alias("n"), "label")
+        )
+        # pointer doubling against the previous snapshot: the parent
+        # relation is `labels` itself keyed by n, so its exchange is
+        # REUSED from the propagation join above
+        parent = labels.select(
+            F.col("n").alias("label"), F.col("label").alias("__gl")
+        )
+        return upd0.join(parent, "label", "left").select(
+            "n",
+            F.least(
+                F.col("label"), F.coalesce(F.col("__gl"), F.col("label"))
+            ).alias("label"),
+        )
+
+    labels, converged = spark_rounds(
+        seed, step, width_of=sym, max_rounds=max_iters + 1,
+        what="connected components",
+    )
+    if not converged:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iters} rounds"
+        )
     return (
         nodes_df.join(labels, "n", "left")
         .select("n", F.coalesce(F.col("label"), F.col("n")).alias("cluster_id"))

@@ -16,9 +16,9 @@ of the input with no float summation-order ambiguity AT ALL: any
 partitioning, any executor count, same bits.
 
 Iteration discipline is connected_components' (dedup.py): the edge
-list with degrees is localCheckpoint'd ONCE, each rank generation is
-localCheckpoint'd so the plan never grows with the iteration count,
-and rounds are fixed (T=6) rather than convergence-tested — at 100 TB
+list with degrees is localCheckpoint'd ONCE and the rounds run
+through scale.spark_rounds, which cuts each rank generation so the
+plan never grows with the iteration count; rounds are fixed (T=6) rather than convergence-tested — at 100 TB
 a fixed budget is the difference between a predictable nightly job
 and an unbounded one, and power-iteration error decays geometrically
 (0.85^6 ≈ 0.38 of initial error, plenty to separate hubs from chain
@@ -138,17 +138,11 @@ def pagerank_fixed(pairs: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     tolerance.  Per iteration: one join of the degree-annotated edge
     list with the (N-row) rank table on src + one groupBy dst.
 
-    r17 round shape (guide §1.2/§2.4, scale.iter_loop_conf): the
-    edge list is partitioned+sorted by the join key ONCE (AQE sizes
-    that exchange from the data; checkpoint preserves partitioning
-    and ordering), then every round compiles under iter_loop_conf —
-    AQE off, shuffle width pinned to the edge list's materialized
-    width — with LAZY per-round checkpoints, so the fixed iteration
-    chain runs as stages of the CALLER's single action instead of
-    ~6 query-stage jobs per round (job-count profile: q_pagerank 41
-    jobs before, and at sf0.1 the query is job-overhead-bound).
-    The lazy checkpoints still truncate the logical plan per round,
-    so planning cost stays flat in the iteration count.
+    The Spark path partitions+sorts the edge list by the join key
+    ONCE (AQE sizes that exchange; the checkpoint preserves both), and
+    runs the rounds through scale.spark_rounds at that width: the
+    fixed chain runs as stages of the caller's single action, with a
+    lazy cut per round keeping the plan flat.
 
     Path choice (scale.collect_if_small, one probe of ``pairs`` — pass
     a plain scan or a materialized relation): at most
@@ -159,7 +153,7 @@ def pagerank_fixed(pairs: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     Spark loop below runs: it is the only path for 100 TB-scale
     graphs.
     """
-    from .scale import collect_if_small, iter_loop_conf, local_frame
+    from .scale import collect_if_small, local_frame, spark_rounds
 
     small = collect_if_small(pairs, "pagerank pairs")
     if small is not None:
@@ -190,38 +184,32 @@ def pagerank_fixed(pairs: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     # bounded scalar: N is one number — the 1-row broadcast crossJoin
     # convention (never a collect in the lazy path)
     n_row = nodes.agg(F.count("*").cast("bigint").alias("__n"))
-    spark = edges_deg.sparkSession
-    with iter_loop_conf(
-        spark, parts=edges_deg.rdd.getNumPartitions()
-    ):
-        p = (
-            nodes.crossJoin(F.broadcast(n_row))
-            .selectExpr(
-                "doc_id", f"CAST({_PR_SCALE} AS BIGINT) div __n AS base"
-            )
-            .selectExpr("doc_id", "base", "base AS pr")
-            .localCheckpoint(eager=False)
+    p0 = (
+        nodes.crossJoin(F.broadcast(n_row))
+        .selectExpr("doc_id", f"CAST({_PR_SCALE} AS BIGINT) div __n AS base")
+        .selectExpr("doc_id", "base", "base AS pr")
+    )
+
+    def step(p):
+        inc = (
+            edges_deg.join(p.select(F.col("doc_id").alias("src"), "pr"), "src")
+            .selectExpr("dst AS doc_id", "pr div deg AS share")
+            .groupBy("doc_id")
+            .agg(F.sum("share").cast("bigint").alias("inc"))
         )
-        for _ in range(iters):
-            inc = (
-                edges_deg.join(
-                    p.select(F.col("doc_id").alias("src"), "pr"), "src"
-                )
-                .selectExpr("dst AS doc_id", "pr div deg AS share")
-                .groupBy("doc_id")
-                .agg(F.sum("share").cast("bigint").alias("inc"))
+        return (
+            p.select("doc_id", "base")
+            .join(inc, "doc_id", "left")
+            .selectExpr(
+                "doc_id",
+                "base",
+                "CAST((15 * base + 85 * coalesce(inc, 0)) div 100 AS BIGINT) AS pr",
             )
-            p = (
-                p.select("doc_id", "base")
-                .join(inc, "doc_id", "left")
-                .selectExpr(
-                    "doc_id",
-                    "base",
-                    "CAST((15 * base + 85 * coalesce(inc, 0)) div 100 "
-                    "AS BIGINT) AS pr",
-                )
-                .localCheckpoint(eager=False)
-            )
+        )
+
+    p, _ = spark_rounds(
+        p0, step, width_of=edges_deg, max_rounds=iters, what="pagerank"
+    )
     return p.select("doc_id", "pr")
 
 
@@ -458,15 +446,11 @@ def label_propagation_fixed(pairs: DataFrame, iters: int = _LP_ITERS) -> DataFra
 
     Scale shape per round: one equi-join of the edge list with the
     N-row label table on src + one groupBy (dst, lab) + one
-    per-node window argmax.  r17: the edge list is partitioned +
-    sorted by the join key ONCE (checkpoint preserves both), and the
-    rounds compile lazily under scale.iter_loop_conf — AQE off,
-    width pinned to the edge list's materialized width — so the
-    fixed chain runs as stages of the caller's single action instead
-    of several query-stage jobs per round (job profile: q_label_prop
-    31 jobs before); lazy per-round checkpoints still keep the plan
-    flat."""
-    from .scale import iter_loop_conf
+    per-node window argmax.  The edge list is partitioned + sorted by
+    the join key ONCE (the checkpoint preserves both), and the rounds
+    run through scale.spark_rounds at its width, so the fixed chain
+    runs as stages of the caller's single action."""
+    from .scale import spark_rounds
 
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -486,37 +470,32 @@ def label_propagation_fixed(pairs: DataFrame, iters: int = _LP_ITERS) -> DataFra
         .select("doc_id", F.col("doc_id").alias("lab"))
         .localCheckpoint()
     )
-    with iter_loop_conf(
-        edges.sparkSession, parts=edges.rdd.getNumPartitions()
-    ):
-        for _ in range(iters):
-            cnt = (
-                edges.join(
-                    labels.select(F.col("doc_id").alias("src"), "lab"), "src"
-                )
-                .groupBy(F.col("dst").alias("doc_id"), "lab")
-                .agg(F.count("*").cast("bigint").alias("c"))
+
+    def step(labels):
+        cnt = (
+            edges.join(labels.select(F.col("doc_id").alias("src"), "lab"), "src")
+            .groupBy(F.col("dst").alias("doc_id"), "lab")
+            .agg(F.count("*").cast("bigint").alias("c"))
+        )
+        pick = (
+            cnt.withColumn(
+                "rn",
+                F.row_number().over(
+                    W.partitionBy("doc_id").orderBy(F.desc("c"), F.asc("lab"))
+                ),
             )
-            pick = (
-                cnt.withColumn(
-                    "rn",
-                    F.row_number().over(
-                        W.partitionBy("doc_id").orderBy(
-                            F.desc("c"), F.asc("lab")
-                        )
-                    ),
-                )
-                .where(F.col("rn") == 1)
-                .select("doc_id", F.col("lab").alias("new_lab"))
-            )
-            labels = (
-                labels.join(pick, "doc_id", "left")
-                .select(
-                    "doc_id",
-                    F.coalesce("new_lab", "lab").alias("lab"),
-                )
-                .localCheckpoint(eager=False)
-            )
+            .where(F.col("rn") == 1)
+            .select("doc_id", F.col("lab").alias("new_lab"))
+        )
+        return labels.join(pick, "doc_id", "left").select(
+            "doc_id", F.coalesce("new_lab", "lab").alias("lab")
+        )
+
+    # fixed rounds by contract (the oracle replays them): no convergence
+    labels, _ = spark_rounds(
+        labels, step, width_of=edges, max_rounds=iters,
+        what="label propagation",
+    )
     return labels
 
 
@@ -594,15 +573,10 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: each round is one degree aggregate + one
     self-equi-join of the shrinking edge list, all keyed on node id
     (co-partitioned round to round); the edge list only ever
-    SHRINKS, and lazy localCheckpoint per round keeps the plan flat
-    (the connected_components discipline).  r17: the rounds compile
-    under scale.iter_loop_conf (AQE off, width from the
-    materialized edge partitioning) so the whole peel runs as
-    stages of the final aggregate's single action — with AQE on,
-    even LAZY checkpoints submit every exchange as its own
-    query-stage job at plan-compile time (job profile: 27 jobs
-    before)."""
-    from .scale import iter_loop_conf
+    SHRINKS, and the rounds run through scale.spark_rounds at the
+    width of the materialized edge list, so the whole peel runs as
+    stages of the final aggregate's single action."""
+    from .scale import spark_rounds
 
     docs_pairs = near_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     edges = (
@@ -612,16 +586,20 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .sortWithinPartitions("a")
         .localCheckpoint()
     )
-    with iter_loop_conf(spark, parts=edges.rdd.getNumPartitions()):
-        for _t in range(_KCORE_ROUNDS):
-            deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
-            keep = deg.filter(F.col("deg") >= _KCORE_K).select("a")
-            edges = (
-                edges.join(keep, "a")
-                .join(keep.withColumnRenamed("a", "b"), "b")
-                .select("a", "b")
-                .localCheckpoint(eager=False)
-            )
+
+    def step(edges):
+        deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
+        keep = deg.filter(F.col("deg") >= _KCORE_K).select("a")
+        return (
+            edges.join(keep, "a")
+            .join(keep.withColumnRenamed("a", "b"), "b")
+            .select("a", "b")
+        )
+
+    # fixed rounds by contract (the oracle replays them): no convergence
+    edges, _ = spark_rounds(
+        edges, step, width_of=edges, max_rounds=_KCORE_ROUNDS, what="k-core"
+    )
     return edges.groupBy(F.col("a").alias("doc_id")).agg(
         F.count("*").cast("bigint").alias("core_deg")
     )

@@ -106,28 +106,32 @@ def cached(
     Logs one record per call: a hit, a build, or an ephemeral build
     (an input without files, or an aborted publish), with ``kind``
     and the token."""
+    parent = tempfile.gettempdir()
+
+    def ephemeral(why: str) -> str:
+        # Build into a unique dir, never reused, and register it (plus
+        # any sibling artifacts sharing its prefix) for atexit cleanup.
+        _log.info("index cache %s: ephemeral build (%s)", kind, why)
+        base = f"osm_spark_idx_{kind}_ephemeral_{uuid.uuid4().hex[:16]}"
+        path = os.path.join(parent, base)
+        atexit.register(_rm_prefixed, parent, base)
+        build_fn(path)
+        os.makedirs(path, exist_ok=True)
+        with open(os.path.join(path, "_built_ephemeral"), "w"):
+            pass
+        return path
+
     input_sig = _input_sig(sf_dir, tables)
     if ":absent" in input_sig:
         # An input table has no file behind it — the pytest
         # monkeypatch pattern (load_table patched to a synthetic
         # DataFrame, sf_dir a placeholder).  The content token
         # cannot see THAT data, so two tests patching different
-        # frames would alias onto one artifact; never reuse — build
-        # into a unique dir every call, and register it (plus any
-        # sibling artifacts sharing its prefix) for atexit cleanup,
-        # so monkeypatch-heavy test runs don't leak one dir per
-        # call.  Real corpora always have files, so production
-        # caching is unaffected.
-        parent = tempfile.gettempdir()
-        base = f"osm_spark_idx_{kind}_ephemeral_{uuid.uuid4().hex[:16]}"
-        path = os.path.join(parent, base)
-        atexit.register(_rm_prefixed, parent, base)
-        _log.info("index cache %s: ephemeral build (an input has no file)", kind)
-        build_fn(path)
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "_built_ephemeral"), "w"):
-            pass
-        return path
+        # frames would alias onto one artifact; build ephemerally
+        # every call, so monkeypatch-heavy test runs don't leak one
+        # dir per call.  Real corpora always have files, so
+        # production caching is unaffected.
+        return ephemeral("an input has no file")
 
     token = hashlib.md5(
         (
@@ -140,7 +144,6 @@ def cached(
             + os.path.abspath(sf_dir)
         ).encode()
     ).hexdigest()[:16]
-    parent = tempfile.gettempdir()
     final_base = f"osm_spark_idx_{kind}_{token}"
     path = os.path.join(parent, final_base)
     marker = os.path.join(path, f"_built_{token}")
@@ -209,19 +212,7 @@ def cached(
             # ephemeral build (the ``:absent`` discipline); the next
             # call finds either a winner's marker or rebuilds and
             # publishes cleanly.
-            _log.info(
-                "index cache %s: ephemeral build (token %s publish aborted)",
-                kind,
-                token,
-            )
-            base = f"osm_spark_idx_{kind}_ephemeral_{uuid.uuid4().hex[:16]}"
-            epath = os.path.join(parent, base)
-            atexit.register(_rm_prefixed, parent, base)
-            build_fn(epath)
-            os.makedirs(epath, exist_ok=True)
-            with open(os.path.join(epath, "_built_ephemeral"), "w"):
-                pass
-            return epath
+            return ephemeral(f"token {token} publish aborted")
     finally:
         _rm_prefixed(parent, tmp_base)
     _log.info("index cache %s: build (token %s)", kind, token)

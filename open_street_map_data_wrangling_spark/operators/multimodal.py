@@ -5,8 +5,8 @@ Media (image/audio/video) is carried as an opaque `binary` column +
 typed metadata, the standard lakehouse layout for training data. The
 fixture universe has no real media, so the *payload* here is the
 utf-8 encoding of `documents.text` — but the Spark-side plumbing is
-the real thing: binary columns, Arrow-batched `mapInPandas`, explicit
-result schema, per-batch (not per-row) Python work.
+the real thing: binary columns, Arrow-batched `mapInPandas` and
+`mapInArrow`, explicit result schema, per-batch (not per-row) Python work.
 
 Header-level decode is REAL and dependency-free: `decode_image`
 parses PNG IHDR / JPEG SOFn / GIF screen-descriptor dimensions with
@@ -19,15 +19,15 @@ against a direct oracle recomputation.  JPEG/GIF pixel decode still
 needs entropy codecs this container lacks, so `fake_decode_meta`
 remains the clearly-marked stand-in for those formats only.
 
-Scale notes: mapInPandas streams Arrow record batches through one
+Scale notes: both stream Arrow record batches through one
 Python worker per core — the payload bytes never land on the driver;
 partition sizing (`spark.sql.files.maxPartitionBytes`, or an explicit
 repartition on the id) controls batch memory, which is what matters
 when each row carries megabytes of media.  The ten codec stages
 (roundtrips, fingerprints, thumbnail, frame sample) share one fan-out
-and one worker, `_codec_stage`: each stage is a per-document
-generator plus its DDL, so their task count and Arrow batch size are
-set in that one place.
+and one `mapInArrow` worker, `_codec_stage`: each stage is a
+per-document generator plus its DDL, so their task count and Arrow
+batch size are set in that one place.
 """
 
 from __future__ import annotations
@@ -38,13 +38,16 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from ..plans.registry import query
 from ..sources.catalog import load_table
+from .scale import arrow_table
 
 # Result schema of the feature-extraction stage — explicit, so the
 # plan's schema never depends on Python introspection.
@@ -216,11 +219,6 @@ def extract_image_dims(binary_df: DataFrame) -> DataFrame:
     return binary_df.mapInPandas(_image_dim_batches, schema=MM_DIMS_SCHEMA)
 
 
-# pandas dtype of each DDL type a codec stage emits: the nullable
-# extension dtypes carry NULLs next to exact 64-bit values
-_PANDAS_DTYPES = {"bigint": "Int64", "int": "Int32"}
-
-
 def _codec_stage(
     docs: DataFrame,
     in_cols: tuple[str, ...],
@@ -236,38 +234,26 @@ def _codec_stage(
     ~3 ms per image).  The payload is generated inside the worker, so
     the exchange moves only the input ints, at any scale.
 
-    ``rows_fn`` gets each input row as Python ints (None for NULL)
-    and yields any number of output tuples in ``schema`` column order,
-    so each stage keeps its own null rule and row explosion.  Output
-    columns are typed from the DDL, parsed once on the driver: one
-    nullable pandas Series per column, never a float64 detour through
-    ``DataFrame.from_records``, and an empty batch yields an empty,
-    correctly typed frame."""
-    dtypes = {
-        f.name: _PANDAS_DTYPES[f.dataType.simpleString()]
-        for f in StructType.fromDDL(schema).fields
-    }
+    ``rows_fn`` gets each input row as Python ints (None for NULL),
+    read straight from the Arrow batch — a nullable bigint never
+    passes through pandas float64 — and yields any number of output
+    tuples in ``schema`` column order, so each stage keeps its own
+    null rule and row explosion.  Output batches are typed from the
+    DDL, parsed once on the driver, by the rows-to-Arrow rule of
+    scale.local_frame (scale.arrow_table)."""
+    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
 
-    def worker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ins = [
-                [None if pd.isna(v) else int(v) for v in pdf[c]]
-                for c in in_cols
-            ]
+    def worker(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ins = [batch.column(c).to_pylist() for c in in_cols]
             out = [row for args in zip(*ins) for row in rows_fn(*args)]
-            cols = zip(*out) if out else [()] * len(dtypes)
-            yield pd.DataFrame(
-                {
-                    name: pd.Series(list(col), dtype=dtype)
-                    for (name, dtype), col in zip(dtypes.items(), cols)
-                }
-            )
+            yield from arrow_table(out, arrow_schema).to_batches()
 
     worker.__name__ = rows_fn.__name__
     return (
         docs.select(*in_cols)
         .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-        .mapInPandas(worker, schema=schema)
+        .mapInArrow(worker, schema=schema)
     )
 
 
@@ -576,7 +562,7 @@ def q_image_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-stdlib PNG writer (zlib IDAT, genuine CRCs, ALL FIVE filter
     types cycling per scanline) and decoded back through the real
     pixel decoder (CRC-checked chunk walk, inflate, per-filter
-    scanline reconstruction) inside one Arrow-batched mapInPandas
+    scanline reconstruction) inside one Arrow-batched mapInArrow
     pass.  The output channel sums exist only on the far side of the
     roundtrip, while the oracle recomputes them directly from the
     pixel formula — a hash match certifies the whole codec, not just
@@ -584,7 +570,7 @@ def q_image_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one documents scan projecting two ints per row, one
     Python stage (the codec is inherently Python-side work — exactly
-    what the mapInPandas seam is for), preceded by one two-int-per-row
+    what the mapInArrow seam is for), preceded by one two-int-per-row
     fan-out exchange so the codec stage runs at full parallelism
     (r16, guide §2.5/§4: the fixture parquet is 1-2 files and an
     Arrow stage inherits scan parallelism — the image_fingerprints
@@ -729,7 +715,7 @@ def q_audio_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded through a spec-faithful stdlib WAV writer (RIFF + fmt +
     little-endian PCM frames) and decoded back through the real
     reader (profile validation, frame unpack) inside one
-    Arrow-batched mapInPandas pass.  The emitted sample statistics
+    Arrow-batched mapInArrow pass.  The emitted sample statistics
     (count, rate, Σ|s|, Σs²) exist only on the far side of the
     container roundtrip, while the oracle recomputes them directly
     from the sample formula — a hash match certifies the codec, not
@@ -1261,7 +1247,7 @@ def q_image_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     code construction, byte stuffing, DC prediction, zigzag,
     separable float64 FDCT, full JFIF marker structure) and decoded
     back through the real decoder inside one Arrow-batched
-    mapInPandas pass.  Block-constant pixels + a unit quantization
+    mapInArrow pass.  Block-constant pixels + a unit quantization
     table make the lossy pipeline bit-exact BY CONSTRUCTION (each
     block is a single DC coefficient; see the module comment), so
     the oracle can recompute the decoded statistics directly from
@@ -1612,7 +1598,7 @@ def q_image_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     growth, clear/EOI codes and 4096-entry resets, LSB-first bit
     packing, sub-block framing) and decoded back through the real
     reader (incl. the KwKwK case) inside one Arrow-batched
-    mapInPandas pass.  LZW is lossless, so unlike the JPEG seam no
+    mapInArrow pass.  LZW is lossless, so unlike the JPEG seam no
     pixel restriction is needed — the oracle recomputes the decoded
     stats directly from the pixel formula, and a hash match
     certifies the full compression stack.  NULL doc_id / n_chars
@@ -2389,7 +2375,7 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     and decoded back through the real reader, emitting ONE ROW PER
     DECODED FRAME with the GCE delay and pixel statistics — the
     frame-extraction stage a video training pipeline runs first,
-    with the cardinality explosion (row-exploding mapInPandas) that
+    with the cardinality explosion (row-exploding mapInArrow) that
     distinguishes video from the scalar media queries.
 
     The oracle recomputes every frame's statistics and the 4+f delay

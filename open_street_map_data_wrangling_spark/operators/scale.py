@@ -13,6 +13,11 @@ query in the inventory can adopt them:
   that lets an iterative operator solve a tiny relation on the driver
   and return it as an Arrow local frame (local_frame), while larger
   relations keep the Spark round loop
+* the Spark round loop — spark_rounds, the one loop the five
+  fixpoints (connected components, PageRank, label propagation,
+  k-core, BPE training) run their rounds through: AQE off, a shuffle
+  width taken from a materialized relation, a lazy cut per round, and
+  one log record of the rounds run and whether they converged
 
 tests/test_scale_patterns.py proves each pattern equivalent to its
 naive form, and additionally demonstrates (with plan assertions)
@@ -22,8 +27,8 @@ layouts — the two write-time levers sources/sinks.py exposes.
 
 from __future__ import annotations
 
-import contextlib
 import logging
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -40,10 +45,6 @@ _log = logging.getLogger(__name__)
 # driver/Spark crossover (CHANGES.md); a negative bound, as with
 # autoBroadcastJoinThreshold, disables the driver path.
 DRIVER_SOLVE_BOUND = 10_000
-
-# Rows per shuffle partition of an iter_loop_conf round loop whose
-# width is derived from a row count: a few MB of fixed-width rows.
-LOOP_ROWS_PER_PARTITION = 262_144
 
 
 def collect_if_small(df: DataFrame, what: str) -> list[Row] | None:
@@ -66,75 +67,87 @@ def collect_if_small(df: DataFrame, what: str) -> list[Row] | None:
     return rows if small else None
 
 
+def arrow_table(rows, schema):
+    """``rows`` (tuples in ``schema`` column order) as one Arrow table
+    of ``schema``, an Arrow schema typed from a DDL
+    (``to_arrow_schema(StructType.fromDDL(ddl))``, parsed on the
+    driver).  Each column is built at its own type, so a NULL next to
+    an exact 64-bit int never detours through float64, and no rows
+    give an empty, typed table.  Needs no session: Arrow workers on
+    the executors use it too."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema,
+    )
+
+
 def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
     """A DataFrame of driver-built ``rows`` (tuples in ``ddl`` column
     order), shipped as one Arrow table typed from ``ddl``: no pickled
     RDD and no job to materialize it."""
-    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
     schema = to_arrow_schema(StructType.fromDDL(ddl))
-    cols = list(zip(*rows)) if rows else [()] * len(schema)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
-        schema=schema,
-    )
-    return spark.createDataFrame(table)
+    return spark.createDataFrame(arrow_table(rows, schema))
 
 
-@contextlib.contextmanager
-def iter_loop_conf(
-    spark: SparkSession,
-    n_rows: int = 0,
-    parts: int | None = None,
-):
-    """Session conf scoped to the BODY of an iterative round loop
-    (connected components, pagerank, label propagation, k-core):
-    suspends AQE and sets shuffle partitions derived from the
-    MEASURED size of the relation the rounds iterate over; restores
-    both on exit.  Yields the derived partition count.
+def spark_rounds(
+    init: DataFrame,
+    step: Callable[[DataFrame], DataFrame | None],
+    *,
+    width_of: DataFrame,
+    max_rounds: int,
+    what: str,
+) -> tuple[DataFrame, bool]:
+    """The Spark round loop of every fixpoint: ``state = init``, then
+    up to ``max_rounds`` times ``nxt = step(state)``, where None means
+    converged and anything else becomes the next state, cut with a
+    lazy ``localCheckpoint``.  Returns ``(state, converged)`` and logs
+    one record: the round count, whether the loop converged, and the
+    width.  The stop and fail rules stay in ``step`` and its caller.
 
-    Why (r17, guide §1.2/§2): the job-count profile showed every
-    AQE exchange inside a round becoming its own query-stage job
-    with a driver replanning barrier — q_multimodal_dedup ran 121
-    jobs, ~9 per round — and PERF_r16's scaling block (8 cores ~=
-    32 cores) proves these queries are job-overhead-bound, not
-    data-bound.  With AQE off a lazily-checkpointed round compiles
-    to a plain physical plan whose RDD materializes inside the
-    CALLER's single action (AQE's doExecute would instead submit
-    every stage eagerly, even for a lazy checkpoint).  What AQE was
-    contributing — post-shuffle sizing — is replaced by deriving
-    the partition count from the row count the setup action already
-    measured (LOOP_ROWS_PER_PARTITION rows per partition), floored
-    at 1 and capped at the session's configured width so a small
-    graph never over-fans relative to the deployment's own
-    setting: sf0.1 runs 1-partition rounds, a 100 TB corpus gets the
-    full configured width.  A non-numeric configured width (a
-    platform's ``auto``) sets no cap, and is restored verbatim on
-    exit.  The per-round joins key on unique node ids and the
-    aggregates are map-side combined, so AQE's skew split has nothing
-    to split inside these loops.
-
-    Pass ``parts`` to pin the width directly instead of deriving it
-    from a row count — e.g. to the materialized partition count of a
-    checkpointed edge list whose partitioning the rounds reuse (AQE
-    already sized that one from the data)."""
-    aqe_before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    sp_before = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    if parts is not None:
-        loop_sp = max(1, int(parts))
-    else:
-        loop_sp = max(1, -(-int(n_rows) // LOOP_ROWS_PER_PARTITION))
-        if sp_before.strip().isdigit():
-            loop_sp = min(loop_sp, max(int(sp_before), 1))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_sp))
+    The rounds run with AQE off and the shuffle width set to the
+    partition count of ``width_of``, a materialized relation the
+    rounds join against (floored at 1: an empty one has none); both
+    confs are restored verbatim on exit.  With AQE on, even a lazy
+    checkpoint submits each exchange as its own query-stage job while
+    the round is planned (q_multimodal_dedup once ran 121 jobs, ~9 per
+    round); with it off, a round compiles to a plain plan that runs
+    inside the next action, and the lazy cut keeps each round's plan
+    flat.  The rounds join on unique node ids and aggregate map-side,
+    so AQE's skew split has nothing to split here.  ``init`` is used
+    as given, not cut: a lazy cut outside this scope would plan with
+    AQE on."""
+    conf = init.sparkSession.conf
+    width = max(1, width_of.rdd.getNumPartitions())
+    aqe_before = conf.get("spark.sql.adaptive.enabled", "true")
+    width_before = conf.get("spark.sql.shuffle.partitions", "200")
+    conf.set("spark.sql.adaptive.enabled", "false")
+    conf.set("spark.sql.shuffle.partitions", str(width))
+    state, rounds, converged = init, 0, False
     try:
-        yield loop_sp
+        while rounds < max_rounds:
+            nxt = step(state)
+            if nxt is None:
+                converged = True
+                break
+            state = nxt.localCheckpoint(eager=False)
+            rounds += 1
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_before)
-        spark.conf.set("spark.sql.shuffle.partitions", sp_before)
+        conf.set("spark.sql.adaptive.enabled", aqe_before)
+        conf.set("spark.sql.shuffle.partitions", width_before)
+    _log.info(
+        "%s: spark path (%d rounds, %s, width %d)",
+        what,
+        rounds,
+        "converged" if converged else "round budget spent",
+        width,
+    )
+    return state, converged
 
 
 def salted_count(df: DataFrame, key: str, n_salts: int = 16) -> DataFrame:

@@ -61,7 +61,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_tpch_q3",
     oracle="""
         SELECT l_orderkey,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                              * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
+                    AS DOUBLE) AS revenue,
                strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS orderdate,
                o_orderpriority
         FROM customer
@@ -79,7 +81,11 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 shipping priority: selective dim filter (broadcast) →
     fact join → top-10 by revenue (TakeOrderedAndProject).
-    l_orderkey tiebreak keeps the LIMIT engine-deterministic."""
+    l_orderkey tiebreak keeps the LIMIT engine-deterministic.  The
+    revenue sum is exact: cent-exact prices and discounts summed as
+    DECIMAL(15,2) arithmetic, rounded, then returned as DOUBLE, so a
+    sum on a .xx5 boundary rounds the same way on both engines (a
+    double sum's last bits depend on the summation order)."""
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -97,8 +103,14 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+                F.sum(
+                    F.col("l_extendedprice").cast("decimal(15,2)")
+                    * (1 - F.col("l_discount").cast("decimal(15,2)"))
+                ),
+                2,
+            )
+            .cast("double")
+            .alias("revenue")
         )
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
         .limit(10)

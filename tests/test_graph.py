@@ -131,6 +131,20 @@ def test_pagerank_forced_spark_path_job_count(
     assert _q_pagerank_jobs(spark, count_jobs, sf_dir) <= 17
 
 
+@pytest.mark.parametrize("name, most", [("q_label_prop", 12), ("q_kcore", 20)])
+def test_fixed_round_loop_job_count_pinned(spark, count_jobs, sf_dir, name, most):
+    """The fixed-round loops at sf0.001 run every round inside the
+    caller's write: label propagation at most 12 jobs per warm write,
+    k-core at most 20."""
+    q = load_all_queries()[name].spark
+
+    def run():
+        q(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()
+    assert count_jobs(run) <= most
+
+
 def _brute_triangles(pairs: list[tuple[int, int]]) -> dict[int, int]:
     adj: dict[int, set[int]] = {}
     for a, b in pairs:

@@ -196,3 +196,25 @@ def test_codec_stage_null_rules(spark, monkeypatch):
         assert sorted(r[0] for r in rows) == sorted(
             d for d in ids if d is not None for _ in range(per_doc)
         ), name
+
+
+def test_codec_stage_keeps_exact_ids_next_to_nulls(spark, monkeypatch):
+    """A nullable bigint reaches ``rows_fn`` exact even when its Arrow
+    batch also holds a NULL: odd ids above 2**53, which float64 cannot
+    hold, come back unchanged from a (doc_id, n_chars) roundtrip stage
+    and a doc_id-only stage.  Two of every three rows carry an id, so
+    every round-robin batch of the stage's fan-out holds both."""
+    from open_street_map_data_wrangling_spark.operators import multimodal as mm
+
+    big = [2**53 + 2 * i + 1 for i in range(40)]
+    rows = []
+    for i, d in enumerate(big):
+        rows.append((d, 5 + i % 7))
+        if i % 2:
+            rows.append((None, 3))
+    docs = spark.createDataFrame(rows, "doc_id bigint, n_chars bigint")
+    monkeypatch.setattr(mm, "load_table", lambda spark, sf_dir, name: docs)
+    pixels = mm.q_image_pixels(spark, "unused").collect()
+    assert sorted(r.doc_id for r in pixels if r.doc_id is not None) == big
+    prints = mm.image_fingerprints(docs).collect()
+    assert sorted(r.doc_id for r in prints) == big

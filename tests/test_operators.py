@@ -1,6 +1,7 @@
 """Unit tests on tiny literal DataFrames (FIXTURES.md §D) — fast
 iteration layer under the DuckDB-oracle differential gate."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from open_street_map_data_wrangling_spark.functions.textfeat import shingles_expr
@@ -270,6 +271,68 @@ def test_connected_components_chain(spark):
     assert got[12] == 12  # isolated node keeps its own label
 
 
+def _union_find_clusters(pairs, nodes):
+    """n -> min node id of its component, by union-find."""
+    parent = {n: n for n in nodes}
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+@pytest.mark.parametrize(
+    "pairs, nodes",
+    [
+        ([(1, 2), (2, 3), (3, 4), (4, 5), (7, 7)], range(1, 10)),
+        ([], range(4)),
+        ([(3, 3)], range(5)),
+        ([(2, 1), (1, 2), (2, 1), (4, 3), (3, 4), (1, 3)], range(1, 7)),
+    ],
+    ids=["chain-self-loop-isolated", "no-edges", "only-self-loop",
+         "duplicate-and-reversed"],
+)
+def test_connected_components_matches_union_find(spark, pairs, nodes):
+    """connected_components labels every node with the minimum node id
+    of its component, as union-find does, on the loop's edge cases:
+    no edges at all (the first probe counts no labels), a self-loop,
+    isolated nodes, and pairs given twice or in both directions."""
+    from open_street_map_data_wrangling_spark.operators.dedup import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(pairs, "a long, b long")
+    nodes_df = spark.createDataFrame([(n,) for n in nodes], "n long")
+    got = {
+        r.n: r.cluster_id
+        for r in connected_components(edges, nodes_df).collect()
+    }
+    assert got == _union_find_clusters(pairs, nodes)
+
+
+def test_dedup_clusters_job_count_pinned(spark, count_jobs, sf_dir):
+    """q_dedup_clusters at sf0.001 starts at most 13 jobs per warm
+    write: the round probe sizes nothing and counts the labels, so the
+    separate edge count (16 jobs) is gone."""
+    q = load_all_queries()["q_dedup_clusters"].spark
+
+    def run():
+        q(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    run()  # builds the cached pair artifact
+    assert count_jobs(run) <= 13
+
+
 def test_connected_components_raises_without_fixpoint(spark):
     """max_iters rounds that end before the fixpoint raise instead of
     returning unconverged labels: one round cannot label a 12-node
@@ -303,10 +366,11 @@ def test_connected_components_raises_on_null_probe(spark, monkeypatch):
     real_agg = frame.agg
 
     def agg(self, *exprs):
-        # the round probe is the one-aggregate agg; the setup probe
-        # (count + sum) passes through
-        if len(exprs) == 1:
-            return real_agg(self, F.sum(F.lit(None).cast("decimal(38,0)")))
+        # the round probe is the (count, sum) agg: its sum goes NULL
+        if len(exprs) == 2:
+            return real_agg(
+                self, exprs[0], F.sum(F.lit(None).cast("decimal(38,0)"))
+            )
         return real_agg(self, *exprs)
 
     monkeypatch.setattr(frame, "agg", agg)

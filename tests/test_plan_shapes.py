@@ -475,7 +475,8 @@ def test_multimodal_dedup_checkpoint_cuts_hold(plans):
     p = plans("q_multimodal_dedup")
     assert "documents.parquet" not in p
     assert "osm_spark_idx_pairs_" in p  # reads the pair cache...
-    assert "mapInPandas" not in p.lower()  # ...never the codecs
+    assert "MapInPandas" not in p  # ...never the codecs
+    assert "MapInArrow" not in p
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoop" not in p
 
@@ -1039,7 +1040,8 @@ def test_ingest_registry_serves_from_store_only(plans):
     p = plans("q_ingest_registry")
     assert "documents.parquet" not in p
     assert p.count("Scan parquet") == 1
-    assert "mapInPandas" not in p.lower()
+    assert "MapInPandas" not in p
+    assert "MapInArrow" not in p
     assert "CartesianProduct" not in p
 
 
@@ -1053,7 +1055,8 @@ def test_registry_report_serves_from_stores_only(plans):
     assert "documents.parquet" not in p
     assert p.count("Scan parquet") == 3
     assert p.count("_edges") == 1
-    assert "mapInPandas" not in p.lower()
+    assert "MapInPandas" not in p
+    assert "MapInArrow" not in p
     assert "CartesianProduct" not in p
 
 
@@ -1066,7 +1069,8 @@ def test_purged_report_serves_from_stores_only(plans):
     assert "documents.parquet" not in p
     assert p.count("Scan parquet") == 3
     assert p.count("_edges") == 1
-    assert "mapInPandas" not in p.lower()
+    assert "MapInPandas" not in p
+    assert "MapInArrow" not in p
     assert "CartesianProduct" not in p
 
 

@@ -374,12 +374,10 @@ class _AutoWidthConf:
         return getattr(self._real, name)
 
 
-def test_iter_loop_conf_keeps_non_numeric_width(spark, monkeypatch):
+def test_spark_rounds_keeps_non_numeric_width(spark, monkeypatch):
     """With the configured width ``auto``, the round loops neither
-    crash nor cap their derived width, and the string is restored on
-    exit: a PageRank above the driver bound (width pinned from its
-    edge list) and connected components (width derived from the
-    measured row count)."""
+    crash nor replace the string, which is restored on exit: a
+    PageRank above the driver bound and connected components."""
     from open_street_map_data_wrangling_spark.operators import graph, scale
     from open_street_map_data_wrangling_spark.operators.dedup import (
         connected_components,
@@ -391,10 +389,6 @@ def test_iter_loop_conf_keeps_non_numeric_width(spark, monkeypatch):
     monkeypatch.setattr(spark, "conf", conf)
     monkeypatch.setattr(scale, "DRIVER_SOLVE_BOUND", -1)
     try:
-        with scale.iter_loop_conf(spark, n_rows=5 * 262144) as loop_sp:
-            assert loop_sp == 5
-            assert conf.get(key) == "5"
-        assert conf.get(key) == "auto"
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (3, 1), (4, 5)], "doc_a long, doc_b long"
         )
@@ -408,6 +402,50 @@ def test_iter_loop_conf_keeps_non_numeric_width(spark, monkeypatch):
         assert conf.get(key) == "auto"
     finally:
         conf._real.set(key, before)
+
+
+def test_spark_rounds_scope_stop_and_log(spark, caplog):
+    """spark_rounds runs its rounds with AQE off at the floored width
+    of ``width_of``, stops on None or at the round budget, restores
+    both confs also when a round raises, and logs one record per loop."""
+    from open_street_map_data_wrangling_spark.operators import scale
+
+    caplog.set_level("INFO", logger=scale.__name__)
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    before = [spark.conf.get(k) for k in keys]
+    seen = []
+
+    def step(df):
+        seen.append([spark.conf.get(k) for k in keys])
+        n = df.count()
+        return None if n >= 3 else df.union(spark.range(n, n + 1))
+
+    sc = spark.sparkContext
+    empty = spark.createDataFrame(sc.emptyRDD(), "id bigint")
+    three = spark.createDataFrame(sc.parallelize([(0,), (1,)], 3), "id bigint")
+    assert empty.rdd.getNumPartitions() == 0
+    out, converged = scale.spark_rounds(
+        spark.range(1), step, width_of=empty, max_rounds=5, what="grow"
+    )
+    assert (sorted(r.id for r in out.collect()), converged) == ([0, 1, 2], True)
+    assert seen == [["false", "1"]] * 3
+    out, converged = scale.spark_rounds(
+        spark.range(1), step, width_of=three, max_rounds=1, what="short",
+    )
+    assert (out.count(), converged) == (2, False)
+
+    def boom(df):
+        raise ValueError("round failed")
+
+    with pytest.raises(ValueError, match="round failed"):
+        scale.spark_rounds(
+            spark.range(1), boom, width_of=empty, max_rounds=2, what="boom"
+        )
+    assert [spark.conf.get(k) for k in keys] == before
+    assert [r.getMessage() for r in caplog.records] == [
+        "grow: spark path (2 rounds, converged, width 1)",
+        "short: spark path (1 rounds, round budget spent, width 3)",
+    ]
 
 
 def test_local_frame_types_rows_from_ddl(spark):
