@@ -34,6 +34,7 @@ Scale notes (100 TB posture):
 from __future__ import annotations
 
 import functools
+import logging
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -41,6 +42,8 @@ from pyspark.sql import functions as F
 from ..functions.textfeat import SHINGLES_SQL_CTE, shingles_expr
 from ..plans.registry import query
 from ..sources.catalog import load_table, read_parquet
+
+_log = logging.getLogger(__name__)
 
 # ---------------------------------------------------------------------------
 # X1 — exact dedup
@@ -629,15 +632,16 @@ _PAIRS_CTE = f"""
 """
 
 
-def connected_components(edges_df, nodes_df, max_iters: int = 50):
+def connected_components(edges_df, nodes_df=None, max_iters: int = 50):
     """Min-label propagation to a fixpoint — the iterative-algorithm
     pattern (each round: one join + one aggregate), run through
     scale.spark_rounds (AQE off, width of the edge list, a lazy cut
     per round).  At 100 TB this is exactly GraphX/GraphFrames
     connected components; the DataFrame form needs no extra library.
 
-    edges_df: (a, b) undirected pairs; nodes_df: (n). Returns
-    (n, cluster_id = min node id in the component).
+    edges_df: (a, b) undirected pairs; nodes_df: (n), or None for the
+    edge list's own endpoints.  Returns (n, cluster_id = min node id
+    in the component) for every node.
 
     Round shape (each was measured as a bench regression when absent):
     * `sym` is checkpointed ONCE and the rounds' copy is
@@ -647,9 +651,11 @@ def connected_components(edges_df, nodes_df, max_iters: int = 50):
     * Self-loops are folded into that copy: min over (neighbors ∪
       self) IS least(own label, neighbor min), so no round joins the
       old label back.
-    * Only edge-touched nodes iterate; the singleton majority is
-      re-attached with one left join at the end — the label table is
-      sized by |dup pairs|, not |corpus|.
+    * Only edge-touched nodes iterate — the label table is sized by
+      |dup pairs|, not |corpus| — and it already holds one row per
+      endpoint, so with nodes_df=None it IS the result.  A nodes_df
+      with isolated nodes re-attaches them (as their own cluster)
+      with one left join at the end.
     * ONE action per round: each round starts with an exact decimal
       (count, sum) of the incoming labels, which computes — and so
       materializes — the previous round's lazy cut.  Min-label
@@ -749,6 +755,8 @@ def connected_components(edges_df, nodes_df, max_iters: int = 50):
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iters} rounds"
         )
+    if nodes_df is None:
+        return labels.select("n", F.col("label").alias("cluster_id"))
     return (
         nodes_df.join(labels, "n", "left")
         .select("n", F.coalesce(F.col("label"), F.col("n")).alias("cluster_id"))
@@ -774,10 +782,10 @@ def greedy_chain_rejects(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     then drops decided endpoints' edges.  Rounds = longest surviving
     candidate chain, not component diameter — chains beyond a few
     links are template collisions the LSH bucket cap already prunes,
-    and each round is one localCheckpoint'd job over the (small)
-    undecided pair set, the connected_components iteration discipline.
-    Docs left undecided at max_iters are rejected conservatively
-    (dedup must never over-admit)."""
+    and each round pays a ``limit(1).count()`` probe plus two eager
+    cuts of the (small) undecided pair sets.  Docs left undecided at
+    max_iters are rejected conservatively (dedup must never
+    over-admit), with one WARNING on this module's logger."""
     e = pairs.select("doc_a", "doc_b").distinct().localCheckpoint()
     rejected = None
     for _ in range(max_iters):
@@ -803,7 +811,15 @@ def greedy_chain_rejects(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
             .localCheckpoint()
         )
     else:
-        # non-convergence: reject everything still undecided
+        # the round budget is spent; the last round may still have
+        # decided every doc, so warn only when some are left
+        if e.head(1):
+            _log.warning(
+                "greedy_chain_rejects: docs left undecided after the "
+                "round budget (max_iters=%d); rejecting them",
+                max_iters,
+            )
+        # reject everything still undecided
         leftover = (
             e.select(F.col("doc_a").alias("doc_id"))
             .unionByName(e.select(F.col("doc_b").alias("doc_id")))
@@ -846,16 +862,12 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same fixpoint via a recursive transitive-closure CTE —
     an exact cross-engine check of an iterative algorithm.
 
-    The candidate pairs are localCheckpoint'd BEFORE entering
-    connected_components: its symmetrizing union consumes the edge
-    DataFrame twice, which would run the whole shingle→minhash→band
-    pipeline twice inside the first checkpoint job (measured ~1.7 s
-    of the 3.7 s round-2 bench time)."""
+    The candidate pairs are the cached near-pair artifact, a small
+    parquet read, so connected_components consumes them uncut; the
+    corpus is its node set, since most documents have no pair."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        near_pairs_cached(spark, sf_dir)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint()
+    pairs = near_pairs_cached(spark, sf_dir).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
     nodes = docs.select(F.col("doc_id").alias("n"))
     return connected_components(pairs, nodes)
@@ -1842,25 +1854,27 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     no grams but still report (their positions can never be covered
     by a full gram): dup_toks = 0, cov_pct = 0."""
     gram = _span_gram_base(load_table(spark, sf_dir, "documents"))
-    dupg = (
+    return span_coverage(gram, _dup_grams(gram))
+
+
+def _dup_grams(gram: DataFrame) -> DataFrame:
+    """(g): the grams of a (doc_id, pos, g) base that occur at least
+    twice — the corpus-derived duplicated-gram set of q_dup_spans and
+    q_loss_mask."""
+    return (
         gram.where(F.col("g").isNotNull())
         .groupBy("g")
         .agg(F.count("*").alias("cnt"))
         .where(F.col("cnt") >= 2)
         .select("g")
     )
-    return span_coverage(gram, dupg)
 
 
-def span_coverage(gram: DataFrame, dupg: DataFrame) -> DataFrame:
-    """The coverage half of q_dup_spans over ANY (doc_id, pos, g)
-    gram base and ANY duplicated-gram set: dup-start flags joined
-    back, trailing-window positional coverage, per-doc stats.
-    Shared by the inline query (dup set derived from the same
-    corpus) and the streaming gram-count store's serve path
-    (streaming/jobs.span_dup_coverage_serve: dup set read from the
-    incrementally-maintained store), so both answer from one
-    definition."""
+def _span_cover(gram: DataFrame, dupg: DataFrame, *keep: str) -> DataFrame:
+    """(doc_id, *keep, cov): per gram position, 1 when some gram of
+    ``dupg`` starts within the trailing {_SPAN_K}-token frame — the
+    dup-start flags joined back, then a per-doc window max.  The
+    prologue span_coverage and span_mask share."""
     flagged = gram.join(
         dupg.withColumnRenamed("g", "dg"),
         F.col("g") == F.col("dg"),
@@ -1875,10 +1889,21 @@ def span_coverage(gram: DataFrame, dupg: DataFrame) -> DataFrame:
         .orderBy("pos")
         .rowsBetween(-(_SPAN_K - 1), W.currentRow)
     )
-    covered = flagged.select(
-        "doc_id", F.max("is_dup").over(cov_w).alias("cov")
+    return flagged.select(
+        "doc_id", *keep, F.max("is_dup").over(cov_w).alias("cov")
     )
-    return covered.groupBy("doc_id").agg(
+
+
+def span_coverage(gram: DataFrame, dupg: DataFrame) -> DataFrame:
+    """The coverage half of q_dup_spans over ANY (doc_id, pos, g)
+    gram base and ANY duplicated-gram set: dup-start flags joined
+    back, trailing-window positional coverage, per-doc stats.
+    Shared by the inline query (dup set derived from the same
+    corpus) and the streaming gram-count store's serve path
+    (streaming/jobs.span_dup_coverage_serve: dup set read from the
+    incrementally-maintained store), so both answer from one
+    definition."""
+    return _span_cover(gram, dupg).groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_toks"),
         F.sum("cov").cast("bigint").alias("dup_toks"),
         F.expr("CAST(100 * sum(cov) div count(*) AS BIGINT)").alias(
@@ -2238,17 +2263,10 @@ def q_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays components via the recursive transitive-closure
     CTE, so the whole composition is hash-checked."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        near_pairs_cached(spark, sf_dir)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint()
+    pairs = near_pairs_cached(spark, sf_dir).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
-    nodes = (
-        pairs.select(F.col("a").alias("n"))
-        .unionByName(pairs.select(F.col("b").alias("n")))
-        .distinct()
-    )
-    lab = connected_components(pairs, nodes)
+    lab = connected_components(pairs)
     sized = lab.join(
         docs.select(
             F.col("doc_id").alias("n"),
@@ -2478,38 +2496,14 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles — shingle strings never travel), so the arithmetic is
     identical cross-engine by construction.  Scale shape: the exact
     re-score is CANDIDATE-BOUNDED — two hash-keyed joins against the
-    LSH pair list, never an all-pairs intersection; the hashed
-    shingle base is checkpoint-cut once and feeds the size aggregate
-    and both join sides (zero visible corpus scans)."""
-    # the pair list feeds TWO consumers (the intersection build and
-    # the final size join): checkpoint-cut so the whole LSH pipeline
-    # isn't compiled twice — pairs are the bounded relation here
-    pairs = (
-        near_pairs_cached(spark, sf_dir)
-        .select(F.col("doc_a").alias("pa"), F.col("doc_b").alias("pb"))
-        .localCheckpoint(eager=False)
-    )
-
-    shd = shingles_cached(spark, sf_dir)
-    sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    ia = pairs.join(shd.withColumnRenamed("doc_id", "pa"), "pa")
-    inter = (
-        ia.join(
-            shd.select(F.col("doc_id").alias("pb"), "shh"), ["pb", "shh"]
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n_inter"))
+    LSH pair list, never an all-pairs intersection
+    (_pair_intersections); the pairs and the hashed shingle base are
+    cached artifacts, so no corpus scan is visible."""
+    pairs = near_pairs_cached(spark, sf_dir).select(
+        F.col("doc_a").alias("pa"), F.col("doc_b").alias("pb")
     )
     scored = (
-        pairs.join(
-            sizes.select(F.col("doc_id").alias("pa"), F.col("n_sh").alias("n_a")),
-            "pa",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("pb"), F.col("n_sh").alias("n_b")),
-            "pb",
-        )
-        .join(inter, ["pa", "pb"], "left")
+        _pair_intersections(pairs, shingles_cached(spark, sf_dir))
         .select(
             F.col("pa").alias("doc_a"),
             F.col("pb").alias("doc_b"),
@@ -2533,6 +2527,35 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return scored.filter(
         F.expr(f"greatest(cont_a_bp, cont_b_bp) >= {_CONTAIN_MIN_BP}")
+    )
+
+
+def _pair_intersections(pairs: DataFrame, shd: DataFrame) -> DataFrame:
+    """(pa, pb, n_a, n_b, n_inter) for every (pa, pb) pair: the
+    distinct hashed-shingle counts of both sides from ``shd``
+    (doc_id, shh) and their intersection, NULL when they share none.
+    Two hash-keyed joins against the pair list, never an all-pairs
+    intersection — the exact re-score q_containment, q_jaccard_hist
+    and the containment edge build share."""
+    sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    ia = pairs.join(shd.withColumnRenamed("doc_id", "pa"), "pa")
+    inter = (
+        ia.join(
+            shd.select(F.col("doc_id").alias("pb"), "shh"), ["pb", "shh"]
+        )
+        .groupBy("pa", "pb")
+        .agg(F.count("*").alias("n_inter"))
+    )
+    return (
+        pairs.join(
+            sizes.select(F.col("doc_id").alias("pa"), F.col("n_sh").alias("n_a")),
+            "pa",
+        )
+        .join(
+            sizes.select(F.col("doc_id").alias("pb"), F.col("n_sh").alias("n_b")),
+            "pb",
+        )
+        .join(inter, ["pa", "pb"], "left")
     )
 
 
@@ -2587,17 +2610,10 @@ def q_dedup_weighting(spark: SparkSession, sf_dir: str) -> DataFrame:
     |family| · (10000 // |family|) ≈ 10000 by construction (floor
     division, pinned in pytest)."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        near_pairs_cached(spark, sf_dir)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint()
+    pairs = near_pairs_cached(spark, sf_dir).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
-    nodes = (
-        pairs.select(F.col("a").alias("n"))
-        .unionByName(pairs.select(F.col("b").alias("n")))
-        .distinct()
-    )
-    lab = connected_components(pairs, nodes)
+    lab = connected_components(pairs)
     sz = lab.groupBy("cluster_id").agg(F.count("*").alias("__fam_n"))
     fam = lab.join(sz, "cluster_id").select(
         F.col("n").alias("__member"), "cluster_id", "__fam_n"
@@ -2690,10 +2706,8 @@ def q_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive-closure CTE, so the POLICY ITSELF is hash-checked,
     not just the clustering."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        near_pairs_cached(spark, sf_dir)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint()
+    pairs = near_pairs_cached(spark, sf_dir).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
     return _keep_best_policy(docs, pairs)
 
@@ -2703,13 +2717,8 @@ def _keep_best_policy(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     list — components, longest-member argmax, min-id counterfactual —
     factored so q_keep_best (LSH edges) and q_keep_best_containment
     (LSH ∪ containment edges) rank one definition.  ``pairs`` must be
-    bounded/checkpointed by the caller."""
-    nodes = (
-        pairs.select(F.col("a").alias("n"))
-        .unionByName(pairs.select(F.col("b").alias("n")))
-        .distinct()
-    )
-    lab = connected_components(pairs, nodes)
+    bounded by the caller."""
+    lab = connected_components(pairs)
     sized = lab.join(
         docs.select(
             F.col("doc_id").alias("n"),
@@ -2887,32 +2896,9 @@ def containment_edges_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .localCheckpoint(eager=False)
         )
-        sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-        ia = ccand.join(shd.withColumnRenamed("doc_id", "pa"), "pa")
-        inter = (
-            ia.join(
-                shd.select(F.col("doc_id").alias("pb"), "shh"),
-                ["pb", "shh"],
-            )
-            .groupBy("pa", "pb")
-            .agg(F.count("*").alias("n_inter"))
-        )
+        # a NULL n_inter (no shared shingle) fails the filter
         (
-            ccand.join(
-                sizes.select(
-                    F.col("doc_id").alias("pa"),
-                    F.col("n_sh").alias("n_a"),
-                ),
-                "pa",
-            )
-            .join(
-                sizes.select(
-                    F.col("doc_id").alias("pb"),
-                    F.col("n_sh").alias("n_b"),
-                ),
-                "pb",
-            )
-            .join(inter, ["pa", "pb"])
+            _pair_intersections(ccand, shd)
             .filter(
                 F.expr(
                     f"greatest((n_inter * 10000) div n_a, "
@@ -2983,39 +2969,17 @@ def q_jaccard_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     intersection as q_containment (one definition class), bucketed
     with integer div — hash-exact.
 
-    Scale shape: candidate-bounded exactly like q_containment (the
-    pair list and hashed-shingle base are each checkpoint-cut once;
-    intersections are hash-keyed equi-joins against the pair list);
-    the histogram is a 10-row aggregate."""
-    pairs = (
-        near_pairs_cached(spark, sf_dir)
-        .select(F.col("doc_a").alias("pa"), F.col("doc_b").alias("pb"))
-        .localCheckpoint(eager=False)
+    Scale shape: candidate-bounded exactly like q_containment (one
+    _pair_intersections definition over the cached pair and
+    hashed-shingle artifacts); the histogram is a 10-row aggregate."""
+    pairs = near_pairs_cached(spark, sf_dir).select(
+        F.col("doc_a").alias("pa"), F.col("doc_b").alias("pb")
     )
-    shd = shingles_cached(spark, sf_dir)
-    sizes = shd.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    ia = pairs.join(shd.withColumnRenamed("doc_id", "pa"), "pa")
-    inter = (
-        ia.join(
-            shd.select(F.col("doc_id").alias("pb"), "shh"), ["pb", "shh"]
-        )
-        .groupBy("pa", "pb")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    jac = (
-        pairs.join(
-            sizes.select(F.col("doc_id").alias("pa"), F.col("n_sh").alias("n_a")),
-            "pa",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("pb"), F.col("n_sh").alias("n_b")),
-            "pb",
-        )
-        .join(inter, ["pa", "pb"], "left")
-        .selectExpr(
-            "(coalesce(n_inter, 0) * 10000)"
-            " div (n_a + n_b - coalesce(n_inter, 0)) AS j_bp"
-        )
+    jac = _pair_intersections(
+        pairs, shingles_cached(spark, sf_dir)
+    ).selectExpr(
+        "(coalesce(n_inter, 0) * 10000)"
+        " div (n_a + n_b - coalesce(n_inter, 0)) AS j_bp"
     )
     return (
         jac.selectExpr("least(j_bp div 1000, 9) AS bucket")
@@ -3094,14 +3058,7 @@ def q_loss_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan), uniform hash-keyed dup-set groupBy, doc-partitioned
     windows; output is one row per masked span."""
     gram = _span_gram_base(load_table(spark, sf_dir, "documents"))
-    dupg = (
-        gram.where(F.col("g").isNotNull())
-        .groupBy("g")
-        .agg(F.count("*").alias("cnt"))
-        .where(F.col("cnt") >= 2)
-        .select("g")
-    )
-    return span_mask(gram, dupg)
+    return span_mask(gram, _dup_grams(gram))
 
 
 def span_mask(gram: DataFrame, dupg: DataFrame) -> DataFrame:
@@ -3110,23 +3067,7 @@ def span_mask(gram: DataFrame, dupg: DataFrame) -> DataFrame:
     span_coverage convention: shared by the inline query (dup set
     from the same corpus) and the streaming gram store's serve path
     (streaming/jobs.loss_mask_serve), so both emit one definition."""
-    flagged = gram.join(
-        dupg.withColumnRenamed("g", "dg"),
-        F.col("g") == F.col("dg"),
-        "left",
-    ).select(
-        "doc_id",
-        "pos",
-        F.when(F.col("dg").isNotNull(), 1).otherwise(0).alias("is_dup"),
-    )
-    cov_w = (
-        W.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(-(_SPAN_K - 1), W.currentRow)
-    )
-    covered = flagged.select(
-        "doc_id", "pos", F.max("is_dup").over(cov_w).alias("cov")
-    )
+    covered = _span_cover(gram, dupg, "pos")
     isl_w = W.partitionBy("doc_id").orderBy("pos")
     isl = covered.filter(F.col("cov") == 1).select(
         "doc_id",
@@ -3213,9 +3154,20 @@ def q_contamination_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = near_pairs_cached(spark, sf_dir).select(
         F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
+    return _frontier_radius(docs, pairs)
+
+
+def _frontier_radius(docs: DataFrame, half_edges: DataFrame) -> DataFrame:
+    """(doc_id, hops): every node within {_RADIUS_HOPS} hops of the
+    flagged seeds (doc_id ≡ 0 mod 97 in ``docs``) over the undirected
+    graph of the (a, b) ``half_edges``, at its minimum hop distance.
+    Frontier BFS: each round joins only the newly found nodes to the
+    symmetric edges and anti-joins the visited set.  The one
+    definition behind q_contamination_radius (text pairs) and
+    multimodal.q_radius_served (the registry's edge store)."""
     edges = (
-        pairs.unionByName(
-            pairs.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        half_edges.unionByName(
+            half_edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
         .distinct()
         .localCheckpoint()

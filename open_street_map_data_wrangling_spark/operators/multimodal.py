@@ -614,8 +614,16 @@ def decode_wav_pcm16(payload: bytes) -> tuple[int, int, int, int]:
     (n_samples, sample_rate, sum_abs, sum_sq).  Only the mono 16-bit
     PCM profile the encoder emits is accepted; anything else raises
     ValueError, as a real ingest should on unsupported profiles."""
+    n, rate, raw = _wav_frames(payload)
+    s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
+    return (n, rate, int(np.abs(s).sum()), int((s * s).sum()))
+
+
+def _wav_frames(payload: bytes) -> tuple[int, int, bytes]:
+    """(n_samples, sample_rate, raw little-endian frames) of a WAV
+    payload, accepting only the mono 16-bit PCM profile the encoder
+    emits: the validation both WAV decoders share."""
     import io
-    import struct
     import wave
 
     with wave.open(io.BytesIO(payload), "rb") as w:
@@ -628,8 +636,7 @@ def decode_wav_pcm16(payload: bytes) -> tuple[int, int, int, int]:
         raw = w.readframes(n)
     if len(raw) != 2 * n:
         raise ValueError("WAV frame data length mismatch")
-    s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-    return (n, rate, int(np.abs(s).sum()), int((s * s).sum()))
+    return n, rate, raw
 
 
 def decode_wav_samples(payload: bytes) -> tuple[int, int, tuple]:
@@ -638,20 +645,9 @@ def decode_wav_samples(payload: bytes) -> tuple[int, int, tuple]:
     fingerprint the WAVEFORM rather than summarize it
     (audio_fingerprints below).  Same strict mono 16-bit PCM profile
     validation as decode_wav_pcm16."""
-    import io
     import struct
-    import wave
 
-    with wave.open(io.BytesIO(payload), "rb") as w:
-        if w.getnchannels() != 1 or w.getsampwidth() != 2:
-            raise ValueError("unsupported WAV profile (mono 16-bit only)")
-        if w.getcomptype() != "NONE":
-            raise ValueError("unsupported WAV compression")
-        rate = w.getframerate()
-        n = w.getnframes()
-        raw = w.readframes(n)
-    if len(raw) != 2 * n:
-        raise ValueError("WAV frame data length mismatch")
+    n, rate, raw = _wav_frames(payload)
     return n, rate, struct.unpack(f"<{n}h", raw)
 
 
@@ -1802,18 +1798,26 @@ def q_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join — never all-pairs at any corpus size).  At 100 TB the
     fingerprint stage is embarrassingly parallel over image bytes
     and everything after it moves 3 longs per image."""
+    docs = load_table(spark, sf_dir, "documents")
+    return _media_pairs(image_fingerprints(docs))
+
+
+def _media_pairs(fp: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, hamming) at Hamming <= {_IMG_HAMMING_K} over a
+    (doc_id, dhash_hi, dhash_lo) fingerprint frame: the frame is cut
+    once, so banding and both verify sides never re-enter its codec
+    stage, then the pigeonhole band rows, the capped band equi-join
+    and the exact popcount verify.  One definition for the image,
+    audio and video pairs."""
     from .dedup import _LSH_BUCKET_CAP, _all_bucket_pairs
 
-    docs = load_table(spark, sf_dir, "documents")
-    fp = image_fingerprints(docs).localCheckpoint(eager=False)
-    rows = _image_band_rows(fp)
-    hamming = _image_hamming_col()
+    rows = _image_band_rows(fp.localCheckpoint(eager=False))
     return (
         _all_bucket_pairs(rows, _LSH_BUCKET_CAP)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
+            _image_hamming_col().alias("hamming"),
         )
         .filter(F.col("hamming") <= _IMG_HAMMING_K)
         .distinct()
@@ -1917,12 +1921,7 @@ def q_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .localCheckpoint()
     )
-    nodes = (
-        pairs.select(F.col("a").alias("n"))
-        .unionByName(pairs.select(F.col("b").alias("n")))
-        .distinct()
-    )
-    lab = connected_components(pairs, nodes)
+    lab = connected_components(pairs)
     return lab.groupBy("cluster_id").agg(
         F.count("*").cast("bigint").alias("n_images"),
         (F.count("*") - 1).cast("bigint").alias("n_removed"),
@@ -2158,22 +2157,8 @@ def q_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the codec, then the capped band equi-join.  At 100 TB the
     fingerprint stage parallelizes over audio bytes and everything
     downstream moves 3 longs per clip."""
-    from .dedup import _LSH_BUCKET_CAP, _all_bucket_pairs
-
     docs = load_table(spark, sf_dir, "documents")
-    fp = audio_fingerprints(docs).localCheckpoint(eager=False)
-    rows = _image_band_rows(fp)
-    hamming = _image_hamming_col()
-    return (
-        _all_bucket_pairs(rows, _LSH_BUCKET_CAP)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= _IMG_HAMMING_K)
-        .distinct()
-    )
+    return _media_pairs(audio_fingerprints(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -2556,22 +2541,8 @@ def q_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fingerprint stage parallelizes over video bytes (frames never
     leave the worker) and everything downstream moves 3 longs per
     clip."""
-    from .dedup import _LSH_BUCKET_CAP, _all_bucket_pairs
-
     docs = load_table(spark, sf_dir, "documents")
-    fp = video_fingerprints(docs).localCheckpoint(eager=False)
-    rows = _image_band_rows(fp)
-    hamming = _image_hamming_col()
-    return (
-        _all_bucket_pairs(rows, _LSH_BUCKET_CAP)
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= _IMG_HAMMING_K)
-        .distinct()
-    )
+    return _media_pairs(video_fingerprints(docs))
 
 
 # ---------------------------------------------------------------------------
@@ -2753,12 +2724,7 @@ def q_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(vpairs)
         .distinct()
     )
-    nodes = (
-        edges.select(F.col("a").alias("n"))
-        .unionByName(edges.select(F.col("b").alias("n")))
-        .distinct()
-    )
-    lab = connected_components(edges, nodes)
+    lab = connected_components(edges)
     # one tagged union + ONE lab join + ONE conditional aggregate
     # replaces the former four per-channel join+agg diamonds (r16,
     # guide §2.4 — operations keyed the same way share one exchange):
@@ -2779,18 +2745,24 @@ def q_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[
                 F.sum(F.when(F.col("ch") == i, 1).otherwise(0))
                 .cast("bigint")
-                .alias(name)
-                for i, name in enumerate(
-                    (
-                        "n_text_pairs",
-                        "n_image_pairs",
-                        "n_audio_pairs",
-                        "n_video_pairs",
-                    )
-                )
+                .alias(f"n_{c}_pairs")
+                for i, c in enumerate(_CHANNELS)
             ]
         )
     )
+    return _family_report(lab, chan)
+
+
+_CHANNELS = ("text", "image", "audio", "video")
+
+
+def _family_report(lab: DataFrame, chan: DataFrame) -> DataFrame:
+    """(cluster_id, n_docs, n_<channel>_pairs..., modality) from the
+    (n, cluster_id) labels and the per-cluster channel edge counts
+    ``chan`` (cluster_id, n_<channel>_pairs...): family sizes, counts
+    of 0 for a family no edge of a channel touches, and the modality
+    string.  One definition for q_multimodal_dedup and the registry's
+    served report (streaming/jobs.family_registry_report)."""
     per = (
         lab.groupBy("cluster_id")
         .agg(F.count("*").cast("bigint").alias("n_docs"))
@@ -2798,18 +2770,12 @@ def q_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "cluster_id",
             "n_docs",
-            F.coalesce("n_text_pairs", F.lit(0)).cast("bigint").alias(
-                "n_text_pairs"
-            ),
-            F.coalesce("n_image_pairs", F.lit(0)).cast("bigint").alias(
-                "n_image_pairs"
-            ),
-            F.coalesce("n_audio_pairs", F.lit(0)).cast("bigint").alias(
-                "n_audio_pairs"
-            ),
-            F.coalesce("n_video_pairs", F.lit(0)).cast("bigint").alias(
-                "n_video_pairs"
-            ),
+            *[
+                F.coalesce(f"n_{c}_pairs", F.lit(0))
+                .cast("bigint")
+                .alias(f"n_{c}_pairs")
+                for c in _CHANNELS
+            ],
         )
     )
     # concat_ws skips NULLs in BOTH engines, so the modality string
@@ -2817,11 +2783,7 @@ def q_multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per.withColumn(
         "modality",
         F.concat_ws(
-            "+",
-            F.when(F.col("n_text_pairs") > 0, "text"),
-            F.when(F.col("n_image_pairs") > 0, "image"),
-            F.when(F.col("n_audio_pairs") > 0, "audio"),
-            F.when(F.col("n_video_pairs") > 0, "video"),
+            "+", *[F.when(F.col(f"n_{c}_pairs") > 0, c) for c in _CHANNELS]
         ),
     )
 
@@ -3249,42 +3211,66 @@ def q_ingest_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .index_cache import cached
 
     docs = load_table(spark, sf_dir, "documents")
-
-    def _ingest(store: str) -> None:
-        reg = f"{store}/registry"
-        channels = (
-            ("image", image_fingerprints),
-            ("audio", audio_fingerprints),
-            ("video", video_fingerprints),
-        )
-        merge = _jobs.family_registry_merge_fn(spark, reg)
-        for wave in range(3):
-            batch = docs.filter(
-                F.col("doc_id").isNotNull()
-                & (F.col("doc_id") % 3 == wave)
-            ).select("doc_id")
-            for ci, (name, fp_fn) in enumerate(channels):
-                prints = f"{store}/prints_{name}"
-                _jobs.media_prints_merge_fn(spark, prints, fp_fn)(
-                    batch, wave
-                )
-                edges = _jobs.media_dedup_check(
-                    spark, prints, batch, fp_fn
-                ).select(
-                    F.col("new_doc").alias("a"),
-                    F.col("corpus_doc").alias("b"),
-                )
-                merge(edges, wave * 10 + ci)
-
     store = cached(
         "ingest_registry",
         sf_dir,
         ("documents",),
         (sys.modules[__name__], _jobs, _dedup),
-        _ingest,
+        lambda store: _ingest_waves(spark, docs, store, text=False),
         extra="3waves-media",
     )
     return _jobs.family_registry_serve(spark, f"{store}/registry")
+
+
+def _ingest_waves(
+    spark: SparkSession, docs: DataFrame, store: str, text: bool
+) -> None:
+    """Build the family registry at ``{store}/registry`` by ingesting
+    ``docs`` in three waves (doc_id mod 3): per wave and channel, the
+    wave's prints merge into the channel's store under ``store``
+    first, the wave is screened against the updated store, and the
+    admitted (new_doc, corpus_doc) edges fold into the registry,
+    tagged with their channel.  The media channels always run;
+    ``text=True`` adds the MinHash band channel ahead of them."""
+    from ..streaming import jobs as _jobs
+
+    channels = (
+        ("image", image_fingerprints),
+        ("audio", audio_fingerprints),
+        ("video", video_fingerprints),
+    )
+    merge = _jobs.family_registry_merge_fn(spark, f"{store}/registry")
+    tstore = f"{store}/prints_text"
+    for wave in range(3):
+        batch = docs.filter(
+            F.col("doc_id").isNotNull() & (F.col("doc_id") % 3 == wave)
+        )
+        ids = batch.select("doc_id")
+        if text:
+            # text channel: merge the wave's bands FIRST (the store
+            # then IS the cumulative corpus), gate against it, fold
+            _jobs.contamination_bands_merge_fn(spark, tstore)(
+                batch.select("doc_id", "text"), wave
+            )
+            tedges = _jobs.text_dedup_check(
+                spark, tstore, batch.select("doc_id", "text")
+            ).select(
+                F.col("new_doc").alias("a"),
+                F.col("corpus_doc").alias("b"),
+                F.lit("text").alias("channel"),
+            )
+            merge(tedges, wave * 10 + 9)
+        for ci, (name, fp_fn) in enumerate(channels):
+            prints = f"{store}/prints_{name}"
+            _jobs.media_prints_merge_fn(spark, prints, fp_fn)(ids, wave)
+            edges = _jobs.media_dedup_check(
+                spark, prints, ids, fp_fn
+            ).select(
+                F.col("new_doc").alias("a"),
+                F.col("corpus_doc").alias("b"),
+                F.lit(name).alias("channel"),
+            )
+            merge(edges, wave * 10 + ci)
 
 
 # ---------------------------------------------------------------------------
@@ -3404,55 +3390,12 @@ def q_ingest_registry_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .index_cache import cached
 
     docs = load_table(spark, sf_dir, "documents")
-
-    def _ingest(store: str) -> None:
-        reg = f"{store}/registry"
-        channels = (
-            ("image", image_fingerprints),
-            ("audio", audio_fingerprints),
-            ("video", video_fingerprints),
-        )
-        merge = _jobs.family_registry_merge_fn(spark, reg)
-        tstore = f"{store}/prints_text"
-        for wave in range(3):
-            batch = docs.filter(
-                F.col("doc_id").isNotNull()
-                & (F.col("doc_id") % 3 == wave)
-            )
-            ids = batch.select("doc_id")
-            # text channel: merge the wave's bands FIRST (the store
-            # then IS the cumulative corpus), gate against it, fold
-            _jobs.contamination_bands_merge_fn(spark, tstore)(
-                batch.select("doc_id", "text"), wave
-            )
-            tedges = _jobs.text_dedup_check(
-                spark, tstore, batch.select("doc_id", "text")
-            ).select(
-                F.col("new_doc").alias("a"),
-                F.col("corpus_doc").alias("b"),
-                F.lit("text").alias("channel"),
-            )
-            merge(tedges, wave * 10 + 9)
-            for ci, (name, fp_fn) in enumerate(channels):
-                prints = f"{store}/prints_{name}"
-                _jobs.media_prints_merge_fn(spark, prints, fp_fn)(
-                    ids, wave
-                )
-                edges = _jobs.media_dedup_check(
-                    spark, prints, ids, fp_fn
-                ).select(
-                    F.col("new_doc").alias("a"),
-                    F.col("corpus_doc").alias("b"),
-                    F.lit(name).alias("channel"),
-                )
-                merge(edges, wave * 10 + ci)
-
     store = cached(
         "ingest_registry_full",
         sf_dir,
         ("documents",),
         (sys.modules[__name__], _jobs, _dedup),
-        _ingest,
+        lambda store: _ingest_waves(spark, docs, store, text=True),
         extra="3waves-allchannels",
     )
     return _jobs.family_registry_serve(spark, f"{store}/registry")
@@ -3910,43 +3853,11 @@ def q_radius_served(spark: SparkSession, sf_dir: str) -> DataFrame:
     the maintained edges are COMPLETE (no pair lost across merges)
     and the served BFS is exact min-distance."""
     from ..streaming import jobs as _jobs
-    from .dedup import _RADIUS_HOPS
+    from .dedup import _frontier_radius
 
     docs = load_table(spark, sf_dir, "documents")
     store = _registry_store(spark, sf_dir)
     half = spark.read.schema(_jobs._FAMILY_EDGE_DDL).parquet(
         f"{store}_edges"
     ).select("a", "b")
-    edges = (
-        half.unionByName(
-            half.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    seeds = (
-        docs.filter(
-            F.col("doc_id").isNotNull() & (F.col("doc_id") % 97 == 0)
-        )
-        .select(F.col("doc_id").alias("n"))
-        .withColumn("hops", F.lit(0))
-        .localCheckpoint()
-    )
-    dist = seeds
-    frontier = seeds.select("n")
-    for h in range(1, _RADIUS_HOPS + 1):
-        nxt = (
-            frontier.join(edges, frontier["n"] == edges["a"])
-            .select(F.col("b").alias("n"))
-            .distinct()
-        )
-        newf = (
-            nxt.join(dist.select("n"), "n", "left_anti")
-            .withColumn("hops", F.lit(h))
-            .localCheckpoint()
-        )
-        dist = dist.unionByName(newf).localCheckpoint()
-        frontier = newf.select("n")
-    return dist.select(
-        F.col("n").alias("doc_id"), F.col("hops").cast("int").alias("hops")
-    )
+    return _frontier_radius(docs, half)

@@ -840,12 +840,12 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     r07/r08 consensus shape — embeddings join the PAIR LIST, never
     all-pairs); the negative ring is one per-bucket window over 256
     uniform md5 buckets (no global sort), and the anti-join ships
-    only (lo, hi) id pairs.  The candidate pair list is checkpointed
-    once and shared by the positive scoring and the negative
-    anti-join — the standard diamond cut.  No RNG anywhere: the same
+    only (lo, hi) id pairs.  The candidate pair list is the cached
+    near-pair artifact, a small parquet read shared by the positive
+    scoring and the negative anti-join.  No RNG anywhere: the same
     corpus yields the same triples on any cluster layout, so a
     training run is reproducible bit-for-bit."""
-    pairs = near_pairs_cached(spark, sf_dir).localCheckpoint(eager=False)
+    pairs = near_pairs_cached(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     ea = emb.select(
         F.col("vec_id").alias("doc_a"), F.col("embedding").alias("a_emb")

@@ -56,6 +56,7 @@ from .similarity import (
     _RANGE_TAU,
     _empty_result,
     _ivf_qcells_sql,
+    _range_matches,
     _range_oracle,
 )
 
@@ -116,13 +117,16 @@ def _with_qemb(emb: DataFrame) -> DataFrame:
     )
 
 
-def pq_codes(emb: DataFrame, codebook: list[list[list[int]]]) -> DataFrame:
-    """(vec_id, code0..code{M-1}): per-subspace argmin of the exact
-    integer squared distance against ``codebook`` ([s][cid] quantized
-    subvectors), ties to the lower code.  Row-local fold over plan
-    literals — no join, no shuffle."""
-    df = _with_qemb(emb)
-    cols = [F.col("vec_id")]
+def _pq_folds(
+    df: DataFrame, codebook: list[list[list[int]]]
+) -> tuple[DataFrame, list[str]]:
+    """Attach each subspace's codebook as the plan literal ``__cb{s}``
+    and return one SQL fold per subspace over the quantized row
+    ``__q``: a struct of the argmin code ``bc`` (ties to the lower
+    code) and its exact integer squared distance ``bd``.  The one
+    definition of the PQ subspace search that pq_codes, the IVF-PQ
+    scan, the index build and the training objective share."""
+    folds = []
     for s, cents in enumerate(codebook):
         entries = F.array(
             *[
@@ -145,15 +149,24 @@ def pq_codes(emb: DataFrame, codebook: list[list[list[int]]]) -> DataFrame:
         # entire distance arithmetic per fold step (measured ~2x on
         # the PQ family's fixture times).  Strict < keeps the lowest
         # cid on ties, identical to the previous fold's total order.
-        fold = (
+        folds.append(
             f"aggregate(transform(__cb{s}, c -> "
             f"struct(c.cid AS bc, {d2} AS bd)), "
             f"struct(CAST(-1 AS INT) AS bc, CAST({_LONG_MAX} AS BIGINT) AS bd), "
-            f"(acc, x) -> IF(x.bd < acc.bd, x, acc)).bc"
+            f"(acc, x) -> IF(x.bd < acc.bd, x, acc))"
         )
         df = df.withColumn(f"__cb{s}", entries)
-        cols.append(F.expr(fold).alias(f"code{s}"))
-    return df.select(*cols)
+    return df, folds
+
+
+def pq_codes(emb: DataFrame, codebook: list[list[list[int]]]) -> DataFrame:
+    """(vec_id, code0..code{M-1}): per-subspace argmin of the exact
+    integer squared distance against ``codebook`` ([s][cid] quantized
+    subvectors), ties to the lower code.  Row-local fold over plan
+    literals — no join, no shuffle."""
+    df, folds = _pq_folds(_with_qemb(emb), codebook)
+    codes = [F.expr(f"{f}.bc").alias(f"code{s}") for s, f in enumerate(folds)]
+    return df.select(F.col("vec_id"), *codes)
 
 
 def _adc_lut(codebook: list[list[list[int]]], qvec: list[int]) -> list[list[int]]:
@@ -536,29 +549,10 @@ def pq_assignment_error(emb: DataFrame, codebook: list[list[list[int]]]) -> int:
     """Total exact integer quantization error: sum over rows and
     subspaces of the squared distance to the chosen centroid — the
     objective Lloyd minimizes, used by tests to prove training helps."""
-    df = _with_qemb(emb)
+    df, folds = _pq_folds(_with_qemb(emb), codebook)
     total = F.lit(0).cast("bigint")
-    for s, cents in enumerate(codebook):
-        entries = F.array(
-            *[
-                F.struct(
-                    F.lit(cid).alias("cid"),
-                    F.array(*[F.lit(int(v)) for v in cvec]).alias("qc"),
-                )
-                for cid, cvec in enumerate(cents)
-            ]
-        )
-        d2 = (
-            "aggregate(zip_with("
-            f"slice(__q, {s * _SUBDIM + 1}, {_SUBDIM}), c.qc, "
-            "(x, y) -> (x - y) * (x - y)), 0L, (a, v) -> a + v)"
-        )
-        fold = (
-            f"aggregate(__cb{s}, CAST({_LONG_MAX} AS BIGINT), "
-            f"(acc, c) -> least(acc, {d2}))"
-        )
-        df = df.withColumn(f"__cb{s}", entries)
-        total = total + F.expr(fold)
+    for fold in folds:
+        total = total + F.expr(f"{fold}.bd")
     return df.select(F.sum(total).alias("err")).collect()[0]["err"]
 
 
@@ -648,8 +642,8 @@ def _ivfpq_base(
 ) -> DataFrame:
     """(vec_id, cid, cos_raw, adc_d2) in ONE embeddings scan with
     ZERO shuffles: IVF cell argmax over literal centroids, exact
-    query cosine, per-subspace PQ code folds (the pq_codes fold,
-    inlined so codes / cell / cosine share one projection), and the
+    query cosine, per-subspace PQ code folds (_pq_folds, in the same
+    projection as the cell and the cosine), and the
     ADC lookup — everything row-local over plan literals.  The ADC
     expression is gated on `cid IN probe_cells` (the probe list is a
     driver literal), so the K x SUBDIM code folds — the expensive
@@ -675,39 +669,11 @@ def _ivfpq_base(
         "struct(CAST(-1 AS INT) AS cid, CAST('-Infinity' AS DOUBLE) AS c), "
         "(acc, x) -> IF(x.c > acc.c, x, acc)).cid"
     )
-    adc_terms = []
-    for s, scents in enumerate(cb):
-        entries = F.array(
-            *[
-                F.struct(
-                    F.lit(cid).alias("cid"),
-                    F.array(*[F.lit(int(v)) for v in cvec]).alias("qc"),
-                )
-                for cid, cvec in enumerate(scents)
-            ]
-        )
-        d2 = (
-            "aggregate(zip_with("
-            f"slice(__q, {s * _SUBDIM + 1}, {_SUBDIM}), c.qc, "
-            "(x, y) -> (x - y) * (x - y)), 0L, (a, v) -> a + v)"
-        )
-        # transform-then-min: d2 is evaluated ONCE per centroid.  The
-        # earlier single-aggregate form inlined d2 in both the IF
-        # condition and the kept struct — higher-order lambdas run
-        # interpreted (no whole-stage codegen), so that doubled the
-        # entire distance arithmetic per fold step (measured ~2x on
-        # the PQ family's fixture times).  Strict < keeps the lowest
-        # cid on ties, identical to the previous fold's total order.
-        fold = (
-            f"aggregate(transform(__cb{s}, c -> "
-            f"struct(c.cid AS bc, {d2} AS bd)), "
-            f"struct(CAST(-1 AS INT) AS bc, CAST({_LONG_MAX} AS BIGINT) AS bd), "
-            f"(acc, x) -> IF(x.bd < acc.bd, x, acc)).bc"
-        )
-        df = df.withColumn(f"__cb{s}", entries)
-        adc_terms.append(
-            f"element_at(element_at(__lut, {s + 1}), ({fold}) + 1)"
-        )
+    df, folds = _pq_folds(df, cb)
+    adc_terms = [
+        f"element_at(element_at(__lut, {s + 1}), ({fold}.bc) + 1)"
+        for s, fold in enumerate(folds)
+    ]
     lut_lit = F.array(*[F.array(*[F.lit(int(d)) for d in row]) for row in lut])
     coded = df.select(
         "vec_id",
@@ -882,36 +848,8 @@ def _code_projection(
     # them IN the codes files so per-query predicates reach the index
     # scan as pushed filters, never a corpus join at serve time
     cols.extend(F.col(m) for m in meta)
-    for s, scents in enumerate(cb):
-        entries = F.array(
-            *[
-                F.struct(
-                    F.lit(cid).alias("cid"),
-                    F.array(*[F.lit(int(v)) for v in cvec]).alias("qc"),
-                )
-                for cid, cvec in enumerate(scents)
-            ]
-        )
-        d2 = (
-            "aggregate(zip_with("
-            f"slice(__q, {s * _SUBDIM + 1}, {_SUBDIM}), c.qc, "
-            "(x, y) -> (x - y) * (x - y)), 0L, (a, v) -> a + v)"
-        )
-        # transform-then-min: d2 is evaluated ONCE per centroid.  The
-        # earlier single-aggregate form inlined d2 in both the IF
-        # condition and the kept struct — higher-order lambdas run
-        # interpreted (no whole-stage codegen), so that doubled the
-        # entire distance arithmetic per fold step (measured ~2x on
-        # the PQ family's fixture times).  Strict < keeps the lowest
-        # cid on ties, identical to the previous fold's total order.
-        fold = (
-            f"aggregate(transform(__cb{s}, c -> "
-            f"struct(c.cid AS bc, {d2} AS bd)), "
-            f"struct(CAST(-1 AS INT) AS bc, CAST({_LONG_MAX} AS BIGINT) AS bd), "
-            f"(acc, x) -> IF(x.bd < acc.bd, x, acc)).bc"
-        )
-        df = df.withColumn(f"__cb{s}", entries)
-        cols.append(F.expr(fold).alias(f"code{s}"))
+    df, folds = _pq_folds(df, cb)
+    cols.extend(F.expr(f"{f}.bc").alias(f"code{s}") for s, f in enumerate(folds))
     return df.select(*cols)
 
 
@@ -1243,25 +1181,7 @@ def ann_range_search(
             for j, (qid, _) in enumerate(qrows)
         ]
     )
-    return (
-        scored.select(
-            "vec_id",
-            F.explode(
-                F.filter(
-                    per_probe,
-                    lambda x: x["hit"]
-                    & (x["cos_raw"] >= F.lit(float(tau)))
-                    & (F.col("vec_id") != x["q_id"]),
-                )
-            ).alias("m"),
-        )
-        .select(
-            F.col("m.q_id").alias("q_id"),
-            "vec_id",
-            F.round("m.cos_raw", 4).alias("cos_sim"),
-        )
-        .orderBy("q_id", "vec_id")
-    )
+    return _range_matches(scored, per_probe, tau)
 
 
 @query(

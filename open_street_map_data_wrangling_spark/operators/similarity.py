@@ -527,6 +527,17 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan → project → filter → heap.  At 100 TB the bucket column is
     a zero-shuffle derivation and the table can be written
     partitioned by bucket for scan pruning."""
+    return _lsh_probe(spark, sf_dir, lambda qbucket: [qbucket])
+
+
+def _lsh_probe(spark: SparkSession, sf_dir: str, probes_of) -> DataFrame:
+    """Top-5 cosine neighbours of the fixed query among the vectors
+    whose {_N_PLANES}-bit sign-LSH bucket is in ``probes_of(qbucket)``
+    (qbucket = the query's own bucket): the plane collect, the
+    driver-side replay of the query's bucket, the row-local bucket
+    column and one scan + filter + heap.  One definition for
+    q_ann_lsh (its own bucket) and q_ann_lsh_multiprobe (plus the
+    one-bit flips)."""
     emb = load_table(spark, sf_dir, "embeddings")
     rows = (
         emb.filter(
@@ -562,7 +573,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         df.withColumn("__bucket", bucket)
         .filter(
-            (F.col("__bucket") == qbucket)
+            F.col("__bucket").isin(probes_of(qbucket))
             & (F.col("vec_id") != _QUERY_ID_IVF)
         )
         .select("vec_id", cosine_expr("embedding", "__qv").alias("cos_raw"))
@@ -1399,50 +1410,11 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot folds for the probe list (the _rank_cells_py argument), one
     scan + isin filter + heap.  With bucket-partitioned storage the
     probe still prunes to 7 of 64 directories at scan time."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.filter(
-            (F.col("vec_id") < _N_PLANES) | (F.col("vec_id") == _QUERY_ID_IVF)
-        )
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    raw = {int(r["vec_id"]): [float(x) for x in r["embedding"]] for r in rows}
-    if _QUERY_ID_IVF not in raw or any(
-        i not in raw for i in range(_N_PLANES)
-    ):
-        return _empty_result(emb, "vec_id BIGINT, cos_sim DOUBLE")
-    planes = [raw[i] for i in range(_N_PLANES)]
-    qv = raw[_QUERY_ID_IVF]
-
-    def pydot(a: list[float], b: list[float]) -> float:
-        s = 0.0
-        for x, y in zip(a, b):
-            s += x * y
-        return s
-
-    qbucket = sum(
-        1 << pid for pid, p in enumerate(planes) if pydot(qv, p) > 0
-    )
-    probes = [qbucket] + [qbucket ^ (1 << i) for i in range(_N_PLANES)]
-    df = emb.withColumn("__qv", _lit_vec(qv))
-    bucket = F.lit(0).cast("bigint")
-    for pid, p in enumerate(planes):
-        df = df.withColumn(f"__p{pid}", _lit_vec(p))
-        bucket = bucket + F.when(
-            dot_expr("embedding", f"__p{pid}") > 0,
-            F.lit(1 << pid).cast("bigint"),
-        ).otherwise(F.lit(0).cast("bigint"))
-    return (
-        df.withColumn("__bucket", bucket)
-        .filter(
-            F.col("__bucket").isin(probes)
-            & (F.col("vec_id") != _QUERY_ID_IVF)
-        )
-        .select("vec_id", cosine_expr("embedding", "__qv").alias("cos_raw"))
-        .orderBy(F.desc("cos_raw"), F.asc("vec_id"))
-        .limit(5)
-        .select("vec_id", F.round("cos_raw", 4).alias("cos_sim"))
+    return _lsh_probe(
+        spark,
+        sf_dir,
+        lambda qbucket: [qbucket]
+        + [qbucket ^ (1 << i) for i in range(_N_PLANES)],
     )
 
 
@@ -2111,15 +2083,25 @@ def q_ann_range(spark: SparkSession, sf_dir: str) -> DataFrame:
             for j, (qid, _) in enumerate(qrows)
         ]
     )
+    return _range_matches(
+        df.withColumn("__cid", cid_col), per_probe, _RANGE_TAU
+    )
+
+
+def _range_matches(scored: DataFrame, per_probe, tau: float) -> DataFrame:
+    """(q_id, vec_id, cos_sim) ordered by (q_id, vec_id): every
+    (q_id, cos_raw, hit) struct of the ``per_probe`` array column
+    whose vector lies in a probed cell (hit), clears cosine ``tau``
+    and is not the query itself, exploded row-locally — the match
+    step of q_ann_range and the served pq.ann_range_search."""
     return (
-        df.withColumn("__cid", cid_col)
-        .select(
+        scored.select(
             "vec_id",
             F.explode(
                 F.filter(
                     per_probe,
                     lambda x: x["hit"]
-                    & (x["cos_raw"] >= _RANGE_TAU)
+                    & (x["cos_raw"] >= F.lit(float(tau)))
                     & (F.col("vec_id") != x["q_id"]),
                 )
             ).alias("m"),

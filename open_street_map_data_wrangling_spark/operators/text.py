@@ -1840,6 +1840,17 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
+    return source_overlap_from(shd)
+
+
+def source_overlap_from(shd: DataFrame) -> DataFrame:
+    """The q_source_overlap matrix over ANY distinct (source, shh)
+    gram-hash relation: one gram-keyed collect_set of the sources
+    sharing each gram, its ordered pairs exploded row-locally, and a
+    #sources-sized size join.  Shared by the inline query (grams
+    hashed from the corpus) and the streaming gram store's serve path
+    (streaming/jobs.source_overlap_serve), so both answer from one
+    definition."""
     sizes = shd.groupBy("source").agg(F.count("*").alias("n"))
     pairs = (
         shd.groupBy("shh")
@@ -2050,26 +2061,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w_vec).cast("long").alias("vec_rank"),
         )
     )
-    fused = bm.join(vec, "doc_id", "full_outer").selectExpr(
-        "doc_id",
-        "bm25_rank",
-        "vec_rank",
-        f"CAST(coalesce(10000 div ({_RRF_K} + bm25_rank), 0) "
-        f"+ coalesce(10000 div ({_RRF_K} + vec_rank), 0) AS BIGINT)"
-        " AS rrf_fp",
-    )
-    w_out = W.orderBy(F.desc("rrf_fp"), "doc_id")
-    return (
-        fused.orderBy(F.desc("rrf_fp"), "doc_id")
-        .limit(_RRF_TOP)
-        .select(
-            F.row_number().over(w_out).cast("int").alias("rank"),
-            "doc_id",
-            F.col("bm25_rank").cast("long").alias("bm25_rank"),
-            F.col("vec_rank").cast("long").alias("vec_rank"),
-            "rrf_fp",
-        )
-    )
+    return _rrf_fuse(bm, vec, _RRF_TOP)
 
 
 def _rrf_empty(spark: SparkSession) -> DataFrame:
@@ -2090,10 +2082,10 @@ _RRF_NPROBE = 4  # cells probed by the served vector leg
 
 
 def _rrf_fuse(bm: DataFrame, vec: DataFrame, k: int) -> DataFrame:
-    """RRF(k={_RRF_K}) fusion of two bounded (doc_id, *_rank) lists —
-    the exact integer formula q_rrf_fusion defined, factored so the
-    inline and served paths fuse one definition.  Full outer join over
-    2×list rows, then a k-row heap."""
+    """RRF(k={_RRF_K}) fusion of two bounded (doc_id, *_rank) lists in
+    exact integer fixed point, the top ``k`` with both source ranks —
+    the one fusion q_rrf_fusion and the served rrf_search paths run.
+    Full outer join over 2×list rows, then a k-row heap."""
     fused = bm.join(vec, "doc_id", "full_outer").selectExpr(
         "doc_id",
         "bm25_rank",

@@ -2012,45 +2012,13 @@ def source_overlap_maintenance(doc_stream: DataFrame, store_dir: str):
 
 def source_overlap_serve(spark: SparkSession, store_dir: str) -> DataFrame:
     """The q_source_overlap matrix computed from the maintained store
-    alone — zero corpus scans; definitionally the same gram-keyed
-    collect_set + row-local pair explosion the inline query compiles,
-    so streamed == batch is pytest-pinned."""
-    shd = spark.read.schema("source STRING, shh BIGINT").parquet(store_dir)
-    sizes = shd.groupBy("source").agg(F.count("*").alias("n"))
-    pairs = (
-        shd.groupBy("shh")
-        .agg(F.array_sort(F.collect_set("source")).alias("srcs"))
-        .filter(F.size("srcs") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(srcs, (x, i) -> "
-                    "transform(slice(srcs, i + 2, size(srcs) - i - 1), "
-                    "y -> struct(x AS src_a, y AS src_b))))"
-                )
-            ).alias("p")
-        )
-        .groupBy("p.src_a", "p.src_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    return (
-        pairs.join(
-            sizes.select(F.col("source").alias("src_a"), F.col("n").alias("n_a")),
-            "src_a",
-        )
-        .join(
-            sizes.select(F.col("source").alias("src_b"), F.col("n").alias("n_b")),
-            "src_b",
-        )
-        .selectExpr(
-            "src_a",
-            "src_b",
-            "CAST(n_a AS BIGINT) AS n_a",
-            "CAST(n_b AS BIGINT) AS n_b",
-            "CAST(n_inter AS BIGINT) AS n_inter",
-            "CAST((n_inter * 10000) div (n_a + n_b - n_inter) AS BIGINT)"
-            " AS jaccard_bp",
-        )
+    alone — zero corpus scans: text.source_overlap_from over the
+    stored (source, shh) relation, so streamed == batch is
+    pytest-pinned."""
+    from ..operators.text import source_overlap_from
+
+    return source_overlap_from(
+        spark.read.schema("source STRING, shh BIGINT").parquet(store_dir)
     )
 
 
@@ -2198,12 +2166,7 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
         )
         base = lab.unionByName(newn)
         if ce.head(1):
-            nodes = (
-                ce.select(F.col("a").alias("n"))
-                .unionByName(ce.select(F.col("b").alias("n")))
-                .distinct()
-            )
-            relab = connected_components(ce, nodes).select(
+            relab = connected_components(ce).select(
                 F.col("n").alias("cluster_id"),
                 F.col("cluster_id").alias("__new"),
             )
@@ -2257,6 +2220,8 @@ def family_registry_report(
     endpoints share a cluster by invariant), a conditional-count
     pivot over the four known channels.  Hash-equality with the
     inline capstone is the q_registry_report correctness gate."""
+    from ..operators.multimodal import _CHANNELS, _family_report
+
     lab = spark.read.schema(_FAMILY_DDL).parquet(store_dir)
     edges = spark.read.schema(_FAMILY_EDGE_DDL).parquet(
         f"{store_dir}_edges"
@@ -2268,34 +2233,10 @@ def family_registry_report(
             F.sum(F.when(F.col("channel") == c, 1).otherwise(0))
             .cast("bigint")
             .alias(f"n_{c}_pairs")
-            for c in ("text", "image", "audio", "video")
+            for c in _CHANNELS
         ]
     )
-    per = (
-        lab.groupBy("cluster_id")
-        .agg(F.count("*").cast("bigint").alias("n_docs"))
-        .join(cc, "cluster_id", "left")
-        .select(
-            "cluster_id",
-            "n_docs",
-            *[
-                F.coalesce(f"n_{c}_pairs", F.lit(0))
-                .cast("bigint")
-                .alias(f"n_{c}_pairs")
-                for c in ("text", "image", "audio", "video")
-            ],
-        )
-    )
-    return per.withColumn(
-        "modality",
-        F.concat_ws(
-            "+",
-            F.when(F.col("n_text_pairs") > 0, "text"),
-            F.when(F.col("n_image_pairs") > 0, "image"),
-            F.when(F.col("n_audio_pairs") > 0, "audio"),
-            F.when(F.col("n_video_pairs") > 0, "video"),
-        ),
-    )
+    return _family_report(lab, cc)
 
 
 def family_registry_purge(
@@ -2382,13 +2323,8 @@ def family_registry_purge(
             .select("a", "b")
             .localCheckpoint()
         )
-        nodes = (
-            sub.select(F.col("a").alias("n"))
-            .unionByName(sub.select(F.col("b").alias("n")))
-            .distinct()
-        )
         if sub.head(1):
-            relab = connected_components(sub, nodes)
+            relab = connected_components(sub)
         else:
             relab = spark.createDataFrame([], _FAMILY_DDL)
         kept = lab.join(F.broadcast(touched), "cluster_id", "left_anti").select(

@@ -298,39 +298,146 @@ def _union_find_clusters(pairs, nodes):
         ([], range(4)),
         ([(3, 3)], range(5)),
         ([(2, 1), (1, 2), (2, 1), (4, 3), (3, 4), (1, 3)], range(1, 7)),
+        ([(1, 2), (2, 3), (3, 4), (4, 5), (7, 7)], None),
+        ([], None),
+        ([(3, 3)], None),
+        ([(2, 1), (1, 2), (2, 1), (4, 3), (3, 4), (1, 3), (9, 8)], None),
     ],
     ids=["chain-self-loop-isolated", "no-edges", "only-self-loop",
-         "duplicate-and-reversed"],
+         "duplicate-and-reversed", "endpoints-chain-self-loop",
+         "endpoints-no-edges", "endpoints-only-self-loop",
+         "endpoints-duplicate-and-reversed"],
 )
 def test_connected_components_matches_union_find(spark, pairs, nodes):
     """connected_components labels every node with the minimum node id
     of its component, as union-find does, on the loop's edge cases:
     no edges at all (the first probe counts no labels), a self-loop,
-    isolated nodes, and pairs given twice or in both directions."""
+    isolated nodes, and pairs given twice or in both directions.  With
+    nodes=None the nodes are the edge list's endpoints, returned
+    straight from the label table (no final join)."""
     from open_street_map_data_wrangling_spark.operators.dedup import (
         connected_components,
     )
 
     edges = spark.createDataFrame(pairs, "a long, b long")
-    nodes_df = spark.createDataFrame([(n,) for n in nodes], "n long")
-    got = {
-        r.n: r.cluster_id
-        for r in connected_components(edges, nodes_df).collect()
-    }
+    if nodes is None:
+        nodes_df = None
+        nodes = sorted({n for pair in pairs for n in pair})
+    else:
+        nodes_df = spark.createDataFrame([(n,) for n in nodes], "n long")
+    rows = connected_components(edges, nodes_df).collect()
+    got = {r.n: r.cluster_id for r in rows}
+    assert len(rows) == len(got)  # one row per node
     assert got == _union_find_clusters(pairs, nodes)
 
 
-def test_dedup_clusters_job_count_pinned(spark, count_jobs, sf_dir):
-    """q_dedup_clusters at sf0.001 starts at most 13 jobs per warm
-    write: the round probe sizes nothing and counts the labels, so the
-    separate edge count (16 jobs) is gone."""
-    q = load_all_queries()["q_dedup_clusters"].spark
+def _warm_write_jobs(spark, count_jobs, sf_dir, name):
+    """Jobs one warm noop write of registry query ``name`` starts."""
+    q = load_all_queries()[name].spark
 
     def run():
         q(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
     run()  # builds the cached pair artifact
-    assert count_jobs(run) <= 13
+    return count_jobs(run)
+
+
+def test_dedup_clusters_job_count_pinned(spark, count_jobs, sf_dir):
+    """q_dedup_clusters at sf0.001 starts at most 12 jobs per warm
+    write: the round probe sizes nothing and counts the labels (the
+    separate edge count made 16), and the cached pairs enter
+    connected_components uncut (their eager cut made 13)."""
+    assert _warm_write_jobs(spark, count_jobs, sf_dir, "q_dedup_clusters") <= 12
+
+
+def test_keep_best_job_count_pinned(spark, count_jobs, sf_dir):
+    """q_keep_best at sf0.001 starts at most 13 jobs per warm write:
+    the cached pairs enter uncut, and connected_components returns the
+    endpoints' labels without re-joining a hand-built node set (17
+    with both)."""
+    assert _warm_write_jobs(spark, count_jobs, sf_dir, "q_keep_best") <= 13
+
+
+def _bfs_hops(pairs, docs, hops):
+    """doc_id -> min hop distance from the seeds (doc_id % 97 == 0)
+    over the undirected pairs, up to ``hops`` hops, by a Python BFS."""
+    adj = {}
+    for a, b in pairs:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    dist = {d: 0 for d in docs if d is not None and d % 97 == 0}
+    frontier = list(dist)
+    for h in range(1, hops + 1):
+        nxt = []
+        for n in frontier:
+            for m in sorted(adj.get(n, ())):
+                if m not in dist:
+                    dist[m] = h
+                    nxt.append(m)
+        frontier = nxt
+    return dist
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [(i, i + 1) for i in range(0, 7)],
+        [(97, 98), (98, 99), (99, 100), (100, 101), (101, 97)],
+        [(1, 2)],
+        [(1, 0), (0, 1), (0, 1), (2, 1), (1, 2)],
+        [(0, 97), (97, 5), (0, 6), (6, 7)],
+    ],
+    ids=["chain-longer-than-hops", "cycle", "seed-without-edges",
+         "duplicate-and-reversed", "adjacent-seeds"],
+)
+def test_frontier_radius_matches_python_bfs(spark, pairs):
+    """dedup._frontier_radius, behind q_contamination_radius and
+    q_radius_served, labels each node within _RADIUS_HOPS hops of a
+    seed with its minimum hop distance, as a Python BFS does.  The
+    documents hold the seeds 0 and 97 even where no edge touches them,
+    a NULL doc_id and every edge endpoint."""
+    from open_street_map_data_wrangling_spark.operators.dedup import (
+        _RADIUS_HOPS,
+        _frontier_radius,
+    )
+
+    ids = sorted({0, 97, 50} | {n for pair in pairs for n in pair})
+    docs = spark.createDataFrame(
+        [(d,) for d in ids] + [(None,)], "doc_id long"
+    )
+    edges = spark.createDataFrame(pairs, "a long, b long")
+    rows = _frontier_radius(docs, edges).collect()
+    got = {r.doc_id: r.hops for r in rows}
+    assert len(rows) == len(got)  # one row per reached node
+    assert got == _bfs_hops(pairs, ids, _RADIUS_HOPS)
+
+
+def test_greedy_chain_warns_when_round_budget_is_spent(spark, caplog):
+    """greedy_chain_rejects rejects the docs still undecided when
+    max_iters runs out, and says so once on dedup's logger; a run that
+    finishes inside the budget rejects only what the rounds decide and
+    logs nothing."""
+    import logging
+
+    from open_street_map_data_wrangling_spark.operators.dedup import (
+        greedy_chain_rejects,
+    )
+
+    logger = "open_street_map_data_wrangling_spark.operators.dedup"
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "doc_a long, doc_b long"
+    )
+    caplog.set_level(logging.WARNING, logger=logger)
+    cut = greedy_chain_rejects(pairs, max_iters=1)
+    assert sorted(r.doc_id for r in cut.collect()) == [2, 3, 4, 5]
+    warned = [r for r in caplog.records if r.name == logger]
+    assert len(warned) == 1 and warned[0].levelno == logging.WARNING
+    assert "max_iters=1" in warned[0].getMessage()
+
+    caplog.clear()
+    full = greedy_chain_rejects(pairs)
+    assert sorted(r.doc_id for r in full.collect()) == [2, 4]
+    assert not [r for r in caplog.records if r.name == logger]
 
 
 def test_connected_components_raises_without_fixpoint(spark):
