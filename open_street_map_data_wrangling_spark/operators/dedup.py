@@ -781,16 +781,21 @@ def greedy_chain_rejects(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
     removal), rejects every larger neighbor of a just-accepted doc,
     then drops decided endpoints' edges.  Rounds = longest surviving
     candidate chain, not component diameter — chains beyond a few
-    links are template collisions the LSH bucket cap already prunes,
-    and each round pays a ``limit(1).count()`` probe plus two eager
-    cuts of the (small) undecided pair sets.  Docs left undecided at
-    max_iters are rejected conservatively (dedup must never
-    over-admit), with one WARNING on this module's logger."""
-    e = pairs.select("doc_a", "doc_b").distinct().localCheckpoint()
-    rejected = None
-    for _ in range(max_iters):
+    links are template collisions the LSH bucket cap already prunes.
+    The rounds run through scale.spark_rounds at the width of the
+    cut pair set; each round runs one action, the ``limit(1).count()``
+    probe, which also materializes the previous round's lazy cut of
+    the undecided pairs.  Docs left undecided at max_iters are
+    rejected conservatively (dedup must never over-admit), with one
+    WARNING on this module's logger."""
+    from .scale import spark_rounds
+
+    e0 = pairs.select("doc_a", "doc_b").distinct().localCheckpoint()
+    rejected = []
+
+    def step(e):
         if e.limit(1).count() == 0:
-            break
+            return None
         # accept: docs that never appear as a larger member (no
         # undecided-or-accepted smaller neighbor remains)
         acc = e.select(F.col("doc_a").alias("doc_id")).subtract(
@@ -801,16 +806,17 @@ def greedy_chain_rejects(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
             e.join(acc, e.doc_a == acc.doc_id, "left_semi")
             .select(F.col("doc_b").alias("doc_id"))
             .distinct()
-            .localCheckpoint()
         )
-        rejected = rej if rejected is None else rejected.unionByName(rej).distinct()
+        rejected.append(rej)
         decided = acc.unionByName(rej)
-        e = (
-            e.join(decided, e.doc_a == decided.doc_id, "left_anti")
-            .join(decided, e.doc_b == decided.doc_id, "left_anti")
-            .localCheckpoint()
+        return e.join(decided, e.doc_a == decided.doc_id, "left_anti").join(
+            decided, e.doc_b == decided.doc_id, "left_anti"
         )
-    else:
+
+    e, converged = spark_rounds(
+        e0, step, width_of=e0, max_rounds=max_iters, what="greedy chain"
+    )
+    if not converged:
         # the round budget is spent; the last round may still have
         # decided every doc, so warn only when some are left
         if e.head(1):
@@ -820,19 +826,14 @@ def greedy_chain_rejects(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
                 max_iters,
             )
         # reject everything still undecided
-        leftover = (
-            e.select(F.col("doc_a").alias("doc_id"))
-            .unionByName(e.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
+        rejected.append(
+            e.select(F.col("doc_a").alias("doc_id")).unionByName(
+                e.select(F.col("doc_b").alias("doc_id"))
+            )
         )
-        rejected = (
-            leftover
-            if rejected is None
-            else rejected.unionByName(leftover).distinct()
-        )
-    if rejected is None:
+    if not rejected:
         return pairs.select(F.col("doc_a").alias("doc_id")).limit(0)
-    return rejected
+    return functools.reduce(DataFrame.unionByName, rejected).distinct()
 
 
 @query(
@@ -3144,8 +3145,8 @@ def q_contamination_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovered nodes against the edge relation (broadcast-sized
     frontier at fixture scale, shuffle equi-join at 100 TB), anti-
     joins the visited set so a node is labeled at its FIRST
-    (minimum) hop, and localCheckpoints both accumulators to keep
-    {_RADIUS_HOPS} rounds of lineage flat.  Work is O(edges touched
+    (minimum) hop, and scale.spark_rounds cuts each round lazily to
+    keep {_RADIUS_HOPS} rounds of lineage flat.  Work is O(edges touched
     per round), never O(nodes²); the hop bound makes the plan depth
     static.  The oracle replays seeds + symmetric edges + a
     hop-bounded recursive closure and takes min(hop) — hash equality
@@ -3162,9 +3163,13 @@ def _frontier_radius(docs: DataFrame, half_edges: DataFrame) -> DataFrame:
     flagged seeds (doc_id ≡ 0 mod 97 in ``docs``) over the undirected
     graph of the (a, b) ``half_edges``, at its minimum hop distance.
     Frontier BFS: each round joins only the newly found nodes to the
-    symmetric edges and anti-joins the visited set.  The one
-    definition behind q_contamination_radius (text pairs) and
+    symmetric edges and anti-joins the visited set.  The rounds run
+    through scale.spark_rounds at the width of the cut edge relation,
+    so the hops plan lazily and run inside the caller's action.  The
+    one definition behind q_contamination_radius (text pairs) and
     multimodal.q_radius_served (the registry's edge store)."""
+    from .scale import spark_rounds
+
     edges = (
         half_edges.unionByName(
             half_edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
@@ -3178,23 +3183,29 @@ def _frontier_radius(docs: DataFrame, half_edges: DataFrame) -> DataFrame:
         )
         .select(F.col("doc_id").alias("n"))
         .withColumn("hops", F.lit(0))
-        .localCheckpoint()
     )
-    dist = seeds
-    frontier = seeds.select("n")
-    for h in range(1, _RADIUS_HOPS + 1):
+    hop = 0
+
+    def step(dist):
+        nonlocal hop
+        hop += 1
+        # the frontier is the nodes the previous hop found
+        frontier = dist.filter(F.col("hops") == hop - 1).select("n")
         nxt = (
             frontier.join(edges, frontier["n"] == edges["a"])
             .select(F.col("b").alias("n"))
             .distinct()
         )
-        newf = (
-            nxt.join(dist.select("n"), "n", "left_anti")
-            .withColumn("hops", F.lit(h))
-            .localCheckpoint()
+        newf = nxt.join(dist.select("n"), "n", "left_anti").withColumn(
+            "hops", F.lit(hop)
         )
-        dist = dist.unionByName(newf).localCheckpoint()
-        frontier = newf.select("n")
+        return dist.unionByName(newf)
+
+    # fixed rounds by contract (the oracle replays _RADIUS_HOPS hops)
+    dist, _ = spark_rounds(
+        seeds, step, width_of=edges, max_rounds=_RADIUS_HOPS,
+        what="frontier radius",
+    )
     return dist.select(
         F.col("n").alias("doc_id"), F.col("hops").cast("int").alias("hops")
     )

@@ -654,21 +654,13 @@ def _ivfpq_base(
     Callers localCheckpoint the result; every downstream branch
     (candidate top-k, exact top-k, candidate count) is then a
     filter + heap that never re-touches the table."""
-    from .similarity import _with_cos_cols
+    from .similarity import _cell_argmax, _with_cos_cols
 
     lut = _adc_lut(cb, qvec_q)
     # query vector folded in as a pseudo-centroid: its cosine shares
     # the hoisted row self-norm (see _with_cos_cols) instead of
     # re-folding norms per row per centroid
     df = _with_cos_cols(_with_qemb(emb), cents + [qv])
-    cand_structs = ", ".join(
-        f"struct({cid} AS cid, __cos{cid} AS c)" for cid in range(len(cents))
-    )
-    argmax = F.expr(
-        f"aggregate(array({cand_structs}), "
-        "struct(CAST(-1 AS INT) AS cid, CAST('-Infinity' AS DOUBLE) AS c), "
-        "(acc, x) -> IF(x.c > acc.c, x, acc)).cid"
-    )
     df, folds = _pq_folds(df, cb)
     adc_terms = [
         f"element_at(element_at(__lut, {s + 1}), ({fold}.bc) + 1)"
@@ -677,7 +669,7 @@ def _ivfpq_base(
     lut_lit = F.array(*[F.array(*[F.lit(int(d)) for d in row]) for row in lut])
     coded = df.select(
         "vec_id",
-        argmax.alias("cid"),
+        _cell_argmax(len(cents)).alias("cid"),
         F.col(f"__cos{len(cents)}").alias("cos_raw"),
         "__q",
         *[F.col(f"__cb{s}") for s in range(_M)],
@@ -829,18 +821,10 @@ def _code_projection(
     it free for the ADC scan (which reads only vec_id + code*) and
     gives the exact-rerank serve stage (rrf_search) a
     cell-partitioned raw-vector store with zero extra writes."""
-    from .similarity import _with_cos_cols
+    from .similarity import _cell_argmax, _with_cos_cols
 
     df = _with_cos_cols(_with_qemb(vecs), cents)
-    cand_structs = ", ".join(
-        f"struct({cid} AS cid, __cos{cid} AS c)" for cid in range(len(cents))
-    )
-    argmax = F.expr(
-        f"aggregate(array({cand_structs}), "
-        "struct(CAST(-1 AS INT) AS cid, CAST('-Infinity' AS DOUBLE) AS c), "
-        "(acc, x) -> IF(x.c > acc.c, x, acc)).cid"
-    )
-    cols = [F.col("vec_id"), argmax.alias("cid")]
+    cols = [F.col("vec_id"), _cell_argmax(len(cents)).alias("cid")]
     if with_embedding:
         cols.append(F.col("embedding"))
     # metadata columns ride through the projection for free (they are

@@ -13,11 +13,12 @@ query in the inventory can adopt them:
   that lets an iterative operator solve a tiny relation on the driver
   and return it as an Arrow local frame (local_frame), while larger
   relations keep the Spark round loop
-* the Spark round loop — spark_rounds, the one loop the five
-  fixpoints (connected components, PageRank, label propagation,
-  k-core, BPE training) run their rounds through: AQE off, a shuffle
-  width taken from a materialized relation, a lazy cut per round, and
-  one log record of the rounds run and whether they converged
+* the Spark round loop — spark_rounds, the one loop the seven
+  fixpoints (connected components, the greedy dedup chain, the
+  frontier BFS, PageRank, label propagation, k-core, BPE training)
+  run their rounds through: AQE off, a shuffle width taken from a
+  materialized relation, a lazy cut per round, and one log record of
+  the rounds run and whether they converged
 
 tests/test_scale_patterns.py proves each pattern equivalent to its
 naive form, and additionally demonstrates (with plan assertions)

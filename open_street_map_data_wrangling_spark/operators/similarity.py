@@ -27,7 +27,7 @@ non-probed cells at scan time.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
@@ -324,6 +324,21 @@ def _with_cos_cols(df: DataFrame, cents: list[list[float]]) -> DataFrame:
     return out.drop("__selfn", *[f"__c{i}" for i in range(len(cents))])
 
 
+def _cell_argmax(n: int) -> Column:
+    """The IVF cell id of a row carrying _with_cos_cols' ``__cos0`` ..
+    ``__cos{n-1}``: the index of the largest cosine, the first on a
+    tie.  One row-local fold over a struct array, so cell assignment
+    needs no join, shuffle or window."""
+    cand_structs = ", ".join(
+        f"struct({cid} AS cid, __cos{cid} AS c)" for cid in range(n)
+    )
+    return F.expr(
+        f"aggregate(array({cand_structs}), "
+        "struct(CAST(-1 AS INT) AS cid, CAST('-Infinity' AS DOUBLE) AS c), "
+        "(acc, x) -> IF(x.c > acc.c, x, acc)).cid"
+    )
+
+
 def _empty_result(emb: DataFrame, ddl: str) -> DataFrame:
     """Registry-wide empty-input contract (tests/test_empty_input.py):
     when the bounded driver-side collect finds no query vector /
@@ -372,18 +387,9 @@ def _ivf_scored_literal(emb: DataFrame, query_id: int) -> DataFrame:
     # cosine shares the hoisted self-norm (_with_cos_cols) instead
     # of re-folding it per row
     df = _with_cos_cols(emb, cents + [qv])
-    cand_structs = ", ".join(
-        f"struct({cid} AS cid, __cos{cid} AS c)"
-        for cid in range(len(cents))
-    )
-    argmax = F.expr(
-        f"aggregate(array({cand_structs}), "
-        "struct(CAST(-1 AS INT) AS cid, CAST('-Infinity' AS DOUBLE) AS c), "
-        "(acc, x) -> IF(x.c > acc.c, x, acc)).cid"
-    )
     return df.select(
         "vec_id",
-        argmax.alias("cid"),
+        _cell_argmax(len(cents)).alias("cid"),
         F.col(f"__cos{len(cents)}").alias("cos_raw"),
     )
 
@@ -911,22 +917,12 @@ def _hardneg_base_cached(spark: SparkSession, sf_dir: str) -> str:
             empty.write.mode("overwrite").parquet(f"{path}/samp")
             return
         df = _with_cos_cols(emb, cents)
-        cand_structs = ", ".join(
-            f"struct({cid} AS cid, __cos{cid} AS c)"
-            for cid in range(len(cents))
-        )
-        argmax = F.expr(
-            f"aggregate(array({cand_structs}), "
-            "struct(CAST(-1 AS INT) AS cid, "
-            "CAST('-Infinity' AS DOUBLE) AS c), "
-            "(acc, x) -> IF(x.c > acc.c, x, acc)).cid"
-        )
         # per-vector norm ONCE at build (N folds) rather than inside
         # the pair join (Σ|cell|² folds) — same doubles in the same
         # IEEE order as the pre-cache inline form
         tagged = df.select(
             "vec_id",
-            argmax.alias("cid"),
+            _cell_argmax(len(cents)).alias("cid"),
             "embedding",
             F.sqrt(dot_expr("embedding", "embedding")).alias("nrm"),
         ).localCheckpoint(eager=False)
@@ -1064,15 +1060,7 @@ def _with_cell(df: DataFrame, cents: list[list[float]]) -> DataFrame:
     cosine, shared by the index build and the serve-side batch
     tagging so both sides agree bit-for-bit."""
     out = _with_cos_cols(df, cents)
-    cand_structs = ", ".join(
-        f"struct({cid} AS cid, __cos{cid} AS c)" for cid in range(len(cents))
-    )
-    argmax = F.expr(
-        f"aggregate(array({cand_structs}), "
-        "struct(CAST(-1 AS INT) AS cid, CAST('-Infinity' AS DOUBLE) AS c), "
-        "(acc, x) -> IF(x.c > acc.c, x, acc)).cid"
-    )
-    return out.withColumn("cid", argmax).drop(
+    return out.withColumn("cid", _cell_argmax(len(cents))).drop(
         *[f"__cos{i}" for i in range(len(cents))]
     )
 
@@ -2063,14 +2051,6 @@ def q_ann_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         qid: _rank_cells_py(cents, qv)[:_RANGE_NPROBE] for qid, qv in qrows
     }
     df = _with_cos_cols(emb, cents + [qv for _, qv in qrows])
-    cand_structs = ", ".join(
-        f"struct({cid} AS cid, __cos{cid} AS c)" for cid in range(len(cents))
-    )
-    cid_col = F.expr(
-        f"aggregate(array({cand_structs}), "
-        "struct(CAST(-1 AS INT) AS cid, CAST('-Infinity' AS DOUBLE) AS c), "
-        "(acc, x) -> IF(x.c > acc.c, x, acc)).cid"
-    )
     per_probe = F.array(
         *[
             F.struct(
@@ -2084,7 +2064,7 @@ def q_ann_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     return _range_matches(
-        df.withColumn("__cid", cid_col), per_probe, _RANGE_TAU
+        df.withColumn("__cid", _cell_argmax(len(cents))), per_probe, _RANGE_TAU
     )
 
 

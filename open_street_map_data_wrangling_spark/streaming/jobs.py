@@ -2125,7 +2125,6 @@ def family_registry_merge_fn(spark: SparkSession, store_dir: str):
                 .parquet(edir)
                 .unionByName(ech)
                 .distinct()
-                .localCheckpoint()
             )
 
         # edge side-store first (see docstring for the crash order)
@@ -2290,11 +2289,8 @@ def family_registry_purge(
 
         def fold_edges(exists: bool) -> DataFrame:
             nonlocal surv
-            edges = (
-                spark.read.schema(_FAMILY_EDGE_DDL)
-                .parquet(edir)
-                .localCheckpoint()
-            )
+            edges = spark.read.schema(_FAMILY_EDGE_DDL).parquet(edir)
+            # eager: `sub` reads surv after the edge store is swapped
             surv = (
                 edges.join(
                     F.broadcast(ts.select(F.col("n").alias("a"))),

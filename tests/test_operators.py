@@ -358,6 +358,34 @@ def test_keep_best_job_count_pinned(spark, count_jobs, sf_dir):
     assert _warm_write_jobs(spark, count_jobs, sf_dir, "q_keep_best") <= 13
 
 
+def test_radius_job_counts_pinned(spark, count_jobs, sf_dir):
+    """q_contamination_radius and q_radius_served at sf0.001 start at
+    most 8 jobs per warm write each: the hops run as lazy rounds of
+    scale.spark_rounds inside the write (the eager seed cut and two
+    eager cuts per hop made 17 and 20)."""
+    for name in ("q_contamination_radius", "q_radius_served"):
+        assert _warm_write_jobs(spark, count_jobs, sf_dir, name) <= 8, name
+
+
+def test_greedy_chain_job_count_pinned(spark, count_jobs, sf_dir):
+    """greedy_chain_rejects over the sf0.001 near pairs starts at most
+    12 jobs per warm write: one probe per round, whose action also
+    materializes the previous round's lazy cut (the probe plus two
+    eager cuts per round made 16)."""
+    from open_street_map_data_wrangling_spark.operators.dedup import (
+        greedy_chain_rejects,
+        near_pairs_cached,
+    )
+
+    def run():
+        greedy_chain_rejects(near_pairs_cached(spark, sf_dir)).write.format(
+            "noop"
+        ).mode("overwrite").save()
+
+    run()  # builds the cached pair artifact
+    assert count_jobs(run) <= 12
+
+
 def _bfs_hops(pairs, docs, hops):
     """doc_id -> min hop distance from the seeds (doc_id % 97 == 0)
     over the undirected pairs, up to ``hops`` hops, by a Python BFS."""
@@ -390,16 +418,20 @@ def _bfs_hops(pairs, docs, hops):
     ids=["chain-longer-than-hops", "cycle", "seed-without-edges",
          "duplicate-and-reversed", "adjacent-seeds"],
 )
-def test_frontier_radius_matches_python_bfs(spark, pairs):
+def test_frontier_radius_matches_python_bfs(spark, pairs, caplog):
     """dedup._frontier_radius, behind q_contamination_radius and
     q_radius_served, labels each node within _RADIUS_HOPS hops of a
-    seed with its minimum hop distance, as a Python BFS does.  The
+    seed with its minimum hop distance, as a Python BFS does, in one
+    scale.spark_rounds loop of exactly _RADIUS_HOPS rounds.  The
     documents hold the seeds 0 and 97 even where no edge touches them,
     a NULL doc_id and every edge endpoint."""
+    from open_street_map_data_wrangling_spark.operators import scale
     from open_street_map_data_wrangling_spark.operators.dedup import (
         _RADIUS_HOPS,
         _frontier_radius,
     )
+
+    caplog.set_level("INFO", logger=scale.__name__)
 
     ids = sorted({0, 97, 50} | {n for pair in pairs for n in pair})
     docs = spark.createDataFrame(
@@ -410,34 +442,116 @@ def test_frontier_radius_matches_python_bfs(spark, pairs):
     got = {r.doc_id: r.hops for r in rows}
     assert len(rows) == len(got)  # one row per reached node
     assert got == _bfs_hops(pairs, ids, _RADIUS_HOPS)
+    loops = [r.getMessage() for r in caplog.records if r.name == scale.__name__]
+    assert len(loops) == 1
+    assert loops[0].startswith(
+        f"frontier radius: spark path ({_RADIUS_HOPS} rounds, "
+        "round budget spent, width "
+    )
 
 
 def test_greedy_chain_warns_when_round_budget_is_spent(spark, caplog):
     """greedy_chain_rejects rejects the docs still undecided when
     max_iters runs out, and says so once on dedup's logger; a run that
     finishes inside the budget rejects only what the rounds decide and
-    logs nothing."""
+    logs nothing there.  Either way its rounds run as one
+    scale.spark_rounds loop, which logs the rounds run and whether
+    they converged."""
     import logging
 
+    from open_street_map_data_wrangling_spark.operators import scale
     from open_street_map_data_wrangling_spark.operators.dedup import (
         greedy_chain_rejects,
     )
 
     logger = "open_street_map_data_wrangling_spark.operators.dedup"
+
+    def loops():
+        return [
+            r.getMessage() for r in caplog.records if r.name == scale.__name__
+        ]
+
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "doc_a long, doc_b long"
     )
     caplog.set_level(logging.WARNING, logger=logger)
+    caplog.set_level(logging.INFO, logger=scale.__name__)
     cut = greedy_chain_rejects(pairs, max_iters=1)
     assert sorted(r.doc_id for r in cut.collect()) == [2, 3, 4, 5]
     warned = [r for r in caplog.records if r.name == logger]
     assert len(warned) == 1 and warned[0].levelno == logging.WARNING
     assert "max_iters=1" in warned[0].getMessage()
+    assert len(loops()) == 1 and loops()[0].startswith(
+        "greedy chain: spark path (1 rounds, round budget spent, width "
+    )
 
     caplog.clear()
     full = greedy_chain_rejects(pairs)
     assert sorted(r.doc_id for r in full.collect()) == [2, 4]
     assert not [r for r in caplog.records if r.name == logger]
+    assert len(loops()) == 1 and loops()[0].startswith(
+        "greedy chain: spark path (2 rounds, converged, width "
+    )
+
+
+def _greedy_rounds(pairs, max_iters):
+    """The doc ids greedy_chain_rejects rejects, replayed in Python:
+    per round, accept the docs with no undecided smaller neighbour and
+    reject their larger neighbours, then drop decided docs' pairs;
+    after ``max_iters`` rounds reject every doc still undecided."""
+    e = set(pairs)
+    rejected = set()
+    for _ in range(max_iters):
+        acc = {a for a, _ in e} - {b for _, b in e}
+        rej = {b for a, b in e if a in acc}
+        rejected |= rej
+        e = {(a, b) for a, b in e if not {a, b} & (acc | rej)}
+    return rejected | {d for pair in e for d in pair}
+
+
+def _id_order_rejects(pairs):
+    """The id-order rule itself: sweep the doc ids ascending, accept a
+    doc unless a smaller neighbour was accepted, reject it otherwise."""
+    smaller = {}
+    for a, b in pairs:
+        smaller.setdefault(a, set())
+        smaller.setdefault(b, set()).add(a)
+    accepted = set()
+    for d in sorted(smaller):
+        if not smaller[d] & accepted:
+            accepted.add(d)
+    return set(smaller) - accepted
+
+
+@pytest.mark.parametrize(
+    "pairs, max_iters",
+    [
+        ([(1, 2), (2, 3), (3, 4), (4, 5)], 50),
+        ([(1, 3), (2, 3), (3, 4), (3, 5)], 50),
+        ([(1, 2), (2, 3), (10, 11), (11, 12), (12, 13)], 50),
+        ([(1, 2), (1, 2), (2, 3), (2, 3), (1, 3)], 50),
+        ([], 50),
+        ([(i, i + 1) for i in range(1, 8)], 2),
+    ],
+    ids=["five-chain", "star", "two-disjoint-chains", "duplicate-pairs",
+         "no-pairs", "chain-longer-than-max-iters"],
+)
+def test_greedy_chain_matches_python_replay(spark, pairs, max_iters):
+    """greedy_chain_rejects returns each doc the Python replay of its
+    rounds rejects, once; inside the round budget that is exactly the
+    id-order rule, and past it the undecided docs are rejected too."""
+    from open_street_map_data_wrangling_spark.operators.dedup import (
+        greedy_chain_rejects,
+    )
+
+    df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    got = [r.doc_id for r in greedy_chain_rejects(df, max_iters).collect()]
+    assert sorted(got) == sorted(set(got))
+    assert set(got) == _greedy_rounds(pairs, max_iters)
+    if max_iters >= len(pairs):
+        assert set(got) == _id_order_rejects(pairs)
+    else:
+        assert set(got) > _id_order_rejects(pairs)
 
 
 def test_connected_components_raises_without_fixpoint(spark):

@@ -2,6 +2,9 @@
 (a) result-equivalent to its naive form and (b) — where it is a plan
 property — visible in the physical plan."""
 
+import ast
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -446,6 +449,72 @@ def test_spark_rounds_scope_stop_and_log(spark, caplog):
         "grow: spark path (2 rounds, converged, width 1)",
         "short: spark path (1 rounds, round budget spent, width 3)",
     ]
+
+
+# Round-loop guard: every Spark fixpoint runs its rounds through
+# scale.spark_rounds.  A loop outside it whose body cuts a relation or
+# runs a Spark action is a hand-rolled round loop.
+# A loop kept on purpose goes in ROUND_LOOPS_KEPT, keyed by its
+# innermost enclosing function, with the reason it stays.
+
+PKG = Path(__file__).resolve().parents[1] / "open_street_map_data_wrangling_spark"
+# method -> its argument count as a Spark call (None: any); the counts
+# keep str.count(sub) and list.count(x) out
+_ROUND_CALLS = {
+    "localCheckpoint": None,
+    "head": None,
+    "count": 0,
+    "collect": 0,
+    "first": 0,
+    "isEmpty": 0,
+}
+ROUND_LOOPS_KEPT = {
+    "spark_rounds": "the one round loop itself",
+    "_gate": "per-wave ledger writes of the source quota gate, not a fixpoint",
+    "train_codebook": "Lloyd rounds over centroids collected to the driver",
+    "family_registry_compact": "one commit per store, not a fixpoint",
+}
+
+
+def _round_loops() -> set[tuple[str, int, str, str]]:
+    """(file, loop line, innermost function, call) of every ``for`` or
+    ``while`` loop in the package whose body makes a _ROUND_CALLS call."""
+    found = set()
+
+    def visit(node, fn, rel):
+        loop = isinstance(node, (ast.For, ast.AsyncFor, ast.While))
+        for part in node.body if loop else ():
+            for c in ast.walk(part):
+                if not (
+                    isinstance(c, ast.Call)
+                    and isinstance(c.func, ast.Attribute)
+                    and c.func.attr in _ROUND_CALLS
+                ):
+                    continue
+                nargs = len(c.args) + len(c.keywords)
+                if _ROUND_CALLS[c.func.attr] in (None, nargs):
+                    found.add((rel, node.lineno, fn, c.func.attr))
+        for child in ast.iter_child_nodes(node):
+            inner = isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef))
+            visit(child, child.name if inner else fn, rel)
+
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        visit(ast.parse(path.read_text()), "<module>", rel)
+    return found
+
+
+def test_no_hand_rolled_round_loops():
+    """No loop outside scale.spark_rounds cuts a relation or runs a
+    Spark action each iteration, apart from the kept ones; and every
+    kept entry still names such a loop."""
+    loops = _round_loops()
+    hand_rolled = sorted(f for f in loops if f[2] not in ROUND_LOOPS_KEPT)
+    assert not hand_rolled, (
+        "loops that cut or run an action per iteration; move their rounds "
+        f"onto scale.spark_rounds or keep them with a reason: {hand_rolled}"
+    )
+    assert set(ROUND_LOOPS_KEPT) == {f[2] for f in loops}
 
 
 def test_local_frame_types_rows_from_ddl(spark):
