@@ -53,6 +53,37 @@ def _stamped_names() -> set[str]:
     return stamped
 
 
+_PKG = "open_street_map_data_wrangling_spark"
+
+
+def _imported_namespaces(code, package: str) -> list[dict]:
+    """The namespaces of the package modules that ``code`` imports in
+    its own body: each ``IMPORT_NAME`` module, and each module that an
+    ``IMPORT_FROM`` takes out of it."""
+    import dis
+    import importlib.util
+    import types
+
+    spaces: list[dict] = []
+    mod = None
+    ins = list(dis.get_instructions(code))
+    for i, op in enumerate(ins):
+        if op.opname == "IMPORT_NAME":
+            # LOAD_CONST level, LOAD_CONST fromlist, IMPORT_NAME name
+            level = ins[i - 2].argval if ins[i - 2].opname == "LOAD_CONST" else 0
+            name = importlib.util.resolve_name("." * level + op.argval, package)
+            mod = importlib.import_module(name) if name.startswith(_PKG) else None
+            if mod is not None:
+                spaces.append(vars(mod))
+        elif op.opname == "IMPORT_FROM" and mod is not None:
+            sub = getattr(mod, op.argval, None)
+            if sub is None:
+                sub = importlib.import_module(f"{mod.__name__}.{op.argval}")
+            if isinstance(sub, types.ModuleType):
+                spaces.append(vars(sub))
+    return spaces
+
+
 def _source_closure(func) -> str:
     """Source of ``func`` plus every module-level function it
     transitively references through ``co_names`` / ``co_consts``.
@@ -93,19 +124,24 @@ def _source_closure(func) -> str:
             return
         # co_names covers direct calls; nested lambdas/defs live in
         # co_consts and carry their own co_names against the same globals.
+        # A name is also looked up in the package modules the body
+        # imports itself (`from .dedup import f`, `from .. import m as
+        # _m` then `_m.f`), which its globals never hold.
         stack = [code]
         referenced: list[str] = []
+        spaces = [globalns]
         while stack:
             c = stack.pop()
             referenced.extend(c.co_names)
+            spaces += _imported_namespaces(c, globalns.get("__package__") or "")
             stack.extend(
                 k for k in c.co_consts if isinstance(k, types.CodeType)
             )
         for ref in sorted(set(referenced)):
-            target = globalns.get(ref)
+            target = next((ns[ref] for ns in spaces if ref in ns), None)
             if isinstance(target, types.FunctionType) and getattr(
                 target, "__module__", ""
-            ).startswith("open_street_map_data_wrangling_spark"):
+            ).startswith(_PKG):
                 visit(target)
 
     visit(func)

@@ -3,24 +3,30 @@
 data.py::process_map + audit.py in one distributed pipeline:
 
     OSM XML ──parse once──▶ tagged rows, persisted for the run
-             ──check──▶ ONE aggregate: street-type variants (audit)
-                         and node accept/reject counts (validate)
-             ──split──▶ 5 shaped relations
-             ──clean──▶ last-token street-suffix rewrite
-             ──write──▶ parquet per table (the CSV-per-table analog),
-                         the five writes submitted concurrently
+             ┌─check──▶ ONE aggregate: street-type variants (audit)
+             │          and node accept/reject counts (validate)
+             └─per table, 5 at once──▶ where + selectExpr (split)
+                        ──▶ last-token street-suffix rewrite (clean)
+                        ──▶ parquet write (the CSV-per-table analog)
+                        ──▶ plan its read-back scan
              ──read back──▶ ONE action: every written table's row count
 
 Like the reference's single iterparse pass, the extract is parsed
-once per run: the check aggregate fills the cache of the persisted
-tagged parse (sources/osm_xml.py) and every write scans it; it is
-unpersisted when the run ends, whether or not it succeeded. On an
-extract of a few MB the run is bound by per-job driver overhead, not
-by the parse, so the steps share actions wherever their results allow:
-the run is ten Spark jobs, three for the check, one per write and two
-for the read-back. This module only composes verified relational
-pieces, which is the point: the reference's monolithic script becomes
-a composition of them.
+once per run. The check and the five writes are one overlapped step:
+six driver threads submit their actions together over the persisted
+tagged parse (sources/osm_xml.py). The first action to reach a
+cached partition parses it; the others wait on Spark's per-block
+write lock and then read the block. The parse is unpersisted when
+the step ends, whether or not it succeeded. On an extract of a few
+MB the run is bound by driver time between jobs, not by the parse,
+so the steps share actions wherever their results allow and plan
+while other steps run: the run is ten Spark jobs, three for the
+check, one per write and two for the read-back. A failing check or
+write does not cancel the others; the first failure in submission
+order (the check, then the writes) is raised once all have finished.
+This module only composes verified relational pieces, which is the
+point: the reference's monolithic script becomes a composition of
+them.
 """
 
 from __future__ import annotations
@@ -32,7 +38,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .sources.osm_xml import parse_osm_tagged, split_osm_tables
+from .sources.osm_xml import _TABLE_SCHEMAS, osm_table, parse_osm_tagged
 from .sources.sinks import write_parquet
 
 EXPECTED_STREET_TYPES = ("Street", "Road", "Avenue", "Boulevard", "Lane", "Drive")
@@ -98,86 +104,72 @@ def check_parse(
     return variants, [(r.ok, r["count"]) for r in nodes]
 
 
+# update_name on the street rows: the last token looked up in a SQL
+# map literal of STREET_SUFFIXES; concat is NULL when the token has no
+# mapping, and coalesce then keeps the value
+_CLEAN_VALUE = (
+    "CASE WHEN type = 'addr' AND key = 'street' THEN coalesce(concat("
+    "regexp_replace(value, '[^ ]+$', ''), map({})[regexp_extract(value, '([^ ]+)$', 1)]"
+    "), value) ELSE value END AS value"
+).format(", ".join(f"'{x}'" for pair in STREET_SUFFIXES for x in pair))
+
+
 def clean_street_names(tags: DataFrame) -> DataFrame:
     """update_name as a literal-map lookup on the last token of the
     street rows; non-street rows and unmapped suffixes pass through
     unchanged."""
-    mapping = F.create_map(*(F.lit(x) for pair in STREET_SUFFIXES for x in pair))
-    is_street = (F.col("type") == "addr") & (F.col("key") == "street")
-    clean = mapping[F.regexp_extract(F.col("value"), r"([^ ]+)$", 1)]
-    cleaned = F.when(
-        is_street & clean.isNotNull(),
-        F.concat(F.regexp_replace(F.col("value"), r"[^ ]+$", ""), clean),
-    ).otherwise(F.col("value"))
-    return tags.select("id", "key", cleaned.alias("value"), "type")
-
-
-def _write_concurrently(
-    spark: SparkSession, frames: dict[str, DataFrame], out_dir: str
-) -> None:
-    """Write each frame to `<out_dir>/<name>.parquet`, all at once from
-    one driver thread per frame: Spark runs the jobs side by side, and
-    the paths are disjoint. Each thread target copies the caller's job
-    group and local properties when it is wrapped, one copy per write.
-    Every write has finished when this returns; the first failure in
-    submission order is re-raised."""
-    with ThreadPoolExecutor(max_workers=len(frames)) as pool:
-        futures = [
-            pool.submit(
-                inheritable_thread_target(spark)(write_parquet),
-                df,
-                f"{out_dir}/{name}.parquet",
-            )
-            for name, df in frames.items()
-        ]
-    for future in futures:
-        future.result()
-
-
-def _count_written(
-    spark: SparkSession, frames: dict[str, DataFrame], out_dir: str
-) -> dict[str, int]:
-    """Row count of every written table, read back from its parquet
-    files in ONE action: a union of the scans, one group per table. A
-    table with no rows has no group and counts 0. Each scan takes the
-    written schema, so no footer-inference job runs."""
-    scans = [
-        spark.read.schema(df.schema)
-        .parquet(f"{out_dir}/{name}.parquet")
-        .select(F.lit(name).alias("table"))
-        for name, df in frames.items()
-    ]
-    grouped = reduce(DataFrame.union, scans).groupBy("table").count()
-    counts = {r.table: r["count"] for r in grouped.collect()}
-    return {name: counts.get(name, 0) for name in frames}
+    return tags.selectExpr("id", "key", _CLEAN_VALUE, "type")
 
 
 def run_osm_etl(spark: SparkSession, xml_path: str, out_dir: str) -> list[str]:
     """process_map: parse, audit, clean, validate, write. Returns a
     human-readable report (the reference printed its audit dict).
-    Three steps, each one action or one batch of concurrent actions:
-    the audit+validate check (it also fills the cache of the tagged
-    parse, so the XML is parsed once), the five writes, and the
-    read-back of the written row counts from disk. The parse is
-    unpersisted on the way out, also when a step raises; a failed
-    write is re-raised only after every other write has finished."""
-    parsed = parse_osm_tagged(spark, xml_path).persist()
-    try:
-        variants, validity = check_parse(parsed)
-        report = [f"street-type variants flagged: {len(variants)}"]
-        report += [f"  {stype}: {name}" for stype, name in variants[:20]]
-        report += [f"nodes valid={ok}: {n}" for ok, n in validity]
 
-        tables = split_osm_tables(parsed)
-        written = {name: tables[name] for name in WRITTEN_TABLES}
-        for name in ("nodes_tags", "ways_tags"):
-            written[name] = clean_street_names(written[name])
-        _write_concurrently(spark, written, out_dir)
-        for name, n in _count_written(spark, written, out_dir).items():
-            report.append(f"wrote {name}: {n} rows")
-        return report
+    One overlapped step over the persisted tagged parse: the
+    audit+validate check and the five table writes are submitted
+    together from one driver pool, each target wrapped so that its
+    jobs keep the caller's job group. Whichever action first reaches
+    a cached partition parses it; the others wait on the block's write
+    lock and then read it, so the XML is parsed once. Each write
+    target plans its table's read-back scan (with the table's DDL, so
+    no footer-inference job runs) right after its write, and the
+    written row counts are read back from disk in ONE action: a union
+    of the scans, one group per table (an empty table counts 0).
+
+    A failing target does not stop the others: every target finishes,
+    then the first failure in submission order (the check first, then
+    the writes in WRITTEN_TABLES order) is raised. The parse is
+    unpersisted on the way out, also when a target raises."""
+    parsed = parse_osm_tagged(spark, xml_path).persist()
+
+    def write(name: str) -> DataFrame:
+        table = osm_table(parsed, name)
+        if name in ("nodes_tags", "ways_tags"):
+            table = clean_street_names(table)
+        path = f"{out_dir}/{name}.parquet"
+        write_parquet(table, path)
+        return spark.read.schema(_TABLE_SCHEMAS[name]).parquet(path).selectExpr(
+            f"'{name}' AS table"
+        )
+
+    try:
+        with ThreadPoolExecutor(max_workers=1 + len(WRITTEN_TABLES)) as pool:
+            check = pool.submit(inheritable_thread_target(spark)(check_parse), parsed)
+            writes = [
+                pool.submit(inheritable_thread_target(spark)(write), name)
+                for name in WRITTEN_TABLES
+            ]
+        variants, validity = check.result()
+        scans = [w.result() for w in writes]
     finally:
         parsed.unpersist()
+    grouped = reduce(DataFrame.union, scans).groupBy("table").count()
+    counts = {r.table: r["count"] for r in grouped.collect()}
+    report = [f"street-type variants flagged: {len(variants)}"]
+    report += [f"  {stype}: {name}" for stype, name in variants[:20]]
+    report += [f"nodes valid={ok}: {n}" for ok, n in validity]
+    report += [f"wrote {name}: {counts.get(name, 0)} rows" for name in WRITTEN_TABLES]
+    return report
 
 
 def generate_report(spark: SparkSession, sf_dir: str) -> dict:

@@ -49,8 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..session import apply_runtime_conf
-
 TABLES: tuple[str, ...] = (
     "region",
     "nation",
@@ -148,8 +146,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table through the schema memo (`read_parquet`:
     only the first load of a listing runs an inference job); the raw
     read schema is what is remembered, so events.ts is normalized to
-    TimestampType on every call."""
-    apply_runtime_conf(spark)
+    TimestampType on every call. Writes no session conf: a load from
+    one thread must not undo a conf scope another thread runs under
+    (`scale.spark_rounds`); `get_spark` and the `__spark_entry__`
+    wrappers apply the engine's runtime confs."""
     df = read_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")

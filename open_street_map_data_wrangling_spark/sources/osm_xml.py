@@ -17,11 +17,12 @@ parses across every core of the cluster:
 3. Like the reference's single pass, the parse runs once: one
    `mapInPandas` emits every row tagged with its target table
    (`parse_osm_tagged`, schema `TAGGED_SCHEMA` = `table` plus the
-   union of the table schemas), and each table is a filter + select
-   over that one tagged parse (`split_osm_tables`). Persist the
-   tagged parse to share it between consumers: run_osm_etl fills the
-   cache with its first action, one aggregate over the tagged rows
-   themselves, and its five concurrent writes then scan the cache.
+   union of the table schemas), and each table is a where +
+   selectExpr over that one tagged parse (`osm_table`,
+   `split_osm_tables`). Persist the tagged parse to share it between
+   consumers: run_osm_etl's check aggregate and its five writes run
+   at once over it, and whichever reaches a partition first fills
+   its cache block for the others.
 
 `<relation>` elements — which the reference project family ignores
 (SURVEY.md §1.1) — are parsed into `relations`, `relations_tags` and
@@ -232,22 +233,24 @@ def parse_osm_tagged(spark: SparkSession, path: str) -> DataFrame:
     distributed: ONE `mapInPandas` over the fragment scan emits every
     parsed row once, tagged with its target table (`TAGGED_SCHEMA`).
     Persist it to let several consumers share one parse (run_osm_etl's
-    first action, its check aggregate, fills the cache that its five
-    concurrent writes then scan); split it with `split_osm_tables`."""
+    check aggregate and five writes run together over its cache);
+    split it with `osm_table` or `split_osm_tables`."""
     return read_osm_fragments(spark, path).mapInPandas(
         _tagged_iter, schema=TAGGED_SCHEMA
     )
 
 
+def osm_table(tagged: DataFrame, name: str) -> DataFrame:
+    """One shaped relation of a tagged parse, planned from SQL text:
+    `where(table = name).selectExpr(<its columns>)` over `tagged`."""
+    return tagged.where(f"`table` = '{name}'").selectExpr(
+        *(f"`{c}`" for c, _ in _fields(_TABLE_SCHEMAS[name]))
+    )
+
+
 def split_osm_tables(tagged: DataFrame) -> dict[str, DataFrame]:
-    """The eight shaped relations of a tagged parse: each is
-    `filter(table == name).select(<its columns>)` over `tagged`."""
-    return {
-        name: tagged.filter(F.col("table") == name).select(
-            *(c for c, _ in _fields(schema))
-        )
-        for name, schema in _TABLE_SCHEMAS.items()
-    }
+    """The eight shaped relations of a tagged parse (`osm_table`)."""
+    return {name: osm_table(tagged, name) for name in _TABLE_SCHEMAS}
 
 
 def parse_osm_xml(spark: SparkSession, path: str) -> dict[str, DataFrame]:
@@ -255,8 +258,8 @@ def parse_osm_xml(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     returns the eight shaped relations as one tagged parse, split by
     table. Left unpersisted, every relation that is materialized
     re-parses the extract; run_osm_etl instead persists the tagged
-    parse, checks it with one aggregate, and splits it for the writes,
-    so all its steps share one parse."""
+    parse and runs its check and its per-table writes over it, so
+    all its steps share one parse."""
     return split_osm_tables(parse_osm_tagged(spark, path))
 
 

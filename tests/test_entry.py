@@ -108,6 +108,29 @@ def test_fingerprint_covers_transitive_helpers():
     )
 
 
+def test_fingerprint_follows_function_local_imports():
+    """A helper imported inside the query body (`from .dedup import
+    _frontier_radius`), or reached as an attribute of a module imported
+    there (`from ..streaming import jobs as _jobs`, then
+    `_jobs.family_registry_merge_fn`), is part of the fingerprint."""
+    import inspect
+
+    from open_street_map_data_wrangling_spark.operators import dedup
+    from open_street_map_data_wrangling_spark.plans import load_all_queries
+    from open_street_map_data_wrangling_spark.streaming import jobs
+
+    specs = load_all_queries()
+    closure = entrymod._source_closure(specs["q_radius_served"].spark)
+    assert inspect.getsource(dedup._frontier_radius) in closure
+    merge = inspect.getsource(jobs.family_registry_merge_fn)
+    purge = inspect.getsource(jobs.family_registry_purge)
+    for name in ("q_family_registry", "q_ingest_registry", "q_registry_report"):
+        assert merge in entrymod._source_closure(specs[name].spark), name
+    for name in ("q_registry_purge", "q_purged_report"):
+        closure = entrymod._source_closure(specs[name].spark)
+        assert merge in closure and purge in closure, name
+
+
 def test_sqlite_sink_roundtrip(spark, tmp_path):
     """S5 parity: the reference queries its shaped tables through a
     sqlite3 cursor; write_sqlite must land a DataFrame in a SQLite

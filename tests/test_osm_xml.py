@@ -534,6 +534,91 @@ def test_etl_failure_leaves_no_cached_parse(spark, tmp_path_factory):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_etl_parses_once(spark, tmp_path_factory, monkeypatch):
+    """The check and the five writes run together over the persisted
+    parse, yet each parse partition is parsed exactly once: a counting
+    mapInPandas under the persisted relation adds one per partition
+    it parses."""
+    from open_street_map_data_wrangling_spark import etl
+    from open_street_map_data_wrangling_spark.sources.osm_xml import TAGGED_SCHEMA
+
+    base = tmp_path_factory.mktemp("etl_parse_once")
+    src = base / "map.osm"
+    src.write_text(_make_xml())
+    parses = spark.sparkContext.accumulator(0)
+    inner = etl.parse_osm_tagged
+
+    def counted(batches):
+        parses.add(1)
+        yield from batches
+
+    def parse(spark, path):
+        return inner(spark, path).mapInPandas(counted, schema=TAGGED_SCHEMA)
+
+    monkeypatch.setattr(etl, "parse_osm_tagged", parse)
+    partitions = inner(spark, str(src)).rdd.getNumPartitions()
+    spark.catalog.clearCache()
+    report = etl.run_osm_etl(spark, str(src), str(base / "out"))
+    assert report == ETL_REPORTS["extract"]
+    assert parses.value == partitions
+
+
+def test_etl_check_overlaps_writes(spark, tmp_path_factory, monkeypatch):
+    """The check does not run ahead of the writes: it can wait for the
+    first write to start and still finish with the pinned report."""
+    from open_street_map_data_wrangling_spark import etl
+
+    base = tmp_path_factory.mktemp("etl_overlap")
+    src = base / "map.osm"
+    src.write_text(_make_xml())
+    writing = threading.Event()
+    check, write = etl.check_parse, etl.write_parquet
+
+    def late_check(tagged):
+        assert writing.wait(timeout=30), "no write started while the check ran"
+        return check(tagged)
+
+    def spy(df, path, *args, **kwargs):
+        writing.set()
+        return write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(etl, "check_parse", late_check)
+    monkeypatch.setattr(etl, "write_parquet", spy)
+    assert etl.run_osm_etl(spark, str(src), str(base / "out")) == ETL_REPORTS["extract"]
+
+
+def test_etl_failed_check_waits_for_writes(spark, tmp_path_factory, monkeypatch):
+    """A check that raises at once does not stop the writes: all five
+    finish and their threads are gone before run_osm_etl re-raises the
+    check's error, and nothing stays cached."""
+    from open_street_map_data_wrangling_spark import etl
+
+    base = tmp_path_factory.mktemp("etl_fail_check")
+    src = base / "map.osm"
+    src.write_text(_make_xml())
+    out = base / "out"
+    calls = []
+    write = etl.write_parquet
+
+    def broken_check(tagged):
+        raise RuntimeError("check failed")
+
+    def spy(df, path, *args, **kwargs):
+        call = {"path": path, "thread": threading.current_thread(), "done": False}
+        calls.append(call)
+        write(df, path, *args, **kwargs)
+        call["done"] = True
+
+    monkeypatch.setattr(etl, "check_parse", broken_check)
+    monkeypatch.setattr(etl, "write_parquet", spy)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="check failed"):
+        etl.run_osm_etl(spark, str(src), str(out))
+    assert sorted(c["path"] for c in calls) == sorted(f"{out}/{t}.parquet" for t in WRITTEN)
+    assert [c for c in calls if not c["done"] or c["thread"].is_alive()] == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_clean_street_names_matches_mapping_join(spark):
     """The literal-map street cleaner reproduces the rows of the
     broadcast mapping join it replaced: mapped suffixes (with and

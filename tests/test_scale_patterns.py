@@ -451,6 +451,33 @@ def test_spark_rounds_scope_stop_and_log(spark, caplog):
     ]
 
 
+def test_load_table_keeps_the_round_loop_conf(spark, sf_dir):
+    """A table load on another thread while a spark_rounds step runs
+    (the greedy chain inside a streaming foreachBatch) writes no
+    session conf, so AQE stays off inside the loop."""
+    import threading
+
+    from open_street_map_data_wrangling_spark.operators import scale
+    from open_street_map_data_wrangling_spark.sources.catalog import load_table
+
+    key = "spark.sql.adaptive.enabled"
+    seen = []
+
+    def step(df):
+        loader = threading.Thread(target=load_table, args=(spark, sf_dir, "nation"))
+        loader.start()
+        loader.join(timeout=60)
+        assert not loader.is_alive()
+        seen.append(spark.conf.get(key))
+        return None
+
+    scale.spark_rounds(
+        spark.range(1), step, width_of=spark.range(1), max_rounds=1, what="load"
+    )
+    assert seen == ["false"]
+    assert spark.conf.get(key) == "true"
+
+
 # Round-loop guard: every Spark fixpoint runs its rounds through
 # scale.spark_rounds.  A loop outside it whose body cuts a relation or
 # runs a Spark action is a hand-rolled round loop.
