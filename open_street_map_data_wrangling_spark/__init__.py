@@ -17,6 +17,7 @@ local[32].
 Layout
 ------
 session.py        SparkSession factory (AQE, Arrow, UTC, ns-parquet).
+worker_daemon.py  Python worker daemon set by the session factory.
 sources/          Table catalog over the driver fixture universe.
 functions/        Reusable Column-expression helpers (pure built-ins).
 operators/        Query/operator inventory (SURVEY.md §2) — each

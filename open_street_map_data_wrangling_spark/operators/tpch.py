@@ -10,21 +10,52 @@ value is the plan shapes and the oracle parity.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
 from ..sources.catalog import load_table
 
+# Money sums are exact: the fixture's prices, discounts, taxes and
+# balances are whole cents, so they are summed as DECIMAL(15,2)
+# arithmetic, rounded to cents, then returned as DOUBLE.  A double
+# sum's last bits depend on the summation order, so one on a .xx5
+# boundary could round to different cents on the two engines.
+# `_cents`/`_money_sum`/`_disc_price` build the Spark side; the
+# `_sql` helpers and `_DISC_PRICE_SQL` are their DuckDB twins.
+
+
+def _cents(name: str) -> Column:
+    return F.col(name).cast("decimal(15,2)")
+
+
+def _money_sum(amount: Column) -> Column:
+    return F.round(F.sum(amount), 2).cast("double")
+
+
+def _disc_price() -> Column:
+    return _cents("l_extendedprice") * (1 - _cents("l_discount"))
+
+
+def _cents_sql(name: str) -> str:
+    return f"CAST({name} AS DECIMAL(15,2))"
+
+
+def _money_sum_sql(amount: str) -> str:
+    return f"CAST(round(sum({amount}), 2) AS DOUBLE)"
+
+
+_DISC_PRICE_SQL = f"{_cents_sql('l_extendedprice')} * (1 - {_cents_sql('l_discount')})"
+
 
 @query(
     "q_tpch_q1",
-    oracle="""
+    oracle=f"""
         SELECT l_returnflag, l_linestatus,
                round(sum(l_quantity), 2) AS sum_qty,
-               round(sum(l_extendedprice), 2) AS sum_base_price,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-               round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2)
+               {_money_sum_sql(_cents_sql("l_extendedprice"))} AS sum_base_price,
+               {_money_sum_sql(_DISC_PRICE_SQL)} AS sum_disc_price,
+               {_money_sum_sql(f"{_DISC_PRICE_SQL} * (1 + {_cents_sql('l_tax')})")}
                  AS sum_charge,
                round(avg(l_quantity), 4) AS avg_qty,
                round(avg(l_extendedprice), 4) AS avg_price,
@@ -40,15 +71,15 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 pricing summary: the scan-dominated aggregate — one pass,
     partial+final hash agg, date filter pushed to the scan."""
     li = load_table(spark, sf_dir, "lineitem")
-    disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    disc_price = _disc_price()
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(disc_price), 2).alias("sum_disc_price"),
-            F.round(F.sum(disc_price * (1 + F.col("l_tax"))), 2).alias("sum_charge"),
+            _money_sum(_cents("l_extendedprice")).alias("sum_base_price"),
+            _money_sum(disc_price).alias("sum_disc_price"),
+            _money_sum(disc_price * (1 + _cents("l_tax"))).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
             F.round(F.avg("l_discount"), 6).alias("avg_disc"),
@@ -59,11 +90,9 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q3",
-    oracle="""
+    oracle=f"""
         SELECT l_orderkey,
-               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
-                              * (1 - CAST(l_discount AS DECIMAL(15,2)))), 2)
-                    AS DOUBLE) AS revenue,
+               {_money_sum_sql(_DISC_PRICE_SQL)} AS revenue,
                strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS orderdate,
                o_orderpriority
         FROM customer
@@ -81,11 +110,7 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 shipping priority: selective dim filter (broadcast) →
     fact join → top-10 by revenue (TakeOrderedAndProject).
-    l_orderkey tiebreak keeps the LIMIT engine-deterministic.  The
-    revenue sum is exact: cent-exact prices and discounts summed as
-    DECIMAL(15,2) arithmetic, rounded, then returned as DOUBLE, so a
-    sum on a .xx5 boundary rounds the same way on both engines (a
-    double sum's last bits depend on the summation order)."""
+    l_orderkey tiebreak keeps the LIMIT engine-deterministic."""
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
@@ -101,17 +126,7 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(
-                F.sum(
-                    F.col("l_extendedprice").cast("decimal(15,2)")
-                    * (1 - F.col("l_discount").cast("decimal(15,2)"))
-                ),
-                2,
-            )
-            .cast("double")
-            .alias("revenue")
-        )
+        .agg(_money_sum(_disc_price()).alias("revenue"))
         .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
         .limit(10)
         .select(
@@ -127,9 +142,9 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q5",
-    oracle="""
+    oracle=f"""
         SELECT n_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+               {_money_sum_sql(_DISC_PRICE_SQL)} AS revenue
         FROM customer
         JOIN orders ON c_custkey = o_custkey
         JOIN lineitem ON l_orderkey = o_orderkey
@@ -172,18 +187,16 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region_f), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            _money_sum(_disc_price()).alias("revenue")
         )
     )
 
 
 @query(
     "q_tpch_q10",
-    oracle="""
+    oracle=f"""
         SELECT c_custkey, c_name, n_name,
-               round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+               {_money_sum_sql(_DISC_PRICE_SQL)} AS revenue
         FROM customer
         JOIN orders ON c_custkey = o_custkey
         JOIN lineitem ON l_orderkey = o_orderkey
@@ -209,9 +222,7 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            _money_sum(_disc_price()).alias("revenue")
         )
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
         .limit(20)
@@ -220,8 +231,9 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q6",
-    oracle="""
-        SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue,
+    oracle=f"""
+        SELECT {_money_sum_sql(f"{_cents_sql('l_extendedprice')} * {_cents_sql('l_discount')}")}
+                 AS revenue,
                count(*) AS n_lines
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
@@ -243,9 +255,7 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("l_discount").between(0.03, 0.07)
             & (F.col("l_quantity") < 24)
         ).agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias(
-                "revenue"
-            ),
+            _money_sum(_cents("l_extendedprice") * _cents("l_discount")).alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -366,8 +376,9 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q17",
-    oracle="""
-        SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
+    oracle=f"""
+        SELECT round({_money_sum_sql(_cents_sql("l_extendedprice"))} / 7.0, 2)
+                 AS avg_yearly
         FROM lineitem JOIN part ON p_partkey = l_partkey
         WHERE p_brand = 'Brand#23'
           AND l_quantity < (
@@ -386,8 +397,9 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     li.createOrReplaceTempView("lineitem")
     part.createOrReplaceTempView("part")
     return spark.sql(
-        """
-        SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
+        f"""
+        SELECT round({_money_sum_sql(_cents_sql("l_extendedprice"))} / 7.0, 2)
+                 AS avg_yearly
         FROM lineitem JOIN part ON p_partkey = l_partkey
         WHERE p_brand = 'Brand#23'
           AND l_quantity < (
@@ -399,13 +411,13 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q7",
-    oracle="""
+    oracle=f"""
         SELECT supp_nation, cust_nation, l_year,
-               round(sum(volume), 2) AS revenue
+               {_money_sum_sql("volume")} AS revenue
         FROM (
             SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                    CAST(year(l_shipdate) AS INT) AS l_year,
-                   l_extendedprice * (1 - l_discount) AS volume
+                   {_DISC_PRICE_SQL} AS volume
             FROM supplier
             JOIN lineitem ON s_suppkey = l_suppkey
             JOIN orders ON o_orderkey = l_orderkey
@@ -454,22 +466,20 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             "supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year")
         )
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+            _money_sum(_disc_price()).alias("revenue")
         )
     )
 
 
 @query(
     "q_tpch_q8",
-    oracle="""
+    oracle=f"""
         SELECT o_year,
-               round(sum(CASE WHEN nation = 'NATION_1' THEN volume ELSE 0 END)
-                     / sum(volume), 6) AS mkt_share
+               round({_money_sum_sql("CASE WHEN nation = 'NATION_1' THEN volume ELSE 0 END")}
+                     / {_money_sum_sql("volume")}, 6) AS mkt_share
         FROM (
             SELECT CAST(year(o_orderdate) AS INT) AS o_year,
-                   l_extendedprice * (1 - l_discount) AS volume,
+                   {_DISC_PRICE_SQL} AS volume,
                    n2.n_name AS nation
             FROM part
             JOIN lineitem ON p_partkey = l_partkey
@@ -504,7 +514,7 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("nation")
     )
     region_f = region.filter(F.col("r_name") == "AFRICA")
-    volume = F.col("l_extendedprice") * (1 - F.col("l_discount"))
+    volume = _disc_price()
     return (
         li.join(
             F.broadcast(part.filter(F.col("p_type") == "ECONOMY")),
@@ -519,8 +529,8 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             F.round(
-                F.sum(F.when(F.col("nation") == "NATION_1", volume).otherwise(0.0))
-                / F.sum(volume),
+                _money_sum(F.when(F.col("nation") == "NATION_1", volume).otherwise(0))
+                / _money_sum(volume),
                 6,
             ).alias("mkt_share")
         )
@@ -602,11 +612,10 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q15",
-    oracle="""
+    oracle=f"""
         WITH revenue AS (
             SELECT l_suppkey AS supplier_no,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2)
-                     AS total_revenue
+                   {_money_sum_sql(_DISC_PRICE_SQL)} AS total_revenue
             FROM lineitem
             WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
               AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
@@ -636,9 +645,7 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("total_revenue")
+            _money_sum(_disc_price()).alias("total_revenue")
         )
     )
     w = W.orderBy(F.desc("total_revenue"))
@@ -653,8 +660,8 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q19",
-    oracle="""
-        SELECT round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+    oracle=f"""
+        SELECT {_money_sum_sql(_DISC_PRICE_SQL)} AS revenue,
                count(*) AS n_lines
         FROM lineitem JOIN part ON p_partkey = l_partkey
         WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
@@ -696,9 +703,7 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .filter(cond)
         .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
+            _money_sum(_disc_price()).alias("revenue"),
             F.count("*").alias("n_lines"),
         )
     )
@@ -764,9 +769,9 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q22",
-    oracle="""
+    oracle=f"""
         SELECT n_name AS cntry, count(*) AS numcust,
-               round(sum(c_acctbal), 2) AS totacctbal
+               {_money_sum_sql(_cents_sql("c_acctbal"))} AS totacctbal
         FROM customer JOIN nation ON c_nationkey = n_nationkey
         WHERE c_acctbal > (
                 SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
@@ -807,6 +812,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("cntry"))
         .agg(
             F.count("*").alias("numcust"),
-            F.round(F.sum("c_acctbal"), 2).alias("totacctbal"),
+            _money_sum(_cents("c_acctbal")).alias("totacctbal"),
         )
     )

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .tpch import _cents, _disc_price, _money_sum
 
 _SLOTS = 4
 
@@ -153,9 +154,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").filter(F.col("p_name").contains("red"))
     supp = load_table(spark, sf_dir, "supplier")
     nation = load_table(spark, sf_dir, "nation")
-    amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.col(
-        "ps_supplycost"
-    ) * F.col("l_quantity")
+    amount = _disc_price() - _cents("ps_supplycost") * _cents("l_quantity")
     return (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .join(
@@ -167,7 +166,7 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(
             F.col("n_name").alias("nation"), F.year("l_shipdate").alias("o_year")
         )
-        .agg(F.round(F.sum(amount), 2).alias("sum_profit"))
+        .agg(_money_sum(amount).alias("sum_profit"))
     )
 
 
@@ -184,10 +183,10 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoped = (
         ps.join(F.broadcast(supp), ps.ps_suppkey == supp.s_suppkey)
         .join(F.broadcast(nation), supp.s_nationkey == nation.n_nationkey)
-        .select("ps_partkey", (F.col("ps_supplycost") * F.col("ps_availqty")).alias("v"))
+        .select("ps_partkey", (_cents("ps_supplycost") * F.col("ps_availqty")).alias("v"))
     )
-    per_part = scoped.groupBy("ps_partkey").agg(F.round(F.sum("v"), 2).alias("value"))
-    total = scoped.agg((F.sum("v") * 0.001).alias("cut"))
+    per_part = scoped.groupBy("ps_partkey").agg(_money_sum("v").alias("value"))
+    total = scoped.agg((F.sum("v").cast("double") * 0.001).alias("cut"))
     return (
         per_part.join(F.broadcast(total))
         .filter(F.col("value") > F.col("cut"))

@@ -13,6 +13,17 @@ At 100 TB these remain correct: AQE handles post-shuffle partition
 sizing per stage, so one static `shuffle.partitions` value never has
 to be "right" for every query; the broadcast threshold keeps
 dimension joins shuffle-free.
+
+Python workers run under the package's own daemon (`worker_daemon.py`,
+set as `spark.python.daemon.module`). Before every task `pyspark.worker`
+calls `importlib.invalidate_caches()`, and on CPython 3.11 each cached
+`zipimporter` then re-reads its archive's whole central directory: 16
+importers of `pyspark.zip` and the spark-core jar, ~0.1 s of CPU per
+`mapInPandas`/`mapInArrow`/UDF task. The daemon drops the importers of
+the archives it started with before each task, so none is re-read. The
+daemon is started with `python -m`, so the package root is put on
+`spark.executorEnv.PYTHONPATH`: workers find it whatever the caller's
+cwd and PYTHONPATH.
 """
 
 from __future__ import annotations
@@ -20,6 +31,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from . import worker_daemon
+
+# The directory holding the package, for the workers' PYTHONPATH.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # SQL (runtime-settable) conf applied both at build time and defensively
 # onto externally provided sessions (the verify driver builds its own).
@@ -85,6 +101,15 @@ def get_spark(
     local[N] is a single JVM: `driver_memory` is the only memory knob.
     On a real cluster the same builder works — only master/memory conf
     change; nothing in the engine assumes local mode.
+
+    Python workers start from `worker_daemon` (`spark.python.daemon.module`),
+    which keeps CPython 3.11's per-task `invalidate_caches()` from
+    re-reading `pyspark.zip` and the spark-core jar before every task.
+    The package root is set as `spark.executorEnv.PYTHONPATH` (Spark
+    puts its own zips before it and the process's PYTHONPATH after
+    it), so the daemon module imports on workers started from any cwd.
+    Both are static confs: they apply only when this call creates the
+    SparkContext.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
@@ -120,6 +145,8 @@ def get_spark(
         # must be set at builder time, apply_runtime_conf cannot
         # rescue it on foreign sessions.
         .config("spark.sql.codegen.cache.maxEntries", "8000")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in _RUNTIME_SQL_CONF.items():
         builder = builder.config(k, v)

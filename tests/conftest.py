@@ -158,6 +158,8 @@ _SLOW_TESTS = {
     "test_geo_index_maintenance_replay_and_purge",
     "test_meta_store_lifecycle_preserves_filter_columns",
     "test_multimodal_dedup_merges_channels",
+    # starts a second Spark session in a subprocess (~10 s)
+    "test_foreign_cwd_session_runs_python_tasks",
 }
 
 

@@ -3,9 +3,9 @@ Q16/Q20) — pytest-only because the driver fixtures lack partsupp
 (operators/tpch_partsupp.py docstring). Same differential discipline
 as tools/verify_local.py: both engines build the SAME synthesized
 partsupp (pure integer arithmetic), run the query, and the results
-are compared order-insensitively; float comparisons carry a 2-cent
-absolute tolerance because the money sums reduce in engine-specific
-order before rounding (see _eq)."""
+are compared order-insensitively.  The money sums are exact (DECIMAL
+sums rounded to cents, as in operators/tpch.py), so floats compare to
+a relative 1e-9 with no cent tolerance."""
 
 from __future__ import annotations
 
@@ -47,8 +47,11 @@ ORACLES = {
     "q_tpch_q9": """
         WITH {ps}
         SELECT n_name AS nation, year(l_shipdate) AS o_year,
-               round(sum(l_extendedprice * (1 - l_discount)
-                         - ps_supplycost * l_quantity), 2) AS sum_profit
+               CAST(round(sum(CAST(l_extendedprice AS DECIMAL(15,2))
+                              * (1 - CAST(l_discount AS DECIMAL(15,2)))
+                              - CAST(ps_supplycost AS DECIMAL(15,2))
+                                * CAST(l_quantity AS DECIMAL(15,2))), 2)
+                    AS DOUBLE) AS sum_profit
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
         JOIN partsupp ON l_partkey = ps_partkey AND l_suppkey = ps_suppkey
@@ -60,15 +63,16 @@ ORACLES = {
     "q_tpch_q11": """
         WITH {ps},
         scoped AS (
-            SELECT ps_partkey, ps_supplycost * ps_availqty AS v
+            SELECT ps_partkey, CAST(ps_supplycost AS DECIMAL(15,2)) * ps_availqty AS v
             FROM partsupp
             JOIN supplier ON ps_suppkey = s_suppkey
             JOIN nation ON s_nationkey = n_nationkey
             WHERE n_name = 'NATION_1')
-        SELECT ps_partkey, round(sum(v), 2) AS value
+        SELECT ps_partkey, CAST(round(sum(v), 2) AS DOUBLE) AS value
         FROM scoped
         GROUP BY ps_partkey
-        HAVING round(sum(v), 2) > (SELECT sum(v) * 0.001 FROM scoped)
+        HAVING CAST(round(sum(v), 2) AS DOUBLE)
+               > (SELECT CAST(sum(v) AS DOUBLE) * 0.001 FROM scoped)
     """,
     "q_tpch_q16": """
         WITH {ps}
@@ -117,12 +121,7 @@ def _norm(rows, cols):
 
 def _eq(a, b):
     if isinstance(a, float) and isinstance(b, (int, float)):
-        # abs_tol covers half-cent boundary rounding: Q9/Q11 sum
-        # floats in engine-specific order BEFORE round(..., 2), so a
-        # sum landing near x.xx5 can legitimately round one cent
-        # apart per engine; rel_tol alone would flag that as a
-        # failure (latent flake, ADVICE r03).
-        return math.isclose(a, float(b), rel_tol=1e-9, abs_tol=0.02)
+        return math.isclose(a, float(b), rel_tol=1e-9)
     return a == b
 
 
