@@ -373,6 +373,36 @@ _CMS_ORACLE = f"""
 """
 
 
+def token_freq(docs: DataFrame) -> DataFrame:
+    """(tok, n) counts of the single-space tokens of ``docs.text``,
+    empty tokens included."""
+    return (
+        docs.select(F.explode(F.split("text", " ")).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count("*").cast("bigint").alias("n"))
+    )
+
+
+def cms_counters(tf: DataFrame) -> DataFrame:
+    """The (d, pos, c) count-min counters of a (tok, n) frequency
+    table: 3 salted-md5 rows x 1024 columns.  Shared by
+    q_cms_topk and the streaming counter store
+    (streaming/jobs.cms_merge_fn), whose sum-merge of per-batch
+    counters equals this over the concatenated corpus."""
+    pos_structs = ", ".join(
+        f"struct({d} AS d, CAST(conv(substring(md5(concat('c{d}:', tok)), "
+        f"1, 12), 16, 10) AS BIGINT) % {_CMS_W} AS pos)"
+        for d in range(_CMS_D)
+    )
+    return (
+        tf.select(
+            F.explode(F.expr(f"array({pos_structs})")).alias("dp"), "n"
+        )
+        .groupBy(F.col("dp.d").alias("d"), F.col("dp.pos").alias("pos"))
+        .agg(F.sum("n").cast("bigint").alias("c"))
+    )
+
+
 @query(
     "q_cms_topk",
     oracle=_CMS_ORACLE,
@@ -397,24 +427,8 @@ def q_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed and every downstream branch (counters, top-20)
     # reads it instead of re-scanning documents (the
     # checkpointed-reuse posture of the dedup signature tables)
-    tf = (
-        docs.select(F.explode(F.split("text", " ")).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .localCheckpoint(eager=False)
-    )
-    pos_structs = ", ".join(
-        f"struct({d} AS d, CAST(conv(substring(md5(concat('c{d}:', tok)), "
-        f"1, 12), 16, 10) AS BIGINT) % {_CMS_W} AS pos)"
-        for d in range(_CMS_D)
-    )
-    counters = (
-        tf.select(
-            F.explode(F.expr(f"array({pos_structs})")).alias("dp"), "n"
-        )
-        .groupBy(F.col("dp.d").alias("d"), F.col("dp.pos").alias("pos"))
-        .agg(F.sum("n").cast("bigint").alias("c"))
-    )
+    tf = token_freq(docs).localCheckpoint(eager=False)
+    counters = cms_counters(tf)
     top = tf.orderBy(F.desc("n"), F.asc("tok")).limit(20)
     pos_exprs = ", ".join(
         f"{d}, CAST(conv(substring(md5(concat('c{d}:', tok)), 1, 12), "

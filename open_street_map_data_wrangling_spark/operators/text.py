@@ -708,24 +708,29 @@ def q_lm_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     today's LM is the same plan with a different left side.
     """
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
-    )
     # The trained LM feeds BOTH the score join and the (T, V) roll-up.
     # Without a cut, Catalyst compiles the diamond as two independent
     # subtrees — a second full train-corpus scan just to count the
     # vocabulary.  localCheckpoint pins the vocabulary-sized counts
     # once (the same bounded-derived-base discipline as q_cms_topk /
     # q_kmv_overlap), so the corpus is read once per side.
-    counts = (
-        tok.filter(
+    counts = lm_train_counts(docs).localCheckpoint(eager=False)
+    return lm_score_docs(docs, counts)
+
+
+def lm_train_counts(docs: DataFrame) -> DataFrame:
+    """(tok, c) unigram counts over the train split of ``docs`` (the
+    md5 nibble of doc_id at most "b", about 75%): the LM q_lm_surprisal
+    trains, and the per-batch delta the streaming vocabulary store
+    (streaming/jobs.lm_counts_merge_fn) sums."""
+    return (
+        docs.filter(
             F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) <= "b"
         )
+        .select(F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
     )
-    return lm_score_docs(docs, counts)
 
 
 def lm_score_docs(docs: DataFrame, counts: DataFrame) -> DataFrame:
@@ -1072,7 +1077,20 @@ def build_text_index(docs: DataFrame, path: str) -> None:
     {_INDEX_BUCKETS} terms' postings.  One corpus scan + one
     partitioned write; the amortized offline step of
     q_text_search's inline shape."""
-    post = (
+    # REBALANCE before the partitioned write (r17, guide §6 — see
+    # build_bm25_index): data-sized output files instead of one tiny
+    # file per (write task x bucket).
+    text_postings(docs).hint("rebalance", "bkt").write.mode(
+        "overwrite"
+    ).partitionBy("bkt").parquet(f"{path}/postings")
+
+
+def text_postings(docs: DataFrame) -> DataFrame:
+    """DISTINCT (doc_id, tok, bkt) postings of ``docs``, non-empty
+    tokens, bucketed by bkt = pmod(xxhash64(tok), 64): the rows
+    build_text_index writes and the streaming index merge
+    (streaming/jobs.text_index_merge_fn) set-unions per batch."""
+    return (
         docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .filter(F.col("tok") != "")
         .distinct()
@@ -1081,12 +1099,6 @@ def build_text_index(docs: DataFrame, path: str) -> None:
             F.pmod(F.xxhash64("tok"), F.lit(_INDEX_BUCKETS)).cast("int"),
         )
     )
-    # REBALANCE before the partitioned write (r17, guide §6 — see
-    # build_bm25_index): data-sized output files instead of one tiny
-    # file per (write task x bucket).
-    post.hint("rebalance", "bkt").write.mode("overwrite").partitionBy(
-        "bkt"
-    ).parquet(f"{path}/postings")
 
 
 def text_search(
@@ -1827,10 +1839,16 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses the self-join form, which is fine at fixture scale and
     hash-identical).  The final size join touches #sources rows."""
     docs = load_table(spark, sf_dir, "documents")
-    shd = (
-        docs.select(
-            "source", F.explode(shingles_expr()).alias("sh")
-        )
+    return source_overlap_from(source_grams(docs).localCheckpoint(eager=False))
+
+
+def source_grams(docs: DataFrame) -> DataFrame:
+    """DISTINCT (source, shh) word-3-gram hashes of ``docs``: the base
+    q_source_overlap scores, and the per-batch delta the streaming
+    source-gram store (streaming/jobs.source_gram_merge_fn)
+    set-unions."""
+    return (
+        docs.select("source", F.explode(shingles_expr()).alias("sh"))
         .select(
             "source",
             F.expr(
@@ -1838,9 +1856,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("shh"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    return source_overlap_from(shd)
 
 
 def source_overlap_from(shd: DataFrame) -> DataFrame:

@@ -21,6 +21,8 @@ from ..sources.catalog import load_table
 # arithmetic, rounded to cents, then returned as DOUBLE.  A double
 # sum's last bits depend on the summation order, so one on a .xx5
 # boundary could round to different cents on the two engines.
+# Ratios and averages of money (Q1's avg_price/avg_disc, Q8, Q14)
+# divide these exact sums as doubles before rounding.
 # `_cents`/`_money_sum`/`_disc_price` build the Spark side; the
 # `_sql` helpers and `_DISC_PRICE_SQL` are their DuckDB twins.
 
@@ -58,8 +60,10 @@ _DISC_PRICE_SQL = f"{_cents_sql('l_extendedprice')} * (1 - {_cents_sql('l_discou
                {_money_sum_sql(f"{_DISC_PRICE_SQL} * (1 + {_cents_sql('l_tax')})")}
                  AS sum_charge,
                round(avg(l_quantity), 4) AS avg_qty,
-               round(avg(l_extendedprice), 4) AS avg_price,
-               round(avg(l_discount), 6) AS avg_disc,
+               round({_money_sum_sql(_cents_sql("l_extendedprice"))} / count(*), 4)
+                 AS avg_price,
+               round({_money_sum_sql(_cents_sql("l_discount"))} / count(*), 6)
+                 AS avg_disc,
                count(*) AS count_order
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
@@ -81,8 +85,12 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
             _money_sum(disc_price).alias("sum_disc_price"),
             _money_sum(disc_price * (1 + _cents("l_tax"))).alias("sum_charge"),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
+            F.round(
+                _money_sum(_cents("l_extendedprice")) / F.count("*"), 4
+            ).alias("avg_price"),
+            F.round(_money_sum(_cents("l_discount")) / F.count("*"), 6).alias(
+                "avg_disc"
+            ),
             F.count("*").alias("count_order"),
         )
     )
@@ -263,12 +271,10 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q_tpch_q14",
-    oracle="""
+    oracle=f"""
         SELECT round(
-                 100.0 * sum(CASE WHEN p_type = 'PROMO'
-                                  THEN l_extendedprice * (1 - l_discount)
-                                  ELSE 0 END)
-                 / sum(l_extendedprice * (1 - l_discount)), 4) AS promo_revenue_pct
+                 100.0 * {_money_sum_sql(f"CASE WHEN p_type = 'PROMO' THEN {_DISC_PRICE_SQL} ELSE 0 END")}
+                 / {_money_sum_sql(_DISC_PRICE_SQL)}, 4) AS promo_revenue_pct
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE l_shipdate >= TIMESTAMP '1997-06-01 00:00:00'
           AND l_shipdate < TIMESTAMP '1997-07-01 00:00:00'
@@ -280,8 +286,8 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension join — promo revenue share of one month."""
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(0.0)
+    rev = _disc_price()
+    promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(0)
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1997-06-01 00:00:00").cast("timestamp_ntz"))
@@ -289,7 +295,9 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .agg(
-            F.round(100.0 * F.sum(promo) / F.sum(rev), 4).alias("promo_revenue_pct")
+            F.round(100.0 * _money_sum(promo) / _money_sum(rev), 4).alias(
+                "promo_revenue_pct"
+            )
         )
     )
 

@@ -13,6 +13,16 @@ key (e.g. event date) turns full scans into partition-pruned scans;
 
 `commit_store` is the one crash- and redelivery-safe rewrite of a
 maintained store (streaming merges, tombstone purges, compactions).
+
+`merge_store` is the one fold of a micro-batch into a maintained
+store: the store's rows and the batch's delta are unioned and
+re-aggregated per key, by ``sum`` (counters), ``max`` (registers,
+scales) or ``distinct`` (set-valued stores, no keys).  The merge kind
+alone decides redelivery safety.  Max and distinct-union are
+idempotent: folding a batch twice leaves the store unchanged, so they
+commit without a marker.  A sum is not: a redelivered batch would
+count twice, so a summing merge commits an ``_applied_<batch_id>``
+marker with its rows and a redelivered batch id is a no-op.
 """
 
 from __future__ import annotations
@@ -20,6 +30,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # Store-dir files that certify applied merge batches / purge requests;
 # the underscore prefix hides them from parquet readers (like _SUCCESS).
@@ -109,6 +120,64 @@ def commit_store(
     fs.delete(store_path, True)
     fs.rename(stage_path, store_path)
     return True
+
+
+# merge kind -> per-column aggregate over store ∪ delta (None: the
+# distinct union of whole rows)
+_MERGE_AGGS = {"sum": F.sum, "max": F.max, "distinct": None}
+
+
+def merge_store(
+    spark: SparkSession,
+    store_dir: str,
+    batch_id: int,
+    delta: Callable[[], DataFrame],
+    keys: tuple[str, ...] = (),
+    kind: str = "distinct",
+    partition_by: tuple[str, ...] = (),
+) -> bool:
+    """Fold batch ``batch_id``'s ``delta()`` into the store at
+    ``store_dir`` and commit through ``commit_store``.  Returns True
+    when a new store was committed.
+
+    The store is read with the delta's own schema (a fileless store
+    or a partition column then never needs inference), unioned with
+    the delta, and re-aggregated: ``sum`` or ``max`` of every non-key
+    column per ``keys``, or ``distinct`` rows when there are no keys.
+    A first batch is aggregated the same way, so the store is
+    key-unique from its first commit.  Columns keep the delta's order
+    and types.
+
+    Only a sum is marked (``_applied_<batch_id>``): see the module
+    docstring.  ``delta`` is called inside the fold, so a marked
+    redelivery plans nothing and runs no Spark job."""
+    if kind not in _MERGE_AGGS or (kind == "distinct") == bool(keys):
+        raise ValueError(f"merge kind {kind!r} with keys {keys!r}")
+
+    def fold(exists: bool) -> DataFrame:
+        new = delta()
+        rows = (
+            spark.read.schema(new.schema).parquet(store_dir).unionByName(new)
+            if exists
+            else new
+        )
+        agg = _MERGE_AGGS[kind]
+        if agg is None:
+            return rows.distinct()
+        return (
+            rows.groupBy(*keys)
+            .agg(
+                *[
+                    agg(f.name).cast(f.dataType).alias(f.name)
+                    for f in new.schema
+                    if f.name not in keys
+                ]
+            )
+            .select(*new.columns)
+        )
+
+    marker = f"_applied_{batch_id}" if kind == "sum" else None
+    return commit_store(spark, store_dir, fold, marker, partition_by)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

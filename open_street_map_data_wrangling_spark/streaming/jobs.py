@@ -19,7 +19,7 @@ Patterns covered:
 * stream-stream interval join (watermarks on both sides bound the
   join state) — signup→purchase correlation; batch twin: q_funnel
 * foreachBatch continuous aggregate (incremental_hourly_rollup) —
-  MERGE-style rollup maintenance committed through sinks.commit_store.
+  MERGE-style rollup maintenance folded in by sinks.merge_store.
 
 All jobs are trigger-agnostic: tests drive them with
 `trigger(availableNow=True)` into a memory sink; production would use
@@ -39,14 +39,19 @@ The `*_merge_fn` foreachBatch bodies are module-level so tests can
 replay a batch directly.
 
 Commit semantics.  A maintained store is rewritten through
-sinks.commit_store (stage, then rename over the store), with an
-`_applied_<batch_id>` marker when replaying a batch would change the
-store: the hourly rollup re-sums the whole rollup per batch under such
-a marker, while the SCD2 merge passes none because a redelivered delta
-adds no rows.  The near-dedup store, the IVF-PQ codes and the geo
-points instead overwrite batch-keyed slices (a `batch_id=` directory,
-or `__batch=` leaves under a dynamic partition overwrite set as a
-writer option), so a replayed batch rewrites only its own slice.
+sinks.commit_store (stage, then rename over the store).  Fifteen
+stores fold each batch in by one rule, sinks.merge_store: the
+`*_merge_fn` names the batch's delta, its key columns and the merge
+kind (sum, max or distinct), and the kind alone decides the
+`_applied_<batch_id>` redelivery marker (only a sum is marked).  The
+merges that rule cannot express stay custom, each on commit_store:
+the SCD2 dimension (a redelivered delta adds no rows), the BM25
+doc-replace, the hard-negative per-cell cap, the shard manifest's
+offset placement, the family registry and the purges and compactions.
+The near-dedup store, the IVF-PQ codes and the geo points instead
+overwrite batch-keyed slices (a `batch_id=` directory, or `__batch=`
+leaves under a dynamic partition overwrite set as a writer option),
+so a replayed batch rewrites only its own slice.
 """
 
 from __future__ import annotations
@@ -59,7 +64,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..sources.sinks import commit_store
+from ..sources.sinks import commit_store, merge_store
 
 # Explicit source schema — streaming readers must not infer (a schema
 # change midstream is an operational event, not a silent widening).
@@ -153,18 +158,12 @@ def run_to_memory(result: DataFrame, name: str, output_mode: str = "complete") -
     return spark.table(name)
 
 
-_ROLLUP_DDL = "hour timestamp, event_type string, cnt bigint, hour_key string"
-
-
 def rollup_merge_fn(spark: SparkSession, target_dir: str):
     """The rollup's per-batch merge, exposed at module level so tests
     can drive RETRIES directly (foreachBatch is at-least-once: a
     crash between sink commit and checkpoint commit re-runs the
-    batch).  The merge is read-modify-write — re-applying a batch
-    would DOUBLE-COUNT its events — so it commits through
-    sinks.commit_store with an ``_applied_<batch_id>`` marker: the
-    marker lands atomically with the rows it certifies, and a
-    redelivered batch id returns without touching the table.
+    batch).  A sum merge (sinks.merge_store), so a redelivered batch
+    id is a no-op instead of a double count.
 
     Cost: each batch rewrites the whole rollup — O(hours x event
     types) rows, one ``hour_key`` partition per hour — not only the
@@ -173,29 +172,15 @@ def rollup_merge_fn(spark: SparkSession, target_dir: str):
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        delta = (
-            batch_df.groupBy(
+        merge_store(
+            spark, target_dir, batch_id,
+            lambda: batch_df.groupBy(
                 F.date_trunc("hour", "ts").alias("hour"), "event_type"
             )
             .agg(F.count("*").alias("cnt"))
-            .withColumn("hour_key", F.date_format("hour", "yyyyMMddHH"))
-        )
-
-        def fold(exists: bool) -> DataFrame:
-            if not exists:
-                return delta
-            # explicit schema: the partition column would otherwise be
-            # re-inferred as INT instead of its written string form
-            current = spark.read.schema(_ROLLUP_DDL).parquet(target_dir)
-            return (
-                current.unionByName(delta)
-                .groupBy("hour", "hour_key", "event_type")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-
-        commit_store(
-            spark, target_dir, fold,
-            marker=f"_applied_{batch_id}", partition_by=("hour_key",),
+            .withColumn("hour_key", F.date_format("hour", "yyyyMMddHH")),
+            ("hour", "event_type", "hour_key"), "sum",
+            partition_by=("hour_key",),
         )
 
     return merge
@@ -205,8 +190,8 @@ def incremental_hourly_rollup(stream: DataFrame, target_dir: str):
     """Continuous-aggregate pattern (the 'hypertable rollup'): keep a
     parquet table of per-(hour, event_type) counts incrementally
     up-to-date as events stream in. Each micro-batch is partially
-    aggregated, then folded into the current rollup state and
-    committed through sinks.commit_store.
+    aggregated, then folded into the current rollup state by
+    sinks.merge_store.
 
     foreachBatch is the escape hatch for sinks Spark cannot express
     declaratively (MERGE-style upserts); the batch function receives a
@@ -524,38 +509,18 @@ def hll_merge_fn(spark: SparkSession, store_dir: str):
     """Register-max merge for the deterministic HLL
     (operators/sketches.hll_registers): the store holds at most
     |groups| x 256 (event_type, b, m) rows and a micro-batch folds in
-    via max(m) per register.
-
-    The retry-safety story is the OPPOSITE of rollup_merge_fn's:
-    register max is IDEMPOTENT and COMMUTATIVE, so a redelivered
-    batch merged a second time leaves the store bit-identical — no
-    applied-batch marker needed.  The store COMMIT is the remaining
-    hazard: overwriting the store dir in place would leave a
-    truncated store if the writer died mid-overwrite, and a replayed
-    batch would then merge from the truncation, silently losing
-    registers.  Hence stage-then-rename: the merged table is fully
-    written to a stage dir, the old store is deleted, and the stage
-    is renamed into place (sinks.commit_store, which also repairs a
-    crash between delete and rename before the next merge reads
-    anything).  Replaying a batch against any recovered state is
-    harmless — max is idempotent."""
+    via max(m) per register (sinks.merge_store: max needs no
+    redelivery marker)."""
     from ..operators.sketches import hll_registers
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = hll_registers(batch_df, "event_type", "event_id").select(
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: hll_registers(batch_df, "event_type", "event_id").select(
                 "event_type", "b", "m"
-            )
-            if not exists:
-                return delta
-            return (
-                spark.read.parquet(store_dir)
-                .unionByName(delta)
-                .groupBy("event_type", "b")
-                .agg(F.max("m").alias("m"))
-            )
-
-        commit_store(spark, store_dir, fold)
+            ),
+            ("event_type", "b"), "max",
+        )
 
     return merge
 
@@ -575,52 +540,21 @@ def hll_sketch_maintenance(stream: DataFrame, store_dir: str):
 
 
 def cms_merge_fn(spark: SparkSession, store_dir: str):
-    """Count-min counter merge — the instructive CONTRAST to
-    hll_merge_fn: counter addition is NOT idempotent, so a
-    redelivered batch would double-count every token it carries.
-    The applied-batch markers therefore live INSIDE the store dir as
-    `_applied_<batch_id>` files that sinks.commit_store checks and
-    commits atomically with the counters, closing both the
-    marker-after-commit double-count window and the mid-overwrite
-    truncation window that a separate marker dir left open.  Token
-    stream matches the batch CMS (q_cms_topk) exactly: split on
-    single space, EMPTY TOKENS INCLUDED — filtering them here while
-    the batch side counts them broke the store==batch invariant for
-    any text with doubled or leading/trailing spaces.  Together the
-    two jobs document the rule: pick sketch state whose merge is
-    idempotent (max / set-union) when you can, pay the
-    transactional-marker cost only when the semantics force
-    addition."""
-    from ..operators.sketches import _CMS_D, _CMS_W  # noqa: F401
+    """Count-min counter merge: each batch's counters are
+    sketches.cms_counters over its token frequencies — q_cms_topk's
+    own definition, empty tokens included — summed into the store
+    (sinks.merge_store: a sum commits an ``_applied_<batch_id>``
+    marker, so a redelivered batch is not counted twice).  Contrast
+    hll_merge_fn: pick sketch state whose merge is idempotent (max /
+    set-union) when you can, pay the marker only when the semantics
+    force addition."""
+    from ..operators.sketches import cms_counters, token_freq
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            tf = (
-                batch_df.select(F.explode(F.split("text", " ")).alias("tok"))
-                .groupBy("tok")
-                .agg(F.count("*").cast("bigint").alias("n"))
-            )
-            delta = None
-            for d in range(_CMS_D):
-                c = tf.groupBy(
-                    F.expr(
-                        f"CAST(conv(substring(md5(concat('c{d}:', tok)), 1, 12),"
-                        f" 16, 10) AS BIGINT) % {_CMS_W}"
-                    ).alias("pos")
-                ).agg(F.sum("n").cast("bigint").alias("c")).select(
-                    F.lit(d).alias("d"), "pos", "c"
-                )
-                delta = c if delta is None else delta.unionAll(c)
-            if not exists:
-                return delta
-            return (
-                spark.read.parquet(store_dir)
-                .unionByName(delta)
-                .groupBy("d", "pos")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-            )
-
-        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: cms_counters(token_freq(batch_df)), ("d", "pos"), "sum",
+        )
 
     return merge
 
@@ -713,9 +647,7 @@ def ivfpq_index_maintenance(
 def int8_scales_merge_fn(spark: SparkSession, store_dir: str):
     """Incremental int8 scale store (X70/X71 serving): merge each
     micro-batch's per-dimension max|x| into the (pos, m) store with a
-    per-dim MAX — max is idempotent and commutative (the HLL-register
-    argument), so redelivered batches are no-ops and no applied-batch
-    markers are needed; stage-rename commit guards readers.  The
+    per-dim MAX (sinks.merge_store: no redelivery marker).  The
     store is MONOTONE: scales only grow as vectors arrive — exactly
     what int8 serving needs after corpus growth (the r10 VERDICT
     deployment failure: serving from scales that predate new
@@ -727,22 +659,11 @@ def int8_scales_merge_fn(spark: SparkSession, store_dir: str):
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-
-        def fold(exists: bool) -> DataFrame:
-            delta = _int8_scales(
-                batch_df.filter(F.col("embedding").isNotNull())
-            )
-            if not exists:
-                return delta
-            return (
-                spark.read.schema("pos BIGINT, m DOUBLE")
-                .parquet(store_dir)
-                .unionByName(delta)
-                .groupBy("pos")
-                .agg(F.max("m").alias("m"))
-            )
-
-        commit_store(spark, store_dir, fold)
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: _int8_scales(batch_df.filter(F.col("embedding").isNotNull())),
+            ("pos",), "max",
+        )
 
     return merge
 
@@ -766,35 +687,18 @@ def lm_counts_merge_fn(spark: SparkSession, store_dir: str):
     incoming documents against yesterday's LM without retraining:
     serving is text.lm_score_docs(docs, spark.read.parquet(store)).
 
-    Counter addition is not idempotent (the cms_merge_fn lesson), so
-    each batch commits an `_applied_` marker with its counters through
-    sinks.commit_store — a redelivered micro-batch is a no-op because
-    of the marker, not by luck.  The train-split filter is the SAME
-    md5 nibble rule the batch query trains on, so streamed store ==
-    batch LM counts over the concatenated corpus, which the soak
-    test pins exactly."""
+    Each batch's delta is text.lm_train_counts, the counts
+    q_lm_surprisal trains on, summed into the store
+    (sinks.merge_store, marker-gated), so streamed store == batch LM
+    counts over the concatenated corpus, which the soak test pins
+    exactly."""
+    from ..operators.text import lm_train_counts
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = (
-                batch_df.filter(
-                    F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
-                    <= "b"
-                )
-                .select(F.explode(F.split("text", " ")).alias("tok"))
-                .groupBy("tok")
-                .agg(F.count("*").cast("bigint").alias("c"))
-            )
-            if not exists:
-                return delta
-            return (
-                spark.read.parquet(store_dir)
-                .unionByName(delta)
-                .groupBy("tok")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-            )
-
-        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: lm_train_counts(batch_df), ("tok",), "sum",
+        )
 
     return merge
 
@@ -816,32 +720,19 @@ def lm_vocab_maintenance(doc_stream: DataFrame, store_dir: str):
 def drift_counts_merge_fn(spark: SparkSession, store_dir: str):
     """Distribution-drift monitor maintenance — the (bkt, n_a, n_b)
     count table of pipeline_ops.q_quality_drift kept current over a
-    document stream.  Counter addition is not idempotent (the
-    cms/lm lesson), so each batch commits an `_applied_` marker with
-    its counters through sinks.commit_store.  The window/bucket
-    tagging is the SAME drift_counts expression the batch query
-    uses, so streamed store == batch counts over the concatenated
-    corpus, and serving the full drift report is
-    pipeline_ops.drift_report(read(store)) — a fold over at most
-    `_DRIFT_BUCKETS` rows, zero corpus scans."""
+    document stream, summed per batch (sinks.merge_store,
+    marker-gated).  The window/bucket tagging is the SAME
+    drift_counts expression the batch query uses, so streamed store
+    == batch counts over the concatenated corpus, and serving the
+    full drift report is pipeline_ops.drift_report(read(store)) — a
+    fold over at most `_DRIFT_BUCKETS` rows, zero corpus scans."""
     from ..operators.pipeline_ops import drift_counts
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = drift_counts(batch_df)
-            if not exists:
-                return delta
-            return (
-                spark.read.parquet(store_dir)
-                .unionByName(delta)
-                .groupBy("bkt")
-                .agg(
-                    F.sum("n_a").cast("bigint").alias("n_a"),
-                    F.sum("n_b").cast("bigint").alias("n_b"),
-                )
-            )
-
-        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: drift_counts(batch_df), ("bkt",), "sum",
+        )
 
     return merge
 
@@ -865,27 +756,17 @@ def decayed_counts_merge_fn(spark: SparkSession, store_dir: str):
     behind the time-decayed heavy hitters (X127/X128): counts at
     absolute 3-day-bucket granularity, so the decay NEVER touches
     the stored numbers — age enters only at serve time as a bucket
-    shift (sketches.decayed_topk_from_store).  Counter addition is
-    not idempotent, so redelivery protection is the CMS discipline:
-    an `_applied_<batch_id>` marker commits atomically with the
-    counts through sinks.commit_store.  The store stays |active
+    shift (sketches.decayed_topk_from_store).  A sum merge
+    (sinks.merge_store, marker-gated).  The store stays |active
     users| x |age buckets| rows whatever the event volume — the
     compaction that makes a standing trending query affordable."""
     from ..operators.sketches import decayed_counts
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = decayed_counts(batch_df)
-            if not exists:
-                return delta
-            return (
-                spark.read.parquet(store_dir)
-                .unionByName(delta)
-                .groupBy("user_id", "bkt")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-
-        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: decayed_counts(batch_df), ("user_id", "bkt"), "sum",
+        )
 
     return merge
 
@@ -912,30 +793,16 @@ def emb_drift_merge_fn(spark: SparkSession, store_dir: str):
     behind the embedding-drift monitor (X132/X135): each micro-batch
     of newly ingested vectors folds its quantized component sums and
     counts into the store, so the standing drift report never
-    rescans the embeddings history.  Counter addition is not
-    idempotent, so redelivery protection is the CMS discipline: an
-    `_applied_<batch_id>` marker commits atomically with the sums
-    through sinks.commit_store.  The store stays 2 x |dims| rows
-    (128 here) whatever the ingest volume."""
+    rescans the embeddings history.  A sum merge
+    (sinks.merge_store, marker-gated).  The store stays 2 x |dims|
+    rows (128 here) whatever the ingest volume."""
     from ..operators.similarity import drift_wave_sums
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = drift_wave_sums(batch_df)
-            if not exists:
-                return delta
-            return (
-                spark.read.schema("wave BIGINT, pos BIGINT, s BIGINT, n BIGINT")
-                .parquet(store_dir)
-                .unionByName(delta)
-                .groupBy("wave", "pos")
-                .agg(
-                    F.sum("s").cast("bigint").alias("s"),
-                    F.sum("n").cast("bigint").alias("n"),
-                )
-            )
-
-        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: drift_wave_sums(batch_df), ("wave", "pos"), "sum",
+        )
 
     return merge
 
@@ -965,10 +832,11 @@ def shard_manifest_merge_fn(spark: SparkSession, store_dir: str):
     The stored end offset is simply sum(bytes) over the store — no
     separate state row — so placement is not idempotent and each
     batch commits an `_applied_` marker through sinks.commit_store,
-    like every other counter store here.  Every manifest column merges with
-    sum/sum/min/max at (shard_id, source) grain, which is why the
-    streamed store folded through shard_manifest_fold equals the
-    one-shot plan over the concatenated corpus (pytest-pinned)."""
+    like the summing stores of sinks.merge_store; the offset and the
+    mixed sum/sum/min/max merge at (shard_id, source) grain keep it
+    custom.  That merge is why the streamed store folded through
+    shard_manifest_fold equals the one-shot plan over the
+    concatenated corpus (pytest-pinned)."""
     from ..operators.pipeline_ops import shard_manifest, shard_place
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -1001,46 +869,21 @@ def shard_manifest_merge_fn(spark: SparkSession, store_dir: str):
 def text_index_merge_fn(spark: SparkSession, index_path: str):
     """Incremental inverted-index maintenance
     (text.build_text_index's postings kept current over a document
-    stream): each micro-batch's DISTINCT (tok, doc_id) postings —
-    bucketed with the SAME token-hash rule the batch build uses —
-    set-union into postings/.  Idempotent by construction (the
-    winnow-print argument: postings are a pure function of the doc,
-    distinct-union absorbs redelivery), so no applied-batch markers;
-    sinks.commit_store guards readers.  text.text_search serves
-    from the maintained index unchanged, and streamed == batch-built
-    is pytest-pinned."""
-    from ..operators.text import _INDEX_BUCKETS
-
-    store_dir = f"{index_path}/postings"
+    stream): each micro-batch's text.text_postings — the rows the
+    batch build writes — set-union into postings/
+    (sinks.merge_store, distinct: no markers).  The store is read
+    with the postings' schema, so an index bootstrapped from an empty
+    corpus (a fileless postings dir that EXISTS) merges instead of
+    crashing schema inference.  text.text_search serves from the
+    maintained index unchanged, and streamed == batch-built is
+    pytest-pinned."""
+    from ..operators.text import text_postings
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = (
-                batch_df.select(
-                    "doc_id", F.explode(F.split("text", " ")).alias("tok")
-                )
-                .filter(F.col("tok") != "")
-                .distinct()
-                .withColumn(
-                    "bkt",
-                    F.pmod(F.xxhash64("tok"), F.lit(_INDEX_BUCKETS)).cast("int"),
-                )
-            )
-            if not exists:
-                return delta
-            # explicit schema (the text_search convention): an index
-            # bootstrapped from an empty corpus leaves a fileless
-            # postings dir that EXISTS, and schema inference would
-            # crash the first real micro-batch instead of merging
-            return (
-                spark.read.schema("doc_id BIGINT, tok STRING, bkt INT")
-                .parquet(store_dir)
-                .select("doc_id", "tok", "bkt")
-                .unionByName(delta)
-                .distinct()
-            )
-
-        commit_store(spark, store_dir, fold, partition_by=("bkt",))
+        merge_store(
+            spark, f"{index_path}/postings", batch_id,
+            lambda: text_postings(batch_df), partition_by=("bkt",),
+        )
 
     return merge
 
@@ -1141,11 +984,9 @@ def hardneg_cells_maintenance(vec_stream: DataFrame, index_path: str):
 def span_gram_merge_fn(spark: SparkSession, store_dir: str):
     """ExactSubstr gram-count maintenance — the corpus-wide
     (g, cnt) table behind q_dup_spans' duplicated-gram set, kept
-    current over a document stream.  Counter addition is not
-    idempotent (the cms/drift lesson), so each batch commits an
-    `_applied_` marker with its counters through sinks.commit_store,
-    which also carries any `_purged_` marker purge_span_gram_store
-    left.
+    current over a document stream.  A sum merge
+    (sinks.merge_store, marker-gated; commit_store also carries any
+    `_purged_` marker purge_span_gram_store left).
     The gram derivation is dedup._span_gram_base — the SAME exact
     md5 window hash the batch query uses — so the streamed store's
     cnt >= 2 set over the concatenated corpus equals the batch dup
@@ -1155,24 +996,14 @@ def span_gram_merge_fn(spark: SparkSession, store_dir: str):
     from ..operators.dedup import _span_gram_base
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = (
-                _span_gram_base(batch_df.select("doc_id", "text"))
-                .where(F.col("g").isNotNull())
-                .groupBy("g")
-                .agg(F.count("*").cast("bigint").alias("cnt"))
-            )
-            if not exists:
-                return delta
-            return (
-                spark.read.parquet(store_dir)
-                .select("g", "cnt")
-                .unionByName(delta)
-                .groupBy("g")
-                .agg(F.sum("cnt").cast("bigint").alias("cnt"))
-            )
-
-        commit_store(spark, store_dir, fold, marker=f"_applied_{batch_id}")
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: _span_gram_base(batch_df.select("doc_id", "text"))
+            .where(F.col("g").isNotNull())
+            .groupBy("g")
+            .agg(F.count("*").cast("bigint").alias("cnt")),
+            ("g",), "sum",
+        )
 
     return merge
 
@@ -1216,33 +1047,19 @@ def span_dup_coverage_serve(
 
 
 def winnow_print_merge_fn(spark: SparkSession, store_dir: str):
-    """Set-union merge of each micro-batch's DISTINCT winnow prints
-    (text._winnow_base over the batch docs) into the store.  A
-    document's prints are a pure function of its text and the merge
-    is distinct-union, so the operation is IDEMPOTENT by
-    construction — a redelivered batch changes nothing and no
-    applied-batch markers are needed (the cheap half of the
-    idempotent-vs-marker trade documented on the CMS counter store);
-    sinks.commit_store still guards readers against torn stores.
-    The store is the incremental clone-detection index: at 2
-    bigints per print and ~2/(W+1) prints per token it is a small
-    constant fraction of corpus size, and serving pairs never
-    re-reads any document."""
+    """Set-union merge of each micro-batch's winnow prints
+    (text._winnow_base over the batch docs) into the store
+    (sinks.merge_store, distinct: no markers).  The store is the
+    incremental clone-detection index: at 2 bigints per print and
+    ~2/(W+1) prints per token it is a small constant fraction of
+    corpus size, and serving pairs never re-reads any document."""
     from ..operators.text import _winnow_base
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = _winnow_base(batch_df.select("doc_id", "text")).distinct()
-            if not exists:
-                return delta
-            return (
-                spark.read.parquet(store_dir)
-                .select("doc_id", "sel")
-                .unionByName(delta)
-                .distinct()
-            )
-
-        commit_store(spark, store_dir, fold)
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: _winnow_base(batch_df.select("doc_id", "text")),
+        )
 
     return merge
 
@@ -1498,35 +1315,21 @@ def purge_winnow_store(
 
 
 def contamination_bands_merge_fn(spark: SparkSession, store_dir: str):
-    """Set-union merge of each micro-batch's DISTINCT MinHash-LSH
-    band rows (dedup.minhash_sigs + dedup._lsh_bands — the SAME band
+    """Set-union merge of each micro-batch's MinHash-LSH band rows
+    (dedup.minhash_sigs + dedup._lsh_bands — the SAME band
     derivation inline q_fuzzy_contamination runs) into the
-    train-split contamination store.  A doc's bands are a pure
-    function of its text and the merge is distinct-union, so the
-    operation is IDEMPOTENT (the winnow-store half of the
-    idempotent-vs-marker trade — no applied-batch markers);
-    sinks.commit_store guards readers.  The store is the standing
-    eval gate's state: ~4 rows × (8 bytes + a ~26-char band value)
-    per train doc, and checking a NEW test set against the whole
-    train history never re-reads a train document
-    (contamination_check below)."""
+    train-split contamination store (sinks.merge_store, distinct: no
+    markers).  The store is the standing eval gate's state: ~4 rows
+    × (8 bytes + a ~26-char band value) per train doc, and checking
+    a NEW test set against the whole train history never re-reads a
+    train document (contamination_check below)."""
     from ..operators.dedup import _lsh_bands, minhash_sigs
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = _lsh_bands(
-                minhash_sigs(batch_df.select("doc_id", "text"))
-            ).distinct()
-            if not exists:
-                return delta
-            return (
-                spark.read.schema(_CONTAM_BANDS_DDL)
-                .parquet(store_dir)
-                .unionByName(delta)
-                .distinct()
-            )
-
-        commit_store(spark, store_dir, fold)
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: _lsh_bands(minhash_sigs(batch_df.select("doc_id", "text"))),
+        )
 
     return merge
 
@@ -1548,10 +1351,7 @@ def contamination_bands_maintenance(doc_stream: DataFrame, store_dir: str):
 
 
 def contamination_check(
-    spark: SparkSession,
-    store_dir: str,
-    docs: DataFrame,
-    cap: int | None = None,
+    spark: SparkSession, store_dir: str, docs: DataFrame
 ) -> DataFrame:
     """The SERVED fuzzy decontamination gate (VERDICT r11 #7):
     q_fuzzy_contamination's per-test-doc audit for ANY candidate
@@ -1559,66 +1359,21 @@ def contamination_check(
     ZERO train-corpus scans — the real deployment shape, where the
     eval set arrives long after the crawl was ingested.
 
-    Semantics replayed exactly from the inline query: the batch's
-    band rows (same minhash/band derivation), bucket sizes counted
-    over store ∪ batch (the inline pass counts members across BOTH
-    splits), over-cap buckets dropped (template collisions carry no
-    near-dup signal — dedup._capped_band_pairs' contract), then the
-    cross join store×batch within surviving buckets, DISTINCT
-    (test, train) pairs, per-test aggregate.  When the batch is the
-    fixture's test split and the store holds its train split this
-    EQUALS inline q_fuzzy_contamination (pytest-pinned); for a new
-    eval batch it answers the same question against corpus history.
-
-    Scale shape: one Python-free pass over the batch (bands are
-    column expressions), one store-sized equi-join on (bi, bv) with
-    the hot buckets pruned by the same cap prepass, one per-test
-    aggregate.  The store never leaves parquet except for matching
-    band values."""
-    from ..operators.dedup import (
-        _LSH_BUCKET_CAP,
-        _lsh_bands,
-        minhash_sigs,
-    )
-
-    cap = _LSH_BUCKET_CAP if cap is None else cap
-    qb = _lsh_bands(
-        minhash_sigs(docs.select("doc_id", "text"))
-    ).localCheckpoint(eager=False)
-    store = spark.read.schema(_CONTAM_BANDS_DDL).parquet(store_dir)
-    # Bucket sizes count DISTINCT (doc_id, bi, bv) across store ∪
-    # batch (ADVICE r12): a doc re-checked after ingestion sits in
-    # both sides, and counting it twice can push a bucket past the
-    # cap, dropping pairs the inline semantics would keep.  Each side
-    # holds one row per (doc, band), so distinct removes exactly the
-    # cross-side overlap.
-    sizes = (
-        store.select("doc_id", "bi", "bv")
-        .unionByName(qb.select("doc_id", "bi", "bv"))
-        .distinct()
-        .groupBy("bi", "bv")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") <= cap)
-        .select("bi", "bv")
-    )
-    pairs = (
-        qb.select(
-            "bi", "bv", F.col("doc_id").alias("test_doc")
+    Semantics replayed exactly from the inline query: the
+    (test, train) pairs are text_dedup_check's (batch bands, bucket
+    sizes over store ∪ batch, over-cap buckets dropped, store join
+    within surviving buckets, DISTINCT pairs), then the per-test
+    aggregate.  When the batch is the fixture's test split and the
+    store holds its train split this EQUALS inline
+    q_fuzzy_contamination (pytest-pinned); for a new eval batch it
+    answers the same question against corpus history."""
+    return (
+        text_dedup_check(spark, store_dir, docs)
+        .groupBy(F.col("new_doc").alias("test_doc"))
+        .agg(
+            F.count("*").cast("bigint").alias("n_train_neardups"),
+            F.min("corpus_doc").cast("bigint").alias("example_train_doc"),
         )
-        .join(sizes.hint("shuffle_hash"), ["bi", "bv"])
-        .join(
-            store.select(
-                "bi", "bv", F.col("doc_id").alias("train_doc")
-            ),
-            ["bi", "bv"],
-        )
-        .where(F.col("test_doc") != F.col("train_doc"))
-        .select("test_doc", "train_doc")
-        .distinct()
-    )
-    return pairs.groupBy("test_doc").agg(
-        F.count("*").cast("bigint").alias("n_train_neardups"),
-        F.min("train_doc").cast("bigint").alias("example_train_doc"),
     )
 
 
@@ -1627,20 +1382,27 @@ def text_dedup_check(
 ) -> DataFrame:
     """The SERVED text near-dup gate (X112): for a NEW document
     batch, every (new_doc, corpus_doc) MinHash-LSH candidate pair
-    against the maintained band store — contamination_check's
-    machinery at PAIR granularity, completing the admission-gate
+    against the maintained band store, completing the admission-gate
     matrix across all four evidence channels (text + the three
     media gates).  Bucket-cap semantics follow inline q_dedup_near:
-    sizes count DISTINCT (doc, band) across store ∪ batch, over-cap
-    buckets dropped — so the gate EQUALS the inline query's
-    cross-subset exactly when store ∪ batch covers the corpus (the
-    even/odd q_text_gate fixture).  NOTE the deliberate asymmetry
-    with the media gates: the text cap is a CORPUS-GLOBAL statistic
-    (a bucket's hotness depends on documents not yet ingested), so
-    this gate is NOT wave-incremental the way the cap-free media
-    gates are — which is exactly why q_ingest_registry folds only
-    media edges; a standing text registry takes the inline pair
-    pipeline (X102's path), not this gate."""
+    sizes count DISTINCT (doc, band) across store ∪ batch — a doc
+    re-checked after ingestion sits in both sides, and counting it
+    twice could push a bucket past the cap (ADVICE r12) — and
+    over-cap buckets are dropped, so the gate EQUALS the inline
+    query's cross-subset exactly when store ∪ batch covers the corpus
+    (the even/odd q_text_gate fixture).  NOTE the deliberate
+    asymmetry with the media gates: the text cap is a CORPUS-GLOBAL
+    statistic (a bucket's hotness depends on documents not yet
+    ingested), so this gate is NOT wave-incremental the way the
+    cap-free media gates are — which is exactly why
+    q_ingest_registry folds only media edges; a standing text
+    registry takes the inline pair pipeline (X102's path), not this
+    gate.
+
+    Scale shape: one Python-free pass over the batch (bands are
+    column expressions), one store-sized equi-join on (bi, bv) with
+    the hot buckets pruned by the cap prepass.  The store never
+    leaves parquet except for matching band values."""
     from ..operators.dedup import _LSH_BUCKET_CAP, _lsh_bands, minhash_sigs
 
     qb = _lsh_bands(
@@ -1680,27 +1442,17 @@ def media_prints_merge_fn(
     ``fingerprints_fn(docs) -> (doc_id, dhash_hi, dhash_lo)`` is the
     SAME codec + hash stage the modality's inline dedup query runs
     (multimodal.image_fingerprints / audio_fingerprints /
-    video_fingerprints — all column-compatible by design).  A
-    fingerprint is a pure function of the media bytes and the merge
-    is distinct-union, so the operation is IDEMPOTENT (no markers);
-    sinks.commit_store guards readers.  12 bytes of state per item
-    makes the store a negligible fraction of any media corpus, and
-    checking a NEW batch for near-duplicates of corpus history never
-    re-decodes stored media (media_dedup_check below)."""
+    video_fingerprints — all column-compatible by design).
+    sinks.merge_store, distinct: no markers.  12 bytes of state per
+    item makes the store a negligible fraction of any media corpus,
+    and checking a NEW batch for near-duplicates of corpus history
+    never re-decodes stored media (media_dedup_check below)."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = fingerprints_fn(batch_df.select("doc_id")).distinct()
-            if not exists:
-                return delta
-            return (
-                spark.read.schema(_IMAGE_PRINTS_DDL)
-                .parquet(store_dir)
-                .unionByName(delta)
-                .distinct()
-            )
-
-        commit_store(spark, store_dir, fold)
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: fingerprints_fn(batch_df.select("doc_id")),
+        )
 
     return merge
 
@@ -1883,31 +1635,19 @@ def bm25_index_maintenance(
 
 
 def gram_store_merge_fn(spark: SparkSession, store_dir: str):
-    """Set-union merge of each micro-batch's DISTINCT hashed shingles
+    """Set-union merge of each micro-batch's hashed shingles
     (functions.textfeat.hashed_shingles — the q_containment /
-    q_gram_novelty hash discipline) into the gram store.  A doc's
-    grams are a pure function of its text and the merge is
-    distinct-union, so redelivery is a no-op (the winnow-print
-    idempotence argument, no markers); sinks.commit_store guards
-    readers.  The store holds one 8-byte hash per distinct corpus
-    gram — the crawl-history index the novelty gate serves from."""
+    q_gram_novelty hash discipline) into the gram store
+    (sinks.merge_store, distinct: no markers).  The store holds one
+    8-byte hash per distinct corpus gram — the crawl-history index
+    the novelty gate serves from."""
     from ..functions.textfeat import hashed_shingles
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = hashed_shingles(
-                batch_df.select("doc_id", "text")
-            ).select("shh").distinct()
-            if not exists:
-                return delta
-            return (
-                spark.read.schema("shh BIGINT")
-                .parquet(store_dir)
-                .unionByName(delta)
-                .distinct()
-            )
-
-        commit_store(spark, store_dir, fold)
+        merge_store(
+            spark, store_dir, batch_id,
+            lambda: hashed_shingles(batch_df.select("doc_id", "text")).select("shh"),
+        )
 
     return merge
 
@@ -1965,37 +1705,13 @@ def novelty_gate_serve(
 
 
 def source_gram_merge_fn(spark: SparkSession, store_dir: str):
-    """Set-union merge of each micro-batch's DISTINCT (source,
-    gram-hash) rows into the source-gram store — the q_source_overlap
-    base kept current over a document stream.  Pure function of each
-    doc, distinct-union: idempotent, no markers (the winnow-print
-    argument); sinks.commit_store guards readers."""
-    from ..functions.textfeat import shingles_expr
+    """Set-union merge of each micro-batch's text.source_grams — the
+    q_source_overlap base — into the source-gram store
+    (sinks.merge_store, distinct: no markers)."""
+    from ..operators.text import source_grams
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        def fold(exists: bool) -> DataFrame:
-            delta = (
-                batch_df.select(
-                    "source", F.explode(shingles_expr()).alias("sh")
-                )
-                .select(
-                    "source",
-                    F.expr(
-                        "CAST(conv(substring(md5(sh), 1, 15), 16, 10) AS BIGINT)"
-                    ).alias("shh"),
-                )
-                .distinct()
-            )
-            if not exists:
-                return delta
-            return (
-                spark.read.schema("source STRING, shh BIGINT")
-                .parquet(store_dir)
-                .unionByName(delta)
-                .distinct()
-            )
-
-        commit_store(spark, store_dir, fold)
+        merge_store(spark, store_dir, batch_id, lambda: source_grams(batch_df))
 
     return merge
 

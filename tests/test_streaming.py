@@ -2641,3 +2641,103 @@ def test_partition_overwrite_merges_write_no_session_conf(
     # still a dynamic overwrite: earlier batches' leaves survive
     assert spark.read.parquet(f"{index}/codes").count() == emb.count()
     assert spark.read.parquet(geo).count() == pts.count()
+
+
+# Every merge that folds a batch through sinks.merge_store, with the
+# merge kind it declares: (merge function name, input frame, store
+# subdirectory, kind).  "sum" stores are marker-gated; "max" and
+# "distinct" stores are idempotent and carry no marker.
+_STORE_MERGES = [
+    ("rollup_merge_fn", "events", "", "sum"),
+    ("hll_merge_fn", "events", "", "max"),
+    ("cms_merge_fn", "docs", "", "sum"),
+    ("int8_scales_merge_fn", "vecs", "", "max"),
+    ("lm_counts_merge_fn", "docs", "", "sum"),
+    ("drift_counts_merge_fn", "docs", "", "sum"),
+    ("decayed_counts_merge_fn", "events", "", "sum"),
+    ("emb_drift_merge_fn", "vecs", "", "sum"),
+    ("span_gram_merge_fn", "docs", "", "sum"),
+    ("text_index_merge_fn", "docs", "/postings", "distinct"),
+    ("winnow_print_merge_fn", "docs", "", "distinct"),
+    ("contamination_bands_merge_fn", "docs", "", "distinct"),
+    ("media_prints_merge_fn", "docs", "", "distinct"),
+    ("gram_store_merge_fn", "docs", "", "distinct"),
+    ("source_gram_merge_fn", "docs", "", "distinct"),
+]
+
+
+def _tiny_batch(spark, kind):
+    """Two-row input frames: events, (doc_id, source, text) documents
+    long enough for every gram window and both in the LM train split,
+    or 4-dim vectors."""
+    if kind == "events":
+        return spark.createDataFrame(
+            [
+                (1, "2024-01-01 10:05:00", 1, "click", 1.0, "{}"),
+                (2, "2024-01-01 11:10:00", 2, "view", 2.0, "{}"),
+            ],
+            "event_id long, ts_s string, user_id long, event_type string,"
+            " value double, props string",
+        ).select(
+            "event_id", F.col("ts_s").cast("timestamp").alias("ts"),
+            "user_id", "event_type", "value", "props",
+        )
+    if kind == "docs":
+        words = [f"w{i % 7}" for i in range(40)]
+        return spark.createDataFrame(
+            [
+                (4, "web", " ".join(words)),
+                (6, "wiki", " ".join(reversed(words)) + "  tail"),
+            ],
+            "doc_id long, source string, text string",
+        )
+    return spark.createDataFrame(
+        [(1, [0.5, -1.0, 2.0, 0.25]), (2, [1.5, 0.0, -3.0, 0.75])],
+        "vec_id long, embedding array<float>",
+    )
+
+
+@pytest.mark.parametrize(
+    "name, frame, sub, kind", _STORE_MERGES, ids=[m[0] for m in _STORE_MERGES]
+)
+def test_store_merge_redelivery(spark, tmp_path, count_jobs, name, frame, sub, kind):
+    """Merging the same (batch, batch_id) twice leaves the store's rows
+    as the first merge wrote them.  A summing store holds the batch's
+    ``_applied_<id>`` marker and its redelivery starts no Spark job
+    (the rollup's empty-batch probe excepted); a max or distinct store
+    holds no marker."""
+    import os
+    from collections import Counter
+
+    from open_street_map_data_wrangling_spark.streaming import jobs
+
+    store = str(tmp_path / "store")
+    if name == "media_prints_merge_fn":
+        merge = jobs.media_prints_merge_fn(
+            spark,
+            store,
+            lambda d: d.select(
+                "doc_id",
+                (F.col("doc_id") * 7).alias("dhash_hi"),
+                (F.col("doc_id") * 13).alias("dhash_lo"),
+            ),
+        )
+    else:
+        merge = getattr(jobs, name)(spark, store)
+    batch = _tiny_batch(spark, frame)
+    path = store + sub
+
+    def rows():
+        return Counter(map(tuple, spark.read.parquet(path).collect()))
+
+    merge(batch, 5)
+    first = rows()
+    assert first
+    jobs_run = count_jobs(lambda: merge(batch, 5))
+    assert rows() == first
+    markers = sorted(n for n in os.listdir(path) if n.startswith("_applied_"))
+    if kind == "sum":
+        assert markers == ["_applied_5"]
+        assert jobs_run <= (1 if name == "rollup_merge_fn" else 0)
+    else:
+        assert markers == []
