@@ -5,12 +5,13 @@ Media (image/audio/video) is carried as an opaque `binary` column +
 typed metadata, the standard lakehouse layout for training data. The
 fixture universe has no real media, so the *payload* here is the
 utf-8 encoding of `documents.text` — but the Spark-side plumbing is
-the real thing: binary columns, Arrow-batched `mapInPandas` and
-`mapInArrow`, explicit result schema, per-batch (not per-row) Python work.
+the real thing: binary columns, Arrow-batched `mapInArrow` through
+the package's one Python row seam (`scale.map_rows`), explicit result
+schema, Arrow batches in and out (never row-at-a-time pickling).
 
 Header-level decode is REAL and dependency-free: `decode_image`
 parses PNG IHDR / JPEG SOFn / GIF screen-descriptor dimensions with
-pure stdlib byte arithmetic (driven through mapInPandas by
+pure stdlib byte arithmetic (driven through the row seam by
 q_image_decode).  PIXEL-level decode is real for PNG since r09:
 `encode_png_rgb` / `decode_png_pixels` implement the 8-bit-truecolor
 profile end to end with stdlib zlib — all five filter types, genuine
@@ -24,10 +25,11 @@ Python worker per core — the payload bytes never land on the driver;
 partition sizing (`spark.sql.files.maxPartitionBytes`, or an explicit
 repartition on the id) controls batch memory, which is what matters
 when each row carries megabytes of media.  The ten codec stages
-(roundtrips, fingerprints, thumbnail, frame sample) share one fan-out
-and one `mapInArrow` worker, `_codec_stage`: each stage is a
-per-document generator plus its DDL, so their task count and Arrow
-batch size are set in that one place.
+(roundtrips, fingerprints, thumbnail, frame sample) share one fan-out,
+`_codec_stage`, in front of the seam; every stage here, the feature
+and header scans included, is a per-document generator plus its DDL,
+so the task count and Arrow batch size of all of them are set by
+that fan-out and the seam.
 """
 
 from __future__ import annotations
@@ -37,17 +39,13 @@ import hashlib
 from collections.abc import Callable, Iterator
 
 import numpy as np
-import pandas as pd
-import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
 
 from ..plans.registry import query
 from ..sources.catalog import load_table
-from .scale import arrow_table
+from .scale import map_rows
 
 # Result schema of the feature-extraction stage — explicit, so the
 # plan's schema never depends on Python introspection.
@@ -79,7 +77,7 @@ def decode_image(payload: bytes) -> tuple[str, int, int]:
     PIXEL decode still needs a codec (absent in this container) —
     that seam stays at fake_decode_meta for synthetic fixtures; this
     function is the real metadata path a lakehouse media scan runs
-    (and what q_image_decode drives through mapInPandas).
+    (and what q_image_decode drives through the row seam).
     Raises ValueError on unrecognized or truncated containers."""
     if payload.startswith(_PNG_SIG):
         if len(payload) < 24 or payload[12:16] != b"IHDR":
@@ -125,36 +123,21 @@ def fake_decode_meta(payload: bytes) -> tuple[int, int]:
     return (1 + head % 64, 1 + len(payload) % 64)
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: per Arrow batch, vectorized metadata +
-    (fake-)decode features from the binary payload column."""
-    for pdf in batches:
-        payloads = pdf["payload"]
-        # a NULL payload (missing media) yields NULL features — the
-        # same rows the SQL twin produces from length(NULL)/md5(NULL),
-        # so downstream can count decode failures instead of crashing
-        # (tests/test_null_values.py); nullable Int32 carries NULLs
-        # through Arrow
-        dims = payloads.map(
-            lambda b: fake_decode_meta(b) if b is not None else (None, None)
-        )
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": payloads.map(
-                    lambda b: len(b) if b is not None else None
-                ).astype("Int32"),
-                "head_byte": payloads.map(
-                    lambda b: (b[0] if len(b) else 0) if b is not None else None
-                ).astype("Int32"),
-                "content_md5": payloads.map(
-                    lambda b: hashlib.md5(b).hexdigest()
-                    if b is not None
-                    else None
-                ),
-                "fake_width": dims.map(lambda t: t[0]).astype("Int32"),
-                "fake_height": dims.map(lambda t: t[1]).astype("Int32"),
-            }
+def _extract_rows(doc_id, payload):
+    """Metadata + (fake-)decode features of one payload.  A NULL
+    payload (missing media) yields NULL features — the same row the
+    SQL twin produces from length(NULL)/md5(NULL), so downstream can
+    count decode failures instead of crashing
+    (tests/test_null_values.py)."""
+    if payload is None:
+        yield doc_id, None, None, None, None, None
+    else:
+        yield (
+            doc_id,
+            len(payload),
+            payload[0] if payload else 0,
+            hashlib.md5(payload).hexdigest(),
+            *fake_decode_meta(payload),
         )
 
 
@@ -162,7 +145,9 @@ def extract_media_features(binary_df: DataFrame) -> DataFrame:
     """The multimodal feature-extraction operator: binary column in,
     typed metadata out, Arrow-batched. Input needs (doc_id, payload
     binary)."""
-    return binary_df.mapInPandas(_extract_batches, schema=MM_FEATURES_SCHEMA)
+    return map_rows(
+        binary_df, ("doc_id", "payload"), _extract_rows, MM_FEATURES_SCHEMA
+    )
 
 
 @query(
@@ -176,11 +161,11 @@ def extract_media_features(binary_df: DataFrame) -> DataFrame:
                CAST(1 + (length(text) % 64) AS INTEGER) AS fake_height
         FROM documents
     """,
-    tags=("multimodal", "extension", "pandas-udf"),
+    tags=("multimodal", "extension", "python-rows"),
 )
 def q_mm_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multimodal feature extraction (X5): text → binary payload →
-    mapInPandas metadata/decode — the full Arrow round-trip the real
+    Arrow-batched metadata/decode — the full Arrow round-trip the real
     media pipeline uses, oracle-checked because the fake decode is
     deterministic. (Documents are ASCII, so octet length == char
     length lets the SQL twin exist at all.)"""
@@ -192,23 +177,13 @@ def q_mm_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 MM_DIMS_SCHEMA = "doc_id bigint, format string, width int, height int"
 
 
-def _image_dim_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker over (doc_id, payload): real header decode
-    per payload via decode_image.  NULL payloads (legal per the
-    registry's null-payload contract) yield NULL metadata instead of
-    crashing the Python worker — mirroring _extract_batches."""
-    for pdf in batches:
-        decoded = pdf["payload"].map(
-            lambda b: decode_image(b) if b is not None else (None, None, None)
-        )
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "format": decoded.map(lambda t: t[0]),
-                "width": decoded.map(lambda t: t[1]).astype("Int32"),
-                "height": decoded.map(lambda t: t[2]).astype("Int32"),
-            }
-        )
+def _image_dim_rows(doc_id, payload):
+    """Real header decode of one payload via decode_image.  A NULL
+    payload (legal per the registry's null-payload contract) yields
+    NULL metadata instead of crashing the Python worker — mirroring
+    _extract_rows."""
+    dims = decode_image(payload) if payload is not None else (None,) * 3
+    yield doc_id, *dims
 
 
 def extract_image_dims(binary_df: DataFrame) -> DataFrame:
@@ -216,7 +191,7 @@ def extract_image_dims(binary_df: DataFrame) -> DataFrame:
     format, width, height) using the real stdlib header parser —
     the metadata pass a media-lakehouse ingest runs before any pixel
     work, Arrow-batched like extract_media_features."""
-    return binary_df.mapInPandas(_image_dim_batches, schema=MM_DIMS_SCHEMA)
+    return map_rows(binary_df, ("doc_id", "payload"), _image_dim_rows, MM_DIMS_SCHEMA)
 
 
 def _codec_stage(
@@ -225,36 +200,19 @@ def _codec_stage(
     rows_fn: Callable[..., Iterator[tuple]],
     schema: str,
 ) -> DataFrame:
-    """One Arrow-batched codec stage: ``rows_fn`` over the ``in_cols``
-    of every row of ``docs``, after a fan-out exchange to the
-    session's default parallelism.  The fixture parquet is 1-2 files
-    and an Arrow stage inherits scan parallelism: without the fan-out
-    the whole corpus's encode/decode ran on 2 of 32 cores (measured
-    16 s -> ~2 s at sf0.1 for image_fingerprints, whose codec work is
-    ~3 ms per image).  The payload is generated inside the worker, so
-    the exchange moves only the input ints, at any scale.
-
-    ``rows_fn`` gets each input row as Python ints (None for NULL),
-    read straight from the Arrow batch — a nullable bigint never
-    passes through pandas float64 — and yields any number of output
-    tuples in ``schema`` column order, so each stage keeps its own
-    null rule and row explosion.  Output batches are typed from the
-    DDL, parsed once on the driver, by the rows-to-Arrow rule of
-    scale.local_frame (scale.arrow_table)."""
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-
-    def worker(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            ins = [batch.column(c).to_pylist() for c in in_cols]
-            out = [row for args in zip(*ins) for row in rows_fn(*args)]
-            yield from arrow_table(out, arrow_schema).to_batches()
-
-    worker.__name__ = rows_fn.__name__
-    return (
-        docs.select(*in_cols)
-        .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-        .mapInArrow(worker, schema=schema)
+    """One codec stage: ``rows_fn`` over the ``in_cols`` of every row
+    of ``docs`` through the row seam (scale.map_rows), after a fan-out
+    exchange to the session's default parallelism.  The fixture
+    parquet is 1-2 files and an Arrow stage inherits scan parallelism:
+    without the fan-out the whole corpus's encode/decode ran on 2 of
+    32 cores (measured 16 s -> ~2 s at sf0.1 for image_fingerprints,
+    whose codec work is ~3 ms per image).  The payload is generated
+    inside the worker, so the exchange moves only the input ints, at
+    any scale."""
+    fanned = docs.select(*in_cols).repartition(
+        docs.sparkSession.sparkContext.defaultParallelism
     )
+    return map_rows(fanned, in_cols, rows_fn, schema)
 
 
 def _be32(col: Column) -> Column:
@@ -270,14 +228,14 @@ def _be32(col: Column) -> Column:
                CAST(n_chars % 64 + 1 AS INTEGER) AS height
         FROM documents
     """,
-    tags=("multimodal", "extension", "pandas-udf"),
+    tags=("multimodal", "extension", "python-rows"),
 )
 def q_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real image-header decode (X5): each document is wrapped in a
     spec-faithful PNG container (signature + IHDR chunk) whose
     dimensions are derived from (doc_id, n_chars), built row-locally
     with JVM byte expressions — then decoded back through the REAL
-    stdlib parser (decode_image) in an Arrow-batched mapInPandas
+    stdlib parser (decode_image) in an Arrow-batched row-seam
     pass.  The oracle recomputes the expected dimensions directly,
     so a hash match proves the encode→decode roundtrip is faithful:
     this is the plumbing a real media scan inherits unchanged, with
@@ -552,7 +510,7 @@ def _pixel_roundtrip_rows(doc_id, n_chars):
         FROM dims d
         LEFT JOIN agg a ON d.ok AND d.doc_id = a.doc_id
     """,
-    tags=("multimodal", "extension", "pandas-udf", "pixels"),
+    tags=("multimodal", "extension", "python-rows", "pixels"),
 )
 def q_image_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL pixel-level PNG roundtrip (X5, r09 — the last documented
@@ -702,7 +660,7 @@ def _pcm_roundtrip_rows(doc_id, n_chars):
         FROM dims d
         LEFT JOIN agg a ON d.ok AND d.doc_id = a.doc_id
     """,
-    tags=("multimodal", "extension", "pandas-udf", "audio"),
+    tags=("multimodal", "extension", "python-rows", "audio"),
 )
 def q_audio_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL WAV/PCM audio roundtrip (X68 — the audio seam closed the
@@ -1231,7 +1189,7 @@ def _jpeg_roundtrip_rows(doc_id, n_chars):
         FROM dims d
         LEFT JOIN agg a ON d.ok AND d.doc_id = a.doc_id
     """,
-    tags=("multimodal", "extension", "pandas-udf", "jpeg", "pixels"),
+    tags=("multimodal", "extension", "python-rows", "jpeg", "pixels"),
 )
 def q_image_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL baseline-JFIF (JPEG) roundtrip (X78) — closes the last
@@ -1583,7 +1541,7 @@ def _gif_roundtrip_rows(doc_id, n_chars):
         FROM dims d
         LEFT JOIN agg a ON d.ok AND d.doc_id = a.doc_id
     """,
-    tags=("multimodal", "extension", "pandas-udf", "gif", "pixels"),
+    tags=("multimodal", "extension", "python-rows", "gif", "pixels"),
 )
 def q_image_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL GIF87a/LZW roundtrip (X80) — closes the LAST codec seam
@@ -2350,7 +2308,7 @@ def _video_roundtrip_rows(doc_id, n_chars):
         FROM dims d
         LEFT JOIN agg a ON d.ok AND d.doc_id = a.doc_id
     """,
-    tags=("multimodal", "extension", "pandas-udf", "video", "frames"),
+    tags=("multimodal", "extension", "python-rows", "video", "frames"),
 )
 def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL animated-video roundtrip (X103): every document becomes a
@@ -3576,7 +3534,7 @@ def _thumbnail_rows(doc_id, n_chars):
         FROM dims d
         LEFT JOIN agg a ON d.ok AND d.doc_id = a.doc_id
     """,
-    tags=("multimodal", "extension", "pandas-udf", "resize", "gif"),
+    tags=("multimodal", "extension", "python-rows", "resize", "gif"),
 )
 def q_image_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL thumbnailing (X113) — retires the last fake in the X5
@@ -3659,7 +3617,7 @@ def _video_sample_rows(doc_id):
         FROM vpx
         GROUP BY doc_id, f
     """,
-    tags=("multimodal", "extension", "pandas-udf", "video", "frames",
+    tags=("multimodal", "extension", "python-rows", "video", "frames",
           "transcode"),
 )
 def q_video_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

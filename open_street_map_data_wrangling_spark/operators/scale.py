@@ -19,6 +19,10 @@ query in the inventory can adopt them:
   run their rounds through: AQE off, a shuffle width taken from a
   materialized relation, a lazy cut per round, and one log record of
   the rounds run and whether they converged
+* the Python row seam — map_rows, the one way the package runs Python
+  over executor rows: one ``mapInArrow`` pass that hands a per-row
+  generator Python values and types its output from a DDL (the OSM
+  parse, the multimodal stages and the compression signal)
 
 tests/test_scale_patterns.py proves each pattern equivalent to its
 naive form, and additionally demonstrates (with plan assertions)
@@ -29,7 +33,7 @@ layouts — the two write-time levers sources/sinks.py exposes.
 from __future__ import annotations
 
 import logging
-from collections.abc import Callable
+from collections.abc import Callable, Iterator, Sequence
 
 from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -83,6 +87,39 @@ def arrow_table(rows, schema):
         [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
         schema=schema,
     )
+
+
+def map_rows(
+    df: DataFrame,
+    in_cols: Sequence[str],
+    rows_fn: Callable[..., Iterator[tuple]],
+    ddl: str,
+) -> DataFrame:
+    """``rows_fn`` over the ``in_cols`` of every row of ``df``: the one
+    way the package runs Python over executor rows.  One
+    ``mapInArrow`` pass that keeps ``df``'s partitioning (it adds no
+    exchange), in Arrow batches of
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows.
+
+    ``rows_fn`` gets each input row as Python values read straight from
+    the Arrow batch (None for NULL; a nullable bigint never passes
+    through float64) and yields any number of output tuples in ``ddl``
+    column order, so each stage keeps its own null rule and row
+    explosion.  Each output batch is typed from ``ddl``, parsed once on
+    the driver, by arrow_table."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = to_arrow_schema(StructType.fromDDL(ddl))
+
+    def worker(batches):
+        for batch in batches:
+            ins = [batch.column(c).to_pylist() for c in in_cols]
+            out = [row for args in zip(*ins) for row in rows_fn(*args)]
+            yield from arrow_table(out, schema).to_batches()
+
+    worker.__name__ = rows_fn.__name__
+    return df.select(*in_cols).mapInArrow(worker, schema=ddl)
 
 
 def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:

@@ -15,12 +15,15 @@ with a single division so both engines produce bit-identical doubles.
 
 from __future__ import annotations
 
+import zlib
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..plans.registry import query
 from ..sources.catalog import load_table, read_parquet
 from ..sources.sinks import commit_store
+from .scale import map_rows
 
 STOPWORDS = ("the", "and", "of", "to", "a", "in", "is")
 _STOP_SQL = ", ".join(f"'{s}'" for s in STOPWORDS)
@@ -599,53 +602,38 @@ def q_domain_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _compression_batches(batches):
-    """mapInPandas worker: zlib level-6 compressed size per text —
-    stdlib, deterministic (fixed level, no dictionary)."""
-    import zlib
-
-    import pandas as pd
-
-    for pdf in batches:
-        # null text (a crawl row with no body) → NULL metrics, not a
-        # worker crash — pandas nullable Int64 carries the NULLs
-        # through Arrow (tests/test_null_values.py)
-        raw = pdf["text"].map(
-            lambda t: len(t.encode("utf-8")) if t is not None else None
-        )
-        comp = pdf["text"].map(
-            lambda t: len(zlib.compress(t.encode("utf-8"), 6))
-            if t is not None
-            else None
-        )
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "n_bytes": raw.astype("Int64"),
-                "n_compressed": comp.astype("Int64"),
-                "ratio_x10k": (
-                    10000 * comp.astype("Int64") // raw.astype("Int64")
-                ),
-            }
-        )
+def _compression_rows(doc_id, text):
+    """zlib level-6 compressed size of one text — stdlib,
+    deterministic (fixed level, no dictionary).  A NULL text (a crawl
+    row with no body) yields NULL metrics, not a worker crash
+    (tests/test_null_values.py); an empty text has ratio 0, not a
+    division by zero."""
+    if text is None:
+        yield doc_id, None, None, None
+        return
+    raw = text.encode("utf-8")
+    comp = len(zlib.compress(raw, 6))
+    yield doc_id, len(raw), comp, 10000 * comp // len(raw) if raw else 0
 
 
-@query("q_compression_ratio", oracle=None, tags=("text", "quality", "pandas-udf"))
+@query("q_compression_ratio", oracle=None, tags=("text", "quality", "python-rows"))
 def q_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compression-ratio quality signal: zlib(text)/len(text) — the
     entropy proxy public pipelines use to catch pathological docs
     from BOTH tails (near-zero ratio = mechanical repetition that
     n-gram rules miss; near-1 ratio = random noise / binary spill).
     This is the one text op that legitimately needs Python: a real
-    codec, so it runs as Arrow-batched mapInPandas over stdlib zlib
-    (level pinned for determinism) — vectorized batches, never
-    row-at-a-time pickling.  Rows-only at the driver (DuckDB has no
-    zlib); tests/test_operators.py pins per-doc exactness against a
-    direct Python recomputation."""
+    codec, so it runs stdlib zlib (level pinned for determinism)
+    through the package's Python row seam, scale.map_rows — Arrow
+    batches in and out, never row-at-a-time pickling.  Rows-only at
+    the driver (DuckDB has no zlib); tests/test_operators.py pins
+    per-doc exactness against a direct Python recomputation."""
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", "text").mapInPandas(
-        _compression_batches,
-        schema="doc_id bigint, n_bytes bigint, n_compressed bigint, ratio_x10k bigint",
+    return map_rows(
+        docs,
+        ("doc_id", "text"),
+        _compression_rows,
+        "doc_id bigint, n_bytes bigint, n_compressed bigint, ratio_x10k bigint",
     )
 
 

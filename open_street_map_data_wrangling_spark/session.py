@@ -3,9 +3,11 @@
 Reference lifecycle (SURVEY.md §3.1 EP1): single process, single
 thread, `ET.iterparse` streaming scan. Engine equivalent: one
 SparkSession whose defaults are chosen for the Catalyst/Tungsten
-path — AQE on (runtime coalesce + skew-join split), Arrow on (any
-pandas-UDF extension op pays batch transfer, not per-row pickling),
-UTC session timezone (deterministic vs. the DuckDB oracle), and
+path — AQE on (runtime coalesce + skew-join split), Arrow on for
+driver-side pandas conversions (every Python stage moves Arrow
+batches, never pickled rows: the row seam `operators/scale.map_rows`
+and the streaming jobs' `applyInPandasWithState`), UTC session
+timezone (deterministic vs. the DuckDB oracle), and
 `nanosAsLong` so the ns-precision `events.ts` fixture column loads
 (Spark timestamps are µs — see sources/catalog.py).
 
@@ -19,7 +21,7 @@ set as `spark.python.daemon.module`). Before every task `pyspark.worker`
 calls `importlib.invalidate_caches()`, and on CPython 3.11 each cached
 `zipimporter` then re-reads its archive's whole central directory: 16
 importers of `pyspark.zip` and the spark-core jar, ~0.1 s of CPU per
-`mapInPandas`/`mapInArrow`/UDF task. The daemon drops the importers of
+Python task (`mapInArrow`, `applyInPandasWithState`, UDF). The daemon drops the importers of
 the archives it started with before each task, so none is re-read. The
 daemon is started with `python -m`, so the package root is put on
 `spark.executorEnv.PYTHONPATH`: workers find it whatever the caller's

@@ -1,7 +1,8 @@
 """First-class ``osm_xml`` format — Spark 4 Python Data Source API.
 
 ``parse_osm_xml`` (osm_xml.py) distributes the reference's iterparse
-ETL through ``spark.read.text`` + ``mapInPandas``.  This module
+ETL through ``spark.read.text`` + the package's Python row seam
+(``scale.map_rows``, one ``mapInArrow`` pass).  This module
 exposes the SAME parser as a registered source, so the five shaped
 OSM relations read like any built-in format:
 
@@ -28,10 +29,11 @@ uses, in pure Python:
   fragment) — per-task memory is bounded by one element plus one
   chunk, the distributed analog of iterparse+clear.
 
-Fragments then flow through osm_xml._parse_fragment — one parser,
-two transports — so the data source is equivalence-tested against
-parse_osm_xml row-for-row (tests/test_osm_datasource.py, at several
-partition counts including ranges that cut mid-element).
+Fragments then flow through osm_xml._tagged_rows — one parser and
+one row shape, two transports — so the data source is
+equivalence-tested against parse_osm_xml row-for-row
+(tests/test_osm_datasource.py, at several partition counts including
+ranges that cut mid-element).
 """
 
 from __future__ import annotations
@@ -45,7 +47,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .osm_xml import _TABLE_SCHEMAS, _fields, _parse_fragment, _table_rows
+from .osm_xml import _TABLE_SCHEMAS, _TAGGED_COLS, _fields, _tagged_rows
 
 _MARKER = b"\n  <"
 _CHUNK = 1 << 20
@@ -112,16 +114,13 @@ def _table_option(options: dict) -> str:
 def _shape_rows(frags: Iterator[bytes], table: str):
     """Fragment bytes → output tuples for one relation — the one
     shaper both the batch byte-range reader and the streaming
-    file-drop reader run, over the same (table, row) split the
-    mapInPandas parse uses."""
-    cols = [c for c, _ in _fields(_TABLE_SCHEMAS[table])]
+    file-drop reader run: the relation's columns projected out of the
+    same tagged rows the row-seam parse emits."""
+    at = [_TAGGED_COLS.index(c) for c, _ in _fields(_TABLE_SCHEMAS[table])]
     for frag in frags:
-        parsed = _parse_fragment(frag.decode("utf-8", errors="replace"))
-        if parsed is None:
-            continue
-        for t, row in _table_rows(*parsed):
-            if t == table:
-                yield tuple(row.get(c) for c in cols)
+        for row in _tagged_rows(frag.decode("utf-8", errors="replace")):
+            if row[0] == table:
+                yield tuple(row[i] for i in at)
 
 
 class OsmXmlReader(DataSourceReader):

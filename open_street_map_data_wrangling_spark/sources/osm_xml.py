@@ -4,9 +4,10 @@ source format, distributed.
 The reference streams one XML file through `ET.iterparse` with
 `elem.clear()` (single process, O(1) memory). The Spark-first form
 keeps the same per-element parser — stdlib ElementTree, no extra
-packages — but runs it inside `mapInPandas` over a DataFrame of XML
-*fragments*, one top-level element per row, so a 100 TB extract
-parses across every core of the cluster:
+packages — but runs it through the package's Python row seam
+(`operators.scale.map_rows`, one Arrow-batched `mapInArrow` pass)
+over a DataFrame of XML *fragments*, one top-level element per row,
+so a 100 TB extract parses across every core of the cluster:
 
 1. `spark.read.text` with a custom line separator splits the raw XML
    at element boundaries — a narrow, streaming scan (each task sees
@@ -15,7 +16,7 @@ parses across every core of the cluster:
    reference tables (schema.py shapes): nodes, nodes_tags, ways,
    ways_tags, ways_nodes.
 3. Like the reference's single pass, the parse runs once: one
-   `mapInPandas` emits every row tagged with its target table
+   row-seam pass emits every row tagged with its target table
    (`parse_osm_tagged`, schema `TAGGED_SCHEMA` = `table` plus the
    union of the table schemas), and each table is a where +
    selectExpr over that one tagged parse (`osm_table`,
@@ -46,10 +47,10 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 from collections.abc import Iterator
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.scale import map_rows
 
 NODES_SCHEMA = (
     "id bigint, lat double, lon double, user string, uid bigint, "
@@ -176,30 +177,33 @@ def read_osm_fragments(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.option("lineSep", "\n  <").text(path)
 
 
-def _parse_fragment(raw: str) -> tuple[str, dict] | None:
+def _repair(raw: str) -> tuple[str, str | None]:
     """One boundary-split fragment (lineSep scan or byte-range data
     source — both split on the same "\\n  <" marker, so both lose the
-    element's leading '<' and possibly its own closing tag) → parsed
-    (kind, shaped) or None for non-element fragments."""
+    element's leading '<' and possibly its own closing tag) → (its
+    text with the '<' put back and a trailing document close dropped,
+    the element's closing tag, or None for a non-element fragment)."""
+    raw = raw.strip()
+    if not raw.startswith("<"):
+        raw = "<" + raw
+    if raw.endswith("</osm>"):
+        raw = raw[: -len("</osm>")].rstrip()
+    kind = next((k for k in _KIND_TABLES if raw.startswith("<" + k)), None)
+    return raw, kind and f"</{kind}>"
+
+
+def _parse_fragment(raw: str) -> tuple[str, dict] | None:
+    """One boundary-split fragment → parsed (kind, shaped), or None
+    for non-element fragments."""
     raw = raw.strip()
     if not raw or raw.startswith(("?", "<?", "osm", "/", "bounds")):
         return None
-    if not raw.startswith("<"):
-        # the boundary splitter consumed the leading '<'
-        raw = "<" + raw
-    # document close may ride on the final fragment
-    if raw.endswith("</osm>"):
-        raw = raw[: -len("</osm>")].rstrip()
-    parsed = _parse_element(raw)
-    if parsed is None and raw.startswith(("<node", "<way", "<relation")):
-        # the splitter consumed "\n  <" of the element's own
-        # closing tag — retry with it reconstructed
-        kind = (
-            "node"
-            if raw.startswith("<node")
-            else "way" if raw.startswith("<way") else "relation"
-        )
-        parsed = _parse_element(raw + f"</{kind}>")
+    text, close = _repair(raw)
+    parsed = _parse_element(text)
+    if parsed is None and close:
+        # the splitter consumed "\n  <" of the element's own closing
+        # tag — retry with it rebuilt
+        parsed = _parse_element(text + close)
     return parsed
 
 
@@ -217,26 +221,24 @@ def _table_rows(kind: str, shaped: dict) -> Iterator[tuple[str, dict]]:
         yield child_table, child
 
 
-def _tagged_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for raw in pdf["value"]:
-            parsed = _parse_fragment(raw)
-            if parsed is not None:
-                rows.extend({"table": t, **row} for t, row in _table_rows(*parsed))
-        # object dtype keeps nullable bigints exact (no float64 detour)
-        yield pd.DataFrame(rows, columns=_TAGGED_COLS, dtype=object)
+def _tagged_rows(raw: str) -> Iterator[tuple]:
+    """One fragment → its `TAGGED_SCHEMA` tuples (none for a
+    non-element fragment)."""
+    parsed = _parse_fragment(raw)
+    if parsed is not None:
+        for table, row in _table_rows(*parsed):
+            yield table, *map(row.get, _TAGGED_COLS[1:])
 
 
 def parse_osm_tagged(spark: SparkSession, path: str) -> DataFrame:
     """The reference ETL's single streaming pass (data.py::process_map),
-    distributed: ONE `mapInPandas` over the fragment scan emits every
-    parsed row once, tagged with its target table (`TAGGED_SCHEMA`).
-    Persist it to let several consumers share one parse (run_osm_etl's
-    check aggregate and five writes run together over its cache);
-    split it with `osm_table` or `split_osm_tables`."""
-    return read_osm_fragments(spark, path).mapInPandas(
-        _tagged_iter, schema=TAGGED_SCHEMA
+    distributed: ONE row-seam pass (scale.map_rows) over the fragment
+    scan emits every parsed row once, tagged with its target table
+    (`TAGGED_SCHEMA`).  Persist it to let several consumers share one
+    parse (run_osm_etl's check aggregate and five writes run together
+    over its cache); split it with `osm_table` or `split_osm_tables`."""
+    return map_rows(
+        read_osm_fragments(spark, path), ("value",), _tagged_rows, TAGGED_SCHEMA
     )
 
 
@@ -279,12 +281,7 @@ def write_osm_sample(
     w = W.orderBy(F.monotonically_increasing_id())
     elems = (
         frags.withColumn("__v", F.ltrim(F.col("value")))
-        .filter(
-            F.col("__v").startswith("node")
-            | F.col("__v").startswith("way")
-            | F.col("__v").startswith("<node")
-            | F.col("__v").startswith("<way")
-        )
+        .filter(F.col("__v").rlike("^<?(node|way)"))
         .withColumn("__i", F.row_number().over(w))
         # row_number is 1-based: (i-1) % k == 0 keeps the first element
         # for every k, including k=1 ("keep everything")
@@ -295,14 +292,9 @@ def write_osm_sample(
     with open(out_path, "w") as f:
         f.write('<?xml version="1.0" encoding="UTF-8"?>\n<osm version="0.6">\n')
         for raw in rows:
-            raw = raw.strip()
-            if not raw.startswith("<"):
-                raw = "<" + raw
-            if raw.endswith("</osm>"):
-                raw = raw[: -len("</osm>")].rstrip()
-            for kind in ("node", "way"):
-                if raw.startswith(f"<{kind}") and not raw.endswith(("/>", f"</{kind}>")):
-                    raw += f"</{kind}>"
-            f.write("  " + raw + "\n")
+            text, close = _repair(raw)
+            if close and not text.endswith(("/>", close)):
+                text += close
+            f.write("  " + text + "\n")
         f.write("</osm>\n")
     return len(rows)

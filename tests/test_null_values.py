@@ -12,9 +12,9 @@ The sweep that motivated this found 5 crashers, fixed where this test
 now pins them:
 
 * q_compression_ratio / q_mm_extract (text.py, multimodal.py) — the
-  mapInPandas workers called ``.encode()`` / ``len()`` on None;
-  they now emit NULL metrics through pandas nullable Int dtypes,
-  matching what the SQL twin's length(NULL)/md5(NULL) produces.
+  Python workers called ``.encode()`` / ``len()`` on None; their
+  per-row generators now emit NULL metrics, matching what the SQL
+  twin's length(NULL)/md5(NULL) produces.
 * q_pq_adc / q_pq_recall / q_pq_recall_trained (pq.py) — a NULL
   embedding left the argmin fold's -1 accumulator seed as the code,
   and the ADC lookup crashed on element_at(lut, 0); _with_qemb now
@@ -218,3 +218,30 @@ def test_codec_stage_keeps_exact_ids_next_to_nulls(spark, monkeypatch):
     assert sorted(r.doc_id for r in pixels if r.doc_id is not None) == big
     prints = mm.image_fingerprints(docs).collect()
     assert sorted(r.doc_id for r in prints) == big
+
+
+def test_row_seam_stages_keep_exact_ids_next_to_a_null_id(spark, monkeypatch):
+    """The feature scan, the header scan and the compression stage
+    read doc_id exactly when their one batch also holds a NULL doc_id:
+    2**53 + 1, which float64 cannot hold, comes back unchanged."""
+    from open_street_map_data_wrangling_spark.operators import multimodal as mm
+    from open_street_map_data_wrangling_spark.operators import text
+
+    big = 2**53 + 1
+    png = mm.encode_png_rgb(1, 1, [b"\x00\x00\x00"])
+    media = spark.createDataFrame(
+        [(big, png), (None, png)], "doc_id bigint, payload binary"
+    ).coalesce(1)
+    docs = spark.createDataFrame(
+        [(big, "abc"), (None, "x")], "doc_id bigint, text string"
+    ).coalesce(1)
+    monkeypatch.setattr(text, "load_table", lambda spark, sf_dir, name: docs)
+    stages = {
+        "extract_media_features": mm.extract_media_features(media),
+        "extract_image_dims": mm.extract_image_dims(media),
+        "q_compression_ratio": text.q_compression_ratio(spark, "unused"),
+    }
+    for name, df in stages.items():
+        assert df.rdd.getNumPartitions() == 1, name
+        ids = sorted(r.doc_id for r in df.collect() if r.doc_id is not None)
+        assert ids == [big], name

@@ -950,7 +950,7 @@ def test_curation_pipeline_invariants(spark):
 
 
 def test_compression_ratio_matches_direct_zlib(spark):
-    """The mapInPandas compression signal must equal a direct Python
+    """The row-seam compression signal must equal a direct Python
     zlib recomputation per document (same level, same encoding)."""
     import zlib
 
@@ -971,6 +971,24 @@ def test_compression_ratio_matches_direct_zlib(spark):
         comp = zlib.compress(raw, 6)
         want = (len(raw), len(comp), 10000 * len(comp) // len(raw))
         assert got[r["doc_id"]] == want
+
+
+def test_compression_ratio_empty_and_null_text(spark, monkeypatch):
+    """The two texts the zlib recomputation above cannot divide by:
+    an empty text keeps its zlib header size and a ratio of 0, a NULL
+    text yields NULL metrics."""
+    import zlib
+
+    from open_street_map_data_wrangling_spark.operators import text
+
+    docs = spark.createDataFrame(
+        [(1, ""), (2, None)], "doc_id bigint, text string"
+    )
+    monkeypatch.setattr(text, "load_table", lambda spark, sf_dir, name: docs)
+    rows = text.q_compression_ratio(spark, "unused").collect()
+    got = {r.doc_id: tuple(r)[1:] for r in rows}
+    assert len(zlib.compress(b"", 6)) == 8
+    assert got == {1: (0, 8, 0), 2: (None, None, None)}
 
 
 def test_ivf_lloyd_training_improves_assignment_quality(spark):
@@ -1622,7 +1640,7 @@ def test_decode_image_real_containers():
 
 
 def test_extract_image_dims_spark_roundtrip(spark):
-    """Real payloads through the Arrow mapInPandas seam."""
+    """Real payloads through the Arrow row seam."""
     from open_street_map_data_wrangling_spark.operators.multimodal import (
         extract_image_dims,
     )
@@ -1716,7 +1734,7 @@ def test_png_pixel_codec_all_filters_and_failures():
 def test_extract_image_dims_null_payload(spark):
     """Regression (r08 advice): a NULL payload must yield NULL
     metadata per the registry's null-payload contract, not crash the
-    Python worker — mirroring _extract_batches' guard."""
+    Python worker — mirroring _extract_rows' guard."""
     from open_street_map_data_wrangling_spark.operators.multimodal import (
         extract_image_dims,
     )

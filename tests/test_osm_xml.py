@@ -359,7 +359,7 @@ def etl_run(spark, tmp_path_factory):
 
 def test_etl_writes_scan_persisted_parse(etl_run):
     """Every written table reads the cached tagged parse: its executed
-    plan scans an InMemoryRelation, and the XML parse (MapInPandas)
+    plan scans an InMemoryRelation, and the XML parse (MapInArrow)
     appears only inside the cached relation, never above the scan."""
     report, plans, _ = etl_run
     assert f"wrote nodes: {N_NODES} rows" in report
@@ -367,6 +367,7 @@ def test_etl_writes_scan_persisted_parse(etl_run):
     for name, plan in plans.items():
         above, scan, _ = plan.partition("InMemoryTableScan")
         assert scan, (name, plan)
+        assert "MapInArrow" not in above, (name, plan)
         assert "MapInPandas" not in above, (name, plan)
 
 

@@ -7,6 +7,7 @@ keeping the suite fast. Python recomputation is the oracle.
 
 import re
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -547,30 +548,48 @@ def test_weighted_sample_rule_matches_python(data):
     assert got == exp
 
 
-def test_compression_ratio_is_batch_size_independent(spark):
-    """Arrow batch shape must not leak into mapInPandas results: the
-    zlib scores are identical under a pathologically small
-    maxRecordsPerBatch (every vectorized op in the worker must be
-    row-independent)."""
-    from open_street_map_data_wrangling_spark.plans import load_all_queries
+def _tagged_osm_parse(spark, tmp_path):
+    from open_street_map_data_wrangling_spark.sources.osm_xml import parse_osm_tagged
+    from tests.test_osm_xml import _make_xml
 
+    path = tmp_path / "extract.osm"
+    path.write_text(_make_xml())
+    return parse_osm_tagged(spark, str(path))
+
+
+def _registry_stage(name):
+    def run(spark, tmp_path):
+        from open_street_map_data_wrangling_spark.plans import load_all_queries
+
+        return load_all_queries()[name].spark(spark, "/root/testdata/sf0.001")
+
+    return run
+
+
+@pytest.mark.parametrize(
+    "stage",
+    [
+        pytest.param(_registry_stage("q_compression_ratio"), id="q_compression_ratio"),
+        pytest.param(_registry_stage("q_mm_extract"), id="q_mm_extract"),
+        pytest.param(_tagged_osm_parse, id="osm_tagged_parse"),
+    ],
+)
+def test_compression_ratio_is_batch_size_independent(spark, tmp_path, stage):
+    """Arrow batch shape must not leak into the results of a Python
+    row-seam stage (scale.map_rows): the zlib scores, the media
+    features and the tagged OSM parse are identical under a
+    pathologically small maxRecordsPerBatch (each stage's per-row
+    generator must be row-independent)."""
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
-    run = lambda: sorted(
-        map(
-            tuple,
-            load_all_queries()["q_compression_ratio"]
-            .spark(spark, "/root/testdata/sf0.001")
-            .collect(),
-        )
-    )
+    run = lambda: sorted(map(tuple, stage(spark, tmp_path).collect()), key=repr)
     try:
         base = run()
         spark.conf.set(key, "7")
         small = run()
     finally:
         spark.conf.set(key, old)
-    assert base == small
+    assert base and base == small
 
 
 @given(ids=st.lists(st.integers(0, 10**9), min_size=1, max_size=80, unique=True))
